@@ -47,7 +47,23 @@ def get_date_range(
 
 
 class EPSSClient:
-    """Query API over a `date=`-partitioned canonical score dataset."""
+    """Query API over a `date=`-partitioned canonical score dataset.
+
+    The dataset is listed once per client: the first query builds the
+    `spark.read.parquet(scores_path)` scan (partition discovery, schema
+    read) and every later `get_scores` / `get_scores_by_date` /
+    `get_changed_scores` reuses it. Before each query one top-level
+    Hadoop listing of `scores_path` compares the `date=` directory names
+    with those the scan was built from, so days added or removed since
+    (e.g. by `date_partitioned_write(..., dynamic=True)`) are picked up
+    by a rebuilt scan. A day rewritten in place keeps its name: call
+    `refresh()` (or use a new client) after rewriting one, otherwise the
+    next action fails with Spark's `FILE_NOT_EXIST` instead of returning
+    the old rows. Files appended into an existing day's directory may
+    likewise be missed until `refresh()`.
+
+    The intended use is one client per long-lived session or analyst; a
+    client is not meant to be shared across threads."""
 
     def __init__(
         self,
@@ -72,11 +88,39 @@ class EPSSClient:
         self.version = version
         self.max_date_resolver = max_date_resolver
         self._persisted: DataFrame | None = None
+        self._frame: DataFrame | None = None  # the reused scores_path scan
+        self._days = None  # its `date=` directories (a JVM set)
+        self._hadoop: tuple | None = None  # JVM handles of _list_days
 
     def _scan(self) -> DataFrame:
         if self.table is not None:
             return self.spark.table(self.table)
-        return self.spark.read.parquet(self.scores_path)
+        days = self._list_days()
+        if self._frame is None or not days.equals(self._days):
+            # also drops the persisted frame: a query over the new scan
+            # would otherwise match its plan and be served the old rows
+            self.refresh()
+            self._frame = self.spark.read.parquet(self.scores_path)
+            self._days = days
+        return self._frame
+
+    def _list_days(self):
+        """The `date=` directories directly under `scores_path`, as a JVM set.
+        One Hadoop glob, `date=*`, lists the root once with the session's
+        Hadoop conf (so `s3a://` roots work too) and skips `_SUCCESS`,
+        `_temporary` and `.spark-staging-*`. The set stays in the JVM and is
+        compared there: a Py4J reply over 8 KB, a few hundred paths, stalls
+        about 40 ms on TCP delayed ACKs."""
+        if self._hadoop is None:
+            # resolved once: each `jvm.a.b.C` lookup is a chain of reflective
+            # Py4J round trips that together cost more than the listing
+            jvm = self.spark._jvm
+            pattern = jvm.org.apache.hadoop.fs.Path(self.scores_path, "date=*")
+            fs = pattern.getFileSystem(self.spark._jsparkSession.sessionState().newHadoopConf())
+            self._hadoop = (fs, pattern, jvm.scala.collection.immutable.ArraySeq)
+        fs, pattern, array_seq = self._hadoop
+        # a FileStatus equals another with the same path
+        return array_seq.unsafeWrapArray(fs.globStatus(pattern)).toSet()
 
     def get_scores(
         self,
@@ -141,8 +185,15 @@ class EPSSClient:
             self._persisted.unpersist()
             self._persisted = None
 
-    def close(self) -> None:
+    def refresh(self) -> None:
+        """Drop the reused scan and release the persisted frame; the next
+        query lists `scores_path` afresh. Needed after a day is rewritten
+        in place, which the per-query directory check cannot see."""
         self.unpersist()
+        self._frame = None
+
+    def close(self) -> None:
+        self.refresh()
 
     def get_scores_by_date(self, date: TIME, query: Query | None = None) -> DataFrame:
         """Single-snapshot path (reference: epss/client.py:239-268): one

@@ -4,6 +4,9 @@ dataset (the canonical physical layout, FIXTURES.md §1.2)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,13 +61,30 @@ def test_get_changed_scores_first_day_semantics(spark, scores_path):
     assert got == {(D(2023, 3, 9), "CVE-X"), (D(2023, 3, 11), "CVE-X")}
 
 
+def scan_metric(node, name: str) -> int:
+    """Sum of the file-scan metric `name` (e.g. numPartitions, numFiles)
+    over an executed plan, following adaptive query stages."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return scan_metric(node.executedPlan(), name)
+    if cls.endswith("QueryStageExec"):
+        return scan_metric(node.plan(), name)
+    if cls == "FileSourceScanExec":
+        return int(node.metrics().apply(name).value())
+    children = node.children()
+    return sum(scan_metric(children.apply(i), name) for i in range(children.size()))
+
+
 def test_get_scores_by_date_partition_pruning(spark, scores_path):
     client = EPSSClient(spark, scores_path)
+    client.get_scores_by_date(D(2023, 3, 8)).collect()  # builds the reused scan
     df = client.get_scores_by_date(D(2023, 3, 9))
-    assert df.count() == 2
-    # the physical plan must prune to a single date partition
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or df.count() == 2
+    assert len(df.collect()) == 2
+    # the executed scan read one of the five date partitions, and only its files
+    plan = df._jdf.queryExecution().executedPlan()
+    day_files = [f for f in os.listdir(os.path.join(scores_path, "date=2023-03-09")) if f.endswith(".parquet")]
+    assert scan_metric(plan, "numPartitions") == 1
+    assert scan_metric(plan, "numFiles") == len(day_files)
 
 
 def test_get_scores_with_query(spark, scores_path):
@@ -93,3 +113,121 @@ def test_query_filters_before_diff(spark, tmp_path):
     client = EPSSClient(spark, root, max_date_resolver=lambda: D(2023, 3, 10))
     out = client.get_changed_scores("2023-03-07", "2023-03-10", query=Query(min_value=0.4)).collect()
     assert [(r.date, r.epss) for r in out] == [(D(2023, 3, 7), 0.5)]
+
+
+def write_days(spark, root: str, days, dynamic: bool = False, epss: float = 0.1) -> None:
+    """Two CVEs per day, one file per day."""
+    rows = [(d, cve, epss, 0.5) for d in days for cve in ("CVE-A", "CVE-B")]
+    df = spark.createDataFrame(rows, "date date, cve string, epss double, percentile double")
+    date_partitioned_write(df.coalesce(1), root, dynamic=dynamic)
+
+
+def jobs_launched(spark, build):
+    """Run `build` under its own job group; return its result and the number
+    of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4()}"
+    sc.setJobGroup(group, "plan build")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dataset_listed_once_per_client(spark, tmp_path):
+    """40 days is over Spark's 32-path parallel-discovery threshold, so
+    building a scan of the root launches a listing job. On one client only
+    the first query builds it: later ones launch no job before their action."""
+    first = D(2023, 3, 7)
+    days = [first + dt.timedelta(days=i) for i in range(40)]
+    root = str(tmp_path / "scores")
+    write_days(spark, root, days)
+    client = EPSSClient(spark, root, max_date_resolver=lambda: days[-1])
+    df, n = jobs_launched(spark, lambda: client.get_scores_by_date(days[5]))
+    assert n > 0  # the first query lists the dataset
+    assert df.count() == 2
+    builds = [
+        lambda: client.get_scores_by_date(days[20]),
+        lambda: client.get_changed_scores(days[1], days[-1]),
+        lambda: client.get_scores_by_date(days[-1]),
+        lambda: client.get_changed_scores(days[30], days[-1], query=Query(ids=("CVE-A",), match="isin")),
+    ]
+    for build in builds:
+        df, n = jobs_launched(spark, build)
+        assert n == 0
+        df.collect()
+    client.close()
+
+
+def test_reused_scan_sees_added_and_removed_days(spark, tmp_path):
+    root = str(tmp_path / "scores")
+    write_days(spark, root, [D(2023, 3, 7), D(2023, 3, 8), D(2023, 3, 9)])
+    client = EPSSClient(spark, root, max_date_resolver=lambda: D(2023, 3, 12))
+
+    def days():
+        return sorted({r.date for r in client.get_scores().collect()})
+
+    assert days() == [D(2023, 3, 7), D(2023, 3, 8), D(2023, 3, 9)]
+    write_days(spark, root, [D(2023, 3, 10)], dynamic=True, epss=0.4)
+    # picked up by the same client, with no refresh()
+    assert [(r.cve, r.epss) for r in client.get_scores_by_date(D(2023, 3, 10)).collect()] == [
+        ("CVE-B", 0.4),
+        ("CVE-A", 0.4),
+    ]
+    assert days() == [D(2023, 3, 7), D(2023, 3, 8), D(2023, 3, 9), D(2023, 3, 10)]
+    assert {(r.date, r.cve) for r in client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 12)).collect()} == {
+        (D(2023, 3, 10), "CVE-A"),
+        (D(2023, 3, 10), "CVE-B"),
+    }
+    shutil.rmtree(os.path.join(root, "date=2023-03-08"))
+    assert days() == [D(2023, 3, 7), D(2023, 3, 9), D(2023, 3, 10)]
+    assert client.get_scores_by_date(D(2023, 3, 8)).collect() == []
+    assert len(client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 12)).collect()) == 2
+    # removed outside Spark, so no cache refresh: the frame the sorted query
+    # above persisted must be released with the old scan, or this unsorted
+    # plan would match it and return the removed day's changes
+    shutil.rmtree(os.path.join(root, "date=2023-03-10"))
+    assert client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 12), sort=False).collect() == []
+    client.close()
+
+
+def test_day_rewritten_in_place_fails_loudly_until_refresh(spark, tmp_path):
+    """A rewrite keeps the day's directory name, so the top-level check
+    cannot see it: the stale scan must fail on the vanished files, never
+    return the old values, and refresh() must recover the new ones."""
+    root = str(tmp_path / "scores")
+    write_days(spark, root, [D(2023, 3, 7), D(2023, 3, 8), D(2023, 3, 9)])
+    client = EPSSClient(spark, root, max_date_resolver=lambda: D(2023, 3, 9))
+    assert {r.epss for r in client.get_scores_by_date(D(2023, 3, 9)).collect()} == {0.1}
+
+    write_days(spark, root, [D(2023, 3, 9)], dynamic=True, epss=0.3)
+    with pytest.raises(Exception, match="FILE_NOT_EXIST"):
+        client.get_scores_by_date(D(2023, 3, 9)).collect()
+    with pytest.raises(Exception, match="FILE_NOT_EXIST"):
+        client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 9)).collect()
+    persisted = client._persisted
+    assert persisted is not None and persisted.storageLevel.useMemory
+
+    client.refresh()
+    assert not persisted.storageLevel.useMemory and not persisted.storageLevel.useDisk
+    assert {r.epss for r in client.get_scores_by_date(D(2023, 3, 9)).collect()} == {0.3}
+    got = [(r.date, r.cve, r.epss) for r in client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 9)).collect()]
+    assert got == [(D(2023, 3, 9), "CVE-B", 0.3), (D(2023, 3, 9), "CVE-A", 0.3)]
+
+    # With a persisted frame over the scan, a write through this session
+    # refreshes the file index that frame shares with the reused scan
+    # (Spark's recache-by-path), so the rewrite may already be visible.
+    # Either way the old values never come back.
+    write_days(spark, root, [D(2023, 3, 9)], dynamic=True, epss=0.5)
+    for build in (
+        lambda: client.get_scores_by_date(D(2023, 3, 9)),
+        lambda: client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 9)),
+    ):
+        try:
+            got = {r.epss for r in build().collect()}
+        except Exception as e:
+            assert "FILE_NOT_EXIST" in str(e)
+        else:
+            assert got == {0.5}
+    client.close()
