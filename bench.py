@@ -50,23 +50,12 @@ HEADLINE = [
     "ann_ivfpq_rerank",  # two-stage ANN: ADC shortlist + exact re-rank
     # round 9 (headline now 22 queries; totals incomparable with r8 —
     # compare per-query via query_pairs, after checking calibration_sec):
-    "event_funnel",  # ordered-sequence conversion funnel over the
-    #                  hot-key-safe chunked prefix-fold (events tier's
-    #                  first headline row)
     "dedup_url_history",  # SCD-2 interval compaction (lag + run-sum +
     #                       agg + lead in ONE key exchange)
     # round 10 (headline now 24 queries; totals incomparable with r9 —
     # compare per-query via query_pairs, after checking calibration_sec):
-    "event_session_paths",  # full-sequence journey mining (window-sort
-    #                         floor kernel; capped-by-default hot-key
-    #                         guard rides the key exchange)
-    "event_transitions",  # first-order Markov transition table (lead
-    #                       window + bounded |types|^2 aggregate)
     # round 11 (headline now 25 queries; totals incomparable with r10 —
     # compare per-query via query_pairs, after checking calibration_sec):
-    "event_path_ngrams",  # session-scoped motif mining (driver-surfaced
-    #                       this round; two-stage aggregate rides the
-    #                       sessionize key exchange, 0.34x-linear at 10x)
     # round 11 second addition (headline now 26 queries):
     "cluster_kmeans",  # deterministic Lloyd k-means training + stats
     #                    (2 exact-arithmetic updates + final assignment:

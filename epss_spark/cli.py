@@ -434,7 +434,7 @@ def build_parser() -> argparse.ArgumentParser:
         default="ids",
         help="seeding strategy: fixed ids (default), farthest-first "
         "traversal from the lowest id (deterministic Gonzalez — the "
-        "insurance against clumped seeds, see tools/cluster_probe.py; "
+        "insurance against clumped seeds, PERF.md round 11; "
         "k corpus scans), or kmpp (k-means|| oversampling from the "
         "lowest id — O(rounds) scans total, the production-scale "
         "seeding; near-flat in k where ff is linear, PERF.md round 14)",
@@ -663,51 +663,18 @@ def build_parser() -> argparse.ArgumentParser:
 
     lc = sub.add_parser(
         "late-counts",
-        help="per-epoch late-row accounting for a stream-maintained "
-        "state store (extension): reads the store's `.late` sibling "
-        "artifact (funnel / history / transitions / ngrams maintenance "
-        "streams) and prints (epoch, n_late_events, n_late_keys); "
-        "nonzero rows name the epochs where the stream's ordering "
-        "contract was violated",
+        help="per-epoch late-row accounting for a history store "
+        "(extension): reads the `.late` sibling artifact the history "
+        "maintenance stream writes and prints (epoch, n_late_events, "
+        "n_late_keys); nonzero rows name the epochs where the stream's "
+        "ordering contract was violated",
     )
     lc.add_argument(
         "--store",
         required=True,
-        help="state-store path whose `.late` sibling to read (the "
-        "funnel/transitions/ngrams state dir, or `<history_dir>/open` "
-        "for a history store)",
+        help="state-store path whose `.late` sibling to read "
+        "(`<history_dir>/open`)",
     )
-
-    ev = sub.add_parser(
-        "events",
-        help="events-tier analytics reports (extension): per-session "
-        "stats, conversion funnel, Markov transition table, top "
-        "journey paths, daily burst z-scores — the product-analytics "
-        "layer over an events parquet",
-    )
-    ev.add_argument("--input", required=True, help="events parquet")
-    ev.add_argument(
-        "--report",
-        required=True,
-        choices=["sessions", "funnel", "transitions", "paths", "ngrams", "bursts"],
-    )
-    ev.add_argument("--n", type=int, default=3,
-                    help="gram length (ngrams report)")
-    ev.add_argument("--output", help="write the full report parquet here")
-    ev.add_argument("--key", default="user_id")
-    ev.add_argument("--type-col", default="event_type")
-    ev.add_argument("--time-col", default="ts")
-    ev.add_argument("--tiebreak", default="event_id")
-    ev.add_argument("--gap-seconds", type=int, default=1800,
-                    help="session gap rule (sessions/paths)")
-    ev.add_argument("--steps",
-                    help="comma-separated ordered step types (funnel)")
-    ev.add_argument(
-        "--max-path-events", type=int, default=1024,
-        help="hot-key guard for paths (0 = exact mode; default 1024)",
-    )
-    ev.add_argument("--k", type=int, default=20,
-                    help="rows to print (full report still lands in --output)")
 
     u = sub.add_parser("urls", help="print snapshot URLs (reference epss/cli.py:117-139)")
     _add_range_flags(u)
@@ -1595,61 +1562,6 @@ def main(argv: list[str] | None = None) -> int:
                   d.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()}
         print("diff: " + "  ".join(
             f"{s}={counts.get(s, 0)}" for s in ("added", "changed", "removed")))
-        return 0
-
-    if args.command == "events":
-        spark = get_spark("epss-spark-cli")
-        spark.sparkContext.setLogLevel("ERROR")
-        from pyspark.sql import functions as F
-
-        from epss_spark.operators import sessionize as sz
-        from epss_spark.tables import load_events_file
-
-        events = load_events_file(spark, args.input, time_col=args.time_col)
-        if args.report == "sessions":
-            out = sz.session_stats(
-                events, key=args.key, time=args.time_col,
-                gap_seconds=args.gap_seconds, tiebreak=args.tiebreak,
-            ).orderBy(F.col("n_events").desc(), args.key, "session_id")
-        elif args.report == "funnel":
-            if not args.steps:
-                print("events: --report funnel needs --steps", file=sys.stderr)
-                return 2
-            steps = [s.strip() for s in args.steps.split(",") if s.strip()]
-            out = sz.event_funnel(
-                events, steps, key=args.key, type_col=args.type_col,
-                time=args.time_col, tiebreak=args.tiebreak,
-            )
-        elif args.report == "transitions":
-            out = sz.event_transitions(
-                events, key=args.key, type_col=args.type_col,
-                time=args.time_col, tiebreak=args.tiebreak,
-            ).orderBy(F.col("n").desc(), "from_type", "to_type")
-        elif args.report == "paths":
-            out = sz.session_paths(
-                events, key=args.key, type_col=args.type_col,
-                time=args.time_col, tiebreak=args.tiebreak,
-                gap_seconds=args.gap_seconds,
-                max_path_events=args.max_path_events or None,
-            ).orderBy(F.col("n_sessions").desc(), "path_len", "path")
-        elif args.report == "ngrams":
-            out = sz.path_ngrams(
-                events, n=args.n, key=args.key, type_col=args.type_col,
-                time=args.time_col, tiebreak=args.tiebreak,
-                gap_seconds=args.gap_seconds,
-                max_path_events=args.max_path_events or None,
-            ).orderBy(F.col("n").desc(), "gram")
-        else:
-            out = sz.daily_burst_zscore(
-                events, type_col=args.type_col, time=args.time_col
-            ).orderBy(
-                F.col("is_burst").desc(), F.col("z").desc_nulls_last(),
-                "event_type", "day",
-            )
-        if args.output:
-            out.write.mode("overwrite").parquet(args.output)
-        for row in out.limit(args.k).collect():
-            print("  ".join(str(v) for v in row))
         return 0
 
     if args.command == "late-counts":

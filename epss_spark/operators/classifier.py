@@ -64,7 +64,7 @@ from epss_spark.operators.text import tokens
 QUANT = 1_000_000.0
 SUM_GUARD = 2**62
 # dims above this route to the Arrow kernels. MEASURED
-# (tools/classifier_scale_probe.py, 100k rows): the expression chain
+# (PERF.md round 14 classifier ladder, 100k rows): the expression chain
 # wins at dim 64 (1.9 s vs the kernel's warm ~1.4 s), ties near 128
 # (2.6 vs 1.4), loses 4x at 256 (5.9 vs 1.4) — and at 512 terms plan
 # CONSTRUCTION overflows the JVM stack (StackOverflowError in
@@ -274,7 +274,7 @@ def linear_fit(
     the codegen aggregate by construction (quantized-BIGINT sums
     commute, the per-row floor((r*x_j)*quant + 0.5) is the same IEEE
     sequence in both forms; pinned in tests) and MEASURED faster
-    everywhere (tools/classifier_scale_probe.py op=epoch, 100k rows:
+    everywhere (PERF.md round 14 classifier ladder, per epoch, 100k rows:
     3.5x at dim 64, 7.5x at 128 — the dim+2-sum expression aggregate
     is heavy even at the oracle shape, and past BATCHED_SCORE_DIMS it
     is the crash-prone form). `impl` = auto|expr|batched; "expr" stays

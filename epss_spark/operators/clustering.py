@@ -54,7 +54,7 @@ QUANT = 1_000_000.0
 # Above this many centroid cells (k * dim), nearest-centroid assignment
 # switches from the plan-time-constant expression projection to the
 # Arrow-batched numpy kernel. The threshold is MEASURED, not guessed
-# (tools/assign_scale_probe.py: 100k rows x dim 64, 32 partitions,
+# (PERF.md round 12 assign ladder: 100k rows x dim 64, 32 partitions,
 # quiet host, warm; first rung of each run carries session warmup):
 #
 #   k      expression    batched (steady)
@@ -873,7 +873,7 @@ def farthest_first_init(
     already-chosen center — ties on the lowest id. Fully deterministic
     (no RNG), so both engines replay it exactly; it is the 2-approximation
     for k-center and the cure for the kmeans_fit local optimum a
-    clumped init causes (tools/cluster_probe.py `worst` mode: all-one-
+    clumped init causes (PERF.md round 11, worst-case init: all-one-
     cluster seeds plateau at 0.625 purity; FF init from the same start
     point recovers 1.0).
 

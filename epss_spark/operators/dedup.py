@@ -2509,8 +2509,7 @@ def sample_token_budget_bucketed(
     bucket_chars: int = 2,
 ) -> DataFrame:
     """sample_token_budget for a PATHOLOGICALLY hot stratum — identical
-    keep set (pinned by test), different physical plan (the
-    changed_scores_salted model, quantize.py:73).
+    keep set (pinned by test), different physical plan.
 
     Why: the windowed form runs ONE running-sum chain per stratum, so
     the realistic "90% of the corpus is `web`" mix sorts ~the whole
@@ -2548,9 +2547,8 @@ def sample_token_budget_bucketed(
     # re-pay the full sort just to read one row per bucket), then the
     # preceding-bucket prefix over the tiny strata x 256 frame. This
     # branch re-scans + re-tokenizes the corpus (Spark does not dedupe
-    # common subplans — the changed_scores_salted boundary-branch cost),
-    # which is why the windowed form stays the default for balanced
-    # strata.
+    # common subplans), which is why the windowed form stays the default
+    # for balanced strata.
     totals = sized.groupBy(stratum_col, "__b").agg(F.sum("n_tokens").alias("__tot"))
     w_off = (
         Window.partitionBy(stratum_col)

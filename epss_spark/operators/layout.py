@@ -76,8 +76,8 @@ def key_skew_report(df: DataFrame, key: str, top_k: int = 10) -> DataFrame:
     split skewed JOIN/shuffle partitions but NOT window partitions
     (Window.partitionBy(key) must see the whole key on one task), so a hot
     key here will straggle any window over it; that is the signal to
-    switch to the salted two-pass fallback (changed_scores_salted) or to
-    pick a higher-cardinality key."""
+    pick a higher-cardinality key or a two-pass bucketed plan (the
+    dedup.sample_token_budget_bucketed model)."""
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
     totals = counts.agg(

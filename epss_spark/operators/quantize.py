@@ -70,86 +70,6 @@ def changed_scores(
     return out
 
 
-def changed_scores_salted(
-    df: DataFrame,
-    key: str = "cve",
-    time: str = "date",
-    value: str = "epss",
-    tiebreak: str | None = None,
-    keep_first: bool = True,
-    delta_col: str = "delta",
-    prev_col: str | None = None,
-    bucket: Column | None = None,
-) -> DataFrame:
-    """changed_scores for a PATHOLOGICALLY hot window key — identical
-    results (pinned by tests/test_quantize.py), different physical plan.
-
-    Why it exists: AQE's skew handling splits join/shuffle partitions, not
-    window partitions — Window.partitionBy(key) must see the whole key on
-    one task, so a key holding 50% of the rows turns the single-exchange
-    changed_scores plan into one straggling task. Diagnose with
-    layout.key_skew_report; when hot_vs_uniform >> 1, use this fallback.
-
-    How: salt the window with a TIME-MONOTONE bucket (default: calendar
-    month of `time`; any Column monotone non-decreasing in `time` works,
-    e.g. a coarser date_trunc for short histories).
-
-      1. in-bucket lag over Window.partitionBy(key, bucket) — a hot key
-         now spreads over its buckets, bounding per-task rows;
-      2. per-(key, bucket) boundary frame (one row each, carrying the
-         bucket's last value via an unbounded-frame F.last on the SAME
-         exchange) gets the previous bucket's last value with a lag over
-         (key) — tiny input (#buckets per key), so the per-key window is
-         safe here;
-      3. each bucket's FIRST row (row_number == 1, not prev-is-null — a
-         NULL carried value must stay NULL for the restart semantics)
-         takes the carried value via a (key, bucket) join that reuses the
-         step-1 partitioning; AQE broadcasts the boundary side while it
-         is small.
-
-    Cost: the one extra boundary shuffle + join — only worth it under real
-    skew (PERF.md: salting loses on balanced keys). Sparse buckets are
-    handled (the carry lags over EXISTING buckets, not bucket+1)."""
-    if bucket is None:
-        bucket = F.date_trunc("month", F.col(time))
-    order = [F.col(time).asc()]
-    if tiebreak:
-        order.append(F.col(tiebreak).asc())
-    w_in = Window.partitionBy(key, "__b").orderBy(*order)
-    full = w_in.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    tagged = (
-        df.withColumn("__b", bucket)
-        .withColumn("__rn", F.row_number().over(w_in))
-        .withColumn("__prev_in", F.lag(F.col(value)).over(w_in))
-        .withColumn("__last_in", F.last(F.col(value), ignorenulls=False).over(full))
-    )
-    boundary = tagged.filter(F.col("__rn") == 1).select(key, "__b", "__last_in")
-    w_key = Window.partitionBy(key).orderBy("__b")
-    carry = boundary.withColumn("__carry", F.lag("__last_in").over(w_key)).select(
-        key, "__b", "__carry"
-    )
-    out = (
-        tagged.join(carry, [key, "__b"], "left")
-        .withColumn(
-            "__prev",
-            F.when(F.col("__rn") == 1, F.col("__carry")).otherwise(F.col("__prev_in")),
-        )
-        # first-overall must look like changed_scores' first observation:
-        # __carry is NULL there, so __prev is NULL — same condition
-        .drop("__b", "__rn", "__prev_in", "__last_in", "__carry")
-    )
-    out = out.withColumn(delta_col, F.col(value) - F.col("__prev"))
-    first_obs: Column = F.col("__prev").isNull()
-    changed = F.col(delta_col) != 0
-    cond = (first_obs | changed) if keep_first else (~first_obs & changed)
-    out = out.filter(cond)
-    if prev_col:
-        out = out.withColumnRenamed("__prev", prev_col)
-    else:
-        out = out.drop("__prev")
-    return out
-
-
 def quantize(
     df: DataFrame,
     key: str = "cve",

@@ -811,99 +811,6 @@ def json_parse_typed(spark, sf_dir):
 
 
 @register(
-    "session_stats",
-    """
-    WITH o AS (
-      SELECT user_id, ts, event_id,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-      FROM events
-    ),
-    m AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) > 3600000000
-                  THEN 1 ELSE 0 END AS st
-      FROM o
-    ),
-    s AS (
-      SELECT user_id, ts,
-             CAST(SUM(st) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      FROM m
-    )
-    SELECT user_id, session_id,
-           MIN(ts) AS session_start_ts, MAX(ts) AS session_end_ts,
-           COUNT(*) AS n_events,
-           (epoch_us(MAX(ts)) - epoch_us(MIN(ts))) / 1000000.0 AS duration_sec
-    FROM s GROUP BY user_id, session_id
-    """,
-)
-def session_stats(spark, sf_dir):
-    """Gap-based sessionization (1h gap) — one exchange for both the
-    session numbering windows and the per-session rollup."""
-    from epss_spark.operators import sessionize as sz
-
-    return sz.session_stats(
-        T(spark, sf_dir, "events"), gap_seconds=3600, tiebreak="event_id"
-    )
-
-
-@register(
-    "event_funnel",
-    """
-    WITH ev AS (
-      SELECT user_id, ts, event_id, event_type FROM events
-      WHERE event_type IN ('signup', 'view', 'purchase')
-    ),
-    base AS (SELECT COUNT(DISTINCT user_id) AS b FROM events),
-    s1 AS (
-      SELECT user_id, min(ROW(ts, event_id)) AS k FROM ev
-      WHERE event_type = 'signup' GROUP BY user_id
-    ),
-    s2 AS (
-      SELECT ev.user_id, min(ROW(ts, event_id)) AS k
-      FROM ev JOIN s1 USING (user_id)
-      WHERE event_type = 'view' AND ROW(ts, event_id) > s1.k
-      GROUP BY ev.user_id
-    ),
-    s3 AS (
-      SELECT ev.user_id, min(ROW(ts, event_id)) AS k
-      FROM ev JOIN s2 USING (user_id)
-      WHERE event_type = 'purchase' AND ROW(ts, event_id) > s2.k
-      GROUP BY ev.user_id
-    ),
-    n AS (
-      SELECT (SELECT COUNT(*) FROM s1) AS n1,
-             (SELECT COUNT(*) FROM s2) AS n2,
-             (SELECT COUNT(*) FROM s3) AS n3,
-             (SELECT b FROM base) AS b
-    )
-    SELECT CAST(1 AS BIGINT) AS step, 'signup' AS event_type, n1 AS n_converted,
-           CASE WHEN b > 0 THEN round(CAST(n1 AS DOUBLE) / b, 6) END AS conversion
-    FROM n
-    UNION ALL
-    SELECT CAST(2 AS BIGINT), 'view', n2,
-           CASE WHEN n1 > 0 THEN round(CAST(n2 AS DOUBLE) / n1, 6) END FROM n
-    UNION ALL
-    SELECT CAST(3 AS BIGINT), 'purchase', n3,
-           CASE WHEN n2 > 0 THEN round(CAST(n3 AS DOUBLE) / n2, 6) END FROM n
-    """,
-)
-def event_funnel(spark, sf_dir):
-    """Ordered-sequence conversion funnel (operators/sessionize.py::
-    event_funnel): signup -> view -> purchase, each step counting only
-    when it occurs strictly after the previous step's event in
-    (ts, event_id) order. The engine folds each user's time-sorted
-    events through one JVM-side F.aggregate (no per-step self-join, no
-    window); the oracle replays the same semantics as a chained
-    min(ROW(ts, event_id)) CTE per step."""
-    from epss_spark.operators import sessionize as sz
-
-    return sz.event_funnel(
-        T(spark, sf_dir, "events"), ["signup", "view", "purchase"]
-    )
-
-
-@register(
     "event_daily_growth",
     """
     WITH d AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
@@ -942,314 +849,6 @@ def event_daily_growth(spark, sf_dir):
             F.coalesce("new_users", F.lit(0)).alias("new_users"),
         )
         .withColumn("cumulative_users", F.sum("new_users").over(w))
-    )
-
-
-@register(
-    "event_retention_cohorts",
-    """
-    WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-    first AS (SELECT user_id, MIN(day) AS cohort FROM d GROUP BY user_id),
-    act AS (
-      SELECT cohort, day - cohort AS off, COUNT(*) AS n_active
-      FROM d JOIN first USING (user_id) GROUP BY cohort, day - cohort
-    ),
-    sz AS (SELECT cohort, COUNT(*) AS cohort_size FROM first GROUP BY cohort)
-    SELECT act.cohort AS cohort_day,
-           CAST(off AS BIGINT) AS day_offset,
-           n_active, cohort_size,
-           round(CAST(n_active AS DOUBLE) / cohort_size, 6) AS retention_rate
-    FROM act JOIN sz USING (cohort)
-    """,
-)
-def event_retention_cohorts(spark, sf_dir):
-    """Day-N retention matrix (operators/sessionize.py::
-    retention_cohorts): users cohorted by first-seen day, per
-    (cohort, offset) active counts and retention fractions — the
-    growth-accounting companion to event_daily_growth. Output bounded
-    by days^2/2 regardless of user count; the user-key join
-    co-partitions."""
-    from epss_spark.operators import sessionize as sz
-
-    return sz.retention_cohorts(T(spark, sf_dir, "events"))
-
-
-@register(
-    "event_transitions",
-    """
-    WITH p AS (
-      SELECT event_type AS from_type,
-             lead(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-      FROM events
-    ),
-    c AS (
-      SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n
-      FROM p WHERE to_type IS NOT NULL GROUP BY from_type, to_type
-    )
-    SELECT from_type, to_type, n,
-           round(CAST(n AS DOUBLE)
-                 / CAST(SUM(n) OVER (PARTITION BY from_type) AS DOUBLE),
-                 6) AS prob
-    FROM c
-    """,
-)
-def event_transitions(spark, sf_dir):
-    """First-order Markov transition table (operators/sessionize.py::
-    event_transitions): per consecutive same-user event pair in
-    (ts, event_id) order, the (from_type, to_type) count and the
-    probability given the from-state — the path-analysis companion the
-    funnel tier reads when a step's conversion drops. One lead() window
-    over the key exchange, then a count bounded by |types|^2; the
-    probability window runs on that bounded aggregate."""
-    from epss_spark.operators import sessionize as sz
-
-    return sz.event_transitions(T(spark, sf_dir, "events"))
-
-
-@register(
-    "event_session_paths",
-    """
-    WITH o AS (
-      SELECT user_id, ts, event_id, event_type,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-      FROM events
-    ),
-    m AS (
-      SELECT user_id, ts, event_id, event_type,
-             CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) > 3600000000
-                  THEN 1 ELSE 0 END AS st
-      FROM o
-    ),
-    s AS (
-      SELECT user_id, ts, event_id, event_type,
-             CAST(SUM(st) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      FROM m
-    ),
-    per_session AS (
-      SELECT user_id, session_id,
-             string_agg(event_type, '>' ORDER BY ts, event_id) AS path,
-             COUNT(*) AS path_len
-      FROM s GROUP BY user_id, session_id
-    )
-    SELECT path, path_len, COUNT(*) AS n_sessions
-    FROM per_session GROUP BY path, path_len
-    """,
-)
-def event_session_paths(spark, sf_dir):
-    """Common-journey mining (operators/sessionize.py::session_paths):
-    sessionize on the 1h gap rule, render each session's ordered
-    event-type sequence as one '>'-joined path, count distinct paths —
-    the full-sequence view whose memoryless projection is
-    event_transitions. Per-session arrays are gap-bounded (a bot's
-    history splits into many sessions), so no per-key materialization;
-    the oracle replays the sessionize CTEs plus an ordered string_agg.
-    Spark runs the hot-key-capped default (max_path_events=1024); the
-    oracle is UNCAPPED, so parity depends on testdata session lengths
-    staying below the cap — asserted loudly in
-    tests/test_oracle_parity.py::test_testdata_sessions_below_path_cap."""
-    from epss_spark.operators import sessionize as sz
-
-    return sz.session_paths(
-        T(spark, sf_dir, "events"), gap_seconds=3600, tiebreak="event_id"
-    )
-
-
-@register(
-    "event_path_ngrams",
-    """
-    WITH o AS (
-      SELECT user_id, ts, event_id, event_type,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-      FROM events
-    ),
-    m AS (
-      SELECT user_id, ts, event_id, event_type,
-             CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) > 3600000000
-                  THEN 1 ELSE 0 END AS st
-      FROM o
-    ),
-    s AS (
-      SELECT user_id, ts, event_id, event_type,
-             CAST(SUM(st) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      FROM m
-    ),
-    per AS (
-      SELECT user_id, session_id, list(event_type ORDER BY ts, event_id) AS seq
-      FROM s GROUP BY user_id, session_id
-    ),
-    g AS (
-      -- scalar generate_series (a LIST, empty when the session is
-      -- shorter than the gram) + unnest: the table-function form
-      -- rejects lateral column parameters
-      SELECT user_id, session_id,
-             array_to_string(list_slice(seq, i, i + 2), '>') AS gram
-      FROM (
-        SELECT user_id, session_id, seq,
-               unnest(generate_series(1, len(seq) - 2)) AS i
-        FROM per
-      )
-    )
-    SELECT gram, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(COUNT(DISTINCT CAST(user_id AS VARCHAR) || '/'
-                || CAST(session_id AS VARCHAR)) AS BIGINT) AS n_sessions
-    FROM g GROUP BY gram
-    """,
-)
-def event_path_ngrams(spark, sf_dir):
-    """Journey trigram mining (operators/sessionize.py::path_ngrams):
-    every 3 consecutive event types WITHIN a session (1h gap rule),
-    counted corpus-wide with the number of distinct sessions containing
-    each motif — the funnel-DISCOVERY query between event_transitions
-    (order-1, session-blind) and event_session_paths (whole sequences).
-    Spark runs the hot-key-capped default (1024; sessions here are far
-    shorter, so output equals exact mode — the cap headroom is asserted
-    in tests/test_oracle_parity.py::test_testdata_sessions_below_path_cap);
-    the oracle replays the sessionize CTEs plus a lateral n-gram slide."""
-    from epss_spark.operators import sessionize as sz
-
-    return sz.path_ngrams(
-        T(spark, sf_dir, "events"), n=3, gap_seconds=3600, tiebreak="event_id"
-    )
-
-
-@register(
-    "event_burst_zscore",
-    """
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n,
-             CAST(ts AS DATE) - DATE '1970-01-01' AS d
-      FROM events GROUP BY event_type, CAST(ts AS DATE)
-    ),
-    base AS (
-      SELECT event_type, day, n,
-             COUNT(n) OVER w AS cnt,
-             CAST(SUM(n) OVER w AS BIGINT) AS s1,
-             CAST(SUM(n * n) OVER w AS BIGINT) AS s2
-      FROM daily
-      WINDOW w AS (PARTITION BY event_type ORDER BY d
-                   RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING)
-    ),
-    scored AS (
-      SELECT event_type, day, n,
-             CASE WHEN cnt >= 3 AND
-                       (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-                        / CAST(cnt AS DOUBLE)) / (CAST(cnt AS DOUBLE) - 1.0) > 0.0
-                  THEN round(
-                    (CAST(n AS DOUBLE) - CAST(s1 AS DOUBLE) / CAST(cnt AS DOUBLE))
-                    / sqrt((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-                            / CAST(cnt AS DOUBLE)) / (CAST(cnt AS DOUBLE) - 1.0)),
-                    6)
-             END AS z
-      FROM base
-    )
-    SELECT event_type, day, n, z,
-           COALESCE(z >= 3.0, FALSE) AS is_burst FROM scored
-    """,
-)
-def event_burst_zscore(spark, sf_dir):
-    """Volume-anomaly monitor (operators/sessionize.py::
-    daily_burst_zscore): per (event_type, day), the z-score of today's
-    count against the trailing 7-day mean/std (current day excluded),
-    flagging z >= 3 — catches ingestion bursts and bot storms that
-    per-event robust stats (event_value_outliers) cannot see. The
-    baseline sums are exact integers over a RANGE frame on epoch-day;
-    mean/variance/z derive from them in one fixed IEEE expression, so
-    both engines agree bit-for-bit — no streaming stddev aggregate."""
-    from epss_spark.operators import sessionize as sz
-
-    return sz.daily_burst_zscore(T(spark, sf_dir, "events"))
-
-
-@register(
-    "event_value_outliers",
-    """
-    WITH ev AS (SELECT event_type AS g, value AS v FROM events),
-    med AS (SELECT g, quantile_cont(v, 0.5) AS med FROM ev GROUP BY g),
-    dev AS (
-      SELECT ev.g, MAX(med.med) AS med,
-             quantile_cont(abs(v - med.med), 0.5) * 1.4826 AS mad
-      FROM ev JOIN med USING (g) GROUP BY ev.g
-    )
-    SELECT ev.g AS event_type,
-           COUNT(v) AS n,
-           round(MAX(dev.med), 6) AS median,
-           round(MAX(dev.mad), 6) AS mad,
-           round(MAX(dev.med - 3.0 * dev.mad), 6) AS lo,
-           round(MAX(dev.med + 3.0 * dev.mad), 6) AS hi,
-           CAST(COALESCE(SUM(CASE WHEN v < dev.med - 3.0 * dev.mad
-                               OR v > dev.med + 3.0 * dev.mad
-                             THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_outliers
-    FROM ev JOIN dev USING (g) GROUP BY ev.g
-    """,
-)
-def event_value_outliers(spark, sf_dir):
-    """Robust per-type anomaly summary over the events value column
-    (operators/sessionize.py::value_outliers): median/MAD bounds at 3
-    robust sigmas and the out-of-bounds count — the telemetry-health
-    rule whose estimators the anomalies themselves cannot drag (50%
-    breakdown point, vs mean/stddev's 0%)."""
-    from epss_spark.operators import sessionize as sz
-
-    return sz.value_outliers(T(spark, sf_dir, "events"))
-
-
-@register(
-    "event_funnel_windowed",
-    """
-    WITH ev AS (
-      SELECT user_id, ts, event_id, event_type FROM events
-      WHERE event_type IN ('signup', 'view', 'purchase')
-    ),
-    base AS (SELECT COUNT(DISTINCT user_id) AS b FROM events),
-    s1 AS (
-      SELECT user_id, min(struct_pack(ts := ts, eid := event_id)) AS k FROM ev
-      WHERE event_type = 'signup' GROUP BY user_id
-    ),
-    s2 AS (
-      SELECT ev.user_id, min(struct_pack(ts := ts, eid := event_id)) AS k
-      FROM ev JOIN s1 USING (user_id)
-      WHERE event_type = 'view' AND struct_pack(ts := ts, eid := event_id) > s1.k
-        AND epoch_us(ts) - epoch_us(s1.k.ts) <= 86400000000
-      GROUP BY ev.user_id
-    ),
-    s3 AS (
-      SELECT ev.user_id, min(struct_pack(ts := ts, eid := event_id)) AS k
-      FROM ev JOIN s2 USING (user_id)
-      WHERE event_type = 'purchase' AND struct_pack(ts := ts, eid := event_id) > s2.k
-        AND epoch_us(ts) - epoch_us(s2.k.ts) <= 86400000000
-      GROUP BY ev.user_id
-    ),
-    n AS (
-      SELECT (SELECT COUNT(*) FROM s1) AS n1,
-             (SELECT COUNT(*) FROM s2) AS n2,
-             (SELECT COUNT(*) FROM s3) AS n3,
-             (SELECT b FROM base) AS b
-    )
-    SELECT CAST(1 AS BIGINT) AS step, 'signup' AS event_type, n1 AS n_converted,
-           CASE WHEN b > 0 THEN round(CAST(n1 AS DOUBLE) / b, 6) END AS conversion
-    FROM n
-    UNION ALL
-    SELECT CAST(2 AS BIGINT), 'view', n2,
-           CASE WHEN n1 > 0 THEN round(CAST(n2 AS DOUBLE) / n1, 6) END FROM n
-    UNION ALL
-    SELECT CAST(3 AS BIGINT), 'purchase', n3,
-           CASE WHEN n2 > 0 THEN round(CAST(n3 AS DOUBLE) / n2, 6) END FROM n
-    """,
-)
-def event_funnel_windowed(spark, sf_dir):
-    """Time-windowed conversion funnel: each step must occur within 24 h
-    of the previous step's event (exact integer-microsecond arithmetic,
-    the sessionize rule). The fold carries (step, prev-step micros) as
-    its state; the oracle replays with gap-filtered per-step min keys —
-    equivalent because the gap grows monotonically with event time."""
-    from epss_spark.operators import sessionize as sz
-
-    return sz.event_funnel(
-        T(spark, sf_dir, "events"), ["signup", "view", "purchase"],
-        max_gap_seconds=86400,
     )
 
 
@@ -3885,9 +3484,8 @@ def sample_mix_temperature(spark, sf_dir):
 
 # same oracle SQL as sample_token_budget on purpose: the bucketed form is
 # a different PHYSICAL plan (two-pass prefix sum over md5-prefix
-# sub-buckets — the changed_scores_salted model) with contractually
-# identical results; pytest additionally pins windowed == bucketed on
-# skewed/null-text corpora.
+# sub-buckets) with contractually identical results; pytest additionally
+# pins windowed == bucketed on skewed/null-text corpora.
 @register("sample_token_budget_bucketed", ORACLES["sample_token_budget"])
 def sample_token_budget_bucketed(spark, sf_dir):
     """Skew-safe token-budgeted mixing (operators/dedup.py::
@@ -4883,7 +4481,7 @@ def cluster_ff_init(spark, sf_dir):
     farthest_first_init): k=8 deterministic picks from vec_id 0, scored
     with the same per-cluster stats as cluster_kmeans. The k-center
     2-approximation init that rescues kmeans_fit from the clumped-seed
-    local optimum (tools/cluster_probe.py); every pick is a codegen
+    local optimum (PERF.md round 11); every pick is a codegen
     min-distance projection + TakeOrdered(1), zero shuffle."""
     emb = T(spark, sf_dir, "embeddings")
     cents = clustering.farthest_first_init(emb, k=_FF_K, start_id=0)

@@ -1,165 +1,16 @@
-"""Shared carried-state micro-batch skeleton.
+"""Shared writeStream wiring for the foreachBatch streams.
 
-funnel_stream, transitions_stream, and ngrams_stream are the same
-machine with different folds: per micro-batch they (1) read the
-committed per-key carried state as of BEFORE this epoch (replay reads
-what the first attempt saw), restricted to the keys the batch touches,
-(2) compute a stream-specific additive delta and the advanced carried
-state, (3) count the batch rows that violated the time-partitioned-
-per-key ordering contract, and (4) commit everything epoch-scoped with
-in-stream auto-compaction (keep-latest fold for the state store,
-additive fold for the counts store, verbatim for the late sibling).
-
-This module is that shell, factored once so the fourth stateful stream
-doesn't copy it again (round-10 judge item 4). The per-stream modules
-keep only their fold logic: a `compute(prior, batch_df) ->
-CarriedEpoch` callback returning the three stream-specific frames. All
-replay-idempotency and store-layout invariants are the dedup_stream
-module docstring's; the stream == batch equivalence pins in
-tests/test_sinks_streaming.py protect this shell through all three
-adapters.
-
-Deliberately NOT adapters: `history_stream` (its second artifact is an
-append-only CLOSED-RUNS fact table at `<dir>/runs` compacted verbatim —
-not an additive `.counts` store — and its late rule drops rows from the
-fold, not just counts them); `contamination_stream`, `burst_stream`, and
-`kmeans_stream` (additive-only — no carried state at all, so the
-shell's prior read/semi-join would be dead weight; kmeans_stream's
-integer sums even commute across epochs, so it has no ordering
-contract and no `.late` sibling); the dedup/BM25/ANN index
-maintenance streams (their "state" is the served index artifact itself,
-read via `_read_committed` at query grain, not a per-key fold).
-
-Scale shape per epoch (shared by construction): one keep-latest read of
-the store semi-joined to the batch's keys — per-epoch state writes are
-O(touched keys), never O(total keys) — plus whatever exchanges the
-stream's own fold needs; the late probe is one bounded aggregate.
+`start_carried_stream` is the one place the drift, kmeans, quality,
+score and contamination streams attach their per-epoch `process_batch`
+callback to a source: foreachBatch, a checkpoint directory, and an
+optional availableNow trigger. The callbacks own their commit logic;
+the replay-idempotency and store-layout invariants they follow are the
+dedup_stream module docstring's.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from epss_spark.operators import dedup
-from epss_spark.streaming.dedup_stream import (
-    _late_path,
-    _read_committed,
-    _write_epoch,
-    autocompact_epoch,
-)
-
-
-def counts_path(state_path: str) -> str:
-    """Sibling artifact holding a stream's additive count deltas next to
-    its per-key carried-state store."""
-    return state_path.rstrip("/") + ".counts"
-
-
-@dataclass
-class CarriedEpoch:
-    """What a stream's fold produces for one epoch, all WITHOUT the
-    __epoch column (the shell stamps it at commit):
-
-    - new_state: the advanced carried state, one row per TOUCHED key
-      (untouched keys persist via the store's keep-latest read).
-    - delta: the epoch's additive count delta for the `.counts` sibling,
-      or None for state-only streams (funnel).
-    - late_rows: the batch rows (any shape containing the key column)
-      that arrived older than their key's carried state, or None to
-      skip late accounting this epoch; the shell aggregates them to the
-      standard (epoch, n_late_events, n_late_keys) row.
-    """
-
-    new_state: DataFrame
-    delta: DataFrame | None = None
-    late_rows: DataFrame | None = None
-
-
-def run_carried_epoch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    state_path: str,
-    key: str,
-    empty_state_schema,
-    compute,
-    counts_fold=None,
-    track_late: bool = True,
-    compact_every: int | None = 64,
-) -> bool:
-    """One idempotent carried-state epoch. Reads the committed state as
-    of before `epoch_id` (bootstrapping from `empty_state_schema` on the
-    store's first epoch), keep-latest folds it, restricts it to the
-    batch's keys, and hands it to `compute(prior, batch_df)` — which
-    returns a CarriedEpoch. The shell then commits, in the canonical
-    order every adapter previously hand-rolled: counts delta, new state,
-    late accounting (+compact), counts compaction (`counts_fold` must be
-    the store's additive fixpoint transform, carrying max(__epoch)), and
-    state compaction (keep-latest fixpoint on the key). Returns False
-    without side effects on an empty batch.
-
-    `prior` is persisted for the duration of compute+commit — every
-    stream reads it at least twice (fold init/boundary join plus the
-    late probe) and without the cache each read re-folds every epoch dir
-    of the store."""
-    if batch_df.isEmpty():
-        return False
-    spark = batch_df.sparkSession
-    prior = (
-        dedup.keep_latest(
-            _read_committed(
-                spark, state_path, int(epoch_id), empty_schema=empty_state_schema
-            ),
-            key,
-            "__epoch",
-        )
-        .drop("__epoch")
-        .join(batch_df.select(key).distinct(), key, "left_semi")
-        .persist()
-    )
-    try:
-        out = compute(prior, batch_df)
-        stamp = F.lit(int(epoch_id))
-        if out.delta is not None:
-            _write_epoch(
-                out.delta.withColumn("__epoch", stamp),
-                counts_path(state_path),
-                epoch_id,
-            )
-        _write_epoch(
-            out.new_state.withColumn("__epoch", stamp), state_path, epoch_id
-        )
-        if track_late and out.late_rows is not None:
-            late = out.late_rows.agg(
-                F.count(F.lit(1)).alias("n_late_events"),
-                F.countDistinct(key).alias("n_late_keys"),
-            ).select(
-                F.lit(int(epoch_id)).alias("epoch"),
-                "n_late_events",
-                "n_late_keys",
-            )
-            _write_epoch(late, _late_path(state_path), epoch_id)
-            autocompact_epoch(spark, _late_path(state_path), epoch_id, compact_every)
-        if out.delta is not None:
-            autocompact_epoch(
-                spark,
-                counts_path(state_path),
-                epoch_id,
-                compact_every,
-                transform=counts_fold,
-            )
-        autocompact_epoch(
-            spark,
-            state_path,
-            epoch_id,
-            compact_every,
-            transform=lambda df: dedup.keep_latest(df, key, "__epoch"),
-        )
-    finally:
-        prior.unpersist()
-    return True
 
 
 def start_carried_stream(
@@ -170,7 +21,7 @@ def start_carried_stream(
 ):
     """The shared writeStream wiring: foreachBatch + checkpoint +
     optional availableNow trigger. `process_batch(batch_df, epoch_id)`
-    is the stream's adapter around run_carried_epoch."""
+    is the stream's per-epoch commit."""
     writer = events_stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir
     )

@@ -5,11 +5,10 @@ A crawl pipeline lands new document files continuously; the contamination
 audit should not wait for a nightly full-corpus pass. Each micro-batch is
 checked against the FIXED eval sets (benchmarks are static, broadcast-
 sized) and the per-(benchmark, method) hit counts plus the batch doc
-count append as additive epoch-scoped deltas — the burst_stream additive
-family, no carried state at all: the eval set is the "state" and it never
-changes. `contamination_snapshot` sums the committed deltas back into the
-exact `contamination_report` row shape over everything the stream has
-seen.
+count append as additive epoch-scoped deltas — no carried state at all:
+the eval set is the "state" and it never changes.
+`contamination_snapshot` sums the committed deltas back into the exact
+`contamination_report` row shape over everything the stream has seen.
 
 Input contract (same as the dedup document streams): each document id
 arrives EXACTLY once across the stream's lifetime (append-only drops of
@@ -45,9 +44,9 @@ _TOTAL_METHOD = "__docs__"
 
 
 def _fold_counts(df: DataFrame) -> DataFrame:
-    """Additive compaction transform (burst_stream precedent): one row
-    per (benchmark, method), max(__epoch) keeps folded rows attributed
-    to a committed epoch so the replay filter stays exact."""
+    """Additive compaction transform: one row per (benchmark, method),
+    max(__epoch) keeps folded rows attributed to a committed epoch so the
+    replay filter stays exact."""
     return df.groupBy("benchmark", "method").agg(
         F.sum("n").alias("n"), F.max("__epoch").alias("__epoch")
     )

@@ -520,7 +520,7 @@ def read_artifact(
 def _late_path(state_path: str) -> str:
     """Sibling artifact holding per-epoch dropped/late-row accounting for
     a maintained state store — one suffix rule shared by every stream
-    that tracks ordering-contract violations (funnel, history)."""
+    that tracks ordering-contract violations (history)."""
     return state_path.rstrip("/") + ".late"
 
 

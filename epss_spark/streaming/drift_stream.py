@@ -11,7 +11,7 @@ the write path, so replay safety is free: a retried epoch overwrites
 joins the folded store against a frozen REFERENCE corpus's sums with
 the identical mean/delta expressions.
 
-Like the burst and kmeans streams this is the additive family: integer
+Like the kmeans stream this is the additive family: integer
 sums commute, so delivery order, batch splits, and late arrivals are
 all irrelevant — the snapshot equals
 `embedding_dim_drift(reference, union_of_all_batches)` unconditionally

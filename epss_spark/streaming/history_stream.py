@@ -22,14 +22,13 @@ the stream has seen (pinned in tests), and a foreachBatch replay of any
 epoch rewrites identical rows.
 
 Ordering contract: batches must arrive version-partitioned per key
-(monotone crawl sequence — the funnel stream's contract, for the same
-reason: closed intervals are immutable, so an older version cannot be
-retro-inserted without a rebuild). Late rows — version at or below the
-key's committed last_version, or a NULL version (unorderable, so it can
-never extend a monotone history) — are DROPPED and counted per epoch
-into the `<dir>/open.late` sibling (read with `late_counts`): an SCD-2
-store that silently reordered history would corrupt every closed
-interval.
+(monotone crawl sequence), because closed intervals are immutable: an
+older version cannot be retro-inserted without a rebuild. Late rows —
+version at or below the key's committed last_version, or a NULL version
+(unorderable, so it can never extend a monotone history) — are DROPPED
+and counted per epoch into the `<dir>/open.late` sibling (read with
+`late_counts`): an SCD-2 store that silently reordered history would
+corrupt every closed interval.
 """
 
 from __future__ import annotations

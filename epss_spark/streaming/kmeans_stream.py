@@ -6,7 +6,7 @@ model should refresh without rescanning the corpus. Each micro-batch is
 assigned against the FROZEN reference centroids (plan-time constants — the
 same codegen projection as batch) and its per-cluster quantized sums
 (count + dim BIGINT coordinate sums) append as additive epoch-scoped
-deltas — the burst/contamination additive family, no carried state: the
+deltas — the contamination additive family, no carried state: the
 frozen model is the "state" and it never changes within a maintenance
 window. `kmeans_snapshot_centroids` folds the committed sums into the
 one-step-updated model, EXACTLY equal to

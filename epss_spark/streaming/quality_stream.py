@@ -16,7 +16,7 @@ production-k monitor never builds the interpreted expression tree),
 then ONE per-cluster aggregate of four additive integers —
 (n, quantized silhouette sum, boundary count, quantized margin sum) —
 appended as an epoch-scoped delta. Integer sums commute, so this is
-the kmeans/burst/drift additive family: delivery order, batch splits,
+the kmeans/drift additive family: delivery order, batch splits,
 and replays (epoch-scoped overwrites) are all irrelevant, and the
 snapshot equals the batch cluster_silhouette + cluster_boundary
 reports over the union of everything delivered, bit-exactly (pinned in

@@ -12,7 +12,7 @@ per micro-batch, one featurize + one map-only score against the frozen
 weights + ONE n_buckets-row aggregate of additive integers —
 (bucket, n, quantized score sum) — appended as an epoch-scoped delta.
 
-Integer sums commute, so this is the kmeans/burst/drift/quality
+Integer sums commute, so this is the kmeans/drift/quality
 additive family: delivery order, batch splits, and replays
 (epoch-scoped overwrites) are all irrelevant, and the snapshot equals
 the batch `score_histogram` over the union of everything delivered,

@@ -34,8 +34,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_events_file(spark: SparkSession, path: str, time_col: str = "ts") -> DataFrame:
-    """Path-based events loader (the CLI's input contract shares it with
-    load_table): normalize the timestamp column across the three forms
+    """Path-based events loader (the body of load_table's events
+    branch): normalize the timestamp column across the three forms
     real event dumps ship in — TIMESTAMP(NANOS) (Spark's reader rejects;
     read as long and truncate, bit-identical to DuckDB's TIMESTAMP_NS ->
     TIMESTAMP conversion), TIMESTAMP(MICROS) without isAdjustedToUTC

@@ -12,9 +12,8 @@ The 100 TB embedding-search flow (DEPLOYMENT.md job-graph step 6):
      scores them exactly — the Jegou et al. two-stage pipeline. PERF.md
      round-8 recall table: on clustered corpora re-ranking takes
      recall@10 from ~0.2 (raw ADC order) to ~1.0 at the same scan
-     fraction; tune n_probe / r with `tools/ann_recall.py` on a sample
-     of YOUR embedding table (the harness separates index defects from
-     corpora with no neighborhood structure).
+     fraction; tune n_probe / r by measuring recall@k against exact
+     cosine top-k (`topk_recall`) on a sample of YOUR embedding table.
   3. DAILY/CONTINUOUS: encode new embeddings against the FROZEN
      quantizer and append — one zero-shuffle codegen pass per batch
      (`streaming/dedup_stream.py::start_ann_index_maintenance` is the

@@ -25,6 +25,10 @@ FAST_PARITY = [
     "dedup_exact_docs",
     "ann_cosine_topk",
     "epss_quantize_daily",
+    "epss_new_keys",
+    "epss_reconstruct_dense",
+    "epss_top_movers",
+    "epss_summary",
 ]
 
 

@@ -1,10 +1,15 @@
 """The EPSS user paths — the client, the sources, quantize, the Query
 compiler and the session factory — must not load the extension operator
 families or the streaming modules. Checked in a fresh interpreter so that
-modules imported by other tests do not hide an import."""
+modules imported by other tests do not hide an import.
+
+Every internal import in the program files must also resolve. Most
+internal imports sit inside functions, where importing the module never
+runs them, so that check reads the source instead of importing it."""
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -36,7 +41,7 @@ EXTENSIONS = [
     *(
         f"epss_spark.operators.{m}"
         for m in (
-            "dedup", "similarity", "text", "multimodal", "sessionize", "clustering", "classifier",
+            "dedup", "similarity", "text", "multimodal", "clustering", "classifier",
             "graph", "selection", "sketches", "retrieval", "prep", "layout",
         )
     ),
@@ -66,3 +71,83 @@ def test_core_paths_load_no_extension_module():
     ext = sorted(m for m in loaded if any(m == e or m.startswith(e + ".") for e in EXTENSIONS))
     assert ext == []
     assert loaded == CLOSURE
+
+
+SOURCE_DIRS = ["epss_spark", "examples", "tools", "perfbench"]
+
+
+def _module_path(name: str) -> str | None:
+    base = os.path.join(ROOT, *name.split("."))
+    for path in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(path):
+            return path
+    return None
+
+
+def _top_level_names(path: str) -> set[str]:
+    """Names a module defines at import time: defs, classes, assignments
+    and imports, including those under top-level if/try blocks."""
+    names: set[str] = set()
+    stack = list(ast.parse(open(path).read(), path).body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.If, ast.Try, ast.With)):
+            for field in ("body", "orelse", "finalbody", "handlers"):
+                stack.extend(getattr(node, field, []))
+        elif isinstance(node, ast.ExceptHandler):
+            stack.extend(node.body)
+    return names
+
+
+def _internal_imports():
+    """(file, line, module, imported name or None) for every import of an
+    epss_spark module anywhere in the source dirs, nested ones included."""
+    for d in SOURCE_DIRS:
+        for dirpath, _, files in os.walk(os.path.join(ROOT, d)):
+            for f in sorted(files):
+                if not f.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, f)
+                rel = os.path.relpath(path, ROOT)
+                package = os.path.dirname(rel).replace(os.sep, ".")
+                for node in ast.walk(ast.parse(open(path).read(), path)):
+                    if isinstance(node, ast.Import):
+                        for a in node.names:
+                            if a.name.split(".")[0] == "epss_spark":
+                                yield rel, node.lineno, a.name, None
+                    elif isinstance(node, ast.ImportFrom):
+                        module = node.module or ""
+                        if node.level:
+                            base = package.rsplit(".", node.level - 1)[0]
+                            module = f"{base}.{module}" if module else base
+                        if module.split(".")[0] == "epss_spark":
+                            for a in node.names:
+                                yield rel, node.lineno, module, a.name
+
+
+def test_every_internal_import_resolves():
+    names_cache: dict[str, set[str]] = {}
+    dangling = []
+    n_checked = 0
+    for rel, line, module, name in _internal_imports():
+        n_checked += 1
+        path = _module_path(module)
+        if path is None:
+            dangling.append(f"{rel}:{line}: no module {module}")
+            continue
+        if name is None or name == "*":
+            continue
+        if path not in names_cache:
+            names_cache[path] = _top_level_names(path)
+        if name not in names_cache[path] and _module_path(f"{module}.{name}") is None:
+            dangling.append(f"{rel}:{line}: {module} defines no {name}")
+    assert n_checked > 100
+    assert dangling == []

@@ -421,7 +421,7 @@ def test_download_snapshot_compressed_mode_returns_real_path(tmp_path):
 def test_cli_late_counts(spark, tmp_path, capsys):
     """late-counts reads a maintenance stream's `.late` sibling artifact
     and reports per-epoch out-of-order drops — the ops check for the
-    ordering contract, working on funnel and history stores alike."""
+    ordering contract of the history stream."""
     import epss_spark.cli as cli
     from epss_spark.streaming import history_stream
 
@@ -442,73 +442,6 @@ def test_cli_late_counts(spark, tmp_path, capsys):
     assert "epoch=0 late_events=0 late_keys=0" in out
     assert "epoch=1 late_events=1 late_keys=1" in out
     assert "2 epochs, 1 late events total" in out
-
-
-def test_cli_events_reports(spark, tmp_path, capsys):
-    """The events-tier CLI: all five reports run over an events parquet
-    (through the path-based loader, so NTZ/nanos timestamp dumps work),
-    values match the underlying operators, and --output lands the full
-    report."""
-    import datetime as dt
-
-    import epss_spark.cli as cli
-    from epss_spark.operators import sessionize as sz
-
-    D = dt.datetime(2024, 1, 1)
-    rows = [
-        (1, "u1", D, "signup"), (2, "u1", D + dt.timedelta(minutes=1), "view"),
-        (3, "u1", D + dt.timedelta(minutes=2), "purchase"),
-        (4, "u2", D, "signup"), (5, "u2", D + dt.timedelta(minutes=1), "view"),
-        (6, "u3", D, "view"),
-    ]
-    ev_path = str(tmp_path / "events")
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id string, ts timestamp, event_type string"
-    )
-    df.write.parquet(ev_path)
-
-    rc = cli.main(["events", "--input", ev_path, "--report", "funnel",
-                   "--steps", "signup,view,purchase"])
-    assert rc == 0
-    out = capsys.readouterr().out.strip().splitlines()
-    want = [tuple(r) for r in sz.event_funnel(
-        df, ["signup", "view", "purchase"]).collect()]
-    got = [tuple(line.split("  ")) for line in out]
-    assert [(int(g[0]), g[1], int(g[2])) for g in got] == [
-        (s, t, n) for s, t, n, _ in want]
-
-    parq = str(tmp_path / "transitions")
-    rc = cli.main(["events", "--input", ev_path, "--report", "transitions",
-                   "--output", parq, "--k", "2"])
-    assert rc == 0
-    printed = capsys.readouterr().out.strip().splitlines()
-    assert len(printed) == 2  # --k caps the console rows
-    full = {(r.from_type, r.to_type): r.n
-            for r in spark.read.parquet(parq).collect()}
-    assert full == {("signup", "view"): 2, ("view", "purchase"): 1}
-
-    rc = cli.main(["events", "--input", ev_path, "--report", "paths", "--k", "5"])
-    assert rc == 0
-    lines = {tuple(line.split("  ")) for line in
-             capsys.readouterr().out.strip().splitlines()}
-    assert ("signup>view>purchase", "3", "1") in lines
-    assert ("signup>view", "2", "1") in lines and ("view", "1", "1") in lines
-
-    # funnel without steps is a usage error, not a traceback
-    rc = cli.main(["events", "--input", ev_path, "--report", "funnel"])
-    assert rc == 2
-
-    rc = cli.main(["events", "--input", ev_path, "--report", "ngrams",
-                   "--n", "2", "--k", "10"])
-    assert rc == 0
-    nlines = {tuple(line.split("  ")) for line in
-              capsys.readouterr().out.strip().splitlines()}
-    assert ("signup>view", "2", "2") in nlines  # n, n_sessions
-
-    for report in ("sessions", "bursts"):
-        rc = cli.main(["events", "--input", ev_path, "--report", report, "--k", "3"])
-        assert rc == 0
-        assert capsys.readouterr().out.strip()
 
 
 def test_cli_prep_split_ops(spark, tmp_path, capsys):

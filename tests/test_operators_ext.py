@@ -171,35 +171,6 @@ def test_lsh_topk_derives_dim_and_raises_on_mismatch(spark):
         similarity.lsh_topk(bad, emb, k=2).collect()
 
 
-def test_sessionize_known_gaps(spark):
-    import datetime as dt
-
-    from epss_spark.operators import sessionize as sz
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [
-        # user 1: two sessions split by a 2h gap; 30min gaps stay together
-        (1, t0, 1),
-        (1, t0 + dt.timedelta(minutes=30), 2),
-        (1, t0 + dt.timedelta(hours=3), 3),
-        # exact-gap boundary: 1800s gap with gap_seconds=1800 is NOT a split
-        (2, t0, 4),
-        (2, t0 + dt.timedelta(seconds=1800), 5),
-        (2, t0 + dt.timedelta(seconds=1800 * 2 + 1), 6),  # 1801s -> split
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long")
-    out = sz.sessionize(df, gap_seconds=1800, tiebreak="event_id").collect()
-    sid = {r.event_id: r.session_id for r in out}
-    assert sid[1] == sid[2] == 1 and sid[3] == 2
-    assert sid[4] == sid[5] == 1 and sid[6] == 2
-    stats = {
-        (r.user_id, r.session_id): (r.n_events, r.duration_sec)
-        for r in sz.session_stats(df, gap_seconds=1800, tiebreak="event_id").collect()
-    }
-    assert stats[(1, 1)] == (2, 1800.0) and stats[(1, 2)] == (1, 0.0)
-    assert stats[(2, 1)] == (2, 1800.0) and stats[(2, 2)] == (1, 0.0)
-
-
 def test_minhash_signatures_are_true_md5_minima(spark):
     """Regression pin for the arity-dispatch lambda trap: a default-arg
     closure (`lambda s, h=h:`) makes F.transform call the lambda as
@@ -2223,43 +2194,6 @@ def test_quality_funnel_cumulative_one_pass(spark):
         prep.quality_funnel(df, [])
 
 
-def test_event_funnel_order_sensitivity(spark):
-    import datetime as dt
-
-    from epss_spark.operators import sessionize as sz
-
-    D = dt.datetime(2024, 1, 1)
-    rows = [
-        # user 1: full ordered funnel
-        (1, D, 1, "signup"), (1, D.replace(hour=1), 2, "view"),
-        (1, D.replace(hour=2), 3, "purchase"),
-        # user 2: view BEFORE signup -> converts step 1 only
-        (2, D.replace(hour=1), 4, "view"), (2, D.replace(hour=2), 5, "signup"),
-        # user 3: signup only
-        (3, D, 6, "signup"),
-        # user 4: never enters the funnel (still in the step-1 base)
-        (4, D, 7, "click"),
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    got = {
-        r.step: r
-        for r in sz.event_funnel(df, ["signup", "view", "purchase"]).collect()
-    }
-    assert (got[1].n_converted, got[1].conversion) == (3, 0.75)
-    assert (got[2].n_converted, got[2].conversion) == (1, 0.333333)
-    assert (got[3].n_converted, got[3].conversion) == (1, 1.0)
-    # same-timestamp tiebreak: view at the SAME ts as signup but a later
-    # event_id still counts as "after"
-    df2 = spark.createDataFrame(
-        [(9, D, 1, "signup"), (9, D, 2, "view")],
-        "user_id long, ts timestamp, event_id long, event_type string",
-    )
-    got2 = {r.step: r.n_converted for r in sz.event_funnel(df2, ["signup", "view"]).collect()}
-    assert got2 == {1: 1, 2: 1}
-
-
 def test_truncate_normalize_and_mrl_energy(spark):
     import math
 
@@ -2382,100 +2316,6 @@ def test_dataset_card_approx_mode_close_to_exact(spark):
     assert approx.mean_tokens == exact.mean_tokens  # mean is exact in both
 
 
-def test_event_funnel_max_gap(spark):
-    import datetime as dt
-
-    from epss_spark.operators import sessionize as sz
-
-    D = dt.datetime(2024, 1, 1)
-    rows = [
-        # user 1: view 1h after signup (inside a 2h gap)
-        (1, D, 1, "signup"), (1, D + dt.timedelta(hours=1), 2, "view"),
-        # user 2: view 3h after signup (outside), later view even further
-        (2, D, 3, "signup"), (2, D + dt.timedelta(hours=3), 4, "view"),
-        (2, D + dt.timedelta(hours=9), 5, "view"),
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    unbounded = {r.step: r.n_converted
-                 for r in sz.event_funnel(df, ["signup", "view"]).collect()}
-    assert unbounded == {1: 2, 2: 2}
-    gapped = {r.step: r.n_converted
-              for r in sz.event_funnel(df, ["signup", "view"],
-                                       max_gap_seconds=7200).collect()}
-    assert gapped == {1: 2, 2: 1}  # user 2's first view misses the window
-
-
-@pytest.mark.slow  # full-gate tier (r15: default tier must fit the driver window)
-def test_event_funnel_chunked_equals_monolithic(spark):
-    """The hot-key-safe chunked prefix-fold (transition-table
-    composition) is pinned bit-identical to the monolithic per-key
-    array fold — including a bot key holding ~40% of all events, gap
-    windows that straddle chunk boundaries, and chunk sizes down to 2
-    (every boundary case exercised)."""
-    import datetime as dt
-    import random
-
-    from epss_spark.operators import sessionize as sz
-
-    rng = random.Random(41)
-    D = dt.datetime(2024, 3, 1)
-    types = ["signup", "view", "purchase", "click", "refund"]
-    rows = []
-    for i in range(360):
-        u = rng.randint(1, 12)
-        rows.append((u, D + dt.timedelta(seconds=rng.randint(0, 400_000)),
-                     i, rng.choice(types)))
-    for i in range(360, 600):  # the bot key
-        rows.append((77, D + dt.timedelta(seconds=rng.randint(0, 400_000)),
-                     i, rng.choice(types)))
-    df = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    steps = ["signup", "view", "purchase"]
-    for gap in (None, 3600, 40_000):
-        mono = sorted(map(tuple, sz.event_funnel(
-            df, steps, max_gap_seconds=gap, chunk_size=None).collect()))
-        for cs in (2, 5, 64, 10_000):
-            chunked = sorted(map(tuple, sz.event_funnel(
-                df, steps, max_gap_seconds=gap, chunk_size=cs).collect()))
-            assert chunked == mono, (gap, cs)
-
-
-def test_funnel_fold_states_resumes_from_prior(spark):
-    """funnel_fold_states with a prior-state init equals folding the
-    concatenated sequence — the carried-state contract the streaming
-    funnel relies on, checked at the operator level."""
-    import datetime as dt
-
-    from epss_spark.operators import sessionize as sz
-
-    D = dt.datetime(2024, 3, 1)
-    rows1 = [(1, D, 1, "signup"), (2, D, 2, "signup")]
-    rows2 = [(1, D + dt.timedelta(hours=1), 3, "view"),
-             (2, D + dt.timedelta(hours=9), 4, "view")]
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
-    df1 = spark.createDataFrame(rows1, schema)
-    df2 = spark.createDataFrame(rows2, schema)
-    both = spark.createDataFrame(rows1 + rows2, schema)
-    steps = ["signup", "view"]
-    for gap in (None, 7200):
-        s1 = sz.funnel_fold_states(df1, steps, max_gap_seconds=gap, chunk_size=1)
-        prior = s1.select(
-            "user_id",
-            s1["step"].alias("__pstep"),
-            s1["us"].alias("__pus"),
-        )
-        resumed = sorted(map(tuple, sz.funnel_fold_states(
-            df2, steps, max_gap_seconds=gap, chunk_size=1, prior=prior
-        ).collect()))
-        oneshot = sorted(map(tuple, sz.funnel_fold_states(
-            both, steps, max_gap_seconds=gap, chunk_size=1
-        ).collect()))
-        assert resumed == oneshot
-
-
 def test_pack_efficiency_hand_computed(spark):
     from epss_spark.operators import prep
 
@@ -2536,22 +2376,6 @@ def test_decontaminate_spans_excises_only_benchmark_overlap(spark):
     # a fully-leaked doc drops entirely
     full = spark.createDataFrame([(9, leak)], "doc_id long, text string")
     assert dedup.decontaminate_spans(full, bench, k=9).count() == 0
-
-
-def test_value_outliers_hand_computed(spark):
-    from epss_spark.operators import sessionize as sz
-
-    rows = [("a", float(v)) for v in [1, 2, 3, 4, 5, 100]] + [
-        ("b", 7.0), ("b", None),
-    ]
-    df = spark.createDataFrame(rows, "event_type string, value double")
-    got = {r.event_type: r for r in sz.value_outliers(df).collect()}
-    a = got["a"]
-    # median 3.5; abs devs [2.5,1.5,.5,.5,1.5,96.5] -> MAD = 1.5 * 1.4826
-    assert (a.n, a.median, a.mad) == (6, 3.5, round(1.5 * 1.4826, 6))
-    assert a.n_outliers == 1  # only the 100
-    b = got["b"]
-    assert (b.n, b.mad, b.n_outliers) == (1, 0.0, 0)  # NULL ignored, not outlier
 
 
 def test_topk_recall_hand_computed(spark):
@@ -2623,38 +2447,6 @@ def test_snapshot_history_null_versions_survive_tiebreak_dedup(spark):
     assert got == [("k", "A", None, None, 1), ("m", "B", 1, None, 1)]
 
 
-def test_group_broadcast_guard_fallback_paths(spark):
-    """The per-group broadcast guard (sessionize._broadcast_if_bounded):
-    above the cap — or with max_broadcast_groups=None — value_outliers
-    and retention_cohorts take the plain-join (sort-merge/AQE) path and
-    must produce identical rows; the physical plan must then contain no
-    forced broadcast exchange of the per-group table."""
-    import datetime as dt
-
-    from epss_spark.operators import sessionize as sz
-
-    rows = [(f"g{i % 5}", float(i % 17)) for i in range(200)]
-    df = spark.createDataFrame(rows, "event_type string, value double")
-    want = sorted(map(tuple, sz.value_outliers(df).collect()))
-    for cap in (None, 2):  # skip-probe and over-cap fallback
-        got = sorted(map(tuple, sz.value_outliers(
-            df, max_broadcast_groups=cap).collect()))
-        assert got == want, cap
-    plan = sz.value_outliers(df, max_broadcast_groups=2)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in plan
-
-    D = dt.datetime(2024, 1, 1)
-    erows = [
-        (i % 7, D + dt.timedelta(days=i % 4, hours=i % 3)) for i in range(100)
-    ]
-    edf = spark.createDataFrame(erows, "user_id long, ts timestamp")
-    want = sorted(map(tuple, sz.retention_cohorts(edf).collect()))
-    for cap in (None, 1):
-        got = sorted(map(tuple, sz.retention_cohorts(
-            edf, max_broadcast_groups=cap).collect()))
-        assert got == want, cap
-
-
 def test_event_daily_growth_semantics(spark):
     import datetime as dt
 
@@ -2689,31 +2481,6 @@ def test_event_daily_growth_semantics(spark):
     assert [(r.active_users, r.new_users, r.cumulative_users) for r in out] == [
         (2, 2, 2), (2, 1, 3),
     ]
-
-
-def test_retention_cohorts_hand_computed(spark):
-    import datetime as dt
-
-    from epss_spark.operators import sessionize as sz
-
-    D = dt.datetime(2024, 1, 1)
-    ev = spark.createDataFrame(
-        [
-            (1, D), (2, D),
-            (1, D + dt.timedelta(days=1)), (3, D + dt.timedelta(days=1)),
-            (2, D + dt.timedelta(days=2)), (3, D + dt.timedelta(days=2)),
-            (1, D),  # same-day repeat must not inflate n_active
-        ],
-        "user_id long, ts timestamp",
-    )
-    got = {
-        (str(r.cohort_day), r.day_offset): (r.n_active, r.cohort_size, r.retention_rate)
-        for r in sz.retention_cohorts(ev).collect()
-    }
-    assert got[("2024-01-01", 0)] == (2, 2, 1.0)
-    assert got[("2024-01-01", 1)] == (1, 2, 0.5)  # only user 1 returns day 2
-    assert got[("2024-01-01", 2)] == (1, 2, 0.5)  # only user 2 on day 3
-    assert got[("2024-01-02", 1)] == (1, 1, 1.0)  # user 3's own cohort
 
 
 def test_winnow_fingerprints_string_ids(spark):
@@ -2765,32 +2532,6 @@ def test_history_as_of_and_changed_between(spark):
     assert delta == {("a", 3), ("b", 5)}  # run starts in (2, 5]; 6 excluded
 
 
-def test_event_transitions_hand_computed(spark):
-    """Markov transition counts: consecutive same-key pairs only, ordered
-    by (ts, tiebreak), per-from-state probabilities sum to 1."""
-    from epss_spark.operators import sessionize as sz
-
-    ev = spark.createDataFrame(
-        [
-            # u1: v -> c -> v ; u2: v -> v ; u3 single event (no pair)
-            (1, "u1", "2024-01-01 00:00:00", "v"),
-            (2, "u1", "2024-01-01 00:01:00", "c"),
-            (3, "u1", "2024-01-01 00:02:00", "v"),
-            (4, "u2", "2024-01-01 00:00:30", "v"),
-            (5, "u2", "2024-01-01 00:00:30", "v"),  # ts tie -> event_id order
-            (6, "u3", "2024-01-01 00:09:00", "c"),
-        ],
-        "event_id long, user_id string, ts string, event_type string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    got = {(r.from_type, r.to_type): (r.n, r.prob)
-           for r in sz.event_transitions(ev).collect()}
-    assert got == {
-        ("v", "c"): (1, 0.5),
-        ("v", "v"): (1, 0.5),
-        ("c", "v"): (1, 1.0),
-    }
-
-
 def test_prefix_block_edit_verified_hand_computed(spark):
     """Prefix blocking + normalized-Levenshtein verification: pairs in
     one block verify by 1 - lev/max_len; pairs blocked apart never
@@ -2840,66 +2581,6 @@ def test_history_lookup_hand_computed(spark):
            dedup.history_lookup(hist, probes, key="url", point_col="version").collect()}
     # probe 11 at point 3: run [1,3) is closed AT 3 -> B; 13 predates b; z unknown
     assert got == {10: ("a", "A"), 11: ("a", "B"), 12: ("a", "A")}
-
-
-def test_session_paths_hand_computed(spark):
-    """Gap sessionization splits paths; within-session order is
-    (ts, tiebreak); identical paths aggregate across users."""
-    from epss_spark.operators import sessionize as sz
-
-    ev = spark.createDataFrame(
-        [
-            # u1 session 1: v>c ; then a 2h gap -> session 2: v
-            (1, "u1", "2024-01-01 00:00:00", "v"),
-            (2, "u1", "2024-01-01 00:01:00", "c"),
-            (3, "u1", "2024-01-01 02:30:00", "v"),
-            # u2 one session: v>c (ts tie broken by event_id)
-            (4, "u2", "2024-01-01 00:00:30", "v"),
-            (5, "u2", "2024-01-01 00:00:30", "c"),
-        ],
-        "event_id long, user_id string, ts string, event_type string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    got = {(r.path): (r.path_len, r.n_sessions) for r in
-           sz.session_paths(ev, gap_seconds=3600).collect()}
-    assert got == {"v>c": (2, 2), "v": (1, 1)}
-
-
-def test_daily_burst_zscore_hand_computed(spark):
-    """Trailing-window z-score: the current day is excluded from its own
-    baseline, days with fewer than min_days prior days emit NULL z and
-    is_burst=False, zero-variance baselines emit NULL z, and a genuine
-    burst is flagged with the hand-computed z."""
-    import math
-
-    from epss_spark.operators import sessionize as sz
-
-    rows = []
-    eid = 0
-    # type "t": days 1..7 counts [8,10,12,9,11,10,10]; day 8 count 40
-    for day, cnt in zip(range(1, 9), [8, 10, 12, 9, 11, 10, 10, 40]):
-        for _ in range(cnt):
-            eid += 1
-            rows.append((eid, "u", f"2024-01-{day:02d} 12:00:00", "t"))
-    # type "flat": constant 5/day -> var 0 -> z NULL even with full window
-    for day in range(1, 6):
-        for _ in range(5):
-            eid += 1
-            rows.append((eid, "u", f"2024-01-{day:02d} 12:00:00", "flat"))
-    ev = spark.createDataFrame(
-        rows, "event_id long, user_id string, ts string, event_type string"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    got = {(r.event_type, str(r.day)): (r.n, r.z, r.is_burst)
-           for r in sz.daily_burst_zscore(ev).collect()}
-    # day 1: no prior days; days 2-3: cnt < min_days=3 -> NULL z
-    assert got[("t", "2024-01-01")] == (8, None, False)
-    assert got[("t", "2024-01-03")] == (12, None, False)
-    # day 8 baseline = days 1..7: mean 10, var (710 - 4900/7)/6 = 5/3
-    z8 = math.floor((40 - 10) / math.sqrt(5 / 3) * 1e6 + 0.5) / 1e6
-    assert got[("t", "2024-01-08")] == (40, z8, True)
-    # day 4 baseline = [8,10,12]: mean 10, var 4, z = (9-10)/2 = -0.5
-    assert got[("t", "2024-01-04")] == (9, -0.5, False)
-    # constant series: variance 0 -> NULL z, never flagged
-    assert got[("flat", "2024-01-05")] == (5, None, False)
 
 
 def test_freq_spectrum_hand_computed(spark):
@@ -3006,36 +2687,6 @@ def test_pair_cosine_histogram_hand_computed(spark):
     assert got == {0: 1, 20: 1, -20: 1}
 
 
-def test_session_paths_cap_prefix_and_true_length(spark):
-    """Hot-key guard: with max_path_events, a continuously-active bot's
-    single giant session emits only its first-N-steps prefix as the
-    path while path_len stays the TRUE session length — capped journeys
-    group by (prefix, true length) and never merge with genuinely short
-    ones. Uncapped output is unchanged for short sessions."""
-    import datetime as dt
-
-    from epss_spark.operators import sessionize as sz
-
-    rows = []
-    # bot: 50 events, one per minute — never a 30-min gap -> one session
-    for i in range(50):
-        rows.append((i, "bot", dt.datetime(2024, 1, 1, 0, i), "v" if i % 2 else "c"))
-    # human: two events
-    rows += [(100, "h", dt.datetime(2024, 1, 1, 1, 0), "c"),
-             (101, "h", dt.datetime(2024, 1, 1, 1, 1), "v")]
-    ev = spark.createDataFrame(
-        rows, "event_id long, user_id string, ts timestamp, event_type string"
-    )
-    capped = {(r.path, r.path_len): r.n_sessions
-              for r in sz.session_paths(ev, max_path_events=3).collect()}
-    # bot path truncated to first 3 steps (c v c), true length 50
-    assert capped == {("c>v>c", 50): 1, ("c>v", 2): 1}
-    # uncapped: the bot path carries all 50 steps
-    full = {r.path_len: len(r.path.split(">"))
-            for r in sz.session_paths(ev).collect()}
-    assert full == {50: 50, 2: 2}
-
-
 def test_keep_latest_map_payload_with_tiebreak(spark):
     """The documented map-payload contract (dedup.py keep_latest): with a
     tiebreak the ordering key excludes the payload, so MapType payload
@@ -3074,108 +2725,6 @@ def test_history_lookup_suffixes_colliding_probe_columns(spark):
     assert "fp_hist" in out.columns and "fp" in out.columns
     got = {r.probe_id: (r.fp, r.fp_hist) for r in out.collect()}
     assert got == {10: ("probe-fp", "A"), 11: ("probe-fp2", "B")}
-
-
-def test_daily_burst_zscore_densify_scores_against_calendar(spark):
-    """densify=True inserts n=0 rows for quiet calendar days, deflating a
-    sparse type's baseline (ADVICE round-9: default baselines are over
-    ACTIVE days only — pinned hand-computed here in both modes)."""
-    import math
-
-    from epss_spark.operators import sessionize as sz
-
-    rows = []
-    eid = 0
-    # type "s": active days 1,2,3 with counts 4,6,5; silent 4..7; day 8 count 6
-    for day, cnt in [(1, 4), (2, 6), (3, 5), (8, 6)]:
-        for _ in range(cnt):
-            eid += 1
-            rows.append((eid, "u", f"2024-01-{day:02d} 12:00:00", "s"))
-    ev = spark.createDataFrame(
-        rows, "event_id long, user_id string, ts string, event_type string"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    # default: baseline over active days [4,6,5] -> mean 5, var 1, z = 1.0
-    active = {str(r.day): (r.n, r.z) for r in sz.daily_burst_zscore(ev).collect()}
-    assert active["2024-01-08"] == (6, 1.0)
-    assert "2024-01-05" not in active  # quiet days emit no row
-    # densified: window for day 8 = [4,6,5,0,0,0,0]; quiet days get rows
-    dense = {str(r.day): (r.n, r.z) for r in
-             sz.daily_burst_zscore(ev, densify=True).collect()}
-    mean = 15 / 7
-    var = (77 - 15 * 15 / 7) / 6
-    z8 = math.floor((6 - mean) / math.sqrt(var) * 1e6 + 0.5) / 1e6
-    assert dense["2024-01-08"] == (6, z8)
-    # day 4 (inserted): baseline [4,6,5] -> z = (0-5)/1 = -5
-    assert dense["2024-01-04"] == (0, -5.0)
-    assert dense["2024-01-06"][0] == 0
-
-
-def test_session_paths_capped_default_equals_exact_mode(spark):
-    """Round-10 default flip: max_path_events=1024 is on by default; for
-    human-length (gap-bounded) sessions the capped plan's output is
-    bit-identical to exact mode (max_path_events=None), because no
-    session reaches the cap — the same default-safe contract
-    event_funnel's chunk_size carries."""
-    import datetime as dt
-
-    from epss_spark.operators import sessionize as sz
-
-    rows, eid = [], 0
-    for u in range(20):
-        for s in range(3):  # 3 sessions per user, 1..7 events each
-            base = dt.datetime(2024, 1, 1 + s, 0, 0)
-            for i in range(1 + (u + s) % 7):
-                eid += 1
-                rows.append((eid, f"u{u}", base + dt.timedelta(minutes=i),
-                             ["v", "c", "p"][(eid + i) % 3]))
-    ev = spark.createDataFrame(
-        rows, "event_id long, user_id string, ts timestamp, event_type string"
-    )
-    capped = sorted(map(tuple, sz.session_paths(ev).collect()))
-    exact = sorted(map(tuple, sz.session_paths(ev, max_path_events=None).collect()))
-    assert capped == exact and len(capped) > 0
-
-
-def test_path_ngrams_hand_computed(spark):
-    """Journey n-grams never cross a session boundary (unlike the raw
-    lead() adjacency), count every in-session occurrence, and report
-    distinct containing sessions; sessions shorter than n contribute
-    nothing; n<1 is a usage error."""
-    import datetime as dt
-
-    import pytest as _pytest
-
-    from epss_spark.operators import sessionize as sz
-
-    D = dt.datetime(2024, 1, 1)
-    rows = [
-        # u1 session 1: v c v c  (bigrams v>c x2, c>v x1)
-        (1, "u1", D, "v"), (2, "u1", D + dt.timedelta(minutes=1), "c"),
-        (3, "u1", D + dt.timedelta(minutes=2), "v"),
-        (4, "u1", D + dt.timedelta(minutes=3), "c"),
-        # u1 session 2 (2h gap): v c  (v>c x1 — adjacency across the gap
-        # would ALSO pair c (s1 end) with v (s2 start); n-grams must not)
-        (5, "u1", D + dt.timedelta(hours=2), "v"),
-        (6, "u1", D + dt.timedelta(hours=2, minutes=1), "c"),
-        # u2: single event -> no bigrams
-        (7, "u2", D, "v"),
-    ]
-    ev = spark.createDataFrame(
-        rows, "event_id long, user_id string, ts timestamp, event_type string"
-    )
-    got = {r.gram: (r.n, r.n_sessions)
-           for r in sz.path_ngrams(ev, n=2, gap_seconds=3600).collect()}
-    assert got == {"v>c": (3, 2), "c>v": (1, 1)}
-    # trigrams: only session 1 is long enough
-    got3 = {r.gram: (r.n, r.n_sessions)
-            for r in sz.path_ngrams(ev, n=3, gap_seconds=3600).collect()}
-    assert got3 == {"v>c>v": (1, 1), "c>v>c": (1, 1)}
-    # the session-blind transition table DOES pair across the gap
-    trans = {(r.from_type, r.to_type): r.n
-             for r in sz.event_transitions(ev).collect()}
-    assert trans[("c", "v")] == 2  # in-session 1 + cross-gap 1
-    with _pytest.raises(ValueError, match="n must be"):
-        sz.path_ngrams(ev, n=0)
 
 
 def test_train_split_leakage_safe_hand_computed(spark):

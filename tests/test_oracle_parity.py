@@ -52,56 +52,11 @@ def test_registry_counts():
     """Pins the audit-trail numbers quoted in README.md (registered and
     off-surface query counts): if the registry grows or shrinks, update
     README.md and this test together."""
-    assert len(registry.get_all_queries()) == 190
-    assert len(demoted_names()) == 140
+    assert len(registry.get_all_queries()) == 181
+    assert len(demoted_names()) == 131
     # every registered query has a full DuckDB oracle — the README's
     # headline claim, verified, not asserted
     assert set(registry.get_all_oracles()) == set(registry.get_all_queries())
-
-
-@pytest.mark.parametrize("sf_dir", [SF_DIR, "/root/testdata/sf0.01"])
-def test_testdata_sessions_below_path_cap(sf_dir):
-    """event_session_paths / event_path_ngrams run the hot-key-capped
-    default (max_path_events=1024) while their DuckDB oracles are
-    uncapped — parity holds only while no testdata session exceeds the
-    cap. Assert that loudly here (both the pytest SF and the driver's
-    sf0.01) so a future testdata change fails at the right place instead
-    of as an opaque hash mismatch."""
-    con = duck_con(sf_dir)
-    try:
-        max_len = con.execute(
-            """
-            WITH o AS (
-              SELECT user_id, ts, event_id,
-                     lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-              FROM events
-            ),
-            m AS (
-              SELECT user_id, ts, event_id,
-                     CASE WHEN prev_ts IS NULL
-                               OR epoch_us(ts) - epoch_us(prev_ts) > 3600000000
-                          THEN 1 ELSE 0 END AS st
-              FROM o
-            ),
-            s AS (
-              SELECT user_id,
-                     SUM(st) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-              FROM m
-            )
-            SELECT max(cnt) FROM (
-              SELECT COUNT(*) AS cnt FROM s GROUP BY user_id, session_id
-            )
-            """
-        ).fetchone()[0]
-    finally:
-        con.close()
-    assert max_len is not None and max_len < 1024, (
-        f"{sf_dir}: longest 1h-gap session is {max_len} events — at or above "
-        "the max_path_events=1024 cap, so the capped Spark default no "
-        "longer matches the uncapped DuckDB oracles for "
-        "event_session_paths / event_path_ngrams"
-    )
 
 
 def test_every_demoted_query_has_an_oracle():

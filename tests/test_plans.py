@@ -611,29 +611,6 @@ def test_edit_verified_length_prefilter_before_levenshtein(spark):
     assert "abs(" in p
 
 
-def test_burst_zscore_plan_two_bounded_exchanges(spark):
-    # daily rollup (one hash aggregate of the events) + the trailing
-    # window over (type, day) rows: exactly two hash exchanges, and the
-    # window input is the bounded daily aggregate, never raw events
-    p = plan(spark, "event_burst_zscore")
-    assert "EvalPython" not in p
-    assert len(re.findall(r"Exchange hashpartitioning", p)) == 2
-    assert "Join" not in p
-
-
-def test_path_ngrams_plan_two_exchanges_no_python(spark):
-    # journey n-gram mining: the capped _session_seqs build (three
-    # window nodes riding ONE user_id exchange) feeds the per-session
-    # slide; the first aggregate stage groups by (gram, key, session)
-    # — a SUPERSET of the key partitioning, so it reuses the same
-    # exchange — and only the final per-gram aggregate adds the second,
-    # motif-bounded exchange. Everything stays JVM codegen.
-    p = plan(spark, "event_path_ngrams")
-    assert p.count("Exchange hashpartitioning") == 2
-    assert p.count("Window ") == 3
-    assert "EvalPython" not in p
-
-
 def test_decontam_near_plan_no_cartesian_no_python(spark):
     # the asymmetric candidate join must be an equi-join on
     # (b, band_key) — never a Cartesian/nested-loop pairing of corpus

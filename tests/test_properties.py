@@ -643,85 +643,6 @@ def test_chunk_tokens_overlapping_covers_without_subset_chunks(
     assert ends == sorted(ends) and len(set(ends)) == len(ends)  # strictly extending
 
 
-_event_sets = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=4),      # user
-        st.integers(min_value=0, max_value=5000),   # minutes offset
-        st.sampled_from(["v", "c", "p", "s"]),      # event type
-    ),
-    min_size=2,
-    max_size=40,
-)
-
-
-_ED = dt.datetime(2024, 1, 1)
-
-
-def _event_df(spark, events):
-    rows = [
-        (i + 1, f"u{u}", _ED + dt.timedelta(minutes=m), ty)
-        for i, (u, m, ty) in enumerate(events)
-    ]
-    return spark.createDataFrame(
-        rows, "event_id long, user_id string, ts timestamp, event_type string"
-    ), rows
-
-
-@given(events=_event_sets)
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-def test_path_bigrams_equal_transitions_without_gaps(spark, events):
-    """Algebraic bridge between the two path operators: with an
-    effectively infinite session gap (every key = one session),
-    path_ngrams(n=2) occurrence counts are EXACTLY the transition
-    table's pair counts — the n-gram slide degenerates to the lead()
-    adjacency when no session boundary can intervene. Any drift means
-    one of the two kernels mis-orders or mis-scopes."""
-    from epss_spark.operators import sessionize as sz
-
-    df, _ = _event_df(spark, events)
-    grams = {
-        r.gram: r.n
-        for r in sz.path_ngrams(df, n=2, gap_seconds=10**9).collect()
-    }
-    trans = {
-        f"{r.from_type}>{r.to_type}": r.n
-        for r in sz.event_transitions(df).collect()
-    }
-    assert grams == trans
-
-
-@given(events=_event_sets, n_splits=st.sampled_from([2, 3]))
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-def test_transitions_stream_equals_batch_random_splits(spark, tmp_path_factory, events, n_splits):
-    """Randomized stream == batch: ANY time-ordered split of the event
-    log into micro-batches reproduces the one-shot transition table —
-    the carried-state stitching is split-point-invariant (hypothesis
-    picks the event sets; split points are deterministic time slices)."""
-    from epss_spark.operators import sessionize as sz
-    from epss_spark.streaming import transitions_stream as ts
-
-    df, rows = _event_df(spark, events)
-    srt = sorted(rows, key=lambda r: (r[2], r[0]))
-    state = str(tmp_path_factory.mktemp("tstate") / "s")
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    k = len(srt)
-    for e in range(n_splits):
-        b = srt[e * k // n_splits:(e + 1) * k // n_splits]
-        if b:
-            ts.process_transitions_batch(spark.createDataFrame(b, schema), e, state)
-    want = sorted(map(tuple, sz.event_transitions(df).collect()))
-    got = sorted(map(tuple, ts.transitions_snapshot(spark, state).collect()))
-    assert got == want
-
-
 # --- round 11: Y4M decode + contamination-audit laws ----------------------
 
 _y4m_frames = st.lists(

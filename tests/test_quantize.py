@@ -255,43 +255,6 @@ def test_incremental_stale_raw_tail_degrades_to_store(spark):
     assert inc.count() == 0  # stale 0.3 seed would wrongly emit day-3 0.7
 
 
-def test_salted_equals_plain_changed_scores(spark):
-    """The skew fallback contract: changed_scores_salted == changed_scores
-    on a randomized multi-month history with NULL gaps, month-boundary
-    changes, and one pathologically hot key (50% of rows) — the exact
-    shape the fallback exists for. Covers: first-overall rows, bucket-first
-    rows whose carry is NULL (restart-after-NULL across a month boundary),
-    unchanged values spanning buckets (must NOT re-emit), and sparse
-    buckets (a key absent for a whole month)."""
-    import random
-
-    from epss_spark.operators.quantize import changed_scores_salted
-
-    rng = random.Random(23)
-    rows = []
-    for d in range(90):  # 4 calendar months
-        date = D(2024, 1, 1) + dt.timedelta(days=d)
-        # hot key: a row every day
-        rows.append((date, "CVE-HOT", None if rng.random() < 0.15 else round(rng.random(), 1)))
-        for k in range(10):
-            if k == 3 and date.month == 2:
-                continue  # sparse: CVE-3 skips February entirely
-            if rng.random() < 0.5:
-                v = None if rng.random() < 0.15 else round(rng.random(), 1)
-                rows.append((date, f"CVE-{k}", v))
-    dense = _scores(spark, rows)
-    key = lambda r: (r.date, r.cve, r.epss, r.delta, r.prev)  # noqa: E731
-    want = sorted(
-        map(key, changed_scores(dense, prev_col="prev").collect()),
-        key=repr,
-    )
-    got = sorted(
-        map(key, changed_scores_salted(dense, prev_col="prev").collect()),
-        key=repr,
-    )
-    assert got == want and len(got) > 100
-
-
 def test_key_skew_report_flags_hot_key(spark):
     from epss_spark.operators.layout import key_skew_report
 

@@ -432,7 +432,7 @@ class TestRerankExact:
         vectors — the shape embedding corpora actually have, vs the
         near-iid testdata), the documented production defaults (IVF-PQ
         shortlist + exact re-rank, n_probe=1/4 of lists, r=10k) must hit
-        recall@10 >= 0.9 (tools/ann_recall.py 'clustered' measures 1.0;
+        recall@10 >= 0.9 (PERF.md's clustered-corpus recall row is 1.0;
         the raw ADC ordering alone measures ~0.2 on the same corpus —
         re-rank is a correctness-of-defaults requirement, not a tweak)."""
         import numpy as np

@@ -1911,77 +1911,6 @@ def test_streaming_keep_latest_equals_batch_replay_and_compaction(spark, tmp_pat
     assert got3 == want
 
 
-def test_streaming_funnel_equals_batch_and_replay(spark, tmp_path):
-    """Funnel-stream contract: after draining time-partitioned batches,
-    funnel_snapshot == the one-shot event_funnel over the union (both
-    gapless and gapped forms), and replaying an epoch changes nothing."""
-    import datetime as dt
-    import glob
-    import os
-    import shutil
-
-    from epss_spark.operators import sessionize as sz
-    from epss_spark.streaming import funnel_stream
-
-    D = dt.datetime(2024, 1, 1)
-    rows = [
-        (1, D, 1, "signup"), (2, D, 2, "signup"), (3, D, 3, "click"),
-        (1, D + dt.timedelta(hours=1), 4, "view"),
-        (2, D + dt.timedelta(hours=30), 5, "view"),  # outside a 1-day gap
-        (1, D + dt.timedelta(hours=2), 6, "purchase"),
-        (4, D + dt.timedelta(hours=3), 7, "view"),  # view with no signup
-    ]
-    rows.sort(key=lambda r: r[1])
-    batches = [rows[:3], rows[3:5], rows[5:]]
-    drop_dir = tmp_path / "drops"
-    drop_dir.mkdir()
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
-    for i, b in enumerate(batches):
-        staging = tmp_path / f"stage_{i}"
-        spark.createDataFrame(b, schema).coalesce(1).write.parquet(str(staging))
-        part = glob.glob(str(staging / "part-*.parquet"))[0]
-        dest = str(drop_dir / f"b{i}.parquet")
-        shutil.move(part, dest)
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-
-    steps = ["signup", "view", "purchase"]
-    alldf = spark.createDataFrame(rows, schema)
-
-    for gap, state_name in [(None, "state_nogap"), (86400, "state_gap")]:
-        state = str(tmp_path / state_name)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(drop_dir))
-        )
-        q = funnel_stream.start_funnel_stream(
-            stream, state, str(tmp_path / f"ckpt_{state_name}"), steps,
-            max_gap_seconds=gap,
-        )
-        q.awaitTermination(180)
-        want = sorted(
-            map(tuple, sz.event_funnel(alldf, steps, max_gap_seconds=gap).collect())
-        )
-        got = sorted(
-            map(tuple, funnel_stream.funnel_snapshot(spark, state, steps).collect())
-        )
-        assert got == want, (gap, got, want)
-
-    # crash-retry replay of the LAST epoch must leave the report unchanged
-    state = str(tmp_path / "state_gap")
-    last = spark.createDataFrame(batches[-1], schema)
-    funnel_stream.process_funnel_batch(
-        last, 2, state, steps, max_gap_seconds=86400
-    )
-    want = sorted(
-        map(tuple, sz.event_funnel(alldf, steps, max_gap_seconds=86400).collect())
-    )
-    got = sorted(
-        map(tuple, funnel_stream.funnel_snapshot(spark, state, steps).collect())
-    )
-    assert got == want
-
-
 def _epoch_dirs(path):
     import glob
     import os
@@ -2183,41 +2112,6 @@ def test_history_stream_via_streaming_query(spark, tmp_path):
         spark, hdir, "url").select("url", "fp", "valid_from", "valid_to", "n_versions").collect()))
     assert got == want
     assert len(_epoch_dirs(os.path.join(hdir, "open"))) <= 2 * 2 + 1
-
-
-def test_funnel_stream_late_event_counter(spark, tmp_path):
-    """Out-of-order accounting: an epoch whose step-type events are
-    older than their key's committed fold timestamp shows up in
-    late_counts; in-order epochs report zero; a replayed epoch does not
-    double-count."""
-    import datetime as dt
-
-    from epss_spark.streaming import funnel_stream
-
-    D = dt.datetime(2024, 1, 1)
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
-    steps = ["signup", "view"]
-    state = str(tmp_path / "state")
-    b0 = spark.createDataFrame(
-        [(1, D + dt.timedelta(hours=5), 1, "signup")], schema
-    )
-    # user 1's view is OLDER than its committed signup timestamp -> late;
-    # user 2 is fresh -> not late
-    b1 = spark.createDataFrame(
-        [(1, D + dt.timedelta(hours=1), 2, "view"),
-         (2, D + dt.timedelta(hours=6), 3, "signup")],
-        schema,
-    )
-    funnel_stream.process_funnel_batch(b0, 0, state, steps)
-    funnel_stream.process_funnel_batch(b1, 1, state, steps)
-    got = {r.epoch: (r.n_late_events, r.n_late_keys)
-           for r in funnel_stream.late_counts(spark, state).collect()}
-    assert got == {0: (0, 0), 1: (1, 1)}
-    # replay of epoch 1 overwrites its counter row, never appends
-    funnel_stream.process_funnel_batch(b1, 1, state, steps)
-    got2 = {r.epoch: (r.n_late_events, r.n_late_keys)
-            for r in funnel_stream.late_counts(spark, state).collect()}
-    assert got2 == got
 
 
 def test_streaming_pack_replay_is_idempotent(spark, tmp_path):
@@ -2461,143 +2355,42 @@ def test_history_store_autocompact_bounds_and_equality(spark, tmp_path):
     assert lates == set(range(10))
 
 
-def test_burst_stream_equals_batch_any_order(spark, tmp_path):
-    """The burst monitor's whole contract: per-day counts are additive
-    and commutative, so the streamed snapshot equals the batch
-    daily_burst_zscore over the union for ANY batch split — including
-    deliberately out-of-order delivery (late days interleaved) — with
-    no ordering contract and no late-tracking sibling. Also pins
-    crash-retry replay of the last epoch (delta overwrite, never
-    double-add)."""
-    import datetime as dt
-    import glob
-    import os
-    import shutil
-
-    from epss_spark.operators import sessionize as sz
-    from epss_spark.streaming import burst_stream
-
-    rows, eid = [], 0
-    # type "t": days 1..7 flat-ish, day 8 bursts; type "q": two days
-    for day, cnt in zip(range(1, 9), [8, 10, 12, 9, 11, 10, 10, 40]):
-        for _ in range(cnt):
-            eid += 1
-            rows.append((eid, f"u{eid % 5}",
-                         dt.datetime(2024, 1, day, 12, 0, 0), "t"))
-    for day in (2, 3):
-        for _ in range(4):
-            eid += 1
-            rows.append((eid, "u0", dt.datetime(2024, 1, day, 9, 0, 0), "q"))
-    # OUT-OF-ORDER split: batch 0 gets every third event, batch 1 the
-    # late half of day 8 plus early days, batch 2 the rest — days are
-    # smeared across all batches in no particular order
-    batches = [rows[0::3], rows[1::3][::-1], rows[2::3]]
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-
-    drop_dir = tmp_path / "bdrops"
-    drop_dir.mkdir()
-    for i, b in enumerate(batches):
-        staging = tmp_path / f"bstage_{i}"
-        spark.createDataFrame(b, schema).coalesce(1).write.parquet(str(staging))
-        part = glob.glob(str(staging / "part-*.parquet"))[0]
-        dest = str(drop_dir / f"b{i}.parquet")
-        shutil.move(part, dest)
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-
-    state = str(tmp_path / "burst_state")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(drop_dir))
-    )
-    q = burst_stream.start_burst_stream(
-        stream, state, str(tmp_path / "burst_ckpt")
-    )
-    q.awaitTermination(180)
-
-    alldf = spark.createDataFrame(rows, schema)
-    want = sorted(map(tuple, sz.daily_burst_zscore(alldf).collect()))
-    got = sorted(map(tuple, burst_stream.burst_snapshot(spark, state).collect()))
-    assert got == want
-    # the hand-known burst survived the streaming path
-    flagged = [r for r in got if r[4]]
-    assert [(r[0], str(r[1])) for r in flagged] == [("t", "2024-01-08")]
-
-    # crash-retry replay of the LAST epoch: the delta overwrites, counts
-    # never double
-    last = spark.createDataFrame(batches[-1], schema)
-    burst_stream.process_burst_batch(last, 2, state)
-    got = sorted(map(tuple, burst_stream.burst_snapshot(spark, state).collect()))
-    assert got == want
-
-
-def test_burst_autocompact_bounds_epochs_and_preserves_counts(spark, tmp_path):
-    """Additive-fold compaction: over 3N+ epochs with compact_every=N the
-    epoch-dir count stays bounded, the snapshot equals the uncompacted
-    run exactly (any double-add or dropped delta would shift n and z),
-    and replaying a compaction epoch changes nothing."""
-    import datetime as dt
-
-    from epss_spark.streaming import burst_stream
-
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    plain = str(tmp_path / "plainb")
-    auto = str(tmp_path / "autob")
-    batches = []
-    for e in range(10):
-        batches.append(spark.createDataFrame(
-            [(e * 100 + i, "u",
-              dt.datetime(2024, 1, (e % 9) + 1, 6 + i, 0, 0), "t")
-             for i in range(e % 3 + 1)],
-            schema,
-        ))
-    for e, b in enumerate(batches):
-        burst_stream.process_burst_batch(b, e, plain, compact_every=None)
-        burst_stream.process_burst_batch(b, e, auto, compact_every=3)
-    want = sorted(map(tuple, burst_stream.burst_snapshot(spark, plain).collect()))
-    got = sorted(map(tuple, burst_stream.burst_snapshot(spark, auto).collect()))
-    assert got == want
-    assert len(_epoch_dirs(plain)) == 10
-    assert len(_epoch_dirs(auto)) <= 2 * 3 + 1
-    burst_stream.process_burst_batch(batches[9], 9, auto, compact_every=3)
-    got = sorted(map(tuple, burst_stream.burst_snapshot(spark, auto).collect()))
-    assert got == want
-
-
 def test_replay_of_first_epoch_bootstraps_instead_of_wedging(spark, tmp_path):
     """ADVICE round-9 (medium): epoch 0 is written, the process dies
     BEFORE the streaming checkpoint commits, and the restart replays
     epoch 0 — _read_committed then sees a store holding only the
     replay's own in-flight dir. That must bootstrap (it is about to be
     overwritten with identical rows), not raise forever."""
-    import datetime as dt
+    from epss_spark.streaming import history_stream
 
-    from epss_spark.streaming import funnel_stream
-
-    D = dt.datetime(2024, 1, 1)
-    schema = "user_id long, ts timestamp, event_id long, event_type string"
-    steps = ["signup", "view"]
-    state = str(tmp_path / "state")
+    schema = "url string, version long, snap_id long, fp string"
+    hdir = str(tmp_path / "hist")
     b0 = spark.createDataFrame(
-        [(1, D, 1, "signup"), (1, D + dt.timedelta(hours=1), 2, "view"),
-         (2, D, 3, "signup")],
-        schema,
+        [("a", 1, 1, "A"), ("a", 2, 2, "B"), ("b", 1, 3, "X")], schema
     )
-    funnel_stream.process_funnel_batch(b0, 0, state, steps)
-    snap1 = [tuple(r) for r in
-             funnel_stream.funnel_snapshot(spark, state, steps).collect()]
+
+    def snap():
+        return sorted(map(tuple, history_stream.history_snapshot(
+            spark, hdir, "url").collect()))
+
+    history_stream.process_history_batch(
+        b0, 0, hdir, "url", "version", "fp", tiebreak_col="snap_id"
+    )
+    snap1 = snap()
     # crash-replay of the very first epoch: previously raised RuntimeError
     # on every retry, permanently wedging the stream
-    funnel_stream.process_funnel_batch(b0, 0, state, steps)
-    snap2 = [tuple(r) for r in
-             funnel_stream.funnel_snapshot(spark, state, steps).collect()]
-    assert snap2 == snap1
+    history_stream.process_history_batch(
+        b0, 0, hdir, "url", "version", "fp", tiebreak_col="snap_id"
+    )
+    assert snap() == snap1
     # and the stream continues normally afterwards
-    b1 = spark.createDataFrame([(2, D + dt.timedelta(hours=2), 4, "view")], schema)
-    funnel_stream.process_funnel_batch(b1, 1, state, steps)
-    got = {r.step: r.n_converted for r in
-           funnel_stream.funnel_snapshot(spark, state, steps).collect()}
-    assert got == {1: 2, 2: 2}
+    b1 = spark.createDataFrame([("b", 2, 4, "Y")], schema)
+    history_stream.process_history_batch(
+        b1, 1, hdir, "url", "version", "fp", tiebreak_col="snap_id"
+    )
+    got = {(r.url, r.fp): r.valid_to for r in history_stream.history_snapshot(
+        spark, hdir, "url").collect()}
+    assert got == {("a", "A"): 2, ("a", "B"): None, ("b", "X"): 2, ("b", "Y"): None}
 
 
 def test_read_committed_genuinely_future_epochs_still_raise(spark, tmp_path):
@@ -2631,158 +2424,6 @@ def test_read_committed_own_epoch_without_schema_names_missing_base(spark, tmp_p
     dedup_stream._write_epoch(df, path, 0)
     with _pytest.raises(RuntimeError, match="pre-built index"):
         dedup_stream._read_committed(spark, path, 0)
-
-
-def _transition_events():
-    """Shared fixture rows: 6 users x multi-type journeys over 3 hours,
-    with cross-batch adjacency at every hour boundary."""
-    import datetime as dt
-
-    rows, eid = [], 0
-    types = ["view", "cart", "buy", "search"]
-    for u in range(6):
-        for h in range(3):
-            for i in range(2 + (u + h) % 3):
-                eid += 1
-                rows.append(
-                    (eid, f"u{u}", dt.datetime(2024, 1, 1, h, 5 * i + u),
-                     types[(eid + i) % 4])
-                )
-    rows.sort(key=lambda r: (r[2], r[0]))
-    return rows
-
-
-def test_transitions_stream_equals_batch_and_replay(spark, tmp_path):
-    """Stream == batch under the time-partitioned-per-key contract:
-    splitting each key's time-sorted sequence into hourly batches and
-    stitching boundary pairs from carried state reproduces the one-shot
-    event_transitions table exactly; replaying an epoch overwrites its
-    deltas (counts never double); in-order epochs report zero late."""
-    from epss_spark.operators import sessionize as sz
-    from epss_spark.streaming import transitions_stream as ts
-
-    rows = _transition_events()
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    state = str(tmp_path / "tstate")
-    batches = [
-        [r for r in rows if r[2].hour == h] for h in range(3)
-    ]
-    for e, b in enumerate(batches):
-        ts.process_transitions_batch(
-            spark.createDataFrame(b, schema), e, state
-        )
-    alldf = spark.createDataFrame(rows, schema)
-    want = sorted(map(tuple, sz.event_transitions(alldf).collect()))
-    got = sorted(map(tuple, ts.transitions_snapshot(spark, state).collect()))
-    assert got == want and len(got) > 4
-    # crash-retry replay of the middle epoch: identical recompute
-    ts.process_transitions_batch(spark.createDataFrame(batches[1], schema), 1, state)
-    got2 = sorted(map(tuple, ts.transitions_snapshot(spark, state).collect()))
-    assert got2 == want
-    late = {r.epoch: (r.n_late_events, r.n_late_keys)
-            for r in ts.late_counts(spark, state).collect()}
-    assert late == {0: (0, 0), 1: (0, 0), 2: (0, 0)}
-
-
-def test_transitions_stream_out_of_order_is_counted(spark, tmp_path):
-    """An epoch whose events are older than their key's carried last
-    event shows up in late_counts (arrival-order pairing may disagree
-    with a batch re-run — named, not silent), and the carried state
-    never regresses behind the newer event."""
-    import datetime as dt
-
-    from epss_spark.streaming import transitions_stream as ts
-
-    D = dt.datetime(2024, 1, 1)
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    state = str(tmp_path / "tstate")
-    b0 = spark.createDataFrame(
-        [(1, "u1", D + dt.timedelta(hours=5), "view"),
-         (2, "u2", D + dt.timedelta(hours=5), "view")], schema
-    )
-    b1 = spark.createDataFrame(
-        [(3, "u1", D + dt.timedelta(hours=1), "cart"),   # late for u1
-         (4, "u2", D + dt.timedelta(hours=6), "buy")],   # fresh for u2
-        schema,
-    )
-    ts.process_transitions_batch(b0, 0, state)
-    ts.process_transitions_batch(b1, 1, state)
-    late = {r.epoch: (r.n_late_events, r.n_late_keys)
-            for r in ts.late_counts(spark, state).collect()}
-    assert late == {0: (0, 0), 1: (1, 1)}
-    # carried state kept the NEWER u1 event (hour 5 view), not the late cart
-    from epss_spark.operators import dedup
-    from epss_spark.streaming.dedup_stream import read_artifact
-
-    st = {r[0]: r.ty for r in dedup.keep_latest(
-        read_artifact(spark, state), "user_id", "__epoch").collect()}
-    assert st == {"u1": "view", "u2": "buy"}
-
-
-def test_transitions_autocompact_bounds_epochs_and_preserves_counts(spark, tmp_path):
-    """Additive-fold + keep-latest compaction for the two stores: over
-    3N+ epochs with compact_every=N the epoch-dir count stays bounded
-    and the snapshot equals an uncompacted run bit-for-bit."""
-    import os
-
-    from epss_spark.streaming import transitions_stream as ts
-
-    rows = _transition_events()
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    plain, auto = str(tmp_path / "plain"), str(tmp_path / "auto")
-    # 10 sequential single-slice batches (time-partitioned: rows sorted by ts)
-    n = len(rows)
-    slices = [rows[i * n // 10:(i + 1) * n // 10] for i in range(10)]
-    for e, b in enumerate(s for s in slices if s):
-        df = spark.createDataFrame(b, schema)
-        ts.process_transitions_batch(df, e, plain, compact_every=None)
-        ts.process_transitions_batch(df, e, auto, compact_every=3)
-    got_plain = sorted(map(tuple, ts.transitions_snapshot(spark, plain).collect()))
-    got_auto = sorted(map(tuple, ts.transitions_snapshot(spark, auto).collect()))
-    assert got_plain == got_auto and len(got_auto) > 4
-    n_epochs_plain = len([d for d in os.listdir(plain + ".counts") if d.startswith("epoch-")])
-    n_epochs_auto = len([d for d in os.listdir(auto + ".counts") if d.startswith("epoch-")])
-    assert n_epochs_plain == 10 and n_epochs_auto <= 5
-
-
-def test_transitions_stream_via_streaming_query(spark, tmp_path):
-    """start_transitions_stream end-to-end: hourly file drops consumed
-    one per trigger (availableNow), snapshot equals the batch table."""
-    import glob
-    import os
-    import shutil
-
-    from epss_spark.operators import sessionize as sz
-    from epss_spark.streaming import transitions_stream as ts
-
-    rows = _transition_events()
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    drop_dir = tmp_path / "tdrops"
-    drop_dir.mkdir()
-    for h in range(3):  # time-partitioned drops, oldest first
-        b = [r for r in rows if r[2].hour == h]
-        staging = tmp_path / f"tstage_{h}"
-        spark.createDataFrame(b, schema).coalesce(1).write.parquet(str(staging))
-        part = glob.glob(str(staging / "part-*.parquet"))[0]
-        dest = str(drop_dir / f"b{h}.parquet")
-        shutil.move(part, dest)
-        os.utime(dest, (1_000_000_000 + h, 1_000_000_000 + h))
-
-    state = str(tmp_path / "tq_state")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(drop_dir))
-    )
-    q = ts.start_transitions_stream(stream, state, str(tmp_path / "tq_ckpt"))
-    q.awaitTermination(180)
-
-    alldf = spark.createDataFrame(rows, schema)
-    want = sorted(map(tuple, sz.event_transitions(alldf).collect()))
-    got = sorted(map(tuple, ts.transitions_snapshot(spark, state).collect()))
-    assert got == want
-    late = ts.late_counts(spark, state).collect()
-    assert all(r.n_late_events == 0 for r in late)
 
 
 def test_decode_audio_any_tiers(spark):
@@ -2853,230 +2494,6 @@ def test_audio_features_flac_golden_with_soundfile(spark):
     assert abs(out.spectral_centroid_hz - freq) < 30
 
 
-def test_ngrams_stream_equals_batch_and_replay(spark, tmp_path):
-    """Stream == batch for journey-motif counts: grams ending at a batch
-    event are new, grams ending inside the carried suffix were counted
-    by the epoch that carried them — so hourly splits reproduce the
-    one-shot path_ngrams occurrence counts exactly, INCLUDING grams
-    spanning batch boundaries and a session gap falling ON a boundary.
-    Replay recomputes identical deltas; in-order epochs report zero
-    late; compaction preserves counts with bounded epoch dirs."""
-    import datetime as dt
-    import os
-
-    from epss_spark.operators import sessionize as sz
-    from epss_spark.streaming import ngrams_stream as ns
-
-    D = dt.datetime(2024, 1, 1)
-    rows, eid = [], 0
-    # u1: one session spanning all three hours (events 10 min apart near
-    # the boundaries -> trigram windows cross both batch boundaries)
-    for h in range(3):
-        for m in (40, 50):
-            eid += 1
-            rows.append((eid, "u1", dt.datetime(2024, 1, 1, h, m),
-                         ["v", "c", "p"][eid % 3]))
-    # u2: a session GAP at the hour-1 boundary (65 min > the 60 min
-    # gap rule used throughout) -> the carried suffix must NOT form a
-    # cross-gap gram
-    rows += [(100, "u2", D + dt.timedelta(minutes=0), "v"),
-             (101, "u2", D + dt.timedelta(minutes=5), "c"),
-             (102, "u2", D + dt.timedelta(minutes=10), "p"),
-             (103, "u2", D + dt.timedelta(minutes=75), "v"),
-             (104, "u2", D + dt.timedelta(minutes=80), "c"),
-             (105, "u2", D + dt.timedelta(minutes=85), "p")]
-    rows.sort(key=lambda r: (r[2], r[0]))
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    state = str(tmp_path / "ngstate")
-    batches = [[r for r in rows if r[2].hour == h] for h in range(3)]
-    for e, b in enumerate(batches):
-        ns.process_ngrams_batch(
-            spark.createDataFrame(b, schema), e, state, n=3, gap_seconds=3600
-        )
-    alldf = spark.createDataFrame(rows, schema)
-    want = sorted(
-        (r.gram, r.n)
-        for r in sz.path_ngrams(alldf, n=3, gap_seconds=3600).collect()
-    )
-    got = sorted(map(tuple, ns.ngrams_snapshot(spark, state).collect()))
-    assert got == want and len(got) >= 3
-    # the boundary-spanning u1 grams exist (sanity that the test bites)
-    all_grams = dict(got)
-    assert sum(all_grams.values()) == sum(n for _, n in want)
-    # replay of the middle epoch: identical recompute, counts never double
-    ns.process_ngrams_batch(
-        spark.createDataFrame(batches[1], schema), 1, state, n=3, gap_seconds=3600
-    )
-    got2 = sorted(map(tuple, ns.ngrams_snapshot(spark, state).collect()))
-    assert got2 == want
-    late = {r.epoch: (r.n_late_events, r.n_late_keys)
-            for r in ns.late_counts(spark, state).collect()}
-    assert late == {0: (0, 0), 1: (0, 0), 2: (0, 0)}
-
-    # compaction: 6 single-slice epochs with compact_every=2 -> dirs
-    # bounded at ~2*every (GC clears below the PREVIOUS marker each
-    # pass), identical snapshot
-    auto = str(tmp_path / "ngauto")
-    # time-partitioned per key: split by global time order
-    srt = sorted(rows, key=lambda r: (r[2], r[0]))
-    slices = [srt[i * len(srt) // 6:(i + 1) * len(srt) // 6] for i in range(6)]
-    for e, b in enumerate(s_ for s_ in slices if s_):
-        ns.process_ngrams_batch(
-            spark.createDataFrame(b, schema), e, auto, n=3, gap_seconds=3600,
-            compact_every=2,
-        )
-    got3 = sorted(map(tuple, ns.ngrams_snapshot(spark, auto).collect()))
-    assert got3 == want
-    n_dirs = len([d for d in os.listdir(auto + ".counts") if d.startswith("epoch-")])
-    assert n_dirs <= 4
-
-
-def test_ngrams_stream_out_of_order_counted_and_bigram_case(spark, tmp_path):
-    """n=2 (the transitions-like case, but session-scoped): a late batch
-    shows up in late_counts; the carried suffix holds exactly one event
-    per key and never regresses."""
-    import datetime as dt
-
-    from epss_spark.streaming import ngrams_stream as ns
-
-    D = dt.datetime(2024, 1, 1)
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    state = str(tmp_path / "ng2")
-    b0 = spark.createDataFrame(
-        [(1, "u1", D + dt.timedelta(hours=5), "v"),
-         (2, "u2", D + dt.timedelta(hours=5), "v")], schema
-    )
-    b1 = spark.createDataFrame(
-        [(3, "u1", D + dt.timedelta(hours=1), "c"),    # late for u1
-         (4, "u2", D + dt.timedelta(hours=5, minutes=1), "c")], schema
-    )
-    ns.process_ngrams_batch(b0, 0, state, n=2)
-    ns.process_ngrams_batch(b1, 1, state, n=2)
-    late = {r.epoch: (r.n_late_events, r.n_late_keys)
-            for r in ns.late_counts(spark, state).collect()}
-    assert late == {0: (0, 0), 1: (1, 1)}
-    got = dict(map(tuple, ns.ngrams_snapshot(spark, state).collect()))
-    # u2's in-order bigram formed; u1's late event sorted before the
-    # carried v (arrival-order pairing, flagged above, not silent)
-    assert got.get("v>c", 0) >= 1
-
-
-def test_ngrams_stream_n1_empty_suffix_edge(spark, tmp_path):
-    """n=1 (unigram counts): the carried suffix is EMPTY by design
-    (single-event grams need no cross-batch context) — the late probe
-    must not index into it (regression: element_at(-1) threw on the
-    empty array), and the snapshot equals the batch unigram counts."""
-    import datetime as dt
-
-    from epss_spark.operators import sessionize as sz
-    from epss_spark.streaming import ngrams_stream as ns
-
-    D = dt.datetime(2024, 1, 1)
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    rows = [(1, "u1", D, "v"), (2, "u1", D + dt.timedelta(minutes=1), "c"),
-            (3, "u2", D + dt.timedelta(minutes=2), "v")]
-    state = str(tmp_path / "n1")
-    ns.process_ngrams_batch(spark.createDataFrame(rows[:2], schema), 0, state, n=1)
-    ns.process_ngrams_batch(spark.createDataFrame(rows[2:], schema), 1, state, n=1)
-    got = sorted(map(tuple, ns.ngrams_snapshot(spark, state).collect()))
-    want = sorted(
-        (r.gram, r.n)
-        for r in sz.path_ngrams(spark.createDataFrame(rows, schema), n=1).collect()
-    )
-    assert got == want == [("c", 1), ("v", 2)]
-    late = {r.epoch: r.n_late_events for r in ns.late_counts(spark, state).collect()}
-    assert late == {0: 0, 1: 0}
-
-
-def test_ngrams_stream_via_streaming_query(spark, tmp_path):
-    """start_ngrams_stream end-to-end: hourly file drops consumed one per
-    trigger (availableNow), snapshot equals the batch motif counts."""
-    import glob
-    import os
-    import shutil
-
-    from epss_spark.operators import sessionize as sz
-    from epss_spark.streaming import ngrams_stream as ns
-
-    rows = _transition_events()
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    drop_dir = tmp_path / "ngdrops"
-    drop_dir.mkdir()
-    for h in range(3):
-        b = [r for r in rows if r[2].hour == h]
-        staging = tmp_path / f"ngstage_{h}"
-        spark.createDataFrame(b, schema).coalesce(1).write.parquet(str(staging))
-        part = glob.glob(str(staging / "part-*.parquet"))[0]
-        dest = str(drop_dir / f"b{h}.parquet")
-        shutil.move(part, dest)
-        os.utime(dest, (1_000_000_000 + h, 1_000_000_000 + h))
-
-    state = str(tmp_path / "ngq_state")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(drop_dir))
-    )
-    q = ns.start_ngrams_stream(
-        stream, state, str(tmp_path / "ngq_ckpt"), n=2, gap_seconds=3600
-    )
-    q.awaitTermination(180)
-
-    alldf = spark.createDataFrame(rows, schema)
-    want = sorted(
-        (r.gram, r.n)
-        for r in sz.path_ngrams(alldf, n=2, gap_seconds=3600).collect()
-    )
-    got = sorted(map(tuple, ns.ngrams_snapshot(spark, state).collect()))
-    assert got == want and len(got) > 4
-
-
-def test_ngrams_stream_state_writes_only_touched_keys(spark, tmp_path):
-    """Regression (round-11 ADVICE): the carried suffix store must be
-    restricted to the batch's keys BEFORE exploding — re-exploding and
-    rewriting every key ever seen made per-epoch state writes grow
-    O(total keys) (quadratic store bloat between compactions). Pins:
-    (a) an epoch's state dir holds rows ONLY for keys in that batch;
-    (b) an untouched key's suffix persists across epochs via the
-    keep-latest read, so a gram spanning a skipped epoch still forms."""
-    import datetime as dt
-
-    from epss_spark.operators import sessionize as sz
-    from epss_spark.streaming import ngrams_stream as ns
-
-    D = dt.datetime(2024, 1, 1)
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    # u1: events in epochs 0 and 2 only (10 min apart -> same session,
-    # its trigram spans the skipped epoch); u2: every epoch
-    rows = [
-        (1, "u1", D + dt.timedelta(minutes=0), "v"),
-        (2, "u2", D + dt.timedelta(minutes=1), "v"),
-        (3, "u1", D + dt.timedelta(minutes=2), "c"),
-        (4, "u2", D + dt.timedelta(minutes=3), "c"),
-        (5, "u2", D + dt.timedelta(minutes=4), "p"),
-        (6, "u1", D + dt.timedelta(minutes=10), "p"),
-        (7, "u2", D + dt.timedelta(minutes=11), "v"),
-    ]
-    batches = [rows[:3], rows[3:5], rows[5:]]
-    state = str(tmp_path / "ngtouch")
-    for e, b in enumerate(batches):
-        ns.process_ngrams_batch(
-            spark.createDataFrame(b, schema), e, state, n=3, gap_seconds=3600
-        )
-    # (a) epoch-1's batch touched only u2 -> its state dir has only u2
-    ep1 = spark.read.parquet(state + "/epoch-1")
-    assert sorted(r.user_id for r in ep1.collect()) == ["u2"]
-    # (b) stream == batch, including u1's v>c>p spanning epoch 1
-    alldf = spark.createDataFrame(rows, schema)
-    want = sorted(
-        (r.gram, r.n)
-        for r in sz.path_ngrams(alldf, n=3, gap_seconds=3600).collect()
-    )
-    got = sorted(map(tuple, ns.ngrams_snapshot(spark, state).collect()))
-    assert got == want
-    assert dict(got).get("v>c>p", 0) >= 2
-
-
 def test_epoch_store_glob_metachar_path(spark, tmp_path):
     """Regression (round-11 ADVICE): a state path containing Hadoop glob
     metacharacters ([ ] * ? { }) must behave identically to a clean
@@ -3085,62 +2502,34 @@ def test_epoch_store_glob_metachar_path(spark, tmp_path):
     _read_committed double-counted the folded state against the
     not-yet-GC'd dirs it subsumes. _list_artifact now falls back to
     per-epoch marker probes and every spark.read site escapes the glob
-    chars. Runs the full transitions stream with in-stream compaction
-    under a metachar dir and pins snapshot == batch + marker
-    discovery."""
-    from epss_spark.operators import sessionize as sz
-    from epss_spark.streaming import dedup_stream, transitions_stream as trs
+    chars. Runs the history stream with in-stream compaction under a
+    metachar dir and pins snapshot == batch + marker discovery."""
+    from epss_spark.operators import dedup
+    from epss_spark.streaming import dedup_stream, history_stream
 
-    rows = _transition_events()
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    srt = sorted(rows, key=lambda r: (r[2], r[0]))
-    slices = [srt[i * len(srt) // 6:(i + 1) * len(srt) // 6] for i in range(6)]
-    state = str(tmp_path / "st[1]ate" / "trans{x}" / "s*t?")
-    for e, b in enumerate(s_ for s_ in slices if s_):
-        trs.process_transitions_batch(
-            spark.createDataFrame(b, schema), e, state, compact_every=2
+    schema = "url string, version long, snap_id long, fp string"
+    batches = [
+        [(f"u{u}", e + 1, e * 10 + u, f"fp{(e // 2) % 2}_{u}") for u in range(3)]
+        for e in range(6)
+    ]
+    hdir = str(tmp_path / "st[1]ate" / "hist{x}" / "s*t?")
+    for e, rows in enumerate(batches):
+        history_stream.process_history_batch(
+            spark.createDataFrame(rows, schema), e, hdir,
+            "url", "version", "fp", tiebreak_col="snap_id", compact_every=2,
         )
     # marker discovery: at least one committed epoch must read as
     # compacted (the glob path matched nothing here before the fix)
-    _, _, epochs = dedup_stream._list_artifact(
-        spark, state + ".counts"
-    )
+    _, _, epochs = dedup_stream._list_artifact(spark, hdir + "/runs")
     assert any(c for _, _, c in epochs), (
         "no _COMPACTED marker discovered under a glob-metachar path"
     )
-    want = sorted(
-        map(tuple, sz.event_transitions(spark.createDataFrame(rows, schema)).collect())
-    )
-    got = sorted(map(tuple, trs.transitions_snapshot(spark, state).collect()))
+    alldf = spark.createDataFrame([r for b in batches for r in b], schema)
+    want = sorted(map(tuple, dedup.snapshot_history(
+        alldf, "url", "version", "fp", "snap_id").collect()))
+    got = sorted(map(tuple, history_stream.history_snapshot(spark, hdir, "url").select(
+        "url", "fp", "valid_from", "valid_to", "n_versions").collect()))
     assert got == want
-
-
-def test_ngrams_snapshot_schema_compat_column(spark, tmp_path):
-    """Batch<->stream schema contract (DEPLOYMENT §streams): the stream
-    deliberately does not maintain n_sessions (unbounded state);
-    include_n_sessions=True appends an all-NULL long column so the
-    snapshot's column set matches batch path_ngrams exactly — NULL, not
-    a silently wrong count."""
-    import datetime as dt
-
-    from epss_spark.operators import sessionize as sz
-    from epss_spark.streaming import ngrams_stream as ns
-
-    D = dt.datetime(2024, 1, 1)
-    schema = "event_id long, user_id string, ts timestamp, event_type string"
-    rows = [(1, "u1", D, "v"), (2, "u1", D + dt.timedelta(minutes=1), "c"),
-            (3, "u1", D + dt.timedelta(minutes=2), "p")]
-    state = str(tmp_path / "ngcompat")
-    ns.process_ngrams_batch(spark.createDataFrame(rows, schema), 0, state, n=3)
-    batch_cols = sz.path_ngrams(
-        spark.createDataFrame(rows, schema), n=3
-    ).columns
-    snap = ns.ngrams_snapshot(spark, state, include_n_sessions=True)
-    assert snap.columns == batch_cols == ["gram", "n", "n_sessions"]
-    got = snap.collect()
-    assert [(r.gram, r.n, r.n_sessions) for r in got] == [("v>c>p", 1, None)]
-    # default stays the honest two-column shape
-    assert ns.ngrams_snapshot(spark, state).columns == ["gram", "n"]
 
 
 def _y4m(w, h, y_frames, fps=(2, 1), cspace=b"C444"):
