@@ -61,13 +61,6 @@ HEADLINE = [
     #                    (2 exact-arithmetic updates + final assignment:
     #                    3 codegen corpus scans, one k-row aggregate each,
     #                    zero corpus-grain shuffle)
-    # round 14 (headline now 27 queries; totals incomparable with r13 —
-    # compare per-query via query_pairs, after checking calibration_sec):
-    "classify_linear_quality",  # supervised tier: hashed featurize (two
-    #                             bounded exchanges, persisted) + 10
-    #                             single-aggregate GD epochs + map-only
-    #                             scoring — the trained-model analogue
-    #                             of cluster_kmeans's bench row
 ]
 
 # Headline workload scale-up (PERF.md bench protocol, round 5): sf0.1

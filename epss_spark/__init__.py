@@ -14,10 +14,13 @@ Layout:
     schemas     — fixed schemas (never infer in production paths)
     tables      — testdata table loaders
     plans       — Query dataclass → Column predicate compiler
-    operators   — quantize (lag-diff), as-of join, dedup, similarity, text
+    operators   — quantize (lag-diff), as-of join, and the extension
+                  families: dedup, similarity, text, clustering,
+                  selection, sketches, retrieval, prep, layout
     sources     — format readers, filename-date recovery, HTTP ingest
-    functions   — scalar helpers (dates, rounding parity)
-    streaming   — Structured Streaming ingest of score snapshots
+    functions   — date coercion, filename dates, iterator helpers
+    streaming   — Structured Streaming ingest of score snapshots, plus the
+                  extension families' maintenance streams
     client      — the EPSS-domain composite API (get_scores, ...)
 """
 

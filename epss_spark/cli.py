@@ -497,108 +497,6 @@ def build_parser() -> argparse.ArgumentParser:
     asr.add_argument("--id-col", default="vec_id")
     asr.add_argument("--vec-col", default="embedding")
 
-    nt = sub.add_parser(
-        "nb-train",
-        help="train the Naive Bayes gating classifier on a labeled "
-        "parquet (extension): writes the frozen model artifact "
-        "(model/ log-likelihood grid + prior/) for classify",
-    )
-    nt.add_argument("--input", required=True, help="labeled parquet (text + label col)")
-    nt.add_argument("--output", required=True, help="model dir (model/ + prior/)")
-    nt.add_argument("--label-col", default="lang")
-    nt.add_argument("--text-col", default="text")
-    nt.add_argument("--alpha", type=float, default=0.5, help="Lidstone smoothing")
-
-    lt = sub.add_parser(
-        "linear-train",
-        help="train the hashed linear (fastText-shaped) quality/gating "
-        "classifier with deterministic full-batch GD (extension): each "
-        "epoch is one map-side-combinable aggregate; writes the "
-        "(j, weight) model parquet with bias at -1 and feature_scale "
-        "at -2",
-    )
-    lt.add_argument("--input", required=True,
-                    help="labeled parquet (text + 0/1 label col)")
-    lt.add_argument("--output", required=True, help="model parquet path")
-    lt.add_argument("--label-col", required=True, help="0/1 label column")
-    lt.add_argument("--id-col", default="doc_id")
-    lt.add_argument("--text-col", default="text")
-    lt.add_argument("--dim", type=int, default=64, help="hashed feature buckets")
-    lt.add_argument("--epochs", type=int, default=10)
-    lt.add_argument("--lr", type=float, default=1.0)
-    lt.add_argument("--scale", type=float, default=8.0,
-                    help="feature scale (recorded in the model artifact)")
-
-    cl = sub.add_parser(
-        "classify",
-        help="classify a documents parquet against a frozen model "
-        "artifact (extension): an nb-train dir (model/ + prior/ grid "
-        "join) or a linear-train parquet (map-only scored projection), "
-        "autodetected; writes (id, predicted, score)",
-    )
-    cl.add_argument("--input", required=True, help="parquet with (doc_id, text, ...)")
-    cl.add_argument("--model", required=True,
-                    help="model dir from nb-train or linear-train")
-    cl.add_argument("--output", required=True, help="output parquet")
-    cl.add_argument("--id-col", default="doc_id")
-    cl.add_argument("--text-col", default="text")
-    cl.add_argument(
-        "--label-col",
-        help="ground-truth column to carry through (adds actual/correct + prints accuracy)",
-    )
-    cl.add_argument(
-        "--threshold", type=float, default=0.5,
-        help="linear models only: predicted = score >= threshold",
-    )
-
-    sd = sub.add_parser(
-        "score-dist",
-        help="read verb for the continuous quality-gate monitor "
-        "(streaming/score_stream.py): the live score distribution of "
-        "the frozen linear model over everything streamed, behind the "
-        "same count + id-checksum audits as cluster promote/quality",
-    )
-    sd.add_argument("--state", required=True, help="score_stream state dir")
-    sd.add_argument("--output", required=True, help="histogram parquet")
-    sd.add_argument(
-        "--input",
-        help="corpus parquet the stream should have absorbed (enables "
-        "the id-checksum audit)",
-    )
-    sd.add_argument("--id-col", default="doc_id")
-    sd.add_argument("--expected-n", type=int,
-                    help="refuse unless exactly this many docs were absorbed")
-    sd.add_argument("--no-id-audit", action="store_true",
-                    help="skip the content checksum explicitly")
-    sd.add_argument(
-        "--gate-bucket", type=int,
-        help="also print the pass fraction as the mass at bucket >= N "
-        "(bucket-grain is the store's resolution; bucket = "
-        "floor(score * n_buckets))",
-    )
-
-    gr = sub.add_parser(
-        "graph",
-        help="iterative graph analytics over an edge-list parquet "
-        "(extension): deterministic weighted PageRank — quantized "
-        "message passing, bit-reproducible under any partitioning; "
-        "writes (node, rank)",
-    )
-    gr.add_argument("--input", required=True, help="edge-list parquet")
-    gr.add_argument("--output", required=True, help="ranks parquet")
-    gr.add_argument("--src-col", default="src")
-    gr.add_argument("--dst-col", default="dst")
-    gr.add_argument("--weight-col", help="integer edge weight (default: unweighted)")
-    gr.add_argument("--iters", type=int, default=10)
-    gr.add_argument("--damping", type=float, default=0.85)
-    gr.add_argument("--top", type=int, default=10,
-                    help="print the top-N nodes by rank (0 = silent)")
-    gr.add_argument("--seeds",
-                    help="parquet of trusted seed nodes: personalized "
-                    "PageRank teleports only to them (rank = proximity "
-                    "to the seed set)")
-    gr.add_argument("--seed-col", default="node")
-
     cp = sub.add_parser(
         "compact",
         help="keep-latest snapshot compaction (extension): one row per "
@@ -1217,257 +1115,6 @@ def main(argv: list[str] | None = None) -> int:
         shown = out.limit(args.k) if args.report != "top-ngrams" else out
         for row in shown.collect():
             print("  ".join(str(v) for v in row))
-        return 0
-
-    if args.command == "nb-train":
-        spark = get_spark("epss-spark-cli")
-        spark.sparkContext.setLogLevel("ERROR")
-        import os as _os
-
-        from epss_spark.operators import text as text_ops
-
-        docs = spark.read.parquet(args.input)
-        model, prior = text_ops.nb_train(
-            docs, label_col=args.label_col, text_col=args.text_col, alpha=args.alpha
-        )
-        model.write.mode("overwrite").parquet(_os.path.join(args.output, "model"))
-        prior.write.mode("overwrite").parquet(_os.path.join(args.output, "prior"))
-        n_cls = spark.read.parquet(_os.path.join(args.output, "prior")).count()
-        n_rows = spark.read.parquet(_os.path.join(args.output, "model")).count()
-        print(f"nb-train: {n_cls} classes, {n_rows} grid rows -> {args.output}")
-        return 0
-
-    if args.command == "linear-train":
-        spark = get_spark("epss-spark-cli")
-        spark.sparkContext.setLogLevel("ERROR")
-        from pyspark.sql import functions as F
-
-        from epss_spark.operators import classifier as clf_ops
-
-        docs = spark.read.parquet(args.input)
-        for c in (args.id_col, args.text_col, args.label_col):
-            if c not in docs.columns:
-                print(
-                    f"linear-train: no {c!r} column in --input "
-                    f"(columns: {', '.join(docs.columns)})",
-                    file=sys.stderr,
-                )
-                return 2
-        labeled = docs.select(
-            args.id_col, args.text_col, F.col(args.label_col).alias("__y")
-        )
-        feats = clf_ops.hashed_features(
-            labeled,
-            dim=args.dim,
-            id_col=args.id_col,
-            text_col=args.text_col,
-            feature_scale=args.scale,
-            carry_cols=("__y",),
-        ).persist()
-        try:
-            w, b = clf_ops.linear_fit(
-                feats, dim=args.dim, label_col="__y",
-                n_epochs=args.epochs, lr=args.lr,
-            )
-            scored = clf_ops.linear_score(feats, w, b)
-            acc = scored.agg(
-                F.avg(
-                    ((F.col("score") >= 0.5).cast("double") == F.col("__y"))
-                    .cast("double")
-                )
-            ).first()[0]
-        except ValueError as e:
-            print(f"linear-train: {e}", file=sys.stderr)
-            return 2
-        finally:
-            feats.unpersist()
-        clf_ops.write_linear_model(spark, w, b, args.output, feature_scale=args.scale)
-        print(
-            f"linear-train: dim {args.dim}, {args.epochs} epochs, "
-            f"train accuracy {acc:.4f} -> {args.output}"
-        )
-        return 0
-
-    if args.command == "classify":
-        spark = get_spark("epss-spark-cli")
-        spark.sparkContext.setLogLevel("ERROR")
-        import os as _os
-
-        from pyspark.sql import functions as F
-
-        from epss_spark.operators import text as text_ops
-
-        docs = spark.read.parquet(args.input)
-        # autodetect the artifact family: nb-train writes a dir with
-        # model/ + prior/ children, linear-train a flat (j, weight) parquet
-        if _os.path.isdir(_os.path.join(args.model, "model")):
-            model = spark.read.parquet(_os.path.join(args.model, "model"))
-            prior = spark.read.parquet(_os.path.join(args.model, "prior"))
-            out = text_ops.nb_apply(
-                docs, model, prior, args.id_col, args.text_col,
-                label_col=args.label_col,
-            )
-        else:
-            from epss_spark.operators import classifier as clf_ops
-
-            w, b = clf_ops.read_linear_model(spark, args.model)
-            scale = clf_ops.read_linear_model_scale(spark, args.model)
-            if scale is None:
-                print(
-                    f"classify: linear model at {args.model!r} records no "
-                    "feature_scale (j = -2 row) — retrain with linear-train, "
-                    "which always records it",
-                    file=sys.stderr,
-                )
-                return 2
-            feats = clf_ops.hashed_features(
-                docs.select(args.id_col, args.text_col,
-                            *([args.label_col] if args.label_col else [])),
-                dim=len(w),
-                id_col=args.id_col,
-                text_col=args.text_col,
-                feature_scale=scale,
-                carry_cols=(args.label_col,) if args.label_col else (),
-            )
-            out = clf_ops.linear_score(feats, w, b).select(
-                args.id_col,
-                (F.col("score") >= args.threshold).cast("int").alias("predicted"),
-                "score",
-                *(
-                    [
-                        F.col(args.label_col).alias("actual"),
-                        (
-                            (F.col("score") >= args.threshold).cast("double")
-                            == F.col(args.label_col).cast("double")
-                        ).alias("correct"),
-                    ]
-                    if args.label_col
-                    else []
-                ),
-            )
-        out.write.mode("overwrite").parquet(args.output)
-        scored = spark.read.parquet(args.output)
-        n = scored.count()
-        msg = f"classify: {docs.count()} docs -> {n} scored -> {args.output}"
-        if args.label_col:
-            acc = scored.agg(F.avg(F.col("correct").cast("double"))).first()[0]
-            msg += f" (accuracy {acc:.4f})" if acc is not None else ""
-        print(msg)
-        return 0
-
-    if args.command == "score-dist":
-        spark = get_spark("epss-spark-cli")
-        spark.sparkContext.setLogLevel("ERROR")
-        from epss_spark.streaming import kmeans_stream as km_stream
-        from epss_spark.streaming import score_stream as s_stream
-
-        total = s_stream.score_total(spark, args.state)
-        if args.expected_n is not None and total != args.expected_n:
-            print(
-                f"score-dist: REFUSED — store absorbed {total} docs, "
-                f"expected {args.expected_n} (duplicate or dropped "
-                "deliveries); rebuild from batch",
-                file=sys.stderr,
-            )
-            return 3
-        if not args.no_id_audit:
-            absorbed = s_stream.score_checksum(spark, args.state)
-            if absorbed is None:
-                print(
-                    "score-dist: id audit unavailable (stream ran with "
-                    "audit_id_col=None) — relying on the count only",
-                    file=sys.stderr,
-                )
-            elif not args.input:
-                print(
-                    "score-dist: the store carries the id audit but no "
-                    "--input corpus was given to audit against — pass "
-                    "--input, or --no-id-audit to skip the content check "
-                    "explicitly",
-                    file=sys.stderr,
-                )
-                return 2
-            else:
-                docs = spark.read.parquet(args.input)
-                if args.id_col not in docs.columns:
-                    print(
-                        f"score-dist: no {args.id_col!r} column in --input "
-                        f"(columns: {', '.join(docs.columns)}) but the store "
-                        "carries the id audit — fix --id-col, or pass "
-                        "--no-id-audit to skip the content check explicitly",
-                        file=sys.stderr,
-                    )
-                    return 2
-                expected = km_stream.corpus_id_checksum(docs, id_col=args.id_col)
-                if absorbed != expected:
-                    print(
-                        f"score-dist: REFUSED — store id checksum "
-                        f"(n={absorbed[0]}, xor={absorbed[1]:#x}) != corpus "
-                        f"(n={expected[0]}, xor={expected[1]:#x}): the store "
-                        "does not hold exactly the --input corpus (duplicate "
-                        "or dropped deliveries); rebuild from batch",
-                        file=sys.stderr,
-                    )
-                    return 3
-        snap = s_stream.score_snapshot(spark, args.state).orderBy("bucket")
-        snap.write.mode("overwrite").parquet(args.output)
-        rows = spark.read.parquet(args.output).orderBy("bucket").collect()
-        for r in rows:
-            print(f"bucket {r.bucket}: n={r.n} avg_score={r.avg_score:.6f}")
-        if args.gate_bucket is not None and total:
-            passed = sum(r.n for r in rows if r.bucket >= args.gate_bucket)
-            print(
-                f"score-dist: pass mass (bucket >= {args.gate_bucket}) = "
-                f"{passed}/{total} ({passed / total:.4f})"
-            )
-        print(f"score-dist: {total} docs absorbed, {len(rows)} buckets -> {args.output}")
-        return 0
-
-    if args.command == "graph":
-        spark = get_spark("epss-spark-cli")
-        spark.sparkContext.setLogLevel("ERROR")
-        from pyspark.sql import functions as F
-
-        from epss_spark.operators import graph as graph_ops
-
-        edges = spark.read.parquet(args.input)
-        for c in (args.src_col, args.dst_col, *(
-            [args.weight_col] if args.weight_col else []
-        )):
-            if c not in edges.columns:
-                print(
-                    f"graph: no {c!r} column in --input "
-                    f"(columns: {', '.join(edges.columns)})",
-                    file=sys.stderr,
-                )
-                return 2
-        seeds = None
-        if args.seeds:
-            seeds = spark.read.parquet(args.seeds)
-            if args.seed_col not in seeds.columns:
-                print(
-                    f"graph: no {args.seed_col!r} column in --seeds "
-                    f"(columns: {', '.join(seeds.columns)})",
-                    file=sys.stderr,
-                )
-                return 2
-        try:
-            ranks = graph_ops.pagerank(
-                edges, n_iter=args.iters, damping=args.damping,
-                src_col=args.src_col, dst_col=args.dst_col,
-                weight_col=args.weight_col, seeds=seeds,
-                seed_col=args.seed_col,
-            )
-        except ValueError as e:
-            print(f"graph: {e}", file=sys.stderr)
-            return 2
-        ranks.write.mode("overwrite").parquet(args.output)
-        out = spark.read.parquet(args.output)
-        n = out.count()
-        if args.top:
-            for r in out.orderBy(F.col("rank").desc(), "node").limit(args.top).collect():
-                print(f"  {r.node}: {r.rank:.6f}")
-        print(f"graph: pagerank over {n} nodes ({args.iters} iters) -> {args.output}")
         return 0
 
     if args.command == "compact":

@@ -1,3 +1,3 @@
-from epss_spark.functions.scalars import parse_date, parse_datetime, round5
+from epss_spark.functions.scalars import parse_date
 
-__all__ = ["parse_date", "parse_datetime", "round5"]
+__all__ = ["parse_date"]

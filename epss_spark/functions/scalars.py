@@ -2,10 +2,8 @@
 
 - TIME coercion: the reference accepts date | datetime | str | int | float
   everywhere a date parameter appears (reference: epss/constants.py:17,
-  epss/util.py:265-290). Driver-side, unchanged semantics.
-- 5-dp storage rounding (reference: epss/constants.py:48, util.py:181-189).
-  Polars rounds half-to-even; Spark's `round` is HALF_UP — we use `bround`
-  (HALF_EVEN) for parity with the reference's storage policy.
+  epss/util.py:265-276). Driver-side, unchanged semantics.
+- Snapshot-date recovery from the source file name.
 """
 
 from __future__ import annotations
@@ -31,34 +29,11 @@ def parse_date(value: TIME | None) -> dt.date | None:
     return dt.date.fromisoformat(str(value)[:10])
 
 
-def parse_datetime(value: TIME | None) -> dt.datetime | None:
-    """Coerce any TIME value to a datetime (reference: epss/util.py:279-290)."""
-    if value is None:
-        return None
-    if isinstance(value, dt.datetime):
-        return value
-    if isinstance(value, dt.date):
-        return dt.datetime(value.year, value.month, value.day)
-    if isinstance(value, (int, float)):
-        return dt.datetime.fromtimestamp(value, tz=dt.timezone.utc)
-    return dt.datetime.fromisoformat(str(value))
-
-
-def round5(col: Column | str) -> Column:
-    """Storage-precision rounding, half-to-even for Polars parity
-    (reference: epss/constants.py:48)."""
-    return F.bround(F.col(col) if isinstance(col, str) else col, 5)
-
-
-def iso_date(col: Column | str) -> Column:
-    """date -> ISO string, the reference's JSON encoder behavior
-    (reference: epss/json_encoder.py:5-9)."""
-    return F.date_format(F.col(col) if isinstance(col, str) else col, "yyyy-MM-dd")
-
-
 def filename_date(path_col: Column | None = None) -> Column:
     """Recover the snapshot date from the source filename — the reference
     stores no date column in daily files and regexes it from the path at
-    read time (reference: epss/client.py:487-494, util.py:242-247)."""
+    read time (reference: epss/client.py:487-494, util.py:242-247). Only
+    the last path segment is matched, so a dated parent directory never
+    overrides the file's own date."""
     src = path_col if path_col is not None else F.input_file_name()
-    return F.regexp_extract(src, r"(\d{4}-\d{2}-\d{2})", 1).cast("date")
+    return F.regexp_extract(src, r"(\d{4}-\d{2}-\d{2})[^/]*$", 1).cast("date")

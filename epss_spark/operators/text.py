@@ -599,9 +599,8 @@ def token_divergence(
     re-aggregations of that bounded table, never a second corpus scan.
     The JS cross-entropy term needs P_c mass where the slice is absent,
     so the sum runs over the groups x vocab grid — |groups| is small
-    (broadcast cross join, same shape as nb_train's smoothing grid) and
-    vocab is Zipf-bounded. With THOUSANDS of slices (per-domain
-    monitoring) the grid stops being small: pass `kl_only=True`, which
+    (broadcast cross join) and vocab is Zipf-bounded. With THOUSANDS of
+    slices (per-domain monitoring) the grid stops being small: pass `kl_only=True`, which
     drops the cross join entirely — KL sums only over the slice's own
     (group, tok) rows (one inner join against corpus counts), so cost
     returns to O(sum of slice vocabularies) regardless of slice count.
@@ -729,9 +728,8 @@ def bigram_lm_score(
     counts. Frozen-model semantics for a corpus the model never saw:
     an unseen (prev, cur) pair contributes only its back-off unigram
     mass (bigram term 0); an unseen `cur` token has NO mass under the
-    model and the transition is dropped entirely (reported in n_oov) —
-    mirroring nb_apply's out-of-vocabulary contract rather than scoring
-    ln(0).
+    model and the transition is dropped entirely (reported in n_oov)
+    rather than scoring ln(0).
 
     Returns (id, *carry, n_bigrams, n_oov, avg_logprob): n_bigrams =
     transitions scored, n_oov = transitions dropped for OOV cur,
@@ -815,141 +813,6 @@ def bigram_logprob(
     ).drop("n_oov")
 
 
-def nb_train(
-    docs: DataFrame,
-    label_col: str = "lang",
-    text_col: str = "text",
-    alpha: float = 0.5,
-    materialize: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Train a multinomial Naive Bayes text classifier — the classic
-    fastText-tier baseline real pipelines use for quality/domain/language
-    gating (CCNet's quality classifier, the GPT-3
-    WebText-vs-CommonCrawl filter). Returns the FROZEN model as two
-    plain DataFrames, persistable as parquet next to the LSH/BM25/IVF-PQ
-    index artifacts: `model(label, tok, ll)` — the add-alpha (Lidstone)
-    smoothed per-class token log-likelihoods over the training
-    vocabulary, ln((c(c,t)+alpha) / (c(c)+alpha*|V|)) — and
-    `prior(label, lp)` — ln of the class document frequencies. The
-    production shape is train-once / score-every-batch:
-    `nb_train(labeled_seed)` + `write.parquet`, then `nb_apply(batch,
-    model, prior)` per crawl batch against the frozen artifact.
-
-    Scale shape: ONE tokenize pass into the (label, tok) count aggregate
-    (map-side partials); that table is bounded (<= |V| x |classes|
-    observed rows) and localCheckpoint'd under `materialize=True`, so
-    every derived table — class totals, vocabulary, |V| and priors as
-    1-row broadcast scalars, the smoothed |V| x |classes| grid — is
-    computed from the checkpoint, never by re-scanning the corpus
-    (the lazy plan re-tokenizes the training split under 5 branches:
-    13 parquet scans vs 1 tokenize pass + one tokenize-free doc-count
-    scan materialized). Classes are FEW, so the grid is vocab-sized,
-    built with one broadcast cross-join and one left join."""
-    from epss_spark.operators.layout import ensure_parallelism
-
-    base = ensure_parallelism(docs).select(
-        F.col(label_col).alias("label"), tokens(text_col).alias("__toks")
-    )
-    ttok = base.select("label", F.explode("__toks").alias("tok"))
-    ctk = ttok.groupBy("label", "tok").agg(F.count(F.lit(1)).alias("__cnt"))
-    if materialize:
-        ctk = ctk.localCheckpoint(eager=True)
-    ctot = ctk.groupBy("label").agg(F.sum("__cnt").alias("__tot"))
-    vocab = ctk.select("tok").distinct()
-    vsize = vocab.agg(F.count(F.lit(1)).alias("__V"))
-    cls = base.groupBy("label").agg(F.count(F.lit(1)).alias("__ndocs"))
-    if materialize:
-        # |classes| rows; keeps the doc-count scan from repeating under
-        # the prior / grid / total-docs branches
-        cls = cls.localCheckpoint(eager=True)
-    ndocs = cls.agg(F.sum("__ndocs").alias("__ntotal"))
-    prior = cls.crossJoin(F.broadcast(ndocs)).select(
-        "label",
-        F.log(F.col("__ndocs").cast("double") / F.col("__ntotal").cast("double")).alias(
-            "lp"
-        ),
-    )
-
-    model = (
-        vocab.crossJoin(F.broadcast(cls.select("label")))
-        .join(ctk, ["label", "tok"], "left")
-        .join(ctot, "label")
-        .crossJoin(F.broadcast(vsize))
-        .select(
-            "label",
-            "tok",
-            F.log(
-                (F.coalesce(F.col("__cnt"), F.lit(0)).cast("double") + F.lit(alpha))
-                / (F.col("__tot").cast("double") + F.lit(alpha) * F.col("__V").cast("double"))
-            ).alias("ll"),
-        )
-    )
-    if materialize:
-        model = model.localCheckpoint(eager=True)
-        prior = prior.localCheckpoint(eager=True)
-    return model, prior
-
-
-def nb_apply(
-    docs: DataFrame,
-    model: DataFrame,
-    prior: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    label_col: str | None = None,
-) -> DataFrame:
-    """Classify documents against a FROZEN Naive Bayes model (`nb_train`,
-    possibly read back from parquet): score(c, d) = ln P(c) +
-    sum_{t in d, t in V} ln-likelihood(c, t), argmax over classes.
-    Out-of-vocabulary tokens carry no signal for any class and are
-    dropped (inner join against the model grid); documents with zero
-    in-vocabulary tokens are dropped with them. Argmax ties break toward
-    the lexicographically smallest class label in both engines (min over
-    (neg_score, label) — no window).
-
-    Returns (id, predicted, score) — score is the winning class's
-    rounded-6dp unnormalized log-posterior — plus (actual, correct) when
-    `label_col` names a ground-truth column to carry through.
-
-    Scale shape: ONE corpus pass — explode tokens, one join against the
-    model grid (AQE broadcast while it fits, skew-split sort-merge
-    beyond), one (doc, class) sum aggregate, one per-doc min-struct
-    argmax. No Python, no driver-side weights."""
-    from epss_spark.operators.layout import ensure_parallelism
-
-    carry = [F.col(label_col).alias("actual")] if label_col else []
-    tetok = ensure_parallelism(docs).select(
-        id_col, *carry, F.explode(tokens(text_col)).alias("tok")
-    )
-    group_carry = ["actual"] if label_col else []
-    scored = (
-        tetok.join(model, "tok")
-        .groupBy(id_col, *group_carry, "label")
-        .agg(F.sum("ll").alias("__sumll"))
-        .join(F.broadcast(prior), "label")
-        .select(
-            id_col,
-            *group_carry,
-            "label",
-            F.round(F.col("__sumll") + F.col("lp"), 6).alias("__score"),
-        )
-    )
-    best = scored.groupBy(id_col, *group_carry).agg(
-        F.min(F.struct((-F.col("__score")).alias("ns"), F.col("label").alias("lab"))).alias(
-            "__m"
-        )
-    )
-    out = [
-        F.col(id_col),
-        *group_carry,
-        F.col("__m.lab").alias("predicted"),
-        (-F.col("__m.ns")).alias("score"),
-    ]
-    if label_col:
-        out.append((F.col("actual") == F.col("__m.lab")).alias("correct"))
-    return best.select(*out)
-
-
 def pr_curve(
     scored: DataFrame, label_col: str = "label", score_col: str = "score"
 ) -> DataFrame:
@@ -957,7 +820,7 @@ def pr_curve(
     value s — each a candidate decision threshold "predict positive when
     score >= s" — the confusion counts and precision / recall / F1. THE
     table a quality-gate owner reads before picking the cut: every gate
-    in this engine (NB scores, bigram-LM perplexity, stopword fraction,
+    in this engine (bigram-LM perplexity, stopword fraction,
     Gopher signals) is a threshold on a score, and picking it blind
     costs either yield or contamination.
 
@@ -1078,33 +941,6 @@ def pmi_bigrams(
         .filter(F.col("pmi") >= F.lit(float(min_pmi)))
         .select("w1", "w2", "n_pair", "pmi")
     )
-
-
-def nb_classify(
-    docs: DataFrame,
-    label_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    alpha: float = 0.5,
-    train_mod: int = 2,
-    materialize_model: bool = True,
-) -> DataFrame:
-    """Train-and-apply Naive Bayes in one call: documents with
-    id % train_mod == 0 are the labeled training split (`nb_train`);
-    every other document is scored and assigned the argmax class
-    (`nb_apply`), with the ground-truth label carried through for
-    accuracy auditing. Returns (id, actual, predicted, score, correct)
-    per scored document — see the pair's docstrings for semantics and
-    the per-pass scale shape (1 train tokenize + 1 cheap doc-count scan
-    + 1 apply tokenize, all model tables bounded and checkpointed)."""
-    is_train = (F.col(id_col) % train_mod) == 0
-    model, prior = nb_train(
-        docs.filter(is_train), label_col, text_col, alpha=alpha,
-        materialize=materialize_model,
-    )
-    return nb_apply(
-        docs.filter(~is_train), model, prior, id_col, text_col, label_col=label_col
-    ).select(id_col, "actual", "predicted", "score", "correct")
 
 
 def top_ngrams(

@@ -1,4 +1,5 @@
-"""EPSS-domain roadmap queries + multimodal registry surface.
+"""EPSS-domain roadmap queries, plus the dedup_embedding and agg_pivot
+registry entries.
 
 The reference's declared-but-unbuilt scope (TODO.md:8-20 per-CVE summary /
 current score, TODO.md:33-34 trending detection, NOTES.md:15-31 daily volume
@@ -19,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from epss_spark.operators import multimodal
 from epss_spark.operators.quantize import changed_scores, densify
 from epss_spark.operators.similarity import cosine_pairs_blocked
 from epss_spark.queries_core import T, dec2
@@ -301,148 +301,4 @@ def agg_pivot(spark, sf_dir):
         .groupBy("l_linestatus")
         .pivot("l_returnflag", ["A", "N", "R"])
         .agg(F.sum(dec2("l_quantity")).cast("double"))
-    )
-
-
-def _media(spark, sf_dir) -> DataFrame:
-    """Deterministic media table derived from `documents`: text bytes as the
-    opaque payload, kind cycling image/audio/video, duration from length."""
-    docs = T(spark, sf_dir, "documents")
-    kind = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    )
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        kind.alias("kind"),
-        F.concat(kind, F.lit("/x-test")).alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        (F.col("n_chars").cast("bigint") * 10).alias("duration_ms"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
-
-
-@register(
-    "multimodal_features",
-    # Full oracle: the media payload is encode(text,'UTF-8') (see _media), so
-    # content_hash == md5(text) and n_bytes == octet_length. feat_digest
-    # reproduces the deterministic fake decoder (multimodal._fake_decode) in
-    # pure SQL: per-chunk byte sums over the UTF-8 payload (testdata text is
-    # ASCII, so unicode(char) == byte value), each divided by 255*step, then
-    # left-folded — the same double-addition order as F.aggregate, so the
-    # comparison is bit-exact with no rounding tolerance.
-    """
-    WITH m AS (
-      SELECT doc_id AS media_id,
-             md5(text) AS content_hash,
-             CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-             text,
-             greatest(1, octet_length(encode(text)) // 8) AS step
-      FROM documents
-    )
-    SELECT media_id, content_hash, n_bytes,
-           list_sum(list_transform(range(0, 8), c ->
-             CAST(COALESCE(list_sum(list_transform(
-               range(c*step, least(c*step + step, n_bytes)),
-               i -> unicode(substr(text, CAST(i AS INT) + 1, 1)))), 0) AS DOUBLE)
-             / (255.0 * step)
-           )) AS feat_digest
-    FROM m
-    """,
-)
-def multimodal_features(spark, sf_dir):
-    # mapInPandas feature extraction with dedup-before-decode; the decode
-    # itself is the documented deterministic stub (no media libs here). The
-    # registered projection folds the features array to a scalar digest —
-    # the driver's canonicalizer cannot sort an array<double> column — while
-    # still certifying every feature value (the fold is order-sensitive).
-    feats = multimodal.extract_features(_media(spark, sf_dir))
-    return feats.select(
-        "media_id",
-        "content_hash",
-        "n_bytes",
-        F.aggregate("features", F.lit(0.0), lambda a, x: a + x).alias("feat_digest"),
-    )
-
-
-@register(
-    "multimodal_frames",
-    """
-    SELECT doc_id AS media_id, 'video/x-test' AS mime, frame_ms
-    FROM (
-      SELECT doc_id, n_chars,
-             unnest(generate_series(0, (n_chars * 10 // 1000) * 1000, 1000)) AS frame_ms
-      FROM documents
-    ) WHERE doc_id % 3 = 2
-    """,
-)
-def multimodal_frames(spark, sf_dir):
-    # video frame-sampling plumbing: pure Catalyst sequence+explode, no decode
-    return multimodal.sample_frames(_media(spark, sf_dir), every_ms=1000)
-
-
-@register(
-    "multimodal_video_frames",
-    # Full oracle for REAL pixel decode: the Spark side assembles a
-    # 2-frame 2x2 YUV4MPEG2 payload per doc in-engine (header + FRAME
-    # markers + uniform Y planes derived from doc_id, neutral chroma),
-    # extract_frames decodes it through the stdlib video tier
-    # (operators/multimodal.py::decode_y4m_frames) and re-encodes each
-    # sampled frame as PPM. With U=V=128 the BT.601 conversion collapses
-    # to gray pixel = trunc(1.164*(Y-16)) on every channel — verified
-    # exhaustively against the float32 kernel for Y-16 in [0, 109]
-    # (tests pin it) — so DuckDB reproduces the exact 23-byte PPM and
-    # its md5 in closed form. Pixel values stay < 128 so chr() is one
-    # UTF-8 byte.
-    """
-    WITH f AS (
-      SELECT doc_id, 0 AS frame_ms, CAST(doc_id % 110 AS INT) AS k FROM documents
-      UNION ALL
-      SELECT doc_id, 500 AS frame_ms, CAST((doc_id * 7) % 110 AS INT) AS k
-      FROM documents
-    )
-    SELECT doc_id AS media_id, CAST(frame_ms AS BIGINT) AS frame_ms,
-           CAST(2 AS INT) AS width, CAST(2 AS INT) AS height,
-           'image/x-portable-pixmap' AS mime,
-           md5('P6' || chr(10) || '2 2' || chr(10) || '255' || chr(10)
-               || repeat(chr(CAST(trunc(1.164 * k) AS INT)), 12)) AS frame_md5
-    FROM f
-    """,
-)
-def multimodal_video_frames(spark, sf_dir):
-    """Decoded video frame sampling with REAL pixels (operators/
-    multimodal.py::extract_frames over the always-available YUV4MPEG2
-    tier): every doc becomes a deterministic 2-frame uncompressed video
-    (frame rate 2 fps -> frames at 0 and 500 ms), frames are sampled at
-    every 500 ms, decoded BT.601 -> RGB, and re-encoded as PPM; the
-    projection hashes each frame payload so the oracle certifies the
-    decoded bytes, not just the plumbing (multimodal_frames covers the
-    metadata-only fan-out). Scale shape: map-only Arrow batches, no
-    shuffle, dedup-before-decode per batch."""
-    docs = T(spark, sf_dir, "documents")
-
-    def ybyte(col):
-        return F.unhex(F.lpad(F.hex(col + 16), 2, "0"))
-
-    def yplane(col):
-        b = ybyte(col)
-        return F.concat(b, b, b, b)
-
-    uv = F.lit(bytes([128]) * 8)
-    frame = F.lit(b"FRAME\n")
-    payload = F.concat(
-        F.lit(b"YUV4MPEG2 W2 H2 F2:1 Ip A1:1 C444\n"),
-        frame, yplane(F.col("doc_id") % 110), uv,
-        frame, yplane((F.col("doc_id") * 7) % 110), uv,
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("video").alias("kind"),
-        F.lit("video/x-yuv4mpeg").alias("mime"),
-        payload.alias("payload"),
-    )
-    return multimodal.extract_frames(media, every_ms=500).select(
-        "media_id", "frame_ms", "width", "height", "mime",
-        F.md5("payload").alias("frame_md5"),
     )

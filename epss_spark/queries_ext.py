@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from epss_spark.operators import (
-    classifier,
     clustering,
     dedup,
     prep,
@@ -3890,64 +3889,6 @@ def text_bigram_frozen(spark, sf_dir):
     )
 
 
-@register(
-    "text_nb_classify",
-    f"""
-    WITH base AS (SELECT doc_id, lang, {_TOKS_SQL} AS toks FROM documents),
-    tr AS (SELECT * FROM base WHERE doc_id % 2 = 0),
-    te AS (SELECT * FROM base WHERE doc_id % 2 <> 0),
-    ttok AS (SELECT lang, unnest(toks) AS tok FROM tr),
-    ctk AS (SELECT lang, tok, COUNT(*) AS cnt FROM ttok GROUP BY lang, tok),
-    ctot AS (SELECT lang, SUM(cnt) AS tot FROM ctk GROUP BY lang),
-    vocab AS (SELECT DISTINCT tok FROM ctk),
-    vs AS (SELECT COUNT(*) AS V FROM vocab),
-    cls AS (SELECT lang, COUNT(*) AS ndocs FROM tr GROUP BY lang),
-    nd AS (SELECT SUM(ndocs) AS ntotal FROM cls),
-    prior AS (
-      SELECT lang, ln(CAST(ndocs AS DOUBLE) / CAST(ntotal AS DOUBLE)) AS lp
-      FROM cls CROSS JOIN nd
-    ),
-    model AS (
-      SELECT c.lang, v.tok,
-             ln((CAST(COALESCE(k.cnt, 0) AS DOUBLE) + 0.5)
-                / (CAST(t.tot AS DOUBLE) + 0.5 * CAST(V AS DOUBLE))) AS ll
-      FROM vocab v
-      CROSS JOIN cls c
-      JOIN ctot t ON t.lang = c.lang
-      LEFT JOIN ctk k ON k.lang = c.lang AND k.tok = v.tok
-      CROSS JOIN vs
-    ),
-    tetok AS (SELECT doc_id, lang AS actual, unnest(toks) AS tok FROM te),
-    sc AS (
-      SELECT tt.doc_id, tt.actual, m.lang,
-             round(SUM(m.ll) + ANY_VALUE(p.lp), 6) AS score
-      FROM tetok tt
-      JOIN model m ON m.tok = tt.tok
-      JOIN prior p ON p.lang = m.lang
-      GROUP BY tt.doc_id, tt.actual, m.lang
-    ),
-    ranked AS (
-      SELECT doc_id, actual, lang, score,
-             row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, lang) AS rn
-      FROM sc
-    )
-    SELECT doc_id, actual, lang AS predicted, score,
-           actual = lang AS correct
-    FROM ranked WHERE rn = 1
-    """,
-)
-def text_nb_classify(spark, sf_dir):
-    """Multinomial Naive Bayes classifier, trained AND applied in one
-    declarative plan (operators/text.py::nb_classify): documents with
-    even doc_id train per-class token log-likelihoods (add-0.5 smoothing
-    over the training vocabulary) and class priors; every odd-id
-    document is scored and assigned the argmax lang — the fastText-tier
-    quality/domain/language gate real pipelines run (CCNet, the GPT-3
-    WebText-vs-CommonCrawl filter), with no driver-side weights and no
-    Python crossing."""
-    return text.nb_classify(T(spark, sf_dir, "documents"))
-
-
 # ---------------------------------------------------------------------------
 # Mergeable sketches
 # ---------------------------------------------------------------------------
@@ -5021,536 +4962,3 @@ def cluster_boundary(spark, sf_dir):
     init = clustering.init_centroids_by_id(emb, _KM_IDS)
     cents = clustering.kmeans_fit(emb, init, n_iter=2, dim=64)
     return clustering.cluster_boundary(emb, cents, threshold=0.05)
-
-
-# ---------------------------------------------------------------------------
-# Trainable linear classifier (operators/classifier.py) — the
-# CCNet/fastText-style quality scorer, trained IN-ENGINE with the same
-# deterministic discipline as the k-means tier: md5-hashed features, the
-# exp-free rational sigmoid (only IEEE-exact ops), quantized BIGINT
-# gradient sums, fixed division chains. The oracle replays every one of
-# the 10 full-batch GD epochs CTE-for-CTE (MATERIALIZED — each epoch's
-# weights feed three downstream CTEs, and without materialization the
-# chain re-expands exponentially). The training label distills the
-# stopword-saturation signal quality_filter gates on (stop_frac >= 0.06
-# splits the corpus ~52/48), the hashed-BoW-learnable shape of the
-# "distill an expensive heuristic into a cheap linear scorer" recipe.
-
-_CLF_DIM, _CLF_EPOCHS, _CLF_LR, _CLF_SCALE = 64, 10, 1.0, 8.0
-_CLF_HASH = f"CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % {_CLF_DIM}"
-_CLF_STOPS = "('the','a','of','and','to','in','is','it')"
-
-
-def _clf_epoch(t: int) -> str:
-    """One unrolled GD epoch: z via the left-fold dot product (list_sum
-    matches the engine's sequential chain — the kmeans-proven parity),
-    the rational link, per-dimension quantized gradient sums, and the
-    float(g)/float(n)/quant update chain, operation-for-operation the
-    spelling of classifier.linear_fit."""
-    d1 = _CLF_DIM + 1
-    return f"""
-    clf_z{t} AS MATERIALIZED (
-      SELECT f.doc_id, f.y, f.x,
-             list_sum(list_transform(range(1, {d1}), j -> f.x[j] * w.wl[j])) + w.b AS z
-      FROM clf_feats f CROSS JOIN clf_w{t} w
-    ),
-    clf_r{t} AS MATERIALIZED (
-      SELECT doc_id, x, (0.5 + 0.5 * (z / (1.0 + abs(z)))) - y AS r FROM clf_z{t}
-    ),
-    clf_g{t} AS MATERIALIZED (
-      SELECT j, CAST(sum(CAST(floor((r * x[j]) * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS g
-      FROM clf_r{t}, range(1, {d1}) t(j) GROUP BY j
-    ),
-    clf_gb{t} AS MATERIALIZED (
-      SELECT CAST(sum(CAST(floor(r * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS g,
-             count(*) AS n
-      FROM clf_r{t}
-    ),
-    clf_w{t + 1} AS MATERIALIZED (
-      SELECT (SELECT list(w.wl[j] - {_CLF_LR} * (CAST(g.g AS DOUBLE) / CAST(gb.n AS DOUBLE) / 1000000.0) ORDER BY j)
-              FROM clf_g{t} g CROSS JOIN clf_w{t} w CROSS JOIN clf_gb{t} gb) AS wl,
-             (SELECT w.b - {_CLF_LR} * (CAST(gb.g AS DOUBLE) / CAST(gb.n AS DOUBLE) / 1000000.0)
-              FROM clf_w{t} w CROSS JOIN clf_gb{t} gb) AS b
-    )"""
-
-
-_CLF_BASE = f"""
-    clf_tok AS MATERIALIZED (
-      SELECT doc_id, {_TOKS_SQL} AS tk FROM documents
-    ),
-    clf_cnt AS MATERIALIZED (
-      SELECT doc_id, {_CLF_HASH} AS j, count(*) AS c
-      FROM (SELECT doc_id, unnest(tk) AS tok FROM clf_tok) GROUP BY doc_id, j
-    ),
-    clf_lab AS MATERIALIZED (
-      SELECT doc_id, len(tk) AS dl,
-             CASE WHEN CAST(len(list_filter(tk, x -> x IN {_CLF_STOPS})) AS DOUBLE)
-                       / greatest(len(tk), 1) >= 0.06
-                  THEN 1.0 ELSE 0.0 END AS y
-      FROM clf_tok
-    ),
-    clf_feats AS MATERIALIZED (
-      SELECT l.doc_id, l.y,
-             list_transform(range(0, {_CLF_DIM}), i ->
-               CASE WHEN l.dl = 0 THEN 0.0
-                    ELSE (CAST(coalesce(m.m[i][1], 0) AS DOUBLE) / CAST(l.dl AS DOUBLE)) * {_CLF_SCALE} END) AS x
-      FROM clf_lab l LEFT JOIN (
-        SELECT doc_id, map(list(j ORDER BY j), list(c ORDER BY j)) AS m
-        FROM clf_cnt GROUP BY doc_id
-      ) m ON m.doc_id = l.doc_id
-    ),
-    clf_w0 AS (SELECT list_transform(range(0, {_CLF_DIM}), i -> 0.0) AS wl, 0.0 AS b),
-    {",".join(_clf_epoch(i) for i in range(_CLF_EPOCHS))}"""
-
-
-def _clf_label_col(tokens_col: str | None = None):
-    """stop_frac >= 0.06 as a 0/1 double — mirrors clf_lab exactly:
-    CAST(n_stop AS DOUBLE) / greatest(n_tok, 1). With `tokens_col`,
-    reuses an already-computed tokens(text) array instead of
-    re-tokenizing (identical values — same expressions over the same
-    array)."""
-    tk = F.col(tokens_col) if tokens_col else text.tokens("text")
-    n_stop = F.size(F.filter(tk, lambda x: x.isin(*text.STOPWORDS_EN)))
-    frac = n_stop.cast("double") / F.greatest(F.size(tk), F.lit(1))
-    return F.when(frac >= 0.06, F.lit(1.0)).otherwise(F.lit(0.0))
-
-
-def _clf_train(spark, sf_dir, keep_feats: bool = False):
-    """Shared train chain for the classify_* tier. Optimization r14
-    (guide §2.3/§5): tokenize ONCE — the label and the feature buckets
-    both read the same `__tks` array (the double regex/normalize pass
-    was the dominant featurize cost at bench scale; subexpression
-    elimination dedups it within the one projection) — and with
-    `keep_feats=True` the PERSISTED featurize artifact is returned for
-    the caller's scoring pass instead of being unpersisted and
-    recomputed from raw text (the scoring re-featurize was a full
-    second scan+tokenize+2-exchange pass). Caller contract: the
-    returned feats stays persisted (driver-sized at every SF the
-    harness runs; the bench clears the cache between timed runs)."""
-    toked = T(spark, sf_dir, "documents").select(
-        "doc_id", text.tokens("text").alias("__tks")
-    )
-    docs = toked.select(
-        "doc_id", _clf_label_col("__tks").alias("y"), "__tks"
-    )
-    feats = classifier.hashed_features(
-        docs, dim=_CLF_DIM, feature_scale=_CLF_SCALE, carry_cols=("y",),
-        tokens_col="__tks",
-    ).persist()
-    try:
-        w, b = classifier.linear_fit(
-            feats, dim=_CLF_DIM, n_epochs=_CLF_EPOCHS, lr=_CLF_LR
-        )
-    except Exception:
-        feats.unpersist()
-        raise
-    if keep_feats:
-        return feats, w, b
-    feats.unpersist()
-    docs = T(spark, sf_dir, "documents").select(
-        "doc_id", "text", _clf_label_col().alias("y")
-    )
-    return docs, w, b
-
-
-@register(
-    "classify_linear_model",
-    f"""
-    WITH {_CLF_BASE}
-    SELECT -1 AS j, b AS weight FROM clf_w{_CLF_EPOCHS}
-    UNION ALL
-    SELECT j - 1 AS j, wl[j] AS weight FROM clf_w{_CLF_EPOCHS}, range(1, {_CLF_DIM + 1}) t(j)
-    """,
-)
-def classify_linear_model(spark, sf_dir):
-    """The trained model itself as the checkable artifact: dim+1 rows of
-    (j, weight), bias at j = -1 — every float the product of 10
-    oracle-replayed GD epochs (operators/classifier.py::linear_fit over
-    hashed_features). Training is 10 map-side-combinable aggregates
-    each collecting dim+2 BIGINTs; the corpus never shuffles after the
-    two featurize exchanges."""
-    _, w, b = _clf_train(spark, sf_dir)
-    rows = [(-1, float(b))] + [(j, float(v)) for j, v in enumerate(w)]
-    return spark.createDataFrame(rows, "j int, weight double")
-
-
-@register(
-    "classify_linear_quality",
-    f"""
-    WITH {_CLF_BASE},
-    clf_sc AS (
-      SELECT f.doc_id, f.y,
-             list_sum(list_transform(range(1, {_CLF_DIM + 1}), j -> f.x[j] * w.wl[j])) + w.b AS z
-      FROM clf_feats f CROSS JOIN clf_w{_CLF_EPOCHS} w
-    )
-    SELECT doc_id, CAST(y AS INT) AS label,
-           0.5 + 0.5 * (z / (1.0 + abs(z))) AS score,
-           CASE WHEN 0.5 + 0.5 * (z / (1.0 + abs(z))) >= 0.5 THEN 1 ELSE 0 END AS pred
-    FROM clf_sc
-    """,
-)
-def classify_linear_quality(spark, sf_dir):
-    """Train + apply in one pass (operators/classifier.py): every doc
-    scored by the distilled stopword-saturation model — (doc_id, label,
-    score, pred), scores bit-exact against the oracle's full GD replay.
-    Scoring is a map-only codegen projection (plan-literal weights, the
-    k-means-assignment pattern); above BATCHED_SCORE_DIMS the Arrow
-    kernel path takes over, pinned bit-identical in pytest.
-
-    Optimization r14: scoring reads the SAME persisted featurize
-    artifact training just scanned (keep_feats) instead of
-    re-tokenizing + re-aggregating the corpus from raw text — the
-    re-featurize was a full duplicate of the most expensive stage
-    (before/after plans in plans/r14/, numbers in
-    OPTIMIZATION_r14.md)."""
-    feats, w, b = _clf_train(spark, sf_dir, keep_feats=True)
-    scored = classifier.linear_score(feats, w, b)
-    return scored.select(
-        "doc_id",
-        F.col("y").cast("int").alias("label"),
-        "score",
-        (F.col("score") >= 0.5).cast("int").alias("pred"),
-    )
-
-
-@register(
-    "classify_score_histogram",
-    f"""
-    WITH {_CLF_BASE},
-    clf_sc AS (
-      SELECT f.doc_id,
-             list_sum(list_transform(range(1, {_CLF_DIM + 1}), j -> f.x[j] * w.wl[j])) + w.b AS z
-      FROM clf_feats f CROSS JOIN clf_w{_CLF_EPOCHS} w
-    ),
-    clf_h AS (
-      SELECT CAST(least(floor((0.5 + 0.5 * (z / (1.0 + abs(z)))) * 20), 19) AS INT) AS bucket,
-             CAST(floor((0.5 + 0.5 * (z / (1.0 + abs(z)))) * 1000000.0 + 0.5) AS BIGINT) AS q
-      FROM clf_sc
-    )
-    SELECT bucket, count(*) AS n,
-           CAST(sum(q) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1000000.0 AS avg_score
-    FROM clf_h GROUP BY bucket
-    """,
-)
-def classify_score_histogram(spark, sf_dir):
-    """The trained model's score distribution over the corpus
-    (operators/classifier.py::score_histogram): one row per occupied
-    score bucket with additive (n, quantized score sum) — the
-    quality-gate health report whose streaming twin
-    (streaming/score_stream.py) folds per-drop deltas to this exact
-    output. Bucket and avg_score replay bit-exactly through the full
-    GD chain."""
-    docs, w, b = _clf_train(spark, sf_dir)
-    return classifier.score_histogram(docs, w, b, feature_scale=_CLF_SCALE)
-
-
-@register(
-    "classify_calibration",
-    f"""
-    WITH {_CLF_BASE},
-    clf_sc AS (
-      SELECT f.doc_id, f.y,
-             list_sum(list_transform(range(1, {_CLF_DIM + 1}), j -> f.x[j] * w.wl[j])) + w.b AS z
-      FROM clf_feats f CROSS JOIN clf_w{_CLF_EPOCHS} w
-    ),
-    clf_cal AS (
-      SELECT CAST(least(floor((0.5 + 0.5 * (z / (1.0 + abs(z)))) * 10), 9) AS INT) AS bucket,
-             CAST(floor((0.5 + 0.5 * (z / (1.0 + abs(z)))) * 1000000.0 + 0.5) AS BIGINT) AS q,
-             CAST(y AS BIGINT) AS pos
-      FROM clf_sc
-    )
-    SELECT bucket, count(*) AS n,
-           CAST(sum(q) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1000000.0 AS avg_score,
-           CAST(sum(pos) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS frac_pos
-    FROM clf_cal GROUP BY bucket
-    """,
-)
-def classify_calibration(spark, sf_dir):
-    """Reliability diagram for the trained model
-    (operators/classifier.py::calibration_report): per score bucket the
-    achieved positive rate next to the mean score — the is-the-score-a-
-    probability check run after training and whenever score_stream
-    shows the distribution moving. Additive integers throughout (the
-    label sum is already an integer), bit-exact through the GD replay."""
-    docs, w, b = _clf_train(spark, sf_dir)
-    return classifier.calibration_report(
-        docs, w, b, label_col="y", feature_scale=_CLF_SCALE
-    )
-
-
-# ---------------------------------------------------------------------------
-# Iterative graph analytics (operators/graph.py): deterministic weighted
-# PageRank via quantized message passing — per-edge contributions floor to
-# BIGINT before the per-node sum (shuffle-order-proof), the per-node update
-# is a fixed literal chain, and the oracle unrolls every iteration
-# CTE-for-CTE. The registry shape ranks the sf purchase network: customer
-# and supplier nodes, edges = distinct (customer, supplier) pairs weighted
-# by line count, both directions (a random surfer over co-purchases), so
-# no node dangles and the dangling term exercises its exact-zero path.
-
-_PR_ITERS, _PR_D = 3, 0.85
-
-
-def _pr_iter(t: int) -> str:
-    return f"""
-    pr_s{t} AS MATERIALIZED (
-      SELECT e.dst AS node,
-             CAST(sum(CAST(floor(((r.rank * CAST(e.w AS DOUBLE)) / CAST(o.ow AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS s
-      FROM pr_edges e
-      JOIN pr_ow o ON o.src = e.src
-      JOIN pr_r{t} r ON r.node = e.src
-      GROUP BY e.dst
-    ),
-    pr_r{t + 1} AS MATERIALIZED (
-      SELECT n.node,
-             ((1.0e0 - {_PR_D}e0) / nn.nn + {_PR_D}e0 * (0.0e0 / 1000000.0e0) / nn.nn)
-             + {_PR_D}e0 * (CAST(coalesce(s.s, 0) AS DOUBLE) / 1000000.0) AS rank
-      FROM pr_nodes n
-      CROSS JOIN pr_n nn
-      LEFT JOIN pr_s{t} s ON s.node = n.node
-    )"""
-
-
-@register(
-    "graph_pagerank",
-    f"""
-    WITH pr_e0 AS MATERIALIZED (
-      SELECT 'c' || CAST(o_custkey AS VARCHAR) AS c,
-             's' || CAST(l_suppkey AS VARCHAR) AS s,
-             count(*) AS w
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      GROUP BY 1, 2
-    ),
-    pr_edges AS MATERIALIZED (
-      SELECT c AS src, s AS dst, CAST(w AS BIGINT) AS w FROM pr_e0
-      UNION ALL
-      SELECT s AS src, c AS dst, CAST(w AS BIGINT) AS w FROM pr_e0
-    ),
-    pr_nodes AS MATERIALIZED (
-      SELECT src AS node FROM pr_edges UNION SELECT dst FROM pr_edges
-    ),
-    pr_n AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS nn FROM pr_nodes),
-    pr_ow AS MATERIALIZED (
-      SELECT src, CAST(sum(w) AS BIGINT) AS ow FROM pr_edges GROUP BY src
-    ),
-    pr_r0 AS MATERIALIZED (
-      SELECT node, 1.0 / (SELECT nn FROM pr_n) AS rank FROM pr_nodes
-    ),
-    {",".join(_pr_iter(i) for i in range(_PR_ITERS))}
-    SELECT node, rank FROM pr_r{_PR_ITERS}
-    """,
-)
-def graph_pagerank(spark, sf_dir):
-    """Weighted PageRank over the purchase network
-    (operators/graph.py::pagerank): who matters in the
-    customer-supplier graph after 3 synchronous iterations of
-    quantized message passing. Each iteration is one src-join + one
-    map-side-combinable per-dst BIGINT aggregate; static prep (nodes,
-    out-weights, dangling set) is one checkpointed pass; every rank
-    replays bit-for-bit through the oracle's unrolled CTEs."""
-    from epss_spark.operators import graph
-
-    orders = T(spark, sf_dir, "orders")
-    li = T(spark, sf_dir, "lineitem")
-    base = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .groupBy("c", "s")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    edges = base.select(
-        F.col("c").alias("src"), F.col("s").alias("dst"), "w"
-    ).unionByName(base.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w"))
-    return graph.pagerank(edges, n_iter=_PR_ITERS, damping=_PR_D, weight_col="w")
-
-
-def _prs_iter(t: int) -> str:
-    """Seeded-iteration CTEs: the message sum is the same shape as the
-    uniform form; the update multiplies the dangling-augmented teleport
-    coefficient by each node's tele value instead of the uniform 1/N
-    (e-notation literals — DuckDB folds plain decimal literals in exact
-    DECIMAL, a one-ulp mismatch vs the engine's double chain)."""
-    return f"""
-    prs_s{t} AS MATERIALIZED (
-      SELECT e.dst AS node,
-             CAST(sum(CAST(floor(((r.rank * CAST(e.w AS DOUBLE)) / CAST(o.ow AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS s
-      FROM pr_edges e
-      JOIN pr_ow o ON o.src = e.src
-      JOIN prs_r{t} r ON r.node = e.src
-      GROUP BY e.dst
-    ),
-    prs_r{t + 1} AS MATERIALIZED (
-      SELECT te.node,
-             ((1.0e0 - {_PR_D}e0) + {_PR_D}e0 * (0.0e0 / 1000000.0e0)) * te.t
-             + {_PR_D}e0 * (CAST(coalesce(s.s, 0) AS DOUBLE) / 1000000.0) AS rank
-      FROM pr_tele te
-      LEFT JOIN prs_s{t} s ON s.node = te.node
-    )"""
-
-
-@register(
-    "graph_pagerank_seeded",
-    f"""
-    WITH pr_e0 AS MATERIALIZED (
-      SELECT 'c' || CAST(o_custkey AS VARCHAR) AS c,
-             's' || CAST(l_suppkey AS VARCHAR) AS s,
-             count(*) AS w
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      GROUP BY 1, 2
-    ),
-    pr_edges AS MATERIALIZED (
-      SELECT c AS src, s AS dst, CAST(w AS BIGINT) AS w FROM pr_e0
-      UNION ALL
-      SELECT s AS src, c AS dst, CAST(w AS BIGINT) AS w FROM pr_e0
-    ),
-    pr_nodes AS MATERIALIZED (
-      SELECT src AS node FROM pr_edges UNION SELECT dst FROM pr_edges
-    ),
-    pr_ow AS MATERIALIZED (
-      SELECT src, CAST(sum(w) AS BIGINT) AS ow FROM pr_edges GROUP BY src
-    ),
-    pr_seedg AS MATERIALIZED (
-      SELECT DISTINCT 'c' || CAST(c_custkey AS VARCHAR) AS node
-      FROM customer WHERE c_nationkey = 0
-    ),
-    pr_seed AS MATERIALIZED (
-      SELECT s.node FROM pr_seedg s JOIN pr_nodes n ON n.node = s.node
-    ),
-    pr_ns AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS ns FROM pr_seed),
-    pr_tele AS MATERIALIZED (
-      SELECT n.node,
-             CASE WHEN sg.node IS NOT NULL THEN 1.0 / (SELECT ns FROM pr_ns)
-                  ELSE 0.0 END AS t
-      FROM pr_nodes n LEFT JOIN pr_seed sg ON sg.node = n.node
-    ),
-    prs_r0 AS MATERIALIZED (SELECT node, t AS rank FROM pr_tele),
-    {",".join(_prs_iter(i) for i in range(_PR_ITERS))}
-    SELECT node, rank FROM prs_r{_PR_ITERS}
-    """,
-)
-def graph_pagerank_seeded(spark, sf_dir):
-    """Personalized PageRank (operators/graph.py::pagerank(seeds=...)):
-    the walk teleports only to nation-0 customers, so rank measures
-    proximity to that trusted set over the purchase network — the
-    seed-expansion primitive (score sources by closeness to a
-    whitelist). Same quantized message passing, per-node teleport
-    column instead of the uniform base; every iteration unrolled."""
-    from epss_spark.operators import graph
-
-    orders = T(spark, sf_dir, "orders")
-    li = T(spark, sf_dir, "lineitem")
-    cust = T(spark, sf_dir, "customer")
-    base = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .groupBy("c", "s")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    edges = base.select(
-        F.col("c").alias("src"), F.col("s").alias("dst"), "w"
-    ).unionByName(base.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w"))
-    seeds = cust.filter(F.col("c_nationkey") == 0).select(
-        F.concat(F.lit("c"), F.col("c_custkey").cast("string")).alias("node")
-    )
-    return graph.pagerank(
-        edges, n_iter=_PR_ITERS, damping=_PR_D, weight_col="w", seeds=seeds
-    )
-
-
-@register(
-    "graph_copurchase",
-    """
-    WITH cp_d AS MATERIALIZED (
-      SELECT DISTINCT o_custkey AS g, l_suppkey AS i
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ),
-    cp_sz AS MATERIALIZED (
-      SELECT g, count(*) AS n FROM cp_d GROUP BY g
-    ),
-    cp_k AS MATERIALIZED (
-      SELECT d.g, d.i FROM cp_d d JOIN cp_sz s ON s.g = d.g WHERE s.n <= 1024
-    ),
-    cp_deg AS MATERIALIZED (
-      SELECT i, count(*) AS deg FROM cp_k GROUP BY i
-    ),
-    cp_p AS MATERIALIZED (
-      SELECT a.i AS src, b.i AS dst, count(*) AS w
-      FROM cp_k a JOIN cp_k b ON a.g = b.g AND a.i < b.i
-      GROUP BY a.i, b.i
-      HAVING count(*) >= 2
-    )
-    SELECT p.src, p.dst, p.w,
-           CAST(p.w AS DOUBLE) / CAST(da.deg + db.deg - p.w AS DOUBLE) AS jaccard
-    FROM cp_p p
-    JOIN cp_deg da ON da.i = p.src
-    JOIN cp_deg db ON db.i = p.dst
-    """,
-)
-def graph_copurchase(spark, sf_dir):
-    """Bipartite-to-unipartite co-occurrence projection
-    (operators/graph.py::cooccurrence_edges): supplier pairs weighted
-    by shared customers over the purchase network, the prep step that
-    feeds an item-item graph to pagerank. The quadratic hazard is the
-    hot group (one g-item group emits g^2/2 pairs), so groups above
-    max_group_size drop entirely — the LSH max_bucket_size discipline;
-    min_weight prunes the single-co-occurrence tail. Distinct and
-    sizes ride one keyed exchange; the self-join co-locates on it."""
-    from epss_spark.operators import graph
-
-    orders = T(spark, sf_dir, "orders")
-    li = T(spark, sf_dir, "lineitem")
-    pairs = orders.join(li, orders["o_orderkey"] == li["l_orderkey"]).select(
-        F.col("o_custkey").alias("g"), F.col("l_suppkey").alias("i")
-    )
-    return graph.cooccurrence_edges(
-        pairs, group_col="g", item_col="i", max_group_size=1024, min_weight=2,
-        normalize="jaccard",
-    )
-
-
-@register(
-    "classify_auc",
-    f"""
-    WITH {_CLF_BASE},
-    clf_sc AS (
-      SELECT f.doc_id, f.y,
-             list_sum(list_transform(range(1, {_CLF_DIM + 1}), j -> f.x[j] * w.wl[j])) + w.b AS z
-      FROM clf_feats f CROSS JOIN clf_w{_CLF_EPOCHS} w
-    ),
-    clf_ps AS MATERIALIZED (
-      SELECT 0.5 + 0.5 * (z / (1.0 + abs(z))) AS sc,
-             CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS np,
-             CAST(sum(CASE WHEN y = 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS nn
-      FROM clf_sc GROUP BY 1
-    ),
-    clf_cum AS (
-      SELECT np, nn,
-             CAST(coalesce(sum(nn) OVER (ORDER BY sc ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS below
-      FROM clf_ps
-    ),
-    clf_agg AS (
-      SELECT CAST(sum(2 * np * below + np * nn) AS BIGINT) AS s2,
-             CAST(sum(np) AS BIGINT) AS n_pos, CAST(sum(nn) AS BIGINT) AS n_neg
-      FROM clf_cum
-    )
-    SELECT (CAST(s2 AS DOUBLE) / 2.0) / (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)) AS auc,
-           n_pos, n_neg
-    FROM clf_agg
-    """,
-)
-def classify_auc(spark, sf_dir):
-    """Exact ROC-AUC of the trained model
-    (operators/classifier.py::auc_report): the Mann-Whitney pair count
-    over integer aggregates — one keyed per-score collapse + a window
-    over DISTINCT scores only, never a row-grain global sort. The
-    third leg of the evaluation loop (accuracy in
-    classify_linear_quality, calibration in classify_calibration)."""
-    feats, w, b = _clf_train(spark, sf_dir, keep_feats=True)
-    scored = classifier.linear_score(feats, w, b)
-    return classifier.auc_report(scored, label_col="y")

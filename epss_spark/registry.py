@@ -22,7 +22,7 @@ _LOADED = False
 
 # The driver's correctness harness records at most 50 queries (observed:
 # CORRECTNESS_r01.json stopped at the first 50 registrations, cutting off
-# every text/dedup/ANN/multimodal extension operator). This list is the
+# every text/dedup/ANN extension operator). This list is the
 # curated, ordered 50-entry surface handed to the driver: the flagship
 # first, then the LLM-data-pipeline extensions, then the non-redundant
 # relational core. Queries NOT on this list stay registered (library users
@@ -37,8 +37,6 @@ _LOADED = False
 #   agg_cube/agg_grouping_sets ~ agg_rollup/agg_pivot
 #   window_lead_ntile ~ window_running_sum
 #   scalar_math ~ scalar_round
-#   epss_volume_stats ~ epss_quantize_daily (the same lag change flag,
-#     counted per day)
 #   ann_threshold ~ ann_cosine_topk/ann_lsh_bucketed (same cosine kernel,
 #     blocked instead of top-k)      text_fingerprint ~ dedup_exact_docs
 #     (same md5-of-normalized-text kernel, per-doc instead of grouped)
@@ -154,8 +152,7 @@ DRIVER_SURFACE: tuple[str, ...] = (
     #   green via dedup_minhash_incremental; line-dedup via dedup_lines),
     #   dedup_url_latest (SCD-1 keep-latest class carried by
     #   dedup_url_history — its compaction is keep-latest plus the run
-    #   history), multimodal_frames (multimodal decode/plumbing class
-    #   carried by multimodal_features), filter_rlike (§2.4 F3 pattern
+    #   history), filter_rlike (§2.4 F3 pattern
     #   filter stays pytest-oracled; the filter family stays driver-green
     #   via filter_range + filter_date_window)
     "dedup_edit_verified",
@@ -248,7 +245,6 @@ DRIVER_SURFACE: tuple[str, ...] = (
     "text_pii_redact",
     "text_chunk",
     "pack_sequences",
-    "multimodal_features",
     # round-9 rotation (judge item 7): the round-8 crawl-compaction
     # headliners surface in place of held rows (each demoted entry stays
     # oracle-checked in the pytest tier):
@@ -263,13 +259,15 @@ DRIVER_SURFACE: tuple[str, ...] = (
     "dedup_snapshot_diff",
     # EPSS domain layer. epss_new_keys, epss_reconstruct_dense,
     # epss_top_movers and epss_summary took the four slots the
-    # events-analytics family held before it was removed.
+    # events-analytics family held before it was removed;
+    # epss_volume_stats took the slot the multimodal family held.
     "epss_quantize_daily",
     "epss_current_scores",
     "epss_new_keys",
     "epss_reconstruct_dense",
     "epss_top_movers",
     "epss_summary",
+    "epss_volume_stats",
     # relational core
     "project_select",
     "filter_range",
@@ -378,15 +376,6 @@ DRIVER_SURFACE: tuple[str, ...] = (
 #     and the incremental index-append architecture is pinned by the
 #     same pytest contracts as the demoted lexical sibling
 #     dedup_minhash_incremental)
-#   classify_linear_model / classify_linear_quality /
-#   classify_score_histogram  (round-14 newcomers — the supervised
-#     linear tier, a NEW class with no driver row yet: hashed features,
-#     exp-free rational-sigmoid GD, quantized gradient sums. The
-#     natural round-15 rotation candidate is classify_linear_quality
-#     (train + score end-to-end, the strict superset of the other two's
-#     arithmetic); the md5-coin/quantized-BIGINT machinery it rides is
-#     driver-green via the clustering tier, but the supervised GD chain
-#     itself has only the pytest-oracle gate so far.)
 # Everything else off-surface HAS been driver-green in some round and was
 # demoted in a documented swap above.
 

@@ -42,6 +42,20 @@ def _default_fetch(url: str, dest: str) -> None:
         shutil.copyfileobj(resp, f)
 
 
+def _publish(dest: str, write: Callable[[str], None]) -> None:
+    """Run `write` into a dot-prefixed sibling of `dest` (Spark's file
+    listing skips it), then rename it into place, so an interrupted
+    download never leaves a file the existence check would take as
+    finished. The sibling is removed on failure."""
+    tmp = os.path.join(os.path.dirname(dest), f".{os.path.basename(dest)}.part")
+    try:
+        write(tmp)
+        os.replace(tmp, dest)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
 def download_snapshot(
     workdir: str,
     date: TIME,
@@ -49,25 +63,35 @@ def download_snapshot(
     decompress: bool = True,
 ) -> str:
     """Idempotent single-day download (reference: epss/client.py:163-194):
-    skip if the target file already exists. `fetch` resolves at call time
-    (None -> module-level _default_fetch) so tests can monkeypatch the
-    module attribute and exercise the full CLI path without network."""
+    skip if the target file already exists. The target only ever appears
+    complete (see `_publish`). `fetch` resolves at call time (None ->
+    module-level _default_fetch) so tests can monkeypatch the module
+    attribute and exercise the full CLI path without network."""
     date = parse_date(date)
     os.makedirs(workdir, exist_ok=True)
     dest = os.path.join(workdir, f"epss_scores-{date.isoformat()}.csv")
-    gz = dest + ".gz"
+    url, fetch = snapshot_url(date), fetch or _default_fetch
     if not decompress:
         # the data stays gzipped: the .gz IS the artifact — return (and
         # idempotency-check) that path, not a .csv that never exists
+        gz = dest + ".gz"
         if not os.path.exists(gz):
-            (fetch or _default_fetch)(snapshot_url(date), gz)
+            _publish(gz, lambda tmp: fetch(url, tmp))
         return gz
     if os.path.exists(dest):
         return dest
-    (fetch or _default_fetch)(snapshot_url(date), gz)
-    with gzip.open(gz, "rb") as src, open(dest, "wb") as out:
-        shutil.copyfileobj(src, out)
-    os.remove(gz)
+
+    def fetch_and_gunzip(tmp: str) -> None:
+        tmp_gz = tmp + ".gz"
+        try:
+            fetch(url, tmp_gz)
+            with gzip.open(tmp_gz, "rb") as src, open(tmp, "wb") as out:
+                shutil.copyfileobj(src, out)
+        finally:
+            if os.path.exists(tmp_gz):
+                os.remove(tmp_gz)
+
+    _publish(dest, fetch_and_gunzip)
     return dest
 
 

@@ -304,9 +304,3 @@ def sort_file(spark: SparkSession, path: str, by: list[str], descending: bool = 
             os.replace(staged, path)  # atomic on POSIX; original intact until here
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def expand_path(path: str) -> str:
-    """Path expansion (reference epss/util.py:250-253): env vars + ~ +
-    realpath."""
-    return os.path.realpath(os.path.expanduser(os.path.expandvars(path)))

@@ -1,7 +1,7 @@
 """Shared writeStream wiring for the foreachBatch streams.
 
-`start_carried_stream` is the one place the drift, kmeans, quality,
-score and contamination streams attach their per-epoch `process_batch`
+`start_carried_stream` is the one place the drift, kmeans, quality
+and contamination streams attach their per-epoch `process_batch`
 callback to a source: foreachBatch, a checkpoint directory, and an
 optional availableNow trigger. The callbacks own their commit logic;
 the replay-idempotency and store-layout invariants they follow are the

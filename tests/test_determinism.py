@@ -28,9 +28,9 @@ SF = "/root/testdata/sf0.001"
 
 # The generated-expression families: per-permutation minhash lambdas,
 # seeded LSH hyperplanes, IVF centroid fetch + assignment, simhash bit
-# folds, winnowing's vectorized kernel, the multimodal digest fold, and
-# hash-threshold sampling. Relational queries are static plans and are
-# covered by the oracle differential instead.
+# folds, winnowing's vectorized kernel, and hash-threshold sampling.
+# Relational queries are static plans and are covered by the oracle
+# differential instead.
 GENERATED = [
     "dedup_minhash",
     "dedup_minhash_keep",
@@ -43,7 +43,6 @@ GENERATED = [
     "ann_lsh_bucketed",
     "ann_ivf",
     "text_winnow_fingerprint",
-    "multimodal_features",
     "sample_stratified",
     "text_repetition",
     # round-6 generated-expression queries: BM25's eager-literal stats +

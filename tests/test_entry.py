@@ -29,6 +29,7 @@ FAST_PARITY = [
     "epss_reconstruct_dense",
     "epss_top_movers",
     "epss_summary",
+    "epss_volume_stats",
 ]
 
 
@@ -42,8 +43,7 @@ def test_registry_consistency():
     qs, os_ = entry_mod.queries(), entry_mod.oracle_sql()
     assert len(qs) >= 50
     assert set(os_) <= set(qs)
-    # every surfaced query carries a full DuckDB oracle (multimodal_features
-    # joined in round 4: scalar feat_digest + md5/octet_length/byte-sum SQL)
+    # every surfaced query carries a full DuckDB oracle
     assert set(qs) - set(os_) == set()
 
 

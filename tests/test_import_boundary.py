@@ -41,8 +41,8 @@ EXTENSIONS = [
     *(
         f"epss_spark.operators.{m}"
         for m in (
-            "dedup", "similarity", "text", "multimodal", "clustering", "classifier",
-            "graph", "selection", "sketches", "retrieval", "prep", "layout",
+            "dedup", "similarity", "text", "clustering", "selection",
+            "sketches", "retrieval", "prep", "layout",
         )
     ),
     "epss_spark.queries_ext",
@@ -150,4 +150,53 @@ def test_every_internal_import_resolves():
         if name not in names_cache[path] and _module_path(f"{module}.{name}") is None:
             dangling.append(f"{rel}:{line}: {module} defines no {name}")
     assert n_checked > 100
+    assert dangling == []
+
+
+def _registered_names() -> set[str]:
+    """Every query name passed to registry.register in the package."""
+    names = set()
+    for f in sorted(os.listdir(os.path.join(ROOT, "epss_spark"))):
+        if not f.endswith(".py"):
+            continue
+        tree = ast.parse(open(os.path.join(ROOT, "epss_spark", f)).read(), f)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "register"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+            ):
+                names.add(node.args[0].value)
+    return names
+
+
+def _list_literal(rel: str, var: str) -> list[str]:
+    """The string entries of the module-level list literal `var` in `rel`."""
+    tree = ast.parse(open(os.path.join(ROOT, rel)).read(), rel)
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == var for t in node.targets
+        ):
+            return [e.value for e in node.value.elts]
+    raise AssertionError(f"{rel} defines no {var}")
+
+
+def test_query_name_lists_are_registered():
+    """The hand-kept query-name lists must name registered queries only,
+    so deleting a query cannot leave a name that fails late (GENERATED,
+    in the slow tier) or never (bench.py's HEADLINE)."""
+    registered = _registered_names()
+    assert len(registered) > 100
+    dangling = [
+        f"{rel}::{var}: {name}"
+        for rel, var in (
+            ("bench.py", "HEADLINE"),
+            ("tests/test_entry.py", "FAST_PARITY"),
+            ("tests/test_determinism.py", "GENERATED"),
+        )
+        for name in _list_literal(rel, var)
+        if name not in registered
+    ]
     assert dangling == []

@@ -213,6 +213,48 @@ def test_download_snapshot_skips_existing(tmp_path):
     assert p1 == p2 and os.path.getmtime(p2) == mtime
 
 
+@pytest.mark.parametrize("decompress", [True, False])
+def test_truncated_download_is_fetched_again(spark, tmp_path, decompress):
+    """A fetch cut off mid-body leaves no file the existence check would
+    take as finished. Decompressing, the half gzip fails in gunzip
+    (EOFError); kept gzipped, the fetch itself raises. Either way the
+    re-run fetches again, reads every row and leaves no temporary file."""
+    n = 2000
+    csv = "cve,epss,percentile\n" + "".join(f"CVE-{i},0.{i:04d},0.5\n" for i in range(n))
+    body = gzip.compress(csv.encode())
+    calls = []
+
+    def cut_off(url, dest):
+        calls.append(url)
+        with open(dest, "wb") as f:
+            f.write(body[: len(body) // 2])
+        if not decompress:
+            raise ConnectionResetError("connection reset mid-body")
+
+    def full(url, dest):
+        calls.append(url)
+        with open(dest, "wb") as f:
+            f.write(body)
+
+    raw = str(tmp_path / "raw")
+    with pytest.raises(EOFError if decompress else ConnectionResetError):
+        download_snapshot(raw, "2024-01-01", fetch=cut_off, decompress=decompress)
+    assert os.listdir(raw) == []
+    path = download_snapshot(raw, "2024-01-01", fetch=full, decompress=decompress)
+    assert len(calls) == 2
+    assert os.listdir(raw) == [os.path.basename(path)]
+    assert read_snapshots(spark, path).count() == n
+
+
+def test_snapshot_date_comes_from_file_name_not_parent_dir(spark, tmp_path):
+    """A dated parent directory must not override the file's own date."""
+    day_dir = tmp_path / "2099-12-31"
+    day_dir.mkdir()
+    (day_dir / "epss_scores-2024-01-01.csv").write_text("cve,epss,percentile\nCVE-A,0.1,0.5\n")
+    got = read_snapshots(spark, str(day_dir)).select("date").distinct().collect()
+    assert [r.date for r in got] == [dt.date(2024, 1, 1)]
+
+
 def test_cli_dedup_spans_method(spark, tmp_path, capsys):
     """`dedup --method spans` rewrites documents with duplicated spans
     removed (Lee et al. 2022), end to end through parquet."""
@@ -361,37 +403,6 @@ def test_cli_analyze_card_and_divergence(spark, tmp_path, capsys):
     rc = cli.main(["analyze", "--input", docs, "--report", "pmi"])
     out = capsys.readouterr().out
     assert rc == 0 and out.strip() == ""
-
-
-def test_cli_nb_train_then_classify(spark, tmp_path, capsys):
-    """nb-train writes the frozen classifier artifact; classify gates a
-    corpus against it — the quality/language-gate lifecycle as two CLI
-    steps (disjoint class vocabularies make expectations unambiguous)."""
-    import epss_spark.cli as cli
-
-    seed = str(tmp_path / "seed")
-    spark.createDataFrame(
-        [
-            (0, "alpha beta gamma", "x"), (1, "alpha gamma beta", "x"),
-            (2, "uno dos tres", "y"), (3, "dos tres uno dos", "y"),
-        ],
-        "doc_id long, text string, lang string",
-    ).write.parquet(seed)
-    model_dir = str(tmp_path / "nb")
-    rc = cli.main(["nb-train", "--input", seed, "--output", model_dir])
-    assert rc == 0 and "2 classes" in capsys.readouterr().out
-
-    new = str(tmp_path / "new")
-    spark.createDataFrame(
-        [(10, "beta gamma NOISE", "x"), (11, "tres uno EXTRA", "y")],
-        "doc_id long, text string, lang string",
-    ).write.parquet(new)
-    out = str(tmp_path / "pred")
-    rc = cli.main(["classify", "--input", new, "--model", model_dir,
-                   "--output", out, "--label-col", "lang"])
-    assert rc == 0 and "accuracy 1.0000" in capsys.readouterr().out
-    got = {r.doc_id: r.predicted for r in spark.read.parquet(out).collect()}
-    assert got == {10: "x", 11: "y"}
 
 
 def test_download_snapshot_compressed_mode_returns_real_path(tmp_path):
@@ -920,99 +931,3 @@ def test_cli_cluster_outliers(spark, tmp_path, capsys):
     capsys.readouterr()
     got = [(r.vec_id, r.dist_rank) for r in spark.read.parquet(out_path).collect()]
     assert sorted(got) == [(8, 2), (9, 1)]
-
-
-def test_cli_linear_train_then_classify(spark, tmp_path, capsys):
-    """linear-train writes the GD model parquet (bias at -1,
-    feature_scale at -2); classify autodetects the flat artifact and
-    scores map-only — a perfectly separable token signal lands accuracy
-    1.0, and a scale-less artifact is refused, never silently misapplied."""
-    import epss_spark.cli as cli
-    from epss_spark.operators import classifier as clf_ops
-
-    seed = str(tmp_path / "seed")
-    rows = [(i, "good clean prose here", 1.0) for i in range(20)]
-    rows += [(100 + i, "spam junk noise blob", 0.0) for i in range(20)]
-    spark.createDataFrame(rows, "doc_id long, text string, y double").write.parquet(seed)
-    model = str(tmp_path / "linmodel")
-    rc = cli.main([
-        "linear-train", "--input", seed, "--output", model,
-        "--label-col", "y", "--dim", "16", "--epochs", "12", "--lr", "2.0",
-    ])
-    out1 = capsys.readouterr().out
-    assert rc == 0 and "train accuracy 1.0000" in out1
-    assert clf_ops.read_linear_model_scale(spark, model) == 8.0
-
-    pred = str(tmp_path / "pred")
-    rc = cli.main(["classify", "--input", seed, "--model", model,
-                   "--output", pred, "--label-col", "y"])
-    assert rc == 0 and "accuracy 1.0000" in capsys.readouterr().out
-    got = spark.read.parquet(pred)
-    assert set(got.columns) == {"doc_id", "predicted", "score", "actual", "correct"}
-    assert got.filter("predicted = 1").count() == 20
-
-    # missing label column -> usage error on stderr
-    rc = cli.main(["linear-train", "--input", seed, "--output", model,
-                   "--label-col", "nope"])
-    err = capsys.readouterr().err
-    assert rc == 2 and "no 'nope' column" in err
-
-    # artifact without the scale row -> classify refuses
-    bare = str(tmp_path / "bare")
-    clf_ops.write_linear_model(spark, [0.1] * 16, 0.0, bare)
-    rc = cli.main(["classify", "--input", seed, "--model", bare, "--output", pred])
-    err = capsys.readouterr().err
-    assert rc == 2 and "records no" in err
-
-
-def test_cli_graph_pagerank(spark, tmp_path, capsys):
-    """graph: PageRank over an edge-list parquet — top-N print, ranks
-    parquet, and usage errors for missing columns / bad params."""
-    import epss_spark.cli as cli
-
-    edges = str(tmp_path / "edges")
-    spark.createDataFrame(
-        [("hub", "x", 1), ("x", "hub", 1), ("hub", "y", 1), ("y", "hub", 1),
-         ("x", "y", 1)],
-        "src string, dst string, w long",
-    ).write.parquet(edges)
-    out = str(tmp_path / "ranks")
-    rc = cli.main(["graph", "--input", edges, "--output", out,
-                   "--weight-col", "w", "--iters", "8", "--top", "2"])
-    cap = capsys.readouterr()
-    assert rc == 0 and "pagerank over 3 nodes" in cap.out
-    # the hub receives from both others: it must print first
-    assert cap.out.strip().startswith("hub:") or "  hub:" in cap.out.splitlines()[0]
-    ranks = {r.node: r.rank for r in spark.read.parquet(out).collect()}
-    assert ranks["hub"] == max(ranks.values())
-
-    rc = cli.main(["graph", "--input", edges, "--output", out,
-                   "--src-col", "nope"])
-    assert rc == 2 and "no 'nope' column" in capsys.readouterr().err
-    rc = cli.main(["graph", "--input", edges, "--output", out,
-                   "--damping", "2.0"])
-    assert rc == 2 and "damping" in capsys.readouterr().err
-
-
-def test_cli_graph_pagerank_seeded(spark, tmp_path, capsys):
-    """graph --seeds: personalized ranks concentrate on the seed; a
-    bad seed column is a usage error."""
-    import epss_spark.cli as cli
-
-    edges = str(tmp_path / "edges2")
-    spark.createDataFrame(
-        [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b")],
-        "src string, dst string",
-    ).write.parquet(edges)
-    seeds = str(tmp_path / "seeds")
-    spark.createDataFrame([("a",)], "node string").write.parquet(seeds)
-    out = str(tmp_path / "ranks2")
-    rc = cli.main(["graph", "--input", edges, "--output", out,
-                   "--seeds", seeds, "--iters", "8", "--top", "0"])
-    assert rc == 0 and "pagerank over 3 nodes" in capsys.readouterr().out
-    ranks = {r.node: r.rank for r in spark.read.parquet(out).collect()}
-    assert ranks["a"] > ranks["b"] > ranks["c"]
-
-    rc = cli.main(["graph", "--input", edges, "--output", out,
-                   "--seeds", seeds, "--seed-col", "nope"])
-    assert rc == 2 and "no 'nope' column" in capsys.readouterr().err

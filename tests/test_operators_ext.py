@@ -1938,91 +1938,6 @@ def test_bigram_orders_unigram_cannot_separate(spark):
     assert bi[9] < bi[0]  # shuffled doc is atypical under the bigram LM
 
 
-def test_nb_classify_disjoint_vocab_is_perfect(spark):
-    """Two classes with disjoint vocabularies: every held-out doc must be
-    classified correctly (the smoothed cross-class likelihood is strictly
-    smaller than the in-class one)."""
-    rows = [
-        (i, "alpha beta gamma delta", "x") for i in range(0, 8, 2)  # train x
-    ] + [
-        (i, "uno dos tres cuatro", "y") for i in range(10, 18, 2)  # train y
-    ] + [
-        (101, "uno tres tres dos", "y"),  # odd -> test
-        (103, "alpha delta gamma", "x"),  # odd -> test
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    got = {r.doc_id: r for r in text.nb_classify(df, label_col="lang").collect()}
-    assert set(got) == {101, 103}
-    assert all(r.correct for r in got.values())
-    assert got[103].predicted == "x" and got[101].predicted == "y"
-
-
-def test_nb_classify_oov_only_docs_drop(spark):
-    rows = [
-        (0, "seen tokens here", "a"),
-        (2, "more seen tokens", "a"),
-        (1, "seen here", "a"),  # test, in-vocab
-        (3, "zzz qqq www", "a"),  # test, fully out-of-vocabulary
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    got = text.nb_classify(df, label_col="lang").collect()
-    assert [r.doc_id for r in got] == [1]
-
-
-def test_nb_classify_tie_breaks_to_smallest_label(spark):
-    """Symmetric training data: both classes assign every test token the
-    identical smoothed likelihood and identical priors, so scores tie
-    exactly and the argmax must deterministically pick the
-    lexicographically smallest label in both engines."""
-    rows = [
-        (0, "tok tok", "b"),
-        (2, "tok tok", "a"),
-        (1, "tok tok", "b"),  # held out
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    got = text.nb_classify(df, label_col="lang").collect()
-    assert len(got) == 1 and got[0].predicted == "a" and not got[0].correct
-
-
-def test_nb_frozen_model_parquet_roundtrip_scores_new_corpus(spark, tmp_path):
-    """The production shape: train on a labeled seed, persist the model
-    as parquet, read it back, classify a corpus the model never saw.
-    Disjoint class vocabularies make the expected labels unambiguous;
-    the unseen corpus mixes in OOV tokens, which must carry no signal."""
-    seed = spark.createDataFrame(
-        [
-            (0, "alpha beta gamma", "x"),
-            (1, "alpha gamma gamma beta", "x"),
-            (2, "uno dos tres", "y"),
-            (3, "dos dos tres uno", "y"),
-        ],
-        "doc_id long, text string, lang string",
-    )
-    model, prior = text.nb_train(seed, label_col="lang")
-    mp, pp = str(tmp_path / "nb_model"), str(tmp_path / "nb_prior")
-    model.write.parquet(mp)
-    prior.write.parquet(pp)
-
-    new = spark.createDataFrame(
-        [
-            (10, "beta gamma NOVEL tokens alpha"),  # x vocab + OOV noise
-            (11, "tres uno BRAND new dos"),  # y vocab + OOV noise
-            (12, "wholly unseen words only"),  # fully OOV -> dropped
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r.doc_id: r
-        for r in text.nb_apply(
-            new, spark.read.parquet(mp), spark.read.parquet(pp)
-        ).collect()
-    }
-    assert set(got) == {10, 11}
-    assert got[10].predicted == "x" and got[11].predicted == "y"
-    # no ground-truth column requested -> no actual/correct columns
-    assert "actual" not in got[10].asDict() and "correct" not in got[10].asDict()
-
-
 def test_bigram_frozen_model_oov_accounting(spark):
     """Frozen-LM scoring of a corpus the model never saw: transitions
     whose cur token is OOV are dropped and counted in n_oov; unseen
@@ -3733,374 +3648,6 @@ def test_cluster_boundary_semantics(spark):
     cg = clustering.cluster_boundary(df, cents, threshold=3.0, impl="codegen").collect()
     ba = clustering.cluster_boundary(df, cents, threshold=3.0, impl="batched").collect()
     assert sorted(map(tuple, cg)) == sorted(map(tuple, ba))
-
-
-# ---------------------------------------------------------------------------
-# operators/classifier.py — the in-engine trainable linear classifier
-
-
-@pytest.mark.slow  # full registry-shape train/iterate at sf0.001
-def test_classifier_learns_stopword_signal(spark):
-    """End-to-end sanity on the real corpus: 10 GD epochs of the hashed
-    linear model reach well-above-chance train accuracy distilling the
-    stopword-saturation label (the oracle-parity tests prove the exact
-    arithmetic; this proves the model actually LEARNS)."""
-    from epss_spark.queries_ext import classify_linear_quality
-
-    rows = classify_linear_quality(spark, "/root/testdata/sf0.001").collect()
-    n = len(rows)
-    acc = sum(1 for r in rows if r.pred == r.label) / n
-    base = max(sum(1 for r in rows if r.label == 1), sum(1 for r in rows if r.label == 0)) / n
-    # sf0.001's draw is harder than sf0.01's (0.71 vs 0.82 at 10 epochs);
-    # the gate is above-majority learning, not a benchmark number
-    assert acc >= 0.70, f"train accuracy {acc:.3f} (majority baseline {base:.3f})"
-    assert acc > base + 0.10
-
-
-def test_classifier_score_dual_path_bit_identical(spark):
-    """linear_score's Arrow kernel == the codegen chain, bit-for-bit, on
-    a dim where both forms are legal — and the auto dispatch routes
-    above BATCHED_SCORE_DIMS without changing a single float."""
-    import random
-
-    from epss_spark.operators import classifier
-
-    rng = random.Random(7)
-    dim = 64
-    rows = [(i, [rng.uniform(-2, 2) for _ in range(dim)]) for i in range(50)]
-    df = spark.createDataFrame(rows, "id long, x array<double>")
-    w = [rng.uniform(-1, 1) for _ in range(dim)]
-    b = 0.375
-    expr = {r.id: r.score for r in classifier.linear_score(df, w, b, impl="expr").collect()}
-    batched = {
-        r.id: r.score for r in classifier.linear_score(df, w, b, impl="batched").collect()
-    }
-    assert expr == batched  # exact float equality, not approx
-    # large-dim: auto must take the batched path (the chain would blow janino)
-    big_dim = classifier.BATCHED_SCORE_DIMS + 32
-    big = spark.createDataFrame(
-        [(0, [0.5] * big_dim), (1, [-0.25] * big_dim)], "id long, x array<double>"
-    )
-    wb = [0.01] * big_dim
-    got = {r.id: r.score for r in classifier.linear_score(big, wb, 0.0).collect()}
-    # reference: the same sequential fold in Python floats
-    for rid, xs in ((0, [0.5] * big_dim), (1, [-0.25] * big_dim)):
-        z = 0.0
-        for j in range(big_dim):
-            z = z + xs[j] * wb[j]
-        assert got[rid] == 0.5 + 0.5 * (z / (1.0 + abs(z)))
-
-
-def test_classifier_zero_token_and_null_text(spark):
-    """Zero-token and NULL-text docs keep a zero feature vector and
-    n_tokens=0 (explode_outer retains them); their score is exactly
-    sigmoid(bias)."""
-    from epss_spark.operators import classifier
-
-    df = spark.createDataFrame(
-        [(0, "the quick fox"), (1, ""), (2, None), (3, "!!! ...")],
-        "doc_id long, text string",
-    )
-    feats = {r.doc_id: r for r in classifier.hashed_features(df, dim=8).collect()}
-    for did in (1, 2, 3):
-        assert feats[did].n_tokens == 0
-        assert list(feats[did].x) == [0.0] * 8
-    assert feats[0].n_tokens == 3
-    assert sum(feats[0].x) == pytest.approx(8.0)  # tf sums to 1, scale 8
-    scored = classifier.linear_score(
-        classifier.hashed_features(df, dim=8), [1.0] * 8, -0.5
-    )
-    s = {r.doc_id: r.score for r in scored.collect()}
-    assert s[1] == 0.5 + 0.5 * (-0.5 / (1.0 + 0.5))
-
-
-def test_classifier_fit_validations(spark):
-    from epss_spark.operators import classifier
-
-    good = spark.createDataFrame([(1.0, [0.5]), (0.0, [0.25])], "y double, x array<double>")
-    w, b = classifier.linear_fit(good, dim=1, n_epochs=1)
-    assert len(w) == 1 and isinstance(b, float)
-    bad_label = spark.createDataFrame([(2.0, [0.5])], "y double, x array<double>")
-    with pytest.raises(ValueError, match="must be 0/1"):
-        classifier.linear_fit(bad_label, dim=1, n_epochs=1)
-    empty = good.filter("y > 5")
-    with pytest.raises(ValueError, match="empty training input"):
-        classifier.linear_fit(empty, dim=1, n_epochs=1)
-    # dim > BATCHED_SCORE_DIMS trains via the Arrow path; FORCING the
-    # expression aggregate there is the refused combination
-    with pytest.raises(ValueError, match="janino-hostile"):
-        classifier.linear_fit(good, dim=600, n_epochs=1, impl="expr")
-    with pytest.raises(ValueError, match="impl must be"):
-        classifier.linear_score(good, [0.0], 0.0, impl="nope")
-    with pytest.raises(ValueError, match="impl must be"):
-        classifier.linear_fit(good, dim=1, n_epochs=1, impl="nope")
-
-
-def test_classifier_fit_dual_path_bit_identical(spark):
-    """linear_fit's Arrow partial-sum gradient path == the expression
-    aggregate, bit-for-bit across epochs (quantized BIGINT sums
-    commute; the per-row arithmetic is the same IEEE sequence), on a
-    multi-partition input so the batched form actually folds several
-    partials — and a large-dim fit runs end-to-end on the Arrow path."""
-    import random
-
-    from epss_spark.operators import classifier
-
-    rng = random.Random(11)
-    dim = 24
-    rows = [
-        ([rng.uniform(0, 2) for _ in range(dim)], float(rng.random() < 0.5))
-        for _ in range(300)
-    ]
-    df = spark.createDataFrame(rows, "x array<double>, y double").repartition(8)
-    df.persist()
-    try:
-        we, be = classifier.linear_fit(df, dim=dim, n_epochs=4, impl="expr")
-        wb, bb = classifier.linear_fit(df, dim=dim, n_epochs=4, impl="batched")
-    finally:
-        df.unpersist()
-    assert we == wb and be == bb  # exact float equality
-    # large-dim end-to-end (auto -> batched): trains without a janino blowup
-    big_dim = classifier.BATCHED_SCORE_DIMS + 64
-    big = spark.createDataFrame(
-        [([1.0] * big_dim, 1.0), ([0.0] * big_dim, 0.0)] * 10,
-        "x array<double>, y double",
-    )
-    w, b = classifier.linear_fit(big, dim=big_dim, n_epochs=1)
-    assert len(w) == big_dim and all(v <= 0 or v > 0 for v in w)
-
-
-def test_classifier_model_io_roundtrip(spark, tmp_path):
-    from epss_spark.operators import classifier
-
-    w = [0.125, -0.5, 3.0]
-    path = str(tmp_path / "linmodel")
-    classifier.write_linear_model(spark, w, -0.75, path)
-    rw, rb = classifier.read_linear_model(spark, path)
-    assert rw == w and rb == -0.75
-    # corrupt: drop a row -> non-contiguous refuses
-    broken = spark.read.parquet(path).filter("j != 1")
-    broken.write.mode("overwrite").parquet(path + "2")
-    with pytest.raises(ValueError, match="not contiguous"):
-        classifier.read_linear_model(spark, path + "2")
-
-
-def test_classifier_calibration_report(spark):
-    """calibration_report on a hand-checkable corpus: bucket masses sum
-    to n, frac_pos is exact per bucket, and a perfectly separable
-    model's extreme buckets are pure."""
-    from epss_spark.operators import classifier
-
-    df = spark.createDataFrame(
-        [(i, "good clean prose here", 1.0) for i in range(10)]
-        + [(100 + i, "spam junk noise blob", 0.0) for i in range(10)],
-        "doc_id long, text string, y double",
-    )
-    feats = classifier.hashed_features(
-        df.select("doc_id", "text", "y"), dim=16, carry_cols=("y",)
-    ).persist()
-    try:
-        w, b = classifier.linear_fit(feats, dim=16, n_epochs=12, lr=2.0)
-    finally:
-        feats.unpersist()
-    rep = classifier.calibration_report(df, w, b, label_col="y").collect()
-    assert sum(r.n for r in rep) == 20
-    # separable corpus, trained to saturation: every occupied bucket is
-    # label-pure and sits on the right side of 0.5
-    for r in rep:
-        assert r.frac_pos in (0.0, 1.0)
-        assert (r.avg_score >= 0.5) == (r.frac_pos == 1.0)
-    with pytest.raises(ValueError, match="n_buckets"):
-        classifier.calibration_report(df, w, b, label_col="y", n_buckets=0)
-
-
-# ---------------------------------------------------------------------------
-# operators/graph.py — deterministic PageRank
-
-
-@pytest.mark.slow  # full-gate tier (r15: default tier must fit the driver window)
-def test_pagerank_hand_checkable_shapes(spark):
-    """Closed-form shapes: a symmetric 2-cycle splits rank evenly; a
-    pure chain with a dangling sink conserves total mass (the dangling
-    redistribution term); a high-weight edge pulls rank toward its
-    target."""
-    from epss_spark.operators import graph
-
-    # symmetric 2-cycle: a <-> b -> exact 0.5 each at every iteration
-    cyc = spark.createDataFrame(
-        [("a", "b"), ("b", "a")], "src string, dst string"
-    )
-    got = {r.node: r.rank for r in graph.pagerank(cyc, n_iter=5).collect()}
-    assert got["a"] == got["b"] == pytest.approx(0.5, abs=1e-5)
-
-    # chain with dangling sink: a -> b -> c, c dangles; mass conserved
-    chain = spark.createDataFrame(
-        [("a", "b"), ("b", "c")], "src string, dst string"
-    )
-    ranks = {r.node: r.rank for r in graph.pagerank(chain, n_iter=10).collect()}
-    assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-4)
-    assert ranks["c"] > ranks["b"] > ranks["a"]  # downstream accumulates
-
-    # weighted pull: a sends 9/10 of its walk to c, 1/10 to b
-    wed = spark.createDataFrame(
-        [("a", "b", 1), ("a", "c", 9), ("b", "a", 1), ("c", "a", 1)],
-        "src string, dst string, w long",
-    )
-    wr = {r.node: r.rank for r in graph.pagerank(wed, n_iter=10, weight_col="w").collect()}
-    assert wr["c"] > wr["b"]
-    assert sum(wr.values()) == pytest.approx(1.0, abs=1e-4)
-
-
-def test_pagerank_determinism_and_validations(spark):
-    """Shuffle-order-proof: a repartitioned/reordered edge list yields
-    bit-identical ranks (the quantized-BIGINT message contract); bad
-    inputs fail loudly."""
-    from epss_spark.operators import graph
-
-    edges = spark.createDataFrame(
-        [(i % 7, (i * 3) % 7, 1 + i % 3) for i in range(40)],
-        "src long, dst long, w long",
-    )
-    a = {r.node: r.rank for r in graph.pagerank(edges, n_iter=4, weight_col="w").collect()}
-    b = {
-        r.node: r.rank
-        for r in graph.pagerank(
-            edges.repartition(13).sortWithinPartitions("dst"), n_iter=4, weight_col="w"
-        ).collect()
-    }
-    assert a == b  # exact float equality
-
-    with pytest.raises(ValueError, match="n_iter"):
-        graph.pagerank(edges, n_iter=0)
-    with pytest.raises(ValueError, match="damping"):
-        graph.pagerank(edges, damping=1.5)
-    zero_w = spark.createDataFrame([("a", "b", 0)], "src string, dst string, w long")
-    with pytest.raises(ValueError, match="weights must be"):
-        graph.pagerank(zero_w, weight_col="w")
-    empty = edges.filter("src > 100")
-    with pytest.raises(ValueError, match="empty edge list"):
-        graph.pagerank(empty, n_iter=1)
-
-
-@pytest.mark.slow  # full registry-shape train/iterate at sf0.001
-def test_pagerank_seeded_personalization(spark):
-    """Personalized PageRank: teleporting only to a seed concentrates
-    rank near it; mass conserved; absent seeds raise; uniform path
-    untouched by the new parameter."""
-    from epss_spark.operators import graph
-
-    # path graph a - b - c - d (bidirectional): seed at a must rank a
-    # highest and d lowest; uniform must be symmetric (a==d, b==c)
-    e = [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"), ("c", "d"), ("d", "c")]
-    edges = spark.createDataFrame(e, "src string, dst string")
-    seeds = spark.createDataFrame([("a",)], "node string")
-    pr = {r.node: r.rank for r in graph.pagerank(edges, n_iter=12, seeds=seeds).collect()}
-    assert pr["a"] > pr["b"] > pr["c"] > pr["d"]
-    assert sum(pr.values()) == pytest.approx(1.0, abs=1e-4)
-    uni = {r.node: r.rank for r in graph.pagerank(edges, n_iter=12).collect()}
-    assert uni["a"] == uni["d"] and uni["b"] == uni["c"]
-
-    # seed absent from the graph: loud failure
-    ghost = spark.createDataFrame([("zz",)], "node string")
-    with pytest.raises(ValueError, match="no seed node"):
-        graph.pagerank(edges, n_iter=2, seeds=ghost)
-    # seeds outside + inside: the absent one is ignored, not an error
-    mixed = spark.createDataFrame([("zz",), ("a",)], "node string")
-    pm = {r.node: r.rank for r in graph.pagerank(edges, n_iter=12, seeds=mixed).collect()}
-    assert pm == pr  # tele mass all on 'a' either way
-
-
-def test_classifier_featurize_output_collision_guard(spark):
-    """A carry/id column named like an output column would silently
-    produce a duplicate-name frame; the guard names the clash."""
-    from epss_spark.operators import classifier
-
-    df = spark.createDataFrame([(1, "a b", 0.5)], "doc_id long, text string, x double")
-    with pytest.raises(ValueError, match="collide with the output"):
-        classifier.hashed_features(df, dim=4, carry_cols=("x",))
-    df2 = spark.createDataFrame([(1, "a b")], "n_tokens long, text string")
-    with pytest.raises(ValueError, match="collide with the output"):
-        classifier.hashed_features(df2, dim=4, id_col="n_tokens")
-
-
-def test_cooccurrence_edges_cap_and_weights(spark):
-    """Hand-checkable projection: pair weights count shared groups;
-    the hot-group cap DROPS oversized groups entirely (skew guard, not
-    truncation); min_weight prunes; duplicate (group, item) rows
-    collapse before pairing."""
-    from epss_spark.operators import graph
-
-    rows = [
-        ("g1", "a"), ("g1", "b"), ("g1", "b"),  # dupe collapses
-        ("g2", "a"), ("g2", "b"), ("g2", "c"),
-        ("hot", "a"), ("hot", "b"), ("hot", "c"), ("hot", "d"),
-    ]
-    df = spark.createDataFrame(rows, "g string, i string")
-    got = {
-        (r.src, r.dst): r.w
-        for r in graph.cooccurrence_edges(df, "g", "i", max_group_size=3).collect()
-    }
-    # hot (4 items) dropped; a-b co-occur in g1+g2, a-c/b-c only in g2
-    assert got == {("a", "b"): 2, ("a", "c"): 1, ("b", "c"): 1}
-    pruned = {
-        (r.src, r.dst): r.w
-        for r in graph.cooccurrence_edges(
-            df, "g", "i", max_group_size=3, min_weight=2
-        ).collect()
-    }
-    assert pruned == {("a", "b"): 2}
-    # exact mode keeps the hot group
-    exact = {
-        (r.src, r.dst): r.w
-        for r in graph.cooccurrence_edges(df, "g", "i", max_group_size=None).collect()
-    }
-    assert exact[("a", "d")] == 1 and exact[("a", "b")] == 3
-    with pytest.raises(ValueError, match="max_group_size"):
-        graph.cooccurrence_edges(df, "g", "i", max_group_size=1)
-    with pytest.raises(ValueError, match="min_weight"):
-        graph.cooccurrence_edges(df, "g", "i", min_weight=0)
-
-
-def test_cooccurrence_jaccard_normalization(spark):
-    """normalize='jaccard': w / (deg_src + deg_dst - w) over the capped
-    universe — exact on a hand graph; invalid mode refused."""
-    from epss_spark.operators import graph
-
-    rows = [("g1", "a"), ("g1", "b"), ("g2", "a"), ("g2", "b"), ("g3", "a")]
-    df = spark.createDataFrame(rows, "g string, i string")
-    got = {
-        (r.src, r.dst): (r.w, r.jaccard)
-        for r in graph.cooccurrence_edges(df, "g", "i", normalize="jaccard").collect()
-    }
-    # a in 3 groups, b in 2; shared 2 -> jaccard 2/(3+2-2)
-    assert got == {("a", "b"): (2, 2 / 3)}
-    with pytest.raises(ValueError, match="normalize"):
-        graph.cooccurrence_edges(df, "g", "i", normalize="cosine")
-
-
-def test_classifier_auc_closed_form(spark):
-    """AUC against hand-computed Mann-Whitney values, including the
-    tie (0.5 credit) and degenerate-class refusal."""
-    from epss_spark.operators import classifier
-
-    # scores: pos {0.9, 0.6}, neg {0.7, 0.2} -> pairs: (0.9 beats both)
-    # + (0.6 beats 0.2 only) = 3 of 4 -> AUC 0.75
-    df = spark.createDataFrame(
-        [(0.9, 1.0), (0.6, 1.0), (0.7, 0.0), (0.2, 0.0)], "score double, y double"
-    )
-    r = classifier.auc_report(df, "y").collect()[0]
-    assert (r.auc, r.n_pos, r.n_neg) == (0.75, 2, 2)
-
-    # tie at 0.5: pos {0.5}, neg {0.5, 0.1} -> 1 win + 0.5 tie of 2 = 0.75
-    t = spark.createDataFrame(
-        [(0.5, 1.0), (0.5, 0.0), (0.1, 0.0)], "score double, y double"
-    )
-    rt = classifier.auc_report(t, "y").collect()[0]
-    assert (rt.auc, rt.n_pos, rt.n_neg) == (0.75, 1, 2)
-
-    only_pos = spark.createDataFrame([(0.9, 1.0)], "score double, y double")
-    with pytest.raises(ValueError, match="need both classes"):
-        classifier.auc_report(only_pos, "y")
 
 
 def test_dlit_non_finite_matches_lit(spark):

@@ -52,8 +52,8 @@ def test_registry_counts():
     """Pins the audit-trail numbers quoted in README.md (registered and
     off-surface query counts): if the registry grows or shrinks, update
     README.md and this test together."""
-    assert len(registry.get_all_queries()) == 181
-    assert len(demoted_names()) == 131
+    assert len(registry.get_all_queries()) == 169
+    assert len(demoted_names()) == 119
     # every registered query has a full DuckDB oracle — the README's
     # headline claim, verified, not asserted
     assert set(registry.get_all_oracles()) == set(registry.get_all_queries())

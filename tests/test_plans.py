@@ -294,26 +294,6 @@ def test_quantize_daily_single_exchange(spark):
     assert p.count("Exchange hashpartitioning") == 1
     assert "row_number" not in p  # snapshot is an aggregate, not a window
 
-def test_multimodal_corpus_dedup_before_decode_plan(spark):
-    # the corpus-scope scale contract: payload bytes cross into Python
-    # EXACTLY once, downstream of the distinct-by-hash aggregate (decode
-    # cost scales with distinct payloads, not corpus rows); the dedup
-    # aggregate has a partial phase before its exchange (only
-    # per-partition-unique payloads shuffle); the features join back is
-    # planner-chosen, never a forced hint
-    p = plan(spark, "multimodal_features")
-    assert p.count("MapInPandas") == 1
-    decode_side = p.split("MapInPandas", 1)[1]  # subtree below the decode
-    assert "Aggregate" in decode_side  # distinct-by-hash feeds the decode
-    assert "partial_first" in p  # map-side partial dedup before the shuffle
-    analyzed = (
-        registry.QUERIES["multimodal_features"](spark, SF)
-        ._jdf.queryExecution()
-        .analyzed()
-        .toString()
-    )
-    assert "ResolvedHint" not in analyzed
-
 
 def test_repetition_is_two_aggregation_exchanges(spark):
     # explode -> count(doc,gram) -> fold(doc): two hash exchanges with
@@ -626,19 +606,17 @@ def test_decontam_near_plan_no_cartesian_no_python(spark):
 @pytest.mark.slow  # plans every registered query: ~90 s, full-gate tier
 def test_registry_wide_udf_free_invariant(spark):
     """SURVEY §2.13 across the WHOLE registry, not just the 50-entry
-    driver surface (PLANS.json pins those): no registered query — all
-    173 — ever plans a row-at-a-time Python UDF, and Arrow-batched
-    Python appears ONLY in the kernels where no per-row built-in exists
-    (winnowing's rolling-hash window, greedy packing's bin fold, the
-    realistic-codebook PQ ADC kernels, multimodal decode). A new query
+    driver surface (PLANS.json pins those): no registered query ever
+    plans a row-at-a-time Python UDF, and Arrow-batched Python appears
+    ONLY in the kernels where no per-row built-in exists (winnowing's
+    rolling-hash window, greedy packing's bin fold, the
+    realistic-codebook PQ ADC kernels). A new query
     that silently plans BatchEvalPython — or drifts into Arrow without
     being added here deliberately — fails with its name."""
     ARROW_ALLOWED = {
         "ann_ivfpq_topk_batched",
         "ann_pq_topk_batched",
         "dedup_winnow_pairs",
-        "multimodal_features",
-        "multimodal_video_frames",
         "pack_efficiency",
         "pack_materialize",
         "pack_sequences",

@@ -643,45 +643,7 @@ def test_chunk_tokens_overlapping_covers_without_subset_chunks(
     assert ends == sorted(ends) and len(set(ends)) == len(ends)  # strictly extending
 
 
-# --- round 11: Y4M decode + contamination-audit laws ----------------------
-
-_y4m_frames = st.lists(
-    st.lists(st.integers(min_value=16, max_value=235), min_size=4, max_size=4),
-    min_size=1,
-    max_size=4,
-)
-
-
-@_settings
-@given(frames=_y4m_frames, c420=st.booleans())
-def test_y4m_decode_pixel_law(frames, c420):
-    """For ANY uniform-chroma Y4M payload: decoded grayscale pixels equal
-    clip(trunc(1.164*(Y-16)), 0, 255) per frame, all channels identical,
-    frame count == input frames at every_ms below the frame period —
-    the closed form the multimodal_video_frames oracle relies on, over
-    the full legal Y range and both chroma layouts."""
-    import math
-
-    from epss_spark.operators import multimodal
-
-    uv_n = 1 if c420 else 4
-    hdr = b"YUV4MPEG2 W2 H2 F4:1 Ip A1:1 %s\n" % (b"C420jpeg" if c420 else b"C444")
-    body = b""
-    for ys in frames:
-        body += b"FRAME\n" + bytes(ys) + bytes([128]) * uv_n * 2
-    got = multimodal.decode_y4m_frames(hdr + body, every_ms=100)
-    assert len(got) == len(frames)
-    for (ms, arr), (i, ys) in zip(got, enumerate(frames)):
-        assert ms == i * 250
-        assert arr.shape == (2, 2, 3)
-        # channels identical under neutral chroma
-        assert (arr[:, :, 0] == arr[:, :, 1]).all()
-        assert (arr[:, :, 0] == arr[:, :, 2]).all()
-        if not c420:  # C444: every pixel keeps its own Y
-            flat = arr[:, :, 0].reshape(-1)
-            for px, y in zip(flat, ys):
-                assert px == min(255, math.floor(1.164 * (y - 16)))
-
+# --- round 11: contamination-audit laws -------------------------------------
 
 _docs_texts = st.lists(
     st.text(alphabet="ab cd", min_size=0, max_size=24), min_size=1, max_size=8

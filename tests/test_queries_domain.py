@@ -59,32 +59,16 @@ def test_dedup_embedding_keeps_lower_id(spark):
     assert out.select("dup_id").distinct().count() == out.count()
 
 
-def test_multimodal_features_shape(spark):
-    # the registered query folds features to a scalar digest (the driver's
-    # canonicalizer can't sort array columns); the raw array shape is still
-    # pinned here through the underlying operator
-    from epss_spark.operators import multimodal
-    from epss_spark.queries_domain import _media
-
-    raw = multimodal.extract_features(_media(spark, SF))
-    row = raw.filter(F.col("n_bytes") > 0).first()
-    assert row is not None and len(row["features"]) == 8
-
-    out = qd.multimodal_features(spark, SF)
-    assert out.columns == ["media_id", "content_hash", "n_bytes", "feat_digest"]
-    d = out.filter(F.col("n_bytes") > 0).first()
-    assert d is not None and d["feat_digest"] > 0.0
-    # dedup-before-decode: identical payloads share a content hash
-    assert out.select("content_hash").distinct().count() <= out.count()
-
-
 def test_documents_text_is_ascii(spark):
-    """Pins the multimodal_features oracle assumption: its DuckDB SQL maps
-    characters to payload bytes via unicode(substr(text, i, 1)), which
-    equals the UTF-8 byte value ONLY for pure-ASCII text (and char length
-    == octet length only then). If the driver ever regenerates documents
-    with non-ASCII content, this fails loudly instead of the oracle
-    drifting silently."""
+    """Pins the text oracles' assumption: the shared normalization
+    (operators/text.py::normalize, `_NORM_SQL` on the DuckDB side) lowers
+    before stripping non-alphanumerics, and the two engines lower only
+    ASCII identically (Spark lowers U+0130 to 'i' + U+0307 and a
+    word-final capital sigma to U+03C2; DuckDB does neither), so
+    text_fingerprint, dedup_exact_docs and every other normalize-based
+    oracle match only on ASCII text. If the testdata documents ever gain
+    non-ASCII content, this fails loudly instead of the oracles drifting
+    silently."""
     from epss_spark.queries_core import T
 
     docs = T(spark, SF, "documents")

@@ -1,4 +1,4 @@
-"""Sinks, streaming, multimodal plumbing, and CLI tests."""
+"""Sinks, streaming, and CLI tests."""
 
 from __future__ import annotations
 
@@ -15,7 +15,6 @@ import pytest
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
-from epss_spark.operators import multimodal
 from epss_spark.sources import sinks
 from epss_spark.sources.readers import read_any, read_snapshots
 from epss_spark.streaming import scores_stream
@@ -247,296 +246,6 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     q.awaitTermination(120)
     got = spark.sql("SELECT k FROM dedup_stream_test").collect()
     assert sorted(r.k for r in got) == [0, 1, 2, 3, 4, 5]
-
-
-# ---------------------------------------------------------------------------
-# multimodal plumbing
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    rows = [
-        (0, "image", "image/png", 4, 4, None, bytes(range(64))),
-        (1, "image", "image/png", 4, 4, None, bytes(range(64))),  # duplicate payload
-        (2, "image", "image/jpeg", 8, 8, None, bytes(reversed(range(64)))),
-        (3, "video", "video/mp4", 64, 48, 3500, b"\x00" * 128),
-        (4, "audio", "audio/wav", None, None, 2000, b"\x01\x02" * 32),
-    ]
-    return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-
-
-def test_extract_features_deterministic_dedup(spark, media):
-    out = {r.media_id: r for r in multimodal.extract_features(media).collect()}
-    assert len(out) == 5
-    assert out[0].content_hash == out[1].content_hash  # identical payloads
-    assert out[0].features == out[1].features
-    assert out[0].content_hash != out[2].content_hash
-    assert all(len(r.features) == 8 for r in out.values())
-    assert out[3].n_bytes == 128
-
-
-def test_corpus_scope_decodes_each_distinct_payload_once(spark):
-    """The corpus-wide dedup-before-decode contract: across ALL partitions
-    and Arrow batches, decode_fn runs once per DISTINCT payload (counted
-    with an accumulator from the workers). scope='batch' only guarantees
-    once per batch; scope='corpus' (the default) guarantees it globally."""
-    acc = spark.sparkContext.accumulator(0)
-
-    def counting_decode(b: bytes) -> list[float]:
-        acc.add(1)
-        return [float(len(b))] * 8
-
-    # 120 rows, 3 distinct payloads, spread over 8 partitions so a
-    # per-batch cache alone could not keep the count at 3
-    rows = [
-        (i, "image", "image/x-test", None, None, None, bytes([i % 3]) * 10)
-        for i in range(120)
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA).repartition(8)
-    out = multimodal.extract_features(media, decode_fn=counting_decode).collect()
-    assert len(out) == 120
-    assert acc.value == 3
-
-    # both scopes produce identical frames
-    got = {(r.media_id, r.content_hash, r.n_bytes, tuple(r.features)) for r in out}
-    want = {
-        (r.media_id, r.content_hash, r.n_bytes, tuple(r.features))
-        for r in multimodal.extract_features(media, scope="batch").collect()
-    }
-    # counting_decode and the default fake differ; recompute corpus scope
-    # with the default decoder for the equality check
-    got_default = {
-        (r.media_id, r.content_hash, r.n_bytes, tuple(r.features))
-        for r in multimodal.extract_features(media, scope="corpus").collect()
-    }
-    assert got_default == want
-    with pytest.raises(ValueError):
-        multimodal.extract_features(media, scope="bogus")
-
-
-def test_decode_image_any_tiers(spark):
-    """The tiered codec adapter: stdlib formats decode identically to
-    decode_image in every environment; a compressed payload either
-    decodes through the optional Pillow tier (when importable) or
-    degrades to None with a strict= error that NAMES the missing
-    dependency — no environment leaves the behavior undefined."""
-    import numpy as np
-
-    arr = np.arange(4 * 3 * 3, dtype=np.uint8).reshape(4, 3, 3)
-    ppm = multimodal.encode_ppm(arr)
-    assert (multimodal.decode_image_any(ppm) == multimodal.decode_image(ppm)).all()
-
-    jpeg_magic = b"\xff\xd8\xff\xe0" + b"\x00" * 64  # truncated JPEG
-    rows = [(1, "image", "image/jpeg", None, None, None, jpeg_magic)]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    if multimodal._optional_pil() is None:
-        assert multimodal.decode_image_any(jpeg_magic) is None
-        # strict path names the missing optional dependency
-        with pytest.raises(Exception, match="Pillow"):
-            multimodal.resize_images(media, 2, 2, strict=True).collect()
-        # non-strict: passes through with metadata untouched
-        out = multimodal.resize_images(media, 2, 2).collect()[0]
-        assert bytes(out.payload) == jpeg_magic and out.mime == "image/jpeg"
-    else:  # a malformed JPEG still degrades to None, never raises
-        assert multimodal.decode_image_any(jpeg_magic) is None
-
-
-def test_resize_images_jpeg_golden_with_pil(spark):
-    """Golden JPEG path through the SAME resize plumbing the stdlib
-    formats use: with Pillow on the workers, a real JPEG payload is
-    decoded by the optional tier, resized, and re-encoded as PPM under
-    strict=True (the round-8 'honestly stubbed' surface, now closed by
-    the optional-dependency adapter). Skips cleanly without PIL."""
-    pil_image = pytest.importorskip("PIL.Image")
-    import numpy as np
-
-    arr = np.zeros((8, 6, 3), dtype=np.uint8)
-    arr[:4] = [255, 0, 0]  # top half red, bottom half black
-    buf = io.BytesIO()
-    pil_image.fromarray(arr).save(buf, format="JPEG", quality=95)
-    rows = [(7, "image", "image/jpeg", 6, 8, None, buf.getvalue())]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.resize_images(media, 3, 4, strict=True).collect()[0]
-    assert (out.mime, out.width, out.height) == ("image/x-portable-pixmap", 3, 4)
-    got = multimodal.decode_image(bytes(out.payload))
-    assert got.shape == (4, 3, 3)
-    # top rows stay red-dominant, bottom rows near black (JPEG is lossy:
-    # compare dominance, not exact bytes)
-    assert got[0].astype(int)[:, 0].mean() > 180 and got[3].astype(int).mean() < 60
-
-
-def test_extract_features_with_real_pil_decoder_corpus_scope(spark):
-    """(Was shadowed by a later same-named test — renamed so it collects.)
-    Production decode path: a PIL-backed decode_fn through the SAME
-    corpus-scope plumbing (hash projection, dedup-before-decode, Arrow
-    batches, join-back) that the deterministic fake exercises — so the
-    real-codec path is covered wherever an imaging lib exists. Skips
-    cleanly in environments without PIL (this container has none)."""
-    pil_image = pytest.importorskip("PIL.Image")
-    import numpy as np
-
-    def png_bytes(val: int) -> bytes:
-        arr = np.full((4, 4, 3), val, dtype=np.uint8)
-        buf = io.BytesIO()
-        pil_image.fromarray(arr).save(buf, format="PNG")
-        return buf.getvalue()
-
-    rows = [
-        (i, "image", "image/png", None, None, None, png_bytes((i % 2) * 100))
-        for i in range(6)
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-
-    def pil_decode(b: bytes) -> list[float]:
-        import io as _io
-
-        import numpy as _np
-        from PIL import Image
-
-        arr = _np.asarray(Image.open(_io.BytesIO(b)).convert("RGB"), dtype=_np.float64)
-        return [
-            float(arr.mean()),
-            float(arr.std()),
-            *(float(arr[..., c].mean()) for c in range(3)),
-        ]
-
-    out = {
-        r.media_id: r
-        for r in multimodal.extract_features(media, decode_fn=pil_decode).collect()
-    }
-    assert len(out) == 6
-    # two distinct payloads -> two distinct hashes, decoded means exact
-    assert out[0].features[0] == 0.0
-    assert abs(out[1].features[0] - 100.0) < 1e-9
-    assert out[0].content_hash != out[1].content_hash
-    assert out[0].content_hash == out[2].content_hash
-
-
-def test_sample_frames(spark, media):
-    frames = multimodal.sample_frames(media, every_ms=1000).collect()
-    ms = sorted(r.frame_ms for r in frames)
-    assert ms == [0, 1000, 2000, 3000]  # 3500ms video, 1s sampling
-    assert {r.media_id for r in frames} == {3}
-
-
-def test_resize_real_pixels_for_uncompressed(spark):
-    """PPM payloads are genuinely decoded, nearest-neighbor resized, and
-    re-encoded; compressed formats pass through with original metadata
-    (or raise under strict=True)."""
-    import numpy as np
-    import pytest as _pytest
-
-    arr = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    rows = [
-        (0, "image", "image/x-portable-pixmap", 4, 4, None, multimodal.encode_ppm(arr)),
-        (1, "image", "image/png", 4, 4, None, bytes(range(64))),  # no codec: pass-through
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = {r.media_id: r for r in multimodal.resize_images(df, 8, 8).collect()}
-    assert (out[0].width, out[0].height) == (8, 8)
-    dec = multimodal.decode_image(bytes(out[0].payload))
-    assert dec.shape == (8, 8, 3)
-    # nearest-neighbor keeps the corner pixels
-    assert (dec[0, 0] == arr[0, 0]).all() and (dec[-1, -1] == arr[-1, -1]).all()
-    assert (out[1].width, out[1].height) == (4, 4)
-    assert bytes(out[1].payload) == bytes(range(64))
-    with _pytest.raises(Exception, match="cannot decode payload"):
-        multimodal.resize_images(
-            df.filter(F.col("media_id") == 1), 8, 8, strict=True
-        ).collect()
-
-
-def test_audio_features_real_wav(spark):
-    """A generated 440 Hz sine WAV must yield the right sample count, RMS
-    (~1/sqrt2 of amplitude), zero-crossing rate (~2f/rate), and spectral
-    centroid (~440 Hz); non-WAV audio rows survive with NULL features."""
-    import io
-    import math
-    import wave
-
-    import numpy as np
-
-    rate, secs, freq, amp = 8000, 1, 440, 0.5
-    t = np.arange(rate * secs) / rate
-    x = (amp * np.sin(2 * math.pi * freq * t) * 32767).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(x.tobytes())
-    rows = [
-        (0, "audio", "audio/wav", None, None, 1000, buf.getvalue()),
-        (1, "audio", "audio/mp3", None, None, 1000, b"\xff\xfbnotreal"),
-        (2, "image", "image/png", 4, 4, None, b"ignored"),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = {r.media_id: r for r in multimodal.audio_features(df).collect()}
-    assert set(out) == {0, 1}  # images filtered out; mp3 kept with NULLs
-    r0 = out[0]
-    assert r0.sample_rate == rate and r0.n_samples == rate * secs
-    assert abs(r0.rms - amp / math.sqrt(2)) < 0.01
-    assert abs(r0.zero_crossing_rate - 2 * freq / rate) < 0.005
-    assert abs(r0.spectral_centroid_hz - freq) < 15
-    assert out[1].rms is None and out[1].sample_rate is None
-
-
-def test_decode_bmp_bottom_up_with_padding():
-    """24-bit BI_RGB BMP: bottom-up row order, 4-byte row padding, BGR."""
-    import struct
-
-    import numpy as np
-
-    w, h, stride = 3, 2, 12  # (3*3 + 3) & ~3 == 12
-    # rows stored bottom-up: file row 0 is image row 1
-    img = np.arange(w * h * 3, dtype=np.uint8).reshape(h, w, 3)
-    raster = b""
-    for r in range(h - 1, -1, -1):
-        row = img[r][..., ::-1].tobytes()  # RGB -> BGR
-        raster += row + b"\x00" * (stride - len(row))
-    header = struct.pack("<2sIHHI", b"BM", 54 + len(raster), 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(raster), 0, 0, 0, 0)
-    dec = multimodal.decode_image(header + info + raster)
-    assert dec is not None and (dec == img).all()
-    assert multimodal.decode_image(b"\x89PNG....") is None  # unknown magic
-
-
-def test_decode_malformed_payloads_return_none(spark):
-    """Malformed media must decode to None, never raise — one bad
-    byte-string in a 100 TB corpus must not kill the stage. All of these
-    also have to ride through resize_images(strict=False) unchanged."""
-    import struct
-
-    bad = {
-        "p6_truncated_header": b"P6\n3",  # header cut mid-field
-        "p6_non_numeric": b"P6\nxx yy\n255\n" + b"\x00" * 64,
-        "p6_zero_dims": b"P6\n0 0\n255\n",
-        "p6_negative_dims": b"P6\n-3 2\n255\n" + b"\x00" * 64,
-        "p6_header_only": b"P6",
-        "bmp_negative_width": (
-            struct.pack("<2sIHHI", b"BM", 54, 0, 0, 54)
-            + struct.pack("<IiiHHIIiiII", 40, -3, 2, 1, 24, 0, 0, 0, 0, 0, 0)
-            + b"\x00" * 64
-        ),
-        "bmp_zero_dims": (
-            struct.pack("<2sIHHI", b"BM", 54, 0, 0, 54)
-            + struct.pack("<IiiHHIIiiII", 40, 0, 0, 1, 24, 0, 0, 0, 0, 0, 0)
-        ),
-        "empty": b"",
-    }
-    for name, payload in bad.items():
-        assert multimodal.decode_image(payload) is None, name
-
-    rows = [
-        (i, "image", "image/x-test", None, None, None, p)
-        for i, p in enumerate(bad.values())
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = {r.media_id: r for r in multimodal.resize_images(df, 8, 8).collect()}
-    assert len(out) == len(bad)  # nothing raised, everything passed through
-    for i, p in enumerate(bad.values()):
-        assert bytes(out[i].payload or b"") == p
 
 
 # ---------------------------------------------------------------------------
@@ -1068,39 +777,6 @@ def test_streaming_dedup_recrawl_does_not_duplicate_index_rows(spark, tmp_path):
     assert n_bands_after == 2 * n_bands_before
 
 
-def test_extract_features_with_real_pil_decoder(spark):
-    """Production-path integration: wherever an imaging library exists,
-    `extract_features(decode_fn=...)` must carry a REAL decoder through
-    the Arrow/mapInPandas plumbing unchanged (same schema, same
-    decode-once-per-distinct-payload contract). Skips in environments
-    without PIL — the plumbing itself is covered by the fake-decoder
-    tests above."""
-    Image = pytest.importorskip("PIL.Image")
-    import io
-
-    def png_bytes(shade: int) -> bytes:
-        img = Image.new("L", (4, 4), color=shade)
-        buf = io.BytesIO()
-        img.save(buf, format="PNG")
-        return buf.getvalue()
-
-    def pil_decode(payload: bytes) -> list[float]:
-        img = Image.open(io.BytesIO(payload)).convert("L").resize((2, 2))
-        return [p / 255.0 for p in img.getdata()]
-
-    rows = [
-        (0, "image", "image/png", 4, 4, None, png_bytes(0)),
-        (1, "image", "image/png", 4, 4, None, png_bytes(0)),  # dup payload
-        (2, "image", "image/png", 4, 4, None, png_bytes(255)),
-    ]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = {r.media_id: r for r in multimodal.extract_features(media, decode_fn=pil_decode).collect()}
-    assert out[0].features == [0.0] * 4
-    assert out[2].features == [1.0] * 4
-    assert out[0].content_hash == out[1].content_hash
-    assert out[0].features == out[1].features
-
-
 def test_cli_dedup_lines_method(spark, tmp_path, capsys):
     from epss_spark.cli import main
 
@@ -1358,97 +1034,6 @@ def test_cli_prep_shard(spark, tmp_path, capsys):
     assert len(rows) == 20
     assert {r.shard for r in rows} <= set(range(4))
     assert all(r.pos >= 1 for r in rows)
-
-
-def test_png_roundtrip_and_filters():
-    """decode_png: encode_png(filter-0) round-trips bit-exact; scanlines
-    filtered with Sub/Up/Average/Paeth (hand-filtered forward per the PNG
-    spec) unfilter back to the same pixels; gray and RGBA variants map to
-    RGB; truncated/palette payloads decline with None."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from epss_spark.operators import multimodal as mm
-
-    rng = np.random.default_rng(7)
-    arr = rng.integers(0, 256, size=(5, 4, 3), dtype=np.uint8)
-    assert np.array_equal(mm.decode_png(mm.encode_png(arr)), arr)
-    assert mm.decode_image(mm.encode_png(arr)).shape == (5, 4, 3)
-
-    def chunk(typ, data):
-        return struct.pack(">I", len(data)) + typ + data + struct.pack(
-            ">I", zlib.crc32(typ + data) & 0xFFFFFFFF
-        )
-
-    def png_with_filters(arr, ftypes):
-        h, w = arr.shape[:2]
-        ch = arr.shape[2]
-        raw = bytearray()
-        prev = np.zeros(w * ch, dtype=np.int32)
-        for y, f in zip(range(h), ftypes):
-            line = arr[y].reshape(-1).astype(np.int32)
-            filt = np.zeros_like(line)
-            for x in range(w * ch):
-                a = line[x - ch] if x >= ch else 0
-                b = prev[x]
-                c = prev[x - ch] if x >= ch else 0
-                if f == 0:
-                    filt[x] = line[x]
-                elif f == 1:
-                    filt[x] = line[x] - a
-                elif f == 2:
-                    filt[x] = line[x] - b
-                elif f == 3:
-                    filt[x] = line[x] - ((a + b) >> 1)
-                else:
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    filt[x] = line[x] - pred
-            raw.append(f)
-            raw.extend((filt & 0xFF).astype(np.uint8).tobytes())
-            prev = line
-        ctype = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-        return (
-            mm._PNG_SIG
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b"")
-        )
-
-    assert np.array_equal(
-        mm.decode_png(png_with_filters(arr, [1, 2, 3, 4, 0])), arr
-    )
-    gray = rng.integers(0, 256, size=(3, 3, 1), dtype=np.uint8)
-    assert np.array_equal(
-        mm.decode_png(png_with_filters(gray, [4, 1, 3])), np.repeat(gray, 3, axis=2)
-    )
-    rgba = rng.integers(0, 256, size=(3, 2, 4), dtype=np.uint8)
-    assert np.array_equal(
-        mm.decode_png(png_with_filters(rgba, [2, 4, 1])), rgba[..., :3]
-    )
-    whole = mm.encode_png(arr)
-    assert mm.decode_png(whole[: len(whole) // 2]) is None  # truncated IDAT
-    assert mm.decode_png(b"\x89PNG\r\n\x1a\njunk") is None
-
-
-def test_resize_handles_png_payloads(spark):
-    import numpy as np
-
-    from epss_spark.operators import multimodal as mm
-
-    rng = np.random.default_rng(3)
-    arr = rng.integers(0, 256, size=(8, 6, 3), dtype=np.uint8)
-    rows = [(1, "image", "image/png", 6, 8, None, bytearray(mm.encode_png(arr)))]
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    out = mm.resize_images(media, 3, 4).collect()
-    assert out[0].mime == "image/x-portable-pixmap"
-    dec = mm.decode_image(bytes(out[0].payload))
-    assert dec.shape == (4, 3, 3)
-    assert np.array_equal(dec, mm.nn_resize(arr, 3, 4))
 
 
 def test_streaming_span_dedup_equals_sequential_batches(spark, tmp_path):
@@ -2426,74 +2011,6 @@ def test_read_committed_own_epoch_without_schema_names_missing_base(spark, tmp_p
         dedup_stream._read_committed(spark, path, 0)
 
 
-def test_decode_audio_any_tiers(spark):
-    """The tiered audio codec adapter (audio mirror of decode_image_any):
-    stdlib PCM WAV decodes identically in every environment; a
-    compressed payload either decodes through the optional soundfile
-    tier (when importable) or degrades to None with a strict= error
-    that NAMES the missing dependency — no environment leaves the
-    behavior undefined."""
-    import io
-    import math
-    import wave
-
-    import numpy as np
-
-    rate = 8000
-    t = np.arange(rate) / rate
-    x = (0.5 * np.sin(2 * math.pi * 440 * t) * 32767).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(x.tobytes())
-    wav = buf.getvalue()
-    via_any = multimodal.decode_audio_any(wav)
-    via_wav = multimodal.decode_audio_wav(wav)
-    assert via_any[1] == via_wav[1] == rate
-    assert (via_any[0] == via_wav[0]).all()
-
-    mp3_magic = b"\xff\xfb" + b"\x00" * 64  # truncated MP3
-    rows = [(1, "audio", "audio/mp3", None, None, 1000, mp3_magic)]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    if multimodal._optional_soundfile() is None:
-        assert multimodal.decode_audio_any(mp3_magic) is None
-        # strict path names the missing optional dependency
-        with pytest.raises(Exception, match="soundfile"):
-            multimodal.audio_features(media, strict=True).collect()
-        # non-strict: NULL features, row survives for coverage accounting
-        out = multimodal.audio_features(media).collect()[0]
-        assert out.media_id == 1 and out.rms is None
-    else:  # a malformed MP3 still degrades to None, never raises
-        assert multimodal.decode_audio_any(mp3_magic) is None
-
-
-def test_audio_features_flac_golden_with_soundfile(spark):
-    """Golden compressed-audio path through the SAME feature plumbing the
-    stdlib WAV path uses: with soundfile on the workers, a real FLAC
-    payload (lossless) yields the hand-known sine features under
-    strict=True. Skips cleanly without the optional dep."""
-    sf = pytest.importorskip("soundfile")
-    import io
-    import math
-
-    import numpy as np
-
-    rate, freq, amp = 8000, 440, 0.5
-    t = np.arange(rate) / rate
-    x = (amp * np.sin(2 * math.pi * freq * t)).astype(np.float32)
-    buf = io.BytesIO()
-    sf.write(buf, x, rate, format="FLAC")
-    rows = [(0, "audio", "audio/flac", None, None, 1000, buf.getvalue())]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.audio_features(media, strict=True).collect()[0]
-    assert out.sample_rate == rate and out.n_samples == rate
-    assert abs(out.rms - amp / math.sqrt(2)) < 0.01
-    assert abs(out.zero_crossing_rate - 2 * freq / rate) < 0.005
-    assert abs(out.spectral_centroid_hz - freq) < 30
-
-
 def test_epoch_store_glob_metachar_path(spark, tmp_path):
     """Regression (round-11 ADVICE): a state path containing Hadoop glob
     metacharacters ([ ] * ? { }) must behave identically to a clean
@@ -2530,121 +2047,6 @@ def test_epoch_store_glob_metachar_path(spark, tmp_path):
     got = sorted(map(tuple, history_stream.history_snapshot(spark, hdir, "url").select(
         "url", "fp", "valid_from", "valid_to", "n_versions").collect()))
     assert got == want
-
-
-def _y4m(w, h, y_frames, fps=(2, 1), cspace=b"C444"):
-    """Build an uncompressed YUV4MPEG2 payload: per frame, a flat Y plane
-    value list plus neutral chroma (U=V=128 -> grayscale, so expected RGB
-    is clip(1.164*(Y-16)) channel-identical by hand)."""
-    import numpy as np
-
-    if cspace == b"C444":
-        uv_n = w * h
-    else:  # C420
-        uv_n = ((w + 1) // 2) * ((h + 1) // 2)
-    hdr = b"YUV4MPEG2 W%d H%d F%d:%d Ip A1:1 %s\n" % (w, h, fps[0], fps[1], cspace)
-    body = b""
-    for ys in y_frames:
-        y = np.asarray(ys, dtype=np.uint8).tobytes()
-        body += b"FRAME\n" + y + bytes([128]) * uv_n * 2
-    return hdr + body
-
-
-def test_decode_y4m_frames_golden_and_sampling():
-    """Stdlib video tier (video mirror of decode_image's BMP/PPM tier):
-    a hand-built 2x2 YUV4MPEG2 payload decodes to hand-known grayscale
-    RGB (BT.601 limited range: rgb = clip(1.164*(Y-16))), frames sampled
-    at every_ms boundaries (first frame at-or-after each k*every_ms),
-    and the C420 chroma upsample path round-trips the same values."""
-    from epss_spark.operators import multimodal
-
-    # 4 frames at 2 fps -> frame_ms 0, 500, 1000, 1500
-    y_frames = [[16] * 4, [128] * 4, [235] * 4, [60] * 4]
-    pay = _y4m(2, 2, y_frames)
-    got = multimodal.decode_y4m_frames(pay, every_ms=1000)
-    assert [(ms, arr[0, 0, 0]) for ms, arr in got] == [(0, 0), (1000, 254)]
-    assert got[0][1].shape == (2, 2, 3)
-    # every_ms below the frame period keeps every frame
-    all4 = multimodal.decode_y4m_frames(pay, every_ms=400)
-    assert [ms for ms, _ in all4] == [0, 500, 1000, 1500]
-    # grayscale: all three channels equal, frame 1 Y=128 -> 130
-    assert (all4[1][1] == 130).all()
-    # C420 subsampled chroma upsamples to the same grayscale values
-    got420 = multimodal.decode_y4m_frames(
-        _y4m(2, 2, y_frames, cspace=b"C420jpeg"), every_ms=1000
-    )
-    assert [(ms, arr[1, 1, 2]) for ms, arr in got420] == [(0, 0), (1000, 254)]
-    # malformed: truncated frame body degrades to None, never raises
-    assert multimodal.decode_y4m_frames(pay[:-3], every_ms=1000) is None
-    assert multimodal.decode_y4m_frames(b"\x00\x01", every_ms=1000) is None
-
-
-def test_extract_frames_tiers(spark):
-    """extract_frames end-to-end (tiered codec contract, third modality):
-    a Y4M payload emits PPM frame rows through Spark that decode_image
-    can read back; a compressed payload either decodes through the
-    optional PyAV tier (when importable) or degrades to a NULL-frame row
-    with a strict= error NAMING the missing dependency."""
-    from epss_spark.operators import multimodal
-
-    pay = _y4m(2, 2, [[16] * 4, [128] * 4, [235] * 4, [60] * 4])
-    rows = [(7, "video", "video/x-yuv4mpeg", 2, 2, 2000, pay),
-            (8, "image", "image/bmp", None, None, None, b"BM")]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = sorted(
-        multimodal.extract_frames(media, every_ms=1000, strict=True).collect(),
-        key=lambda r: r.frame_ms,
-    )
-    # kind filter: only the video row fans out
-    assert [(r.media_id, r.frame_ms, r.width, r.height) for r in out] == [
-        (7, 0, 2, 2), (7, 1000, 2, 2)
-    ]
-    arr = multimodal.decode_image(bytes(out[1].payload))
-    assert arr.shape == (2, 2, 3) and arr[0, 0, 0] == 254
-    assert out[0].mime == "image/x-portable-pixmap"
-
-    mp4_magic = b"\x00\x00\x00\x18ftypmp42" + b"\x00" * 64  # truncated mp4
-    vrows = [(9, "video", "video/mp4", None, None, 1000, mp4_magic)]
-    vmedia = spark.createDataFrame(vrows, multimodal.MEDIA_SCHEMA)
-    if multimodal._optional_av() is None:
-        assert multimodal.decode_video_any(mp4_magic) is None
-        with pytest.raises(Exception, match="PyAV"):
-            multimodal.extract_frames(vmedia, strict=True).collect()
-        # non-strict: NULL-frame row survives for coverage accounting
-        nf = multimodal.extract_frames(vmedia).collect()
-        assert len(nf) == 1 and nf[0].media_id == 9 and nf[0].frame_ms is None
-    else:  # a malformed mp4 still degrades to None, never raises
-        assert multimodal.decode_video_any(mp4_magic) is None
-
-
-def test_extract_frames_mp4_golden_with_pyav(spark):
-    """Golden compressed-video path through the SAME frame plumbing the
-    stdlib Y4M path uses: with PyAV on the workers, a real H.264 mp4
-    yields sampled frames under strict=True. Skips cleanly without the
-    optional dep."""
-    av = pytest.importorskip("av")
-    import io
-
-    import numpy as np
-
-    from epss_spark.operators import multimodal
-
-    buf = io.BytesIO()
-    with av.open(buf, "w", format="mp4") as container:
-        stream = container.add_stream("h264", rate=2)
-        stream.width, stream.height, stream.pix_fmt = 32, 32, "yuv420p"
-        for i in range(4):
-            img = np.full((32, 32, 3), 40 * i, dtype=np.uint8)
-            frame = av.VideoFrame.from_ndarray(img, format="rgb24")
-            for packet in stream.encode(frame):
-                container.mux(packet)
-        for packet in stream.encode():
-            container.mux(packet)
-    rows = [(11, "video", "video/mp4", 32, 32, 2000, buf.getvalue())]
-    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    out = multimodal.extract_frames(media, every_ms=1000, strict=True).collect()
-    assert len(out) >= 2 and all(r.width == 32 and r.height == 32 for r in out)
-    assert multimodal.decode_image(bytes(out[0].payload)).shape == (32, 32, 3)
 
 
 def test_contamination_stream_equals_batch_and_replay(spark, tmp_path):
@@ -2818,23 +2220,6 @@ def test_contamination_stream_via_streaming_query(spark, tmp_path):
     got = sorted(map(tuple, cs.contamination_snapshot(spark, state).collect()))
     assert got == want
     assert ("b0", "exact", 1, 0.333333) in got
-
-
-def test_y4m_decoder_matches_oracle_arithmetic():
-    """The multimodal_video_frames oracle's premise, pinned exhaustively:
-    with neutral chroma, the float32 BT.601 kernel's gray pixel equals
-    floor(1.164*(Y-16)) for EVERY Y the query generates (Y-16 in
-    [0, 109]) — if a numpy/dtype change ever shifts a truncation
-    boundary, this fails here instead of as an opaque oracle hash
-    mismatch."""
-    import math
-
-    from epss_spark.operators import multimodal
-
-    for k in range(110):
-        pay = _y4m(2, 2, [[k + 16] * 4], fps=(2, 1))
-        (_, arr), = multimodal.decode_y4m_frames(pay, every_ms=500)
-        assert (arr == math.floor(1.164 * k)).all(), (k, arr[0, 0])
 
 
 def test_contamination_trend_per_epoch(spark, tmp_path):
@@ -3695,216 +3080,3 @@ def test_dim_drift_stream_via_streaming_query(spark, tmp_path):
     }
     got = {r.dim_idx: r for r in ds.drift_snapshot(spark, state, ref).collect()}
     assert got == want and got[0].mean_b == 2.0
-
-
-def test_score_stream_equals_batch_replay_and_order(spark, tmp_path):
-    """Stream == batch for the quality-gate score monitor: per-batch
-    per-bucket (n, quantized score sum) deltas against the frozen
-    linear model fold to EXACTLY the batch score_histogram over the
-    union — additive integers, so replay never double-counts and
-    delivery order is irrelevant. The `.ids` sibling carries the
-    content audit."""
-    import os
-
-    from epss_spark.operators import classifier
-    from epss_spark.streaming import score_stream as ss
-    from epss_spark.streaming.kmeans_stream import corpus_id_checksum
-
-    schema = "doc_id long, text string"
-    rows = [
-        (0, "good clean prose here today"), (1, "spam junk noise blob"),
-        (2, "the quick brown fox jumps"), (3, "aaa bbb ccc"),
-        (4, ""), (5, "mixed good junk text"),
-    ]
-    w = [((3 * j) % 17) / 17.0 - 0.5 for j in range(16)]
-    b = 0.125
-    batches = [rows[:2], rows[2:5], rows[5:]]
-    state = str(tmp_path / "scores")
-    for e, bt in enumerate(batches):
-        ss.process_score_batch(
-            spark.createDataFrame(bt, schema), e, state, w, b, n_buckets=10
-        )
-    union = spark.createDataFrame(rows, schema)
-    want = {
-        r.bucket: (r.n, r.avg_score)
-        for r in classifier.score_histogram(union, w, b, n_buckets=10).collect()
-    }
-    got = {
-        r.bucket: (r.n, r.avg_score)
-        for r in ss.score_snapshot(spark, state).collect()
-    }
-    assert got == want  # bit-exact
-    assert ss.score_total(spark, state) == 6
-    assert ss.score_checksum(spark, state) == corpus_id_checksum(union, id_col="doc_id")
-
-    # replay of the middle epoch: identical recompute, sums never double
-    ss.process_score_batch(
-        spark.createDataFrame(batches[1], schema), 1, state, w, b, n_buckets=10
-    )
-    got2 = {
-        r.bucket: (r.n, r.avg_score)
-        for r in ss.score_snapshot(spark, state).collect()
-    }
-    assert got2 == got
-
-    # order-invariance: reversed delivery, same report
-    state_rev = str(tmp_path / "scores_rev")
-    for e, bt in enumerate(reversed(batches)):
-        ss.process_score_batch(
-            spark.createDataFrame(bt, schema), e, state_rev, w, b, n_buckets=10
-        )
-    got3 = {
-        r.bucket: (r.n, r.avg_score)
-        for r in ss.score_snapshot(spark, state_rev).collect()
-    }
-    assert got3 == got
-
-    # compaction: 6 single-doc epochs, compact_every=2 -> bounded dirs,
-    # identical report and checksum
-    auto = str(tmp_path / "scores_auto")
-    for e, r in enumerate(rows):
-        ss.process_score_batch(
-            spark.createDataFrame([r], schema), e, auto, w, b, n_buckets=10,
-            compact_every=2,
-        )
-    got4 = {
-        r.bucket: (r.n, r.avg_score)
-        for r in ss.score_snapshot(spark, auto).collect()
-    }
-    assert got4 == got
-    assert ss.score_checksum(spark, auto) == corpus_id_checksum(union, id_col="doc_id")
-    assert len([d for d in os.listdir(auto) if d.startswith("epoch-")]) <= 4
-
-    # audit_id_col=None: audit explicitly unavailable
-    state_noid = str(tmp_path / "scores_noid")
-    ss.process_score_batch(
-        spark.createDataFrame(rows, schema), 0, state_noid, w, b,
-        n_buckets=10, audit_id_col=None,
-    )
-    assert ss.score_checksum(spark, state_noid) is None
-
-
-def test_score_stream_via_streaming_query(spark, tmp_path):
-    """start_score_stream end-to-end: file drops consumed one per
-    trigger (availableNow), snapshot distribution equals the one-shot
-    batch score_histogram over everything streamed."""
-    import glob
-    import os
-    import shutil
-
-    from epss_spark.operators import classifier
-    from epss_spark.streaming import score_stream as ss
-
-    schema = "doc_id long, text string"
-    rows = [
-        (0, "alpha beta gamma"), (1, "uno dos tres"),
-        (2, "alpha dos beta"), (3, "gamma tres uno"),
-    ]
-    drop_dir = tmp_path / "sdrops"
-    drop_dir.mkdir()
-    for i, r in enumerate(rows):
-        staging = tmp_path / f"sstage_{i}"
-        spark.createDataFrame([r], schema).coalesce(1).write.parquet(str(staging))
-        part = glob.glob(str(staging / "part-*.parquet"))[0]
-        dest = str(drop_dir / f"s{i}.parquet")
-        shutil.move(part, dest)
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-
-    w = [0.25] * 8
-    state = str(tmp_path / "ss_state")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(drop_dir))
-    )
-    q = ss.start_score_stream(
-        stream, state, str(tmp_path / "ss_ckpt"), w, -0.125, n_buckets=10
-    )
-    q.awaitTermination(180)
-
-    union = spark.createDataFrame(rows, schema)
-    want = {
-        r.bucket: (r.n, r.avg_score)
-        for r in classifier.score_histogram(union, w, -0.125, n_buckets=10).collect()
-    }
-    got = {
-        r.bucket: (r.n, r.avg_score)
-        for r in ss.score_snapshot(spark, state).collect()
-    }
-    assert got == want
-    assert ss.score_total(spark, state) == 4
-
-
-def test_cli_score_dist_verb(spark, tmp_path, capsys):
-    """score-dist: the read verb for the continuous quality-gate
-    monitor — prints the live bucket histogram (bit-equal to the batch
-    score_histogram over the absorbed corpus) behind the same
-    exactly-once audits as cluster promote/quality: count mismatch and
-    id-checksum mismatch REFUSE (exit 3, stderr); a store carrying the
-    audit with no --input to check against is a usage error unless
-    --no-id-audit is explicit; --gate-bucket prints the pass mass."""
-    import epss_spark.cli as cli
-    from epss_spark.operators import classifier
-    from epss_spark.streaming import score_stream as ss
-
-    schema = "doc_id long, text string"
-    rows = [
-        (0, "good clean prose here today"), (1, "spam junk noise blob"),
-        (2, "the quick brown fox jumps"), (3, "aaa bbb ccc"),
-    ]
-    w = [((3 * j) % 17) / 17.0 - 0.5 for j in range(16)]
-    b = 0.125
-    state = str(tmp_path / "sd_state")
-    for e, bt in enumerate([rows[:2], rows[2:]]):
-        ss.process_score_batch(
-            spark.createDataFrame(bt, schema), e, state, w, b, n_buckets=10
-        )
-    union = spark.createDataFrame(rows, schema)
-    in_path = str(tmp_path / "docs")
-    union.write.parquet(in_path)
-    out_path = str(tmp_path / "hist")
-
-    rc = cli.main([
-        "score-dist", "--state", state, "--output", out_path,
-        "--input", in_path, "--expected-n", "4", "--gate-bucket", "5",
-    ])
-    cap = capsys.readouterr()
-    assert rc == 0 and "4 docs absorbed" in cap.out and "pass mass" in cap.out
-    got = {
-        r.bucket: (r.n, r.avg_score)
-        for r in spark.read.parquet(out_path).collect()
-    }
-    want = {
-        r.bucket: (r.n, r.avg_score)
-        for r in classifier.score_histogram(union, w, b, n_buckets=10).collect()
-    }
-    assert got == want
-
-    # count mismatch refuses
-    rc = cli.main(["score-dist", "--state", state, "--output", out_path,
-                   "--input", in_path, "--expected-n", "7"])
-    cap = capsys.readouterr()
-    assert rc == 3 and "REFUSED" in cap.err and "expected 7" in cap.err
-
-    # checksum mismatch (corpus missing a doc) refuses
-    part = str(tmp_path / "partial")
-    spark.createDataFrame(rows[:3], schema).write.parquet(part)
-    rc = cli.main(["score-dist", "--state", state, "--output", out_path,
-                   "--input", part])
-    cap = capsys.readouterr()
-    assert rc == 3 and "id checksum" in cap.err
-
-    # audit-bearing store, no --input: usage error unless explicit skip
-    rc = cli.main(["score-dist", "--state", state, "--output", out_path])
-    cap = capsys.readouterr()
-    assert rc == 2 and "no --input corpus" in cap.err
-    rc = cli.main(["score-dist", "--state", state, "--output", out_path,
-                   "--no-id-audit"])
-    cap = capsys.readouterr()
-    assert rc == 0 and "docs absorbed" in cap.out
-
-    # typo'd --id-col against an audit-bearing store: usage error
-    rc = cli.main(["score-dist", "--state", state, "--output", out_path,
-                   "--input", in_path, "--id-col", "nope"])
-    cap = capsys.readouterr()
-    assert rc == 2 and "no 'nope' column" in cap.err
