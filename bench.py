@@ -314,7 +314,7 @@ def main() -> None:
     # that matters when the same matrix is re-queried daily at 100 TB.
     # The in-memory catalog doesn't persist across runs, so the table is
     # rebuilt each bench run (build time excluded from the metric).
-    from epss_spark.operators.layout import write_bucketed
+    from epss_spark.sources.readers import write_bucketed
 
     spark.sql("DROP TABLE IF EXISTS bench_scores_bucketed")
     write_bucketed(

@@ -17,10 +17,10 @@ Layout:
     operators   — quantize (lag-diff), as-of join, and the extension
                   families: dedup, similarity, text, clustering,
                   selection, sketches, retrieval, prep, layout
-    sources     — format readers, filename-date recovery, HTTP ingest
+    sources     — format readers and writers (incl. the date-partitioned
+                  and cve-bucketed layouts), filename-date recovery,
+                  sinks, HTTP ingest
     functions   — date coercion, filename dates, iterator helpers
-    streaming   — Structured Streaming ingest of score snapshots, plus the
-                  extension families' maintenance streams
     client      — the EPSS-domain composite API (get_scores, ...)
 """
 

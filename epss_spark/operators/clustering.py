@@ -1177,8 +1177,8 @@ def assignment_drift(
     half the corpus invalidates downstream per-cell artifacts (balanced
     picks, outlier flags, SemDeDup groups) and should trigger their
     rebuild, while a near-diagonal table means the refresh is safe to
-    roll forward. This is the gate to run on a `kmeans_stream` snapshot
-    before promoting it over the frozen window model.
+    roll forward. This is the gate to run on a refreshed model before
+    promoting it over the frozen window model.
 
     Scale shape: BOTH assignments ride ONE projection over a single
     corpus scan, then one bounded aggregate — at most k_before * k_after

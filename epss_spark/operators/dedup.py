@@ -1413,7 +1413,7 @@ def minhash_index(
     to dedup daily appends without re-shingling the corpus.
 
     - band_rows: (id, b, band_key), one row per doc per band. Write it
-      bucketed by band_key (layout.write_bucketed) so daily lookups join
+      bucketed by band_key (readers.write_bucketed) so daily lookups join
       co-located.
     - shingle_arrays: (id, shingles), for exact-Jaccard verification.
 
@@ -1703,7 +1703,7 @@ def line_index(
     which batch lines are new.
 
     Persist-to-parquet is the caller's choice; write it bucketed by
-    line_fp (layout.write_bucketed) so nightly `dedup_batch_lines`
+    line_fp (readers.write_bucketed) so nightly `dedup_batch_lines`
     anti-joins co-located instead of shuffling the (corpus-scale) index.
     Appending a batch's kept_fps after each run keeps it current."""
     return (
@@ -1982,7 +1982,7 @@ def span_index(
     """Build the persistent k-gram fingerprint index for INCREMENTAL span
     dedup: the distinct md5 of every k-token gram in the corpus, as a
     1-column (gram_fp) frame — the span analog of `line_index` /
-    `minhash_index`. Write it bucketed by gram_fp (layout.write_bucketed)
+    `minhash_index`. Write it bucketed by gram_fp (readers.write_bucketed)
     so the nightly `dedup_batch_spans` join co-locates; append each
     batch's new_fps after the run. Index over the ACCEPTED (already
     span-deduped) corpus so indexed grams are exactly the grams a reader
@@ -2391,7 +2391,7 @@ def cap_per_stratum(
 
     Scale shape: one row_number window on the stratum key — the
     balanced-mix default. A hot stratum sorts on one task
-    (layout.key_skew_report diagnoses it); when that chain is the
+    (a per-stratum row count diagnoses it); when that chain is the
     critical path, use `cap_per_stratum_bucketed` — identical keep set,
     range-bucketed two-pass plan (PERF.md round-7 probe: 2x at an
     8M-doc 95%-hot corpus)."""
@@ -2534,7 +2534,7 @@ def sample_token_budget_bucketed(
     Cost: the subtotal branch re-scans and re-tokenizes the corpus
     (common subplans are not deduplicated), so this is ~2x the map work
     for 1/256th the serial sort — only worth it under real skew
-    (PERF.md probe); diagnose with layout.key_skew_report first."""
+    (PERF.md probe); diagnose with a per-key row count first."""
     n_tok = F.size(tokens(text_col))
     h = F.md5(F.concat(F.lit(f"{salt}|"), F.col(id_col).cast("string")))
     sized = (

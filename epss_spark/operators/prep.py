@@ -195,10 +195,9 @@ def pack_sequences(
     DuckDB oracle replay the identical packing with a recursive CTE.
 
     `init_state` (bucket, open_bin, open_fill) resumes packing into a
-    previous run's last open bin per bucket — the incremental/streaming
-    mode (see streaming/pack_stream.py). Buckets absent from the state
-    start fresh at bin 0. The state side is n_buckets rows, so the join
-    is broadcast by construction.
+    previous run's last open bin per bucket — the incremental mode.
+    Buckets absent from the state start fresh at bin 0. The state side is
+    n_buckets rows, so the join is broadcast by construction.
     """
     sized = sized_docs(docs, n_buckets, id_col, text_col, salt)
     if init_state is None:

@@ -159,7 +159,7 @@ def bm25_index(
       indexed scores drift from bm25_topk's).
 
     Persist-to-parquet is the caller's choice; write postings bucketed
-    by `term` (layout.write_bucketed) so a query's posting lists
+    by `term` (readers.write_bucketed) so a query's posting lists
     partition-prune to the term buckets, and doc_stats bucketed by `id`
     so the candidate join co-locates (DEPLOYMENT.md layout table).
     Nightly appends: union the new batch's postings and doc_stats rows

@@ -172,8 +172,8 @@ DRIVER_SURFACE: tuple[str, ...] = (
     "text_pr_curve",
     # round-14 rotation (judge item 2): cluster_boundary — the per-cell
     # boundary-mass churn-risk report — gives the MODEL-QUALITY class
-    # (the two-nearest projection that silhouette, boundary, and
-    # quality_stream all ride, clustering.py::two_nearest_distances) its
+    # (the two-nearest projection that silhouette and boundary
+    # both ride, clustering.py::two_nearest_distances) its
     # first driver row; the round-13 newcomers had only ever run under
     # the identical pytest-oracle gate — in place of text_ppl_buckets,
     # whose perplexity-bucket quality-scoring class stays driver-green
@@ -348,7 +348,7 @@ DRIVER_SURFACE: tuple[str, ...] = (
 #     (round-11/12 newcomers; the clustering TRAINER class is held
 #     driver-green by cluster_kmeans_weighted, and as of the round-14
 #     rotation the MODEL-QUALITY class — the two-nearest projection
-#     silhouette/boundary/quality_stream all ride — is held driver-green
+#     silhouette/boundary both ride — is held driver-green
 #     by cluster_boundary, under which cluster_silhouette (same
 #     projection, same quantized-mean fold, one fewer column of
 #     arithmetic) ages as a documented near-sibling.

@@ -118,3 +118,26 @@ def date_partitioned_write(
     if dynamic:
         writer = writer.option("partitionOverwriteMode", "dynamic")
     writer.parquet(root)
+
+
+def write_bucketed(
+    df: DataFrame,
+    table: str,
+    bucket_key: str,
+    num_buckets: int = 64,
+    sort_key: str | list[str] | None = None,
+    path: str | None = None,
+) -> None:
+    """Persist a bucketed (and optionally sorted) table so future equi-joins
+    and groupBys on `bucket_key` skip the shuffle entirely — both sides
+    co-located by bucket. The reference's repeated change-queries over the
+    same score matrix are the canonical win (SURVEY §4: pre-bucketing by cve
+    avoids re-shuffles across repeated quantizations)."""
+    writer = df.write.mode("overwrite").format("parquet")
+    if path:
+        writer = writer.option("path", path)
+    writer = writer.bucketBy(num_buckets, bucket_key)
+    if sort_key:
+        keys = [sort_key] if isinstance(sort_key, str) else list(sort_key)
+        writer = writer.sortBy(*keys)
+    writer.saveAsTable(table)

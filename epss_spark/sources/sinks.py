@@ -183,11 +183,20 @@ def convert(spark: SparkSession, src: str, dst: str, schema=None) -> None:
     """Format conversion (reference epss/util.py:69-119 converts file-by-file
     in a thread pool; here one distributed read -> write over the whole
     dataset)."""
-    df = read_any(spark, src, schema=schema)
-    if infer_format(dst) == "json":
-        write_json_array(df, dst)
+    write_file(read_any(spark, src, schema=schema), dst)
+
+
+def write_file(df: DataFrame, path: str) -> None:
+    """Write `df` in the format its path's extension names (reference
+    epss/util.py:33-52): `.xlsx` is an Excel workbook and `.json` a JSON
+    array, both written on the driver; parquet/csv/jsonl are distributed
+    Spark writes (`write_any`)."""
+    if path.endswith(".xlsx"):
+        write_excel(df, path)
+    elif infer_format(path) == "json":
+        write_json_array(df, path)
     else:
-        write_any(df, dst)
+        write_any(df, path)
 
 
 def convert_files_in_dir(

@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from _common import MAX_DATE, SCORES_PATH, demo_client  # noqa: E402
 
 from epss_spark.client import EPSSClient  # noqa: E402
-from epss_spark.operators.layout import write_bucketed  # noqa: E402
+from epss_spark.sources.readers import write_bucketed  # noqa: E402
 
 
 def main() -> None:

@@ -1,6 +1,6 @@
 """The EPSS user paths — the client, the sources, quantize, the Query
 compiler and the session factory — must not load the extension operator
-families or the streaming modules. Checked in a fresh interpreter so that
+families or queries. Checked in a fresh interpreter so that
 modules imported by other tests do not hide an import.
 
 Every internal import in the program files must also resolve. Most
@@ -46,7 +46,6 @@ EXTENSIONS = [
         )
     ),
     "epss_spark.queries_ext",
-    "epss_spark.streaming",
 ]
 
 LOAD = """

@@ -255,22 +255,6 @@ def test_incremental_stale_raw_tail_degrades_to_store(spark):
     assert inc.count() == 0  # stale 0.3 seed would wrongly emit day-3 0.7
 
 
-def test_key_skew_report_flags_hot_key(spark):
-    from epss_spark.operators.layout import key_skew_report
-
-    # 50%-hot key among 101 keys, 4000 rows
-    df = spark.range(4000).selectExpr(
-        "CASE WHEN id % 2 = 0 THEN 'HOT' ELSE concat('k', id % 200) END AS k"
-    )
-    rep = key_skew_report(df, "k", top_k=5).collect()
-    assert rep[0].k == "HOT"
-    assert abs(rep[0].share - 0.5) < 0.01
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert abs(rep[0].hot_vs_uniform - 0.5 * n_part) < 0.5
-    assert rep[0].n_keys == 101  # HOT + the 100 odd residues of id % 200
-    assert len(rep) == 5 and all(r.n <= rep[0].n for r in rep)
-
-
 def test_quantize_compression_property(spark):
     """Quantized output is never larger than the dense input, and each key
     keeps at least its first observation."""

@@ -1,102 +1,11 @@
-"""Stateful streaming quantization + physical layout operators."""
+"""Bucketed physical layouts: the shuffle-free aggregation and
+quantization they buy, and bucket pruning for the lexical index."""
 
 from __future__ import annotations
 
-import shutil
-
-import pytest
 from pyspark.sql import functions as F
 
-from epss_spark.operators.layout import repartition_for_window, salted_agg, write_bucketed
-from epss_spark.operators.quantize import changed_scores
-from epss_spark.tables import load_table
-
-
-def test_streaming_quantization_matches_batch(spark, tmp_path):
-    """The stateful stream over the full backlog must produce exactly the
-    batch quantization result (the core equivalence of the design)."""
-    from epss_spark.streaming.stateful import streaming_changed_values
-
-    events_dir = tmp_path / "events"
-    events_dir.mkdir()
-    shutil.copy("/root/testdata/sf0.001/events.parquet", events_dir / "events.parquet")
-
-    # The driver's events.parquet has shipped ts as TIMESTAMP(NANOS) and as
-    # TIMESTAMP(MICROS); mirror load_table's dual handling (tables.py) since
-    # readStream needs an explicit schema.
-    import pyarrow.parquet as pq
-
-    ts_type = str(pq.read_schema(str(events_dir / "events.parquet")).field("ts").type)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NANOS files (pyarrow: 'timestamp[ns]') surface as LONG under
-    # nanosAsLong=true, so they take the long branch; only micro/milli
-    # timestamps read as real TimestampType
-    if ts_type.startswith("timestamp") and not ts_type.startswith("timestamp[ns"):
-        raw = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string"
-        ).parquet(str(events_dir))
-        stream = raw.select("event_id", "ts", "user_id", "value")
-    else:
-        raw = spark.readStream.schema(
-            "event_id long, ts long, user_id long, event_type string,"
-            " value double, props string"
-        ).parquet(str(events_dir))
-        stream = raw.select(
-            "event_id",
-            F.timestamp_micros(F.expr("ts div 1000")).alias("ts"),
-            "user_id",
-            "value",
-        )
-    out = streaming_changed_values(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("stream_quant")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.ts, r.value, r.prev_value)
-        for r in spark.sql("SELECT * FROM stream_quant").collect()
-    }
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    batch = changed_scores(
-        ev.select("event_id", "ts", "user_id", "value"),
-        key="user_id",
-        time="ts",
-        value="value",
-        tiebreak="event_id",
-        prev_col="prev_value",
-    )
-    want = {
-        (r.user_id, r.ts, r.value, r.prev_value)
-        for r in batch.select("user_id", "ts", "value", "prev_value").collect()
-    }
-    assert got == want
-
-
-def test_salted_agg_equals_plain_agg(spark):
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    plain = {
-        (r.user_id): (r.n, round(r.s, 6))
-        for r in ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    salted = {
-        (r.user_id): (r.n, round(r.s, 6))
-        for r in salted_agg(
-            ev,
-            "user_id",
-            aggs=[F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")],
-            merge_aggs=[F.sum("n").alias("n"), F.sum("s").alias("s")],
-        ).collect()
-    }
-    assert salted == plain
+from epss_spark.sources.readers import write_bucketed
 
 
 def test_write_bucketed_aggregation_skips_shuffle(spark, tmp_path):
@@ -160,23 +69,6 @@ def test_bucketed_quantization_zero_exchanges(spark, tmp_path):
         )
     finally:
         spark.sql("DROP TABLE IF EXISTS bt_scores_q")
-
-
-def test_repartition_for_window_single_exchange(spark):
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    pre = repartition_for_window(ev, "user_id", 8)
-    out = changed_scores(
-        pre.select("event_id", "ts", "user_id", "value"),
-        key="user_id",
-        time="ts",
-        value="value",
-        tiebreak="event_id",
-    )
-    assert out.count() > 0
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # window runs on the pre-partitioned layout: no extra hash exchange for
-    # the window beyond the explicit repartition
-    assert plan.count("hashpartitioning(user_id") <= 2
 
 
 def test_bucketed_bm25_index_prunes_posting_buckets(spark, tmp_path):
