@@ -7,7 +7,7 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 The real surface lives in the ``epss_spark`` package; this module is a thin
 adapter over its registry (epss_spark/registry.py, queries_core.py,
-queries_ext.py).
+queries_domain.py).
 """
 
 from __future__ import annotations
@@ -32,8 +32,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (+ the §7
-    phase-5 training-data extensions)."""
+    """The 50 registered queries: SURVEY.md §2 operators and the EPSS
+    domain queries, flagship first."""
     return registry.get_queries()
 
 

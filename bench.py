@@ -27,40 +27,6 @@ HEADLINE = [
     "join_multi",  # star join + agg (broadcast dims)
     "window_range_frame",  # 30-day trailing window
     "topk",  # TakeOrderedAndProject
-    "dedup_exact_docs",  # fingerprint dedup
-    "dedup_minhash",  # MinHash LSH + verify
-    "ann_cosine_topk",  # brute-force similarity baseline
-    "text_stats",  # text quality scan
-    "text_chunk",  # context-window fan-out (map-only, chunk explode)
-    "pack_sequences",  # greedy packing (bucketed applyInPandas, int-only crossing)
-    "dedup_lines",  # corpus-level line dedup (hash-agg first occurrence)
-    "search_bm25",  # lexical retrieval (zero-shuffle, broadcast stats)
-    "sample_dsir",  # DSIR selection (2 bounded stats jobs + zero-shuffle scoring)
-    "ann_pq_topk",  # PQ ADC search (inline encode, broadcast queries)
-    "dedup_spans",  # exact substring-span dedup (k-gram hash-agg + coverage)
-    "search_bm25_indexed",  # times index BUILD + lookup (the registry query
-    #                         constructs postings inline; the artifact-backed
-    #                         lookup alone is plan-pinned tokenize-free and
-    #                         is NOT what this number measures)
-    # round 8 (headline now 20 queries; totals incomparable with r7 —
-    # compare per-query, after checking calibration_sec):
-    "dedup_spans_raw",  # offset-preserving span dedup (adds the offset
-    #                     window + islands merge + raw-text excision on
-    #                     top of dedup_spans' detection stage)
-    "ann_ivfpq_rerank",  # two-stage ANN: ADC shortlist + exact re-rank
-    # round 9 (headline now 22 queries; totals incomparable with r8 —
-    # compare per-query via query_pairs, after checking calibration_sec):
-    "dedup_url_history",  # SCD-2 interval compaction (lag + run-sum +
-    #                       agg + lead in ONE key exchange)
-    # round 10 (headline now 24 queries; totals incomparable with r9 —
-    # compare per-query via query_pairs, after checking calibration_sec):
-    # round 11 (headline now 25 queries; totals incomparable with r10 —
-    # compare per-query via query_pairs, after checking calibration_sec):
-    # round 11 second addition (headline now 26 queries):
-    "cluster_kmeans",  # deterministic Lloyd k-means training + stats
-    #                    (2 exact-arithmetic updates + final assignment:
-    #                    3 codegen corpus scans, one k-row aggregate each,
-    #                    zero corpus-grain shuffle)
 ]
 
 # Headline workload scale-up (PERF.md bench protocol, round 5): sf0.1

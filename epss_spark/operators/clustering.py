@@ -410,20 +410,6 @@ def write_model(spark, centroids: Sequence[Sequence[float]], path: str) -> None:
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
 
-def read_model(spark, path: str) -> list[list[float]]:
-    """Read a write_model artifact back into the driver-side model form.
-    Raises if cluster ids are not the contiguous 0..k-1 range (a partial
-    or corrupted model must not silently shrink k)."""
-    rows = sorted(
-        ((int(r["cluster_id"]), [float(x) for x in r["centroid"]])
-         for r in spark.read.parquet(path).collect()),
-    )
-    ids = [i for i, _ in rows]
-    if ids != list(range(len(ids))) or not ids:
-        raise ValueError(f"model at {path}: cluster ids {ids} are not 0..k-1")
-    return [c for _, c in rows]
-
-
 def kmeans_stats(
     vectors: DataFrame,
     centroids: Sequence[Sequence[float]],

@@ -361,19 +361,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def dedup_corpus(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """The dedup ACTION: return the corpus with exact duplicates removed,
-    keeping the min-id representative of each normalized-text fingerprint
-    group. One row_number window over the fingerprint — at scale this is
-    one shuffle of (fp, row), no join back against the group table."""
-    w = Window.partitionBy(F.md5(normalize(text_col))).orderBy(F.col(id_col).asc())
-    return (
-        docs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def train_split(
     docs: DataFrame,
     id_col: str = "doc_id",

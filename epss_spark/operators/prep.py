@@ -26,8 +26,6 @@ from __future__ import annotations
 
 import math
 
-from collections.abc import Iterable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -232,59 +230,6 @@ def pack_sequences(
 
     return sized.groupBy("bucket").applyInPandas(
         _pack, _pack_schema(docs.schema[id_col].dataType)
-    )
-
-
-def pack_state(packed: DataFrame, init_state: DataFrame | None = None) -> DataFrame:
-    """Extract the resume state from a pack_sequences result: per bucket,
-    the last (highest) bin and its fill — what the NEXT batch packs into.
-    One small aggregation over the packed rows (n_buckets output rows).
-
-    If the packing itself resumed from `init_state`, pass the SAME state
-    here: when a bucket's last bin is the bin it resumed into, that bin
-    already held init open_fill tokens, which must be added to this
-    batch's contribution — otherwise the reported fill under-counts and a
-    later batch overfills the bin past the budget."""
-    from pyspark.sql import Window
-
-    per_bin = packed.groupBy("bucket", "bin").agg(F.sum("n_tokens").alias("open_fill"))
-    w = Window.partitionBy("bucket").orderBy(F.col("bin").desc())
-    last = (
-        per_bin.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") == 1)
-        .select("bucket", F.col("bin").alias("open_bin"), "open_fill")
-    )
-    if init_state is None:
-        return last
-    prev = F.broadcast(
-        init_state.select(
-            "bucket",
-            F.col("open_bin").alias("_prev_bin"),
-            F.col("open_fill").alias("_prev_fill"),
-        )
-    )
-    return last.join(prev, "bucket", "left").select(
-        "bucket",
-        "open_bin",
-        (
-            F.col("open_fill")
-            + F.when(
-                F.col("open_bin") == F.col("_prev_bin"), F.col("_prev_fill")
-            ).otherwise(F.lit(0))
-        ).alias("open_fill"),
-    )
-
-
-def pack_stats(packed: DataFrame, budget: int = 128) -> DataFrame:
-    """Per-(bucket, bin) fill statistics for a pack_sequences result —
-    the packing-efficiency report (fill fraction, docs per sequence)."""
-    return (
-        packed.groupBy("bucket", "bin")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("fill_tokens"),
-        )
-        .withColumn("fill_frac", F.col("fill_tokens") / F.lit(float(budget)))
     )
 
 

@@ -66,24 +66,6 @@ def _bucket(c: Column, n_buckets: int) -> Column:
     return _md5_60bit(c) % n_buckets
 
 
-def hashed_features(
-    docs: DataFrame,
-    n_buckets: int = 1024,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exploded hashed-feature stream: one row per (doc, feature
-    occurrence) with `bucket` = md5-prefix-int(feature) % n_buckets.
-    Documents with zero tokens contribute no rows. The token tree is
-    bound once per row (stacked projection), so the normalize+split
-    regex pipeline runs once, not once per feature."""
-    toked = docs.select(id_col, tokens(text_col).alias("__toks"))
-    feats = F.concat(F.col("__toks"), bigrams(F.col("__toks")))
-    return toked.select(id_col, F.explode(feats).alias("__feat")).select(
-        id_col, _bucket(F.col("__feat"), n_buckets).alias("bucket")
-    )
-
-
 def _bucket_rows(docs: DataFrame, n_buckets: int, text_col: str, *keep: str) -> DataFrame:
     """One row per feature OCCURRENCE carrying only the integer bucket id
     (plus `keep` columns). The md5 bucketing runs INSIDE the per-row

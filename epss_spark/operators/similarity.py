@@ -900,15 +900,6 @@ def dedup_batch_semantic(
     return kept, semantic_index(kept, centroids, id_col, vec_col, impl)
 
 
-def _sub_d2(vec_slice_sql: str, cent: list[float]) -> Column:
-    """Squared L2 distance between an embedding sub-slice and a constant
-    sub-centroid — sequential left-fold, same summation order as the
-    oracle's list_sum(list_transform(range(...))). Takes the slice as
-    SQL text (see _d2_sql: the Column-API construction cost hundreds of
-    py4j round-trips per sub-centroid at plan-build time)."""
-    return F.expr(_d2_sql(vec_slice_sql, cent))
-
-
 def train_pq_centroids(
     vectors: DataFrame,
     m: int = 4,

@@ -85,7 +85,7 @@ def scan_parquet(spark, sf_dir):
 
 
 def _scratch_copy(spark, sf_dir, name, fmt) -> str:
-    """Materialize a one-time CSV/JSON/JSONL copy of a testdata table under
+    """Materialize a one-time CSV/JSONL copy of a testdata table under
     .scratch so the format scans have real files to read (the driver's
     testdata is parquet-only). Idempotent per (sf, table, format)."""
     tag = os.path.basename(os.path.normpath(sf_dir))
@@ -95,13 +95,8 @@ def _scratch_copy(spark, sf_dir, name, fmt) -> str:
         df = load_table(spark, sf_dir, name)
         if fmt == "csv":
             df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-        elif fmt == "jsonl":
+        else:
             df.coalesce(1).write.mode("overwrite").json(path)
-        elif fmt == "json":  # row-oriented JSON array (ref epss/util.py:21-22)
-            os.makedirs(path, exist_ok=True)
-            pdf = df.toPandas()
-            pdf.to_json(os.path.join(path, "data.json"), orient="records")
-            open(marker, "w").close()
     return path
 
 
@@ -117,13 +112,6 @@ def scan_jsonl(spark, sf_dir):
     configure_runtime(spark)
     path = _scratch_copy(spark, sf_dir, "nation", "jsonl")
     return read_any(spark, path, "jsonl", TESTDATA_SCHEMAS["nation"])
-
-
-@register("scan_json", "SELECT r_regionkey, r_name FROM region")
-def scan_json(spark, sf_dir):
-    configure_runtime(spark)
-    path = _scratch_copy(spark, sf_dir, "region", "json")
-    return read_any(spark, os.path.join(path, "data.json"), "json", TESTDATA_SCHEMAS["region"])
 
 
 @register(

@@ -1,5 +1,4 @@
-"""EPSS-domain roadmap queries, plus the dedup_embedding and agg_pivot
-registry entries.
+"""EPSS-domain roadmap queries, plus the agg_pivot registry entry.
 
 The reference's declared-but-unbuilt scope (TODO.md:8-20 per-CVE summary /
 current score, TODO.md:33-34 trending detection, NOTES.md:15-31 daily volume
@@ -21,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from epss_spark.operators.quantize import changed_scores, densify
-from epss_spark.operators.similarity import cosine_pairs_blocked
 from epss_spark.queries_core import T, dec2
 from epss_spark.registry import register
 
@@ -248,36 +246,6 @@ def epss_reconstruct_dense(spark, sf_dir):
     )
     days = T(spark, sf_dir, "events").select(F.to_date("ts").alias("d"))
     return densify(quantized, days, key="user_id", time="d", value="value")
-
-
-@register(
-    "dedup_embedding",
-    """
-    WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
-    pairs AS (
-      SELECT q.vec_id AS a_id, c.vec_id AS b_id,
-             round(
-               list_sum(list_transform(range(1, 65),
-                 i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(1, 65),
-                    i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))))
-                * sqrt(list_sum(list_transform(range(1, 65),
-                    i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))))),
-               6) AS cos
-      FROM e q JOIN e c ON q.label = c.label AND q.vec_id < c.vec_id
-    )
-    SELECT b_id AS dup_id, MIN(a_id) AS keep_id
-    FROM pairs WHERE cos >= 0.3 GROUP BY b_id
-    """,
-)
-def dedup_embedding(spark, sf_dir):
-    # Embedding-cosine near-dup with canonical-keep selection: any vector
-    # with a sufficiently-similar lower-id neighbor is a duplicate; the
-    # kept canonical is the smallest such neighbor. Blocked on `label`
-    # (at scale the block key comes from LSH bucketing).
-    emb = T(spark, sf_dir, "embeddings")
-    pairs = cosine_pairs_blocked(emb, block_col="label", threshold=0.3)
-    return pairs.groupBy(F.col("b_id").alias("dup_id")).agg(F.min("a_id").alias("keep_id"))
 
 
 @register(

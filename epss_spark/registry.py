@@ -1,12 +1,14 @@
 """Query registry — the driver contract surface.
 
-Every implemented operator from SURVEY.md §2 registers here as a named
-(spark_fn, oracle_sql) pair. The correctness harness runs the Spark plan and
-the DuckDB oracle side-by-side at sf0.01 and compares row-count + schema +
-order-insensitive value hash; column names are aliased identically on both
-sides, and float aggregates go through exact DECIMAL(18,2) arithmetic (the
-testdata's monetary columns are 2-dp exact) so the comparison is bit-exact,
-not tolerance-based.
+Every registered query is a named (spark_fn, oracle_sql) pair. The
+correctness harness runs the Spark plan and the DuckDB oracle side-by-side
+and compares row-count + schema + order-insensitive value hash; column
+names are aliased identically on both sides, and float aggregates go
+through exact DECIMAL(18,2) arithmetic (the testdata's monetary columns are
+2-dp exact) so the comparison is bit-exact, not tolerance-based.
+
+The correctness harness records at most 50 queries, taken in dict order,
+so the registry holds exactly 50, flagship (`window_lag_diff`) first.
 """
 
 from __future__ import annotations
@@ -19,365 +21,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 _LOADED = False
-
-# The driver's correctness harness records at most 50 queries (observed:
-# CORRECTNESS_r01.json stopped at the first 50 registrations, cutting off
-# every text/dedup/ANN extension operator). This list is the
-# curated, ordered 50-entry surface handed to the driver: the flagship
-# first, then the LLM-data-pipeline extensions, then the non-redundant
-# relational core. Queries NOT on this list stay registered (library users
-# and tools/check_oracles.py see them via get_all_queries) and are pinned
-# by the pytest oracle-differential suite (tests/test_oracle_parity.py);
-# each demoted entry is a strict near-duplicate of a surfaced sibling:
-#   scan_json/scan_csv ~ scan_jsonl   join_inner  ⊂ join_multi
-#   json_extract ~ json_parse_typed
-#   filter_isin ~ filter_rlike        join_semi   ~ join_anti
-#   agg_stats ⊂ agg_groupby           window_rank ~ window_percent_rank
-#   setop_intersect ~ setop_except    sql_multi   ~ sql_single
-#   agg_cube/agg_grouping_sets ~ agg_rollup/agg_pivot
-#   window_lead_ntile ~ window_running_sum
-#   scalar_math ~ scalar_round
-#   ann_threshold ~ ann_cosine_topk/ann_lsh_bucketed (same cosine kernel,
-#     blocked instead of top-k)      text_fingerprint ~ dedup_exact_docs
-#     (same md5-of-normalized-text kernel, per-doc instead of grouped)
-DRIVER_SURFACE: tuple[str, ...] = (
-    # flagship
-    "window_lag_diff",
-    # LLM-data-pipeline extensions (round-1 gap: zero driver rows)
-    # round-8 rotation: text_strip_html — HTML-to-text crawl ingestion
-    # (RE2-safe tag/comment/script stripping, entity decode, whitespace
-    # normalization, byte-identical in both engines) — a markup-
-    # ingestion class nothing else on the surface represents, in place
-    # of text_stats, whose text-analysis class stays driver-green via
-    # text_langid + text_ppl_buckets (text_stats remains oracle-checked
-    # in the pytest tier)
-    "text_strip_html",
-    "text_langid",
-    # round-8 rotation (judge item 7): text_bpe_segment — the FULL
-    # learned-BPE train->apply cycle (the oracle re-trains the merge
-    # sequence in chained CTEs, then replays it over the corpus) — in
-    # place of text_tokens_bpe, whose regex pre-tokenization is now a
-    # strict subset of what the BPE pair exercises; the demoted row
-    # stays oracle-checked in the pytest tier
-    "text_bpe_segment",
-    "text_winnow_fingerprint",
-    "dedup_exact_docs",
-    # round-9 late rotation: dedup_url_history — SCD-2 interval
-    # compaction (one row per unchanged-content run, half-open
-    # versions; a history/interval class nothing else on the surface
-    # represents, and a bench HEADLINE query, so the correctness
-    # artifact and the bench now cross-check the same kernel) — in
-    # place of dedup_ngram_jaccard, whose exact-Jaccard pair class
-    # stays driver-green inside dedup_minhash (its verification stage
-    # IS exact n-gram Jaccard over the same shingle arrays);
-    # dedup_ngram_jaccard stays oracle-checked in the pytest tier
-    "dedup_url_history",
-    "dedup_minhash",
-    # round-6 rotation (judge items 1-2): the round-5 headline features —
-    # incremental LSH lookup and transitive-closure keep — surfaced in
-    # place of ann_threshold + text_fingerprint, whose siblings
-    # (ann_cosine_topk/ann_lsh_bucketed / dedup_exact_docs) keep their
-    # classes driver-green; the demoted pair stays oracle-checked in pytest
-    # round-11 rotation: cluster_kmeans — deterministic Lloyd k-means over
-    # the embedding corpus (exact quantized-integer centroid updates, two
-    # unrolled iterations replayed CTE-for-CTE by the oracle) — a NEW
-    # class (iterative model training; dedup_embedding/ann_ivf only
-    # CONSUME fixed centroid models) in place of
-    # dedup_minhash_incremental, whose LSH kernel + index-append wrapper
-    # stays driver-green via dedup_minhash + the incremental family's
-    # pytest stream==batch pins; the demoted entry stays oracle-checked
-    # in the pytest tier. Its sibling sample_cluster_balanced (the
-    # cluster-then-balance curation pick over the same trained model)
-    # starts in the pytest-oracle tier.
-    # round-12 rotation (judge item 3): cluster_kmeans_weighted — the
-    # family-size-weighted trainer (integer weights x quantized sums:
-    # arithmetic the unweighted form never executes, plus the NULL/<1
-    # weight guard) — in place of cluster_kmeans, its strict subset
-    # (weight=1 reduces the weighted update to the unweighted one);
-    # cluster_kmeans stays oracle-checked in the pytest tier, stays a
-    # bench HEADLINE query, and still anchors the stream==batch pins.
-    "cluster_kmeans_weighted",
-    "dedup_cc_keep",
-    # round-6 rotation: dedup_lines (CCNet-style corpus-level line dedup —
-    # a dedup subclass nothing else on the surface represents: line-grain
-    # first-occurrence + doc reassembly) in place of filter_zero_bound,
-    # whose §2.4 F1/F2 class stays driver-green via filter_range (the
-    # zero-bound regression itself remains pinned by the pytest oracle
-    # tier and tests/test_query.py)
-    "dedup_lines",
-    # round-7 rotation (judge items 1-2, 5, 7): five new/headline
-    # operators surface in place of five thin rows whose classes stay
-    # driver-green via surfaced siblings (each demoted entry remains
-    # oracle-checked in the pytest tier):
-    #   dedup_spans (Lee et al. 2022 exact substring-span removal — a
-    #     dedup class nothing else represents: span-grain editing)
-    #   search_bm25_indexed (inverted-index retrieval — the persistent-
-    #     artifact path; search_bm25 keeps the from-scratch class green)
-    #   text_bpe_vocab (learned BPE merge training — new class; the
-    #     regex pre-tokenizer text_tokens_bpe stays surfaced)
-    #   dedup_lines_incremental (round-6 headline incremental line
-    #     index, previously pytest-tier)
-    #   text_ppl_buckets (CCNet perplexity tertiles, previously
-    #     pytest-tier)
-    # demoted: scan_parquet (§2.1 held by scan_jsonl + pytest scan_csv/
-    #   scan_json; the row was a count-1 probe), date_sequence (§2.1 S7
-    #   held by the scalar_dates class in pytest + filter_date_window),
-    #   setop_union (§2.9 held by setop_except; union is unionByName),
-    #   join_anti (§2.5 held by join_multi/join_theta/join_asof;
-    #   semi/anti stay pinned in pytest), agg_distinct (§2.6 A2 held by
-    #   agg_groupby + agg_hll_distinct's distinct-count class)
-    # round-8 rotation: dedup_spans_raw — the offset-preserving form
-    # (identical keep-first k-gram coverage PLUS raw-text offsets and
-    # byte-exact excision, closing round-7 "What's missing #1") — in
-    # place of dedup_spans, whose normalized-stream semantics it
-    # strictly contains; dedup_spans and the exploded-offsets variant
-    # stay oracle-checked in the pytest tier
-    "dedup_spans_raw",
-    "search_bm25_indexed",
-    # round-10 rotation (judge item 1): the five round-9 classes with no
-    # surfaced representative promote in place of five held near-
-    # duplicates (every demoted entry stays oracle-checked in the pytest
-    # tier):
-    #   dedup_edit_verified (record-linkage near-dup: blocked candidate
-    #     pairs + length-gap-prefiltered Levenshtein verify — the
-    #     character-level verifier class; shingle-Jaccard verification
-    #     stays driver-green inside dedup_minhash)
-    #   ann_lsh_multiprobe_rerank (two-stage ANN: LSH multiprobe
-    #     shortlist on the Matryoshka prefix + exact re-rank)
-    #   text_pr_curve (precision-recall sweep over distinct quantized
-    #     thresholds — the in-engine evaluation class)
-    # demoted: text_bpe_vocab (strict subset of text_bpe_segment, whose
-    #   oracle re-trains the SAME merge sequence before replaying it),
-    #   dedup_lines_incremental (incremental-index class stays driver-
-    #   green via dedup_minhash_incremental; line-dedup via dedup_lines),
-    #   dedup_url_latest (SCD-1 keep-latest class carried by
-    #   dedup_url_history — its compaction is keep-latest plus the run
-    #   history), filter_rlike (§2.4 F3 pattern
-    #   filter stays pytest-oracled; the filter family stays driver-green
-    #   via filter_range + filter_date_window)
-    "dedup_edit_verified",
-    # round-14 rotation (judge item 6, the ANN-evaluation rotation debt):
-    # ann_recall_lsh — per-query recall@k of the LSH index against exact
-    # brute-force cosine, the index-health monitoring query a deployed
-    # ANN system runs every maintenance cycle — gets the ANN-EVALUATION
-    # class its first driver row (the kernels have been driver-green for
-    # rounds; their evaluation never was) — in place of
-    # ann_lsh_multiprobe_rerank, whose two-stage shortlist+exact-rerank
-    # class stays driver-green via ann_ivfpq_rerank (the same
-    # shortlist-then-rerank architecture over the PQ representation) and
-    # whose LSH banding stays driver-green inside ann_recall_lsh's own
-    # approximate arm; ann_lsh_multiprobe_rerank stays oracle-checked in
-    # the pytest tier with its plan shape pinned in test_plans.py
-    "ann_recall_lsh",
-    "text_pr_curve",
-    # round-14 rotation (judge item 2): cluster_boundary — the per-cell
-    # boundary-mass churn-risk report — gives the MODEL-QUALITY class
-    # (the two-nearest projection that silhouette and boundary
-    # both ride, clustering.py::two_nearest_distances) its
-    # first driver row; the round-13 newcomers had only ever run under
-    # the identical pytest-oracle gate — in place of text_ppl_buckets,
-    # whose perplexity-bucket quality-scoring class stays driver-green
-    # via the text tier's surfaced siblings (text_langid's n-gram
-    # scoring kernel + text_pr_curve's threshold-sweep evaluation over
-    # the same quantized scores); text_ppl_buckets stays oracle-checked
-    # in the pytest tier.
-    "cluster_boundary",
-    # round-10 late rotation: dedup_decontam_near — near-duplicate
-    # BENCHMARK decontamination (asymmetric corpus-bands x eval-bands
-    # join, mixed-parity-pairs oracle), giving the contamination/
-    # decontamination class its FIRST driver row (contamination_bloom
-    # and decontam_spans have always been pytest-tier) — in place of
-    # dedup_simhash, whose banded near-dup-pair class stays
-    # driver-green via dedup_minhash (same blocking architecture,
-    # Jaccard-banded instead of Hamming-banded); dedup_simhash stays
-    # oracle-checked in the pytest tier.
-    # round-11 rotation: dedup_contamination_report — the per-benchmark
-    # contamination AUDIT over the whole ladder (exact fingerprint +
-    # leaked-span + LSH-verified-near counts and rates per benchmark,
-    # zero rows for clean benchmarks; the dataset-card artifact) — in
-    # place of dedup_decontam_near, whose near tier the report runs
-    # VERBATIM (same asymmetric band join + exact-Jaccard verify,
-    # grouped instead of anti-joined) while ALSO driver-checking the
-    # exact and spans tiers per benchmark for the first time;
-    # dedup_decontam_near stays oracle-checked in the pytest tier
-    "dedup_contamination_report",
-    "dedup_embedding",
-    "ann_cosine_topk",
-    # round-6 rotation: ann_pq_topk (compressed-domain ADC search — the
-    # scan representation a 100 TB embedding store keeps; no surfaced
-    # sibling covers product quantization) in place of window_running_sum
-    # (§2.7 W4, held driver-green by the flagship window_lag_diff +
-    # window_percent_rank + window_range_frame); sample_dsir (DSIR
-    # importance-weighted data selection — a NEW selection class) in
-    # place of scalar_dates (§2.10 held by scalar_round +
-    # json_parse_typed); both demoted entries stay oracle-checked in the
-    # pytest tier. Later in round 6 the composite ann_ivfpq_topk
-    # (inverted-list pruning OVER the PQ codes — a strict superset of the
-    # pure-PQ machinery) took the PQ slot; ann_pq_topk stays
-    # oracle-checked in the pytest tier. Round-8 rotation: the slot goes
-    # to ann_ivfpq_rerank — the production two-stage pipeline (the SAME
-    # ADC scan, replayed CTE-for-CTE by the oracle, plus the exact
-    # shortlist re-rank that recovers the recall the codes lose) — a
-    # strict superset of ann_ivfpq_topk, which stays pytest-oracled
-    "ann_ivfpq_rerank",
-    "sample_dsir",
-    # round-6 rotation: search_bm25 is a NEW class (lexical retrieval —
-    # no surfaced sibling exists) surfaced in place of scalar_strings,
-    # whose §2.10 scalar class stays driver-green via scalar_round +
-    # json_parse_typed; the demoted entry stays oracle-checked in pytest.
-    # round-10 late rotation: sample_split_leakage_safe — split-
-    # integrity under near-duplication (component-keyed train/val/test
-    # assignment; the oracle replays full-corpus LSH + the recursive
-    # transitive closure + the md5 bucket CASE over the coalesced
-    # group), a NEW selection class nothing on the surface represents —
-    # in place of search_bm25, whose lexical-retrieval class stays
-    # driver-green via search_bm25_indexed (the oracle-fused BUILD +
-    # query superset); search_bm25 stays oracle-checked in the pytest
-    # tier with its zero-shuffle plan shape still pinned in
-    # test_plans.py
-    "sample_split_leakage_safe",
-    # round-6 rotation: the new training-data-prep operators (PII
-    # redaction, context-window chunking, greedy sequence packing with a
-    # recursive-CTE oracle) surfaced in place of ann_ivf (ANN class held
-    # driver-green by ann_cosine_topk + ann_lsh_bucketed), agg_pivot (A4
-    # held by agg_rollup, same as the already-demoted cube/grouping-sets);
-    # both demoted entries stay oracle-checked in pytest
-    "text_pii_redact",
-    "text_chunk",
-    "pack_sequences",
-    # round-9 rotation (judge item 7): the round-8 crawl-compaction
-    # headliners surface in place of held rows (each demoted entry stays
-    # oracle-checked in the pytest tier):
-    #   dedup_url_latest (keep_latest snapshot compaction — the SCD-1 /
-    #     crawl-recrawl primitive; max_by aggregate, no window/join-back)
-    #   dedup_snapshot_diff (corpus snapshot diff: added/removed/changed
-    #     by content fingerprint — the nightly incremental-ingest input)
-    # demoted: scan_jsonl (§2.1 scans stay pinned by the pytest quartet
-    #   scan_csv/scan_json/scan_jsonl/scan_parquet — the row was a
-    #   count-N probe), json_parse_typed (§2.10 held by scalar_round; the
-    #   JSON pair json_extract/json_parse_typed stays pytest-oracled)
-    "dedup_snapshot_diff",
-    # EPSS domain layer. epss_new_keys, epss_reconstruct_dense,
-    # epss_top_movers and epss_summary took the four slots the
-    # events-analytics family held before it was removed;
-    # epss_volume_stats took the slot the multimodal family held.
-    "epss_quantize_daily",
-    "epss_current_scores",
-    "epss_new_keys",
-    "epss_reconstruct_dense",
-    "epss_top_movers",
-    "epss_summary",
-    "epss_volume_stats",
-    # relational core
-    "project_select",
-    "filter_range",
-    "filter_date_window",
-    "join_multi",
-    "join_theta",
-    # round-11 late rotation (rotation-debt item): join_asof_tolerance —
-    # the merge_asof variant with a max-staleness bound (the form a
-    # feature-store join actually runs) — in for its sibling join_asof,
-    # driver-green since round 5, which keeps the as-of class covered in
-    # the pytest tier. This retires the last never-driver-green entry in
-    # the joins family.
-    "join_asof_tolerance",
-    "agg_groupby",
-    "agg_rollup",
-    # round-8 rotation: agg_qdigest_quantiles — the only sketch class
-    # not on the surface (mergeable rank/quantile over daily sketch
-    # tables; integer-exact, so bit-reproducible cross-engine) — in
-    # place of window_percent_rank, whose §2.7 window class stays
-    # driver-green via the flagship window_lag_diff + window_range_frame
-    # (and W4 stays pinned in the pytest tier)
-    "agg_qdigest_quantiles",
-    "window_range_frame",
-    # round-13 rotation (judge item 2, the oldest rotation debt): the
-    # SCD-2 QUERY layer gets its first driver row — dedup_url_asof
-    # (point-in-time reconstruction over the driver-green
-    # dedup_url_history build: the half-open interval containment read,
-    # a consumer-side class no surfaced row represented since the layer
-    # landed in round 9) — in place of sort_multi, whose §2.8
-    # composite-sort class stays driver-green via window_lag_diff's
-    # canonical ordering + topk's TakeOrderedAndProject; sort_multi
-    # stays oracle-checked in the pytest tier.
-    "dedup_url_asof",
-    "topk",
-    "setop_except",
-    # round-6 rotation: agg_hll_distinct (engine-portable HyperLogLog —
-    # an approximate-aggregate/sketch class nothing else on the surface
-    # represents, and unusually for a sketch it is bit-exact
-    # oracle-checkable) in place of dedup_exact, whose §2.9 U3 exact-dedup
-    # class stays driver-green via dedup_exact_docs (the same
-    # keep-one-per-duplicate-group primitive on the documents table);
-    # dedup_exact stays oracle-checked in the pytest tier
-    "agg_hll_distinct",
-    "scalar_round",
-    "sql_single",
-)
-
-# Rotation-debt inventory (kept honest per round-10 judge item 7): registry
-# entries that have NEVER held a driver row — i.e. never executed by the
-# independent driver harness, only by the identical pytest-oracle gate.
-# None introduces a new class (each names the surfaced sibling holding its
-# class driver-green):
-#   text_pmi_bigrams / text_freq_spectrum  (corpus-analysis class held by
-#     text_pr_curve + text_langid)
-#   ann_pair_histogram  (ANN-evaluation class; gained its first driver
-#     row in the round-14 rotation via ann_recall_lsh — the remaining
-#     entry is the pair-cosine distribution report over the same exact
-#     kernel)
-#   (ann_recall_lsh cleared from this list by the round-14 rotation
-#     above — it now holds the ANN-evaluation driver slot;
-#     ann_lsh_multiprobe_rerank, driver-green rounds 10-13, moved to
-#     the pytest tier)
-#   dedup_history_lookup / dedup_url_history_delta
-#     (SCD-2 query layer; their class gained its first driver row in the
-#     round-13 rotation via dedup_url_asof — the remaining two are the
-#     per-probe containment join and the changed-interval filter over
-#     the same compacted build)
-#   (dedup_url_asof cleared from this list by the round-13 rotation
-#     above — it now holds the SCD-2 query-layer driver slot; sort_multi,
-#     driver-green rounds 1-12, moved to the pytest tier)
-#   (join_asof_tolerance cleared from this list by the round-11 late
-#     rotation above — it now holds the as-of driver slot; join_asof,
-#     driver-green rounds 5-10, moved to the pytest tier)
-#   sample_cluster_balanced / cluster_purity / cluster_ff_init /
-#   cluster_outliers / cluster_drift / cluster_kmeans_sampled /
-#   cluster_top_terms / cluster_elbow / embedding_dim_drift /
-#   cluster_silhouette
-#     (round-11/12 newcomers; the clustering TRAINER class is held
-#     driver-green by cluster_kmeans_weighted, and as of the round-14
-#     rotation the MODEL-QUALITY class — the two-nearest projection
-#     silhouette/boundary both ride — is held driver-green
-#     by cluster_boundary, under which cluster_silhouette (same
-#     projection, same quantized-mean fold, one fewer column of
-#     arithmetic) ages as a documented near-sibling.
-#     cluster_kmeans_weighted itself cleared this list in the round-12
-#     rotation; cluster_kmeans was driver-green rounds 11-11 and moved
-#     to the pytest tier in the same swap.)
-#   (cluster_boundary cleared from this list by the round-14 rotation
-#     above — it now holds the model-quality driver slot;
-#     text_ppl_buckets, driver-green rounds 7-13, moved to the pytest
-#     tier)
-#   cluster_kmpp_init  (round-14 newcomer — k-means|| oversampled
-#     seeding; the clustering trainer/quality classes are held
-#     driver-green by cluster_kmeans_weighted + cluster_boundary, and
-#     the init family by cluster_kmeans_weighted's fixed-id seed chain;
-#     its sampling-round kernel is the same md5-coin + quantized-BIGINT
-#     machinery the surfaced trainers exercise)
-#   dedup_decontam_semantic  (round-14 newcomer — the editing half of
-#     the semantic contamination rung; its DETECTION kernel runs
-#     driver-green INSIDE dedup_contamination_report, whose surfaced
-#     oracle now replays the same cell-confined cosine CTEs — only the
-#     final anti-join is unique to this entry)
-#   dedup_semantic_incremental  (round-14 newcomer — the embedding-space
-#     incremental index; its cell-confined cosine kernel is driver-green
-#     via dedup_embedding + dedup_contamination_report's semantic tier,
-#     and the incremental index-append architecture is pinned by the
-#     same pytest contracts as the demoted lexical sibling
-#     dedup_minhash_incremental)
-# Everything else off-surface HAS been driver-green in some round and was
-# demoted in a documented swap above.
 
 
 def register(name: str, sql: str | None = None):
@@ -401,33 +44,16 @@ def load_all() -> None:
         return
     import epss_spark.queries_core  # noqa: F401
     import epss_spark.queries_domain  # noqa: F401
-    import epss_spark.queries_ext  # noqa: F401
 
     _LOADED = True
 
 
 def get_queries():
-    """The driver-facing surface: exactly the DRIVER_SURFACE queries, in
-    that order (the driver's CORRECTNESS artifact caps at 50 entries taken
-    in dict order)."""
-    load_all()
-    missing = [n for n in DRIVER_SURFACE if n not in QUERIES]
-    if missing:  # fail loudly in CI rather than silently shrink the surface
-        raise KeyError(f"DRIVER_SURFACE names not registered: {missing}")
-    return {n: QUERIES[n] for n in DRIVER_SURFACE}
-
-
-def get_oracles():
-    load_all()
-    return {n: ORACLES[n] for n in DRIVER_SURFACE if n in ORACLES}
-
-
-def get_all_queries():
-    """Every registered query, surfaced or not (pytest + tools use this)."""
+    """Every registered query, in registration order."""
     load_all()
     return dict(QUERIES)
 
 
-def get_all_oracles():
+def get_oracles():
     load_all()
     return dict(ORACLES)

@@ -1,9 +1,8 @@
-"""Fixed schemas. The reference enforces a 4-column canonical score table by
-a hard select (reference: epss/client.py:264); we declare it as an explicit
-StructType and never rely on inference in production paths.
+"""Fixed schemas. The raw daily snapshot is read with an explicit StructType
+(the date comes from the file name), never by inference in production paths.
 
 Testdata table schemas mirror the parquet footers in /root/testdata (see
-FIXTURES.md §2); they are used when re-reading CSV/JSON copies so scans come
+FIXTURES.md §2); they are used when re-reading CSV/JSONL copies so scans come
 back with identical types.
 """
 
@@ -11,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    DateType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -20,16 +18,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
-)
-
-# Canonical EPSS score table (reference: epss/client.py:264, constants.py:33-36)
-SCORES_SCHEMA = StructType(
-    [
-        StructField("date", DateType(), False),
-        StructField("cve", StringType(), False),
-        StructField("epss", DoubleType(), True),
-        StructField("percentile", DoubleType(), True),
-    ]
 )
 
 # Raw daily snapshot as published upstream: date is NOT stored in the file —

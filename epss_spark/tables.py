@@ -56,10 +56,3 @@ def load_events_file(spark: SparkSession, path: str, time_col: str = "ts") -> Da
         elif isinstance(dt, TimestampNTZType):
             df = df.withColumn(time_col, F.col(time_col).cast("timestamp"))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register testdata tables as temp views for the SQL surface
-    (reference: epss/util.py:55-66 — register + execute SQL)."""
-    for name in names or TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,19 +1,20 @@
-"""Export quantized scores to a workbook-style artifact (reference:
-examples/get-excel-workbook-of-changed-epss-scores.py). This environment
-has no Excel writer, so the same bounded result goes to CSV + JSON; with
-openpyxl installed, epss_spark.sources.sinks.write_excel works unchanged."""
+"""Export quantized scores to an Excel workbook (reference:
+examples/get-excel-workbook-of-changed-epss-scores.py). `write_file` picks
+the writer by extension; `write_excel` uses pandas' Excel engine when one is
+installed and a stdlib OOXML writer otherwise, so this needs no extra
+package."""
 
 import os
 
 from _common import SCORES_PATH, demo_client
 
-from epss_spark.sources.sinks import write_any, write_json_array
+from epss_spark.sources.sinks import write_file
 
 client = demo_client()
 df = client.get_changed_scores(min_date="2023-03-08", max_date="2023-03-14")
 
 out_dir = os.path.join(os.path.dirname(SCORES_PATH), "exports")
 os.makedirs(out_dir, exist_ok=True)
-write_any(df, os.path.join(out_dir, "changed_scores.csv"))
-write_json_array(df, os.path.join(out_dir, "changed_scores.json"))
-print("wrote", out_dir)
+path = os.path.join(out_dir, "changed_scores.xlsx")
+write_file(df, path)
+print("wrote", path)

@@ -22,8 +22,8 @@ FAST_PARITY = [
     "agg_groupby",
     "join_multi",
     "window_range_frame",
-    "dedup_exact_docs",
-    "ann_cosine_topk",
+    "epss_current_scores",
+    "join_asof",
     "epss_quantize_daily",
     "epss_new_keys",
     "epss_reconstruct_dense",

@@ -38,14 +38,11 @@ CLOSURE = {
 }
 
 EXTENSIONS = [
-    *(
-        f"epss_spark.operators.{m}"
-        for m in (
-            "dedup", "similarity", "text", "clustering", "selection",
-            "sketches", "retrieval", "prep", "layout",
-        )
-    ),
-    "epss_spark.queries_ext",
+    f"epss_spark.operators.{m}"
+    for m in (
+        "dedup", "similarity", "text", "clustering", "selection",
+        "sketches", "retrieval", "prep", "layout",
+    )
 ]
 
 LOAD = """
@@ -184,16 +181,15 @@ def _list_literal(rel: str, var: str) -> list[str]:
 
 def test_query_name_lists_are_registered():
     """The hand-kept query-name lists must name registered queries only,
-    so deleting a query cannot leave a name that fails late (GENERATED,
-    in the slow tier) or never (bench.py's HEADLINE)."""
+    so deleting a query cannot leave a name that fails late or never
+    (bench.py's HEADLINE)."""
     registered = _registered_names()
-    assert len(registered) > 100
+    assert len(registered) == 50
     dangling = [
         f"{rel}::{var}: {name}"
         for rel, var in (
             ("bench.py", "HEADLINE"),
             ("tests/test_entry.py", "FAST_PARITY"),
-            ("tests/test_determinism.py", "GENERATED"),
         )
         for name in _list_literal(rel, var)
         if name not in registered

@@ -1,13 +1,11 @@
-"""Property-based checks (SURVEY §5.3, hypothesis): quantization laws that
-must hold for ANY score history, not just the golden fixtures.
+"""Property-based checks (SURVEY §5.3, hypothesis) for the extension
+operators: laws that must hold for ANY input, not just the golden fixtures.
 
 Spark sessions are expensive, so hypothesis drives data generation and a
 single session evaluates each example; max_examples kept small.
 """
 
 from __future__ import annotations
-
-import datetime as dt
 
 import pytest
 # Full-gate tier: this whole module is heavyweight (hypothesis fuzzing, ~4 min).
@@ -18,85 +16,11 @@ pytestmark = pytest.mark.slow
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from epss_spark.operators.quantize import changed_scores, densify
-from epss_spark.plans.query import Query, apply_query
-
-D = dt.date(2024, 1, 1)
-
-# a history: per key, a list of daily values (possibly with gaps = None)
-histories = st.dictionaries(
-    keys=st.sampled_from([f"CVE-{i}" for i in range(6)]),
-    values=st.lists(
-        st.one_of(st.none(), st.sampled_from([0.0, 0.1, 0.25, 0.5, 0.9])),
-        min_size=1,
-        max_size=8,
-    ),
-    min_size=1,
-    max_size=6,
-)
-
-
-def _to_rows(hist):
-    rows = []
-    for cve, vals in hist.items():
-        for day, v in enumerate(vals):
-            if v is not None:
-                rows.append((D + dt.timedelta(days=day), cve, float(v)))
-    return rows
-
-
 _settings = settings(
     max_examples=15,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-
-
-@given(hist=histories)
-@_settings
-def test_quantize_then_densify_reconstructs(spark, hist):
-    rows = _to_rows(hist)
-    if not rows:
-        return
-    dense = spark.createDataFrame(rows, "date date, cve string, epss double")
-    q = changed_scores(dense).select("date", "cve", "epss")
-    all_dates = dense.select("date").distinct()
-    back = densify(q, all_dates)
-    got = {(r.date, r.cve): r.epss for r in back.collect()}
-    # every original observation is reconstructed exactly (forward-fill can
-    # also fill gap days — those are supersets, not errors)
-    for d, cve, v in rows:
-        assert got.get((d, cve)) == v, (d, cve, v, got.get((d, cve)))
-
-
-@given(hist=histories)
-@_settings
-def test_quantize_never_grows_and_keeps_first(spark, hist):
-    rows = _to_rows(hist)
-    if not rows:
-        return
-    dense = spark.createDataFrame(rows, "date date, cve string, epss double")
-    q = changed_scores(dense)
-    assert q.count() <= dense.count()
-    assert q.select("cve").distinct().count() == dense.select("cve").distinct().count()
-
-
-@given(hist=histories, lo=st.sampled_from([0.0, 0.2, 0.5]))
-@_settings
-def test_key_filter_commutes_with_quantization(spark, hist, lo):
-    """Filtering on the KEY commutes with quantization (value filters do
-    not — that asymmetry is the point of quantize-then-filter ordering)."""
-    rows = _to_rows(hist)
-    if not rows:
-        return
-    keep = {k for k in hist if hash(k) % 2 == 0}
-    dense = spark.createDataFrame(rows, "date date, cve string, epss double")
-    q_then_f = changed_scores(dense).filter(dense.cve.isin(*keep) if keep else dense.cve.isNull())
-    f_then_q = changed_scores(dense.filter(dense.cve.isin(*keep) if keep else dense.cve.isNull()))
-    a = {(r.date, r.cve, r.epss) for r in q_then_f.collect()}
-    b = {(r.date, r.cve, r.epss) for r in f_then_q.collect()}
-    assert a == b
-
 
 vectors = st.lists(
     st.lists(
@@ -172,16 +96,6 @@ def test_repetition_fractions_well_formed(spark, texts):
         # any repeated top bigram contributes all its occurrences to dup
         if r.top_bigram_frac * r.n_bigrams >= 2:
             assert r.dup_bigram_frac >= r.top_bigram_frac
-
-
-def test_zero_bound_query_on_quantized(spark):
-    """Query with 0.0 bounds composes with quantization (regression for the
-    truthiness divergence at the composite level)."""
-    rows = [(D, "CVE-0", 0.0), (D + dt.timedelta(days=1), "CVE-0", 0.5), (D, "CVE-1", 0.2)]
-    dense = spark.createDataFrame(rows, "date date, cve string, epss double")
-    out = apply_query(changed_scores(dense), Query(min_value=0.0, max_value=0.2, value_col="epss"))
-    got = {(r.cve, r.epss) for r in out.collect()}
-    assert got == {("CVE-0", 0.0), ("CVE-1", 0.2)}
 
 
 # --- prep operator laws (operators/prep.py) --------------------------------

@@ -51,33 +51,6 @@ def test_top_movers_rank_bounds(spark):
     assert tm.filter(F.col("delta") == 0).count() == 0
 
 
-def test_dedup_embedding_keeps_lower_id(spark):
-    out = qd.dedup_embedding(spark, SF)
-    assert out.filter(F.col("keep_id") >= F.col("dup_id")).count() == 0
-    # a kept canonical is never itself listed as a duplicate of something
-    # with an id >= it (keep_id is the minimum similar neighbor)
-    assert out.select("dup_id").distinct().count() == out.count()
-
-
-def test_documents_text_is_ascii(spark):
-    """Pins the text oracles' assumption: the shared normalization
-    (operators/text.py::normalize, `_NORM_SQL` on the DuckDB side) lowers
-    before stripping non-alphanumerics, and the two engines lower only
-    ASCII identically (Spark lowers U+0130 to 'i' + U+0307 and a
-    word-final capital sigma to U+03C2; DuckDB does neither), so
-    text_fingerprint, dedup_exact_docs and every other normalize-based
-    oracle match only on ASCII text. If the testdata documents ever gain
-    non-ASCII content, this fails loudly instead of the oracles drifting
-    silently."""
-    from epss_spark.queries_core import T
-
-    docs = T(spark, SF, "documents")
-    non_ascii = docs.filter(
-        F.octet_length(F.col("text")) != F.length(F.col("text"))
-    ).count()
-    assert non_ascii == 0
-
-
 def test_ivf_full_probe_equals_brute_force(spark):
     """IVF with n_probe == n_lists degrades to exact search — the built-in
     parity oracle for the approximate path (every candidate is in exactly

@@ -83,7 +83,7 @@ def main():
     only = set(sys.argv[2:])
     spark = get_spark("oracle-check")
     con = duck_con(sf_dir)
-    queries, oracles = registry.get_all_queries(), registry.get_all_oracles()
+    queries, oracles = registry.get_queries(), registry.get_oracles()
     failed = []
     for name, fn in queries.items():
         if only and name not in only:

@@ -1,8 +1,8 @@
-"""Generate PLANS.json: the physical-plan shape of every driver-surface
+"""Generate PLANS.json: the physical-plan shape of every registered
 query at sf0.001 — hash/range exchange counts, broadcast count, top-k
 operator, and Python-crossing flags.
 
-tests/test_plan_inventory.py compares the live plans against the
+tests/test_plans.py::test_plan_inventory_matches_checked_in compares the live plans against the
 checked-in file, so ANY plan-affecting change (a lost pushdown, an extra
 shuffle, a Python UDF creeping into a relational path) fails CI and has
 to be consciously re-recorded here:
