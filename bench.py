@@ -272,7 +272,6 @@ def main() -> None:
         s = time.perf_counter() - t0
         epss_full_sec = s if epss_full_sec is None else min(epss_full_sec, s)
     epss_rows = n_days * n_cves
-    client.unpersist()
 
     # The engine's recommended REPEATED-quantization layout: cve-bucketed,
     # (cve, date)-sorted table. Bucketing satisfies the window's clustering

@@ -87,7 +87,6 @@ class EPSSClient:
         self.table = table
         self.version = version
         self.max_date_resolver = max_date_resolver
-        self._persisted: DataFrame | None = None
         self._frame: DataFrame | None = None  # the reused scores_path scan
         self._days = None  # its `date=` directories (a JVM set)
         self._hadoop: tuple | None = None  # JVM handles of _list_days
@@ -97,9 +96,6 @@ class EPSSClient:
             return self.spark.table(self.table)
         days = self._list_days()
         if self._frame is None or not days.equals(self._days):
-            # also drops the persisted frame: a query over the new scan
-            # would otherwise match its plan and be served the old rows
-            self.refresh()
             self._frame = self.spark.read.parquet(self.scores_path)
             self._days = days
         return self._frame
@@ -137,11 +133,9 @@ class EPSSClient:
         sign bug — divergence pinned in tests/test_client.py).
 
         ``sort=False`` skips the canonical console ordering (date asc, cve
-        desc): callers writing a partitioned dataset don't want a global
-        range-sort exchange, and the reference's own quantization benchmark
-        (NOTES.md:39) measures load + diff only. The unsorted path also
-        needs no intermediate persist (that exists solely so the sort's
-        range-partitioner sampling pass doesn't re-execute the window)."""
+        desc): callers writing a partitioned dataset don't want the result
+        gathered into one sorted partition, and the reference's own
+        quantization benchmark (NOTES.md:39) measures load + diff only."""
         lo, hi = get_date_range(self.version, min_date, max_date, self.max_date_resolver)
         df = self._scan()
         if query is not None:
@@ -158,38 +152,31 @@ class EPSSClient:
             out = out.drop("delta")
         else:
             out = df.filter((F.col("date") >= F.lit(lo)) & (F.col("date") <= F.lit(hi)))
+        # canonical column order (reference: epss/client.py:264)
         out = out.select("date", "cve", "epss", "percentile")
         if not sort:
             return out
+        # canonical sort: date asc, cve desc (reference: epss/client.py:235-236)
+        order = (F.col("date").asc(), F.col("cve").desc())
         if drop_unchanged:
-            # The global sort below range-partitions, and its sampling pass
-            # would re-execute the whole scan+window pipeline a second time.
-            # The quantized result is ~100x smaller than the input
-            # (reference NOTES.md:38) — persist it so sampling and the sort
-            # read the materialized change events, not the raw matrix.
-            # One persisted frame is held per client (intra-query reuse, not
-            # a cross-call cache): the previous one is released here so a
-            # long-lived session doesn't accumulate stale cached plans.
-            self.unpersist()
-            out = out.persist()
-            self._persisted = out
-        # canonical column order (reference: epss/client.py:264) + canonical
-        # sort: date asc, cve desc (reference: epss/client.py:235-236)
-        return out.orderBy(F.col("date").asc(), F.col("cve").desc())
+            # The change events are ~1% of the dense rows (reference
+            # NOTES.md:38): sort them in one partition, which skips the
+            # range-partitioner's sampling job (a second run of the window).
+            # repartition, not coalesce: coalesce(1) would narrow the window
+            # stage itself to one task.
+            return out.repartition(1).sortWithinPartitions(*order)
+        # dense rows are unbounded (the whole matrix at paper scale): range-sort them
+        return out.orderBy(*order)
 
     def unpersist(self) -> None:
-        """Release the cached quantized frame from the last drop_unchanged
-        query (safe to call any time; results already computed stay valid,
-        later recomputation just loses the cache)."""
-        if self._persisted is not None:
-            self._persisted.unpersist()
-            self._persisted = None
+        """No-op, kept for callers written when the client cached the
+        quantized frame of a sorted `get_changed_scores`; it holds no
+        cached frame now."""
 
     def refresh(self) -> None:
-        """Drop the reused scan and release the persisted frame; the next
-        query lists `scores_path` afresh. Needed after a day is rewritten
-        in place, which the per-query directory check cannot see."""
-        self.unpersist()
+        """Drop the reused scan; the next query lists `scores_path` afresh.
+        Needed after a day is rewritten in place, which the per-query
+        directory check cannot see."""
         self._frame = None
 
     def close(self) -> None:
@@ -197,13 +184,17 @@ class EPSSClient:
 
     def get_scores_by_date(self, date: TIME, query: Query | None = None) -> DataFrame:
         """Single-snapshot path (reference: epss/client.py:239-268): one
-        pruned partition read + predicate stack + canonical order."""
+        pruned partition read + predicate stack + canonical order. One day
+        is small (~220k rows at production size), so it is sorted in one
+        partition: a single job, with no range-partitioner sampling pass."""
         d = parse_date(date)
         out = self._scan().filter(F.col("date") == F.lit(d))
         if query is not None:
             out = apply_query(out, query)
-        return out.select("date", "cve", "epss", "percentile").orderBy(
-            F.col("cve").desc(), F.col("date").asc()
+        return (
+            out.select("date", "cve", "epss", "percentile")
+            .coalesce(1)
+            .sortWithinPartitions(F.col("cve").desc(), F.col("date").asc())
         )
 
     def get_changed_scores(

@@ -156,9 +156,14 @@ def render_console(
     if n is None and not full:
         n = DEFAULT_CONSOLE_ROWS
     if fmt == "table":
-        # full=True needs the exact row count for show(); that is one extra
-        # job, paid only on explicit opt-in
-        df.show(n=n if n is not None else df.count(), truncate=False)
+        if n is None:
+            # full=True: show() needs the row count up front. Collect once
+            # and show those rows from a local relation (it runs no job),
+            # so the query is not executed a second time for a count.
+            rows = df._jdf.collectAsList()
+            local = df.sparkSession._jsparkSession.createDataFrame(rows, df._jdf.schema())
+            df, n = DataFrame(local, df.sparkSession), rows.size()
+        df.show(n=n, truncate=False)
         return
     rows = [r.asDict(recursive=True) for r in (df.limit(n) if n else df).collect()]
     if fmt == "json":

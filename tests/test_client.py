@@ -61,18 +61,41 @@ def test_get_changed_scores_first_day_semantics(spark, scores_path):
     assert got == {(D(2023, 3, 9), "CVE-X"), (D(2023, 3, 11), "CVE-X")}
 
 
-def scan_metric(node, name: str) -> int:
-    """Sum of the file-scan metric `name` (e.g. numPartitions, numFiles)
-    over an executed plan, following adaptive query stages."""
+def plan_nodes(node):
+    """Every node of a physical plan, following adaptive query stages (the
+    final plan once the query has run)."""
     cls = node.getClass().getSimpleName()
     if cls == "AdaptiveSparkPlanExec":
-        return scan_metric(node.executedPlan(), name)
+        yield from plan_nodes(node.executedPlan())
+        return
     if cls.endswith("QueryStageExec"):
-        return scan_metric(node.plan(), name)
-    if cls == "FileSourceScanExec":
-        return int(node.metrics().apply(name).value())
+        yield from plan_nodes(node.plan())
+        return
+    yield node
     children = node.children()
-    return sum(scan_metric(children.apply(i), name) for i in range(children.size()))
+    for i in range(children.size()):
+        yield from plan_nodes(children.apply(i))
+
+
+def exchanges(df) -> list[str]:
+    """The output partitioning of each shuffle exchange in `df`'s executed
+    plan, e.g. `hashpartitioning(cve#3, 200)` or `SinglePartition`."""
+    plan = df._jdf.queryExecution().executedPlan()
+    return [
+        n.outputPartitioning().toString()
+        for n in plan_nodes(plan)
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+    ]
+
+
+def scan_metric(plan, name: str) -> int:
+    """Sum of the file-scan metric `name` (e.g. numPartitions, numFiles)
+    over an executed plan."""
+    return sum(
+        int(n.metrics().apply(name).value())
+        for n in plan_nodes(plan)
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+    )
 
 
 def test_get_scores_by_date_partition_pruning(spark, scores_path):
@@ -85,6 +108,61 @@ def test_get_scores_by_date_partition_pruning(spark, scores_path):
     day_files = [f for f in os.listdir(os.path.join(scores_path, "date=2023-03-09")) if f.endswith(".parquet")]
     assert scan_metric(plan, "numPartitions") == 1
     assert scan_metric(plan, "numFiles") == len(day_files)
+
+
+@pytest.fixture(scope="module")
+def multi_file_scores(spark, tmp_path_factory):
+    """6 days x 40 CVEs written with three files per day, so a sorted
+    result must order rows across several input partitions. Each CVE
+    changes score on some days and not on others."""
+    root = str(tmp_path_factory.mktemp("multi") / "scores")
+    rows = [
+        (D(2023, 3, 7) + dt.timedelta(days=d), f"CVE-2023-{c:04d}", ((c * 7 + d * (c % 3)) % 10) / 10, 0.5)
+        for d in range(6)
+        for c in range(40)
+    ]
+    df = spark.createDataFrame(rows, "date date, cve string, epss double, percentile double")
+    df.repartition(3).write.partitionBy("date").parquet(root)
+    day = os.path.join(root, "date=2023-03-09")
+    assert len([f for f in os.listdir(day) if f.endswith(".parquet")]) == 3
+    return root
+
+
+def canonical(rows):
+    """`rows` in the canonical order: date asc, then cve desc."""
+    return sorted(sorted(rows, key=lambda r: r.cve, reverse=True), key=lambda r: r.date)
+
+
+def test_get_scores_by_date_one_job_sort(spark, multi_file_scores):
+    """One day is sorted in a single partition: no exchange, and so no
+    range-partitioner sampling job, yet a total order over all the day's
+    files."""
+    client = EPSSClient(spark, multi_file_scores)
+    df = client.get_scores_by_date(D(2023, 3, 9))
+    got = df.collect()
+    assert len(got) == 40 and got == canonical(got)
+    assert exchanges(df) == []
+    rows, n = jobs_launched(spark, lambda: client.get_scores_by_date(D(2023, 3, 10)).collect())
+    assert n == 1 and len(rows) == 40 and rows == canonical(rows)
+    client.close()
+
+
+def test_get_changed_scores_sorted_plan(spark, multi_file_scores):
+    """The change events are sorted in one partition after the window: one
+    hash exchange for the window, one single-partition exchange for the
+    sort, no range exchange and no cached frame."""
+    client = EPSSClient(spark, multi_file_scores, max_date_resolver=lambda: D(2023, 3, 12))
+    df = client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 12))
+    got = df.collect()
+    unsorted = client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 12), sort=False).collect()
+    assert 0 < len(got) < 200 and got == canonical(unsorted)
+    parts = exchanges(df)
+    assert not any(p.startswith("rangepartitioning") for p in parts), parts
+    assert sum(p.startswith("hashpartitioning") for p in parts) == 1, parts
+    assert parts.count("SinglePartition") == 1, parts
+    plan = df._jdf.queryExecution().executedPlan()
+    assert "InMemoryTableScanExec" not in {n.getClass().getSimpleName() for n in plan_nodes(plan)}
+    client.close()
 
 
 def test_get_scores_with_query(spark, scores_path):
@@ -184,9 +262,8 @@ def test_reused_scan_sees_added_and_removed_days(spark, tmp_path):
     assert days() == [D(2023, 3, 7), D(2023, 3, 9), D(2023, 3, 10)]
     assert client.get_scores_by_date(D(2023, 3, 8)).collect() == []
     assert len(client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 12)).collect()) == 2
-    # removed outside Spark, so no cache refresh: the frame the sorted query
-    # above persisted must be released with the old scan, or this unsorted
-    # plan would match it and return the removed day's changes
+    # removed outside Spark, so no cache refresh: the rebuilt scan must not
+    # return the removed day's changes that the sorted query above saw
     shutil.rmtree(os.path.join(root, "date=2023-03-10"))
     assert client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 12), sort=False).collect() == []
     client.close()
@@ -206,19 +283,16 @@ def test_day_rewritten_in_place_fails_loudly_until_refresh(spark, tmp_path):
         client.get_scores_by_date(D(2023, 3, 9)).collect()
     with pytest.raises(Exception, match="FILE_NOT_EXIST"):
         client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 9)).collect()
-    persisted = client._persisted
-    assert persisted is not None and persisted.storageLevel.useMemory
 
     client.refresh()
-    assert not persisted.storageLevel.useMemory and not persisted.storageLevel.useDisk
     assert {r.epss for r in client.get_scores_by_date(D(2023, 3, 9)).collect()} == {0.3}
     got = [(r.date, r.cve, r.epss) for r in client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 9)).collect()]
     assert got == [(D(2023, 3, 9), "CVE-B", 0.3), (D(2023, 3, 9), "CVE-A", 0.3)]
 
-    # With a persisted frame over the scan, a write through this session
-    # refreshes the file index that frame shares with the reused scan
-    # (Spark's recache-by-path), so the rewrite may already be visible.
-    # Either way the old values never come back.
+    # The client caches no frame, so no recache-by-path refreshes the
+    # reused scan on this write: it is expected to fail on the vanished
+    # files, though a refreshed file index would see the rewrite. Either
+    # way the old values never come back.
     write_days(spark, root, [D(2023, 3, 9)], dynamic=True, epss=0.5)
     for build in (
         lambda: client.get_scores_by_date(D(2023, 3, 9)),

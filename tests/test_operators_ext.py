@@ -2362,42 +2362,6 @@ def test_snapshot_history_null_versions_survive_tiebreak_dedup(spark):
     assert got == [("k", "A", None, None, 1), ("m", "B", 1, None, 1)]
 
 
-def test_event_daily_growth_semantics(spark):
-    import datetime as dt
-
-    from epss_spark import registry
-
-    registry.load_all()
-    # exercise the query fn directly on a tiny synthetic events table
-    # via its building blocks: 2 users day 1 (both new), 1 returning +
-    # 1 new on day 2
-    D = dt.datetime(2024, 1, 1)
-    ev = spark.createDataFrame(
-        [
-            (1, D), (2, D),
-            (1, D + dt.timedelta(days=1)), (3, D + dt.timedelta(days=1)),
-        ],
-        "user_id long, ts timestamp",
-    )
-    d = ev.select("user_id", F.col("ts").cast("date").alias("day"))
-    dau = d.groupBy("day").agg(F.count_distinct("user_id").alias("active_users"))
-    first_day = d.groupBy("user_id").agg(F.min("day").alias("day"))
-    nu = first_day.groupBy("day").agg(F.count(F.lit(1)).alias("new_users"))
-    from pyspark.sql import Window
-
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    out = (
-        dau.join(nu, "day", "left")
-        .select("day", "active_users", F.coalesce("new_users", F.lit(0)).alias("new_users"))
-        .withColumn("cumulative_users", F.sum("new_users").over(w))
-        .orderBy("day")
-        .collect()
-    )
-    assert [(r.active_users, r.new_users, r.cumulative_users) for r in out] == [
-        (2, 2, 2), (2, 1, 3),
-    ]
-
-
 def test_winnow_fingerprints_string_ids(spark):
     """String doc ids (canonical URLs) must survive the Arrow kernel —
     the id column keeps its source type."""

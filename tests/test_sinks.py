@@ -48,6 +48,27 @@ def test_render_console_bounded_by_default(spark):
     assert len(buf.getvalue().strip().splitlines()) == 3000
 
 
+def test_render_console_full_table_runs_query_once(spark, capsys):
+    """The CLI's default output: a full table needs the row count before
+    show(), which must not cost a second execution of the query."""
+    import uuid
+
+    df = spark.range(40).selectExpr(
+        "date_add(DATE'2023-03-07', CAST(id AS INT)) AS date", "CONCAT('CVE-', id) AS cve", "id / 7 AS epss"
+    ).filter("id % 3 != 0")
+    df.show(n=df.count(), truncate=False)
+    expected = capsys.readouterr().out
+    sc = spark.sparkContext
+    group = f"render-{uuid.uuid4()}"
+    sc.setJobGroup(group, "full table render")
+    try:
+        sinks.render_console(df, fmt="table", full=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert capsys.readouterr().out == expected
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_convert_and_merge(spark, tmp_path):
     df = spark.createDataFrame([(i, f"s{i}") for i in range(10)], "id long, s string")
     src = str(tmp_path / "src.csv")
