@@ -39,14 +39,10 @@ WORKLOAD_SCALE = {
     "events": 128,  # 12.8M rows under the window kernels
     "lineitem": 16,  # 9.6M-row Q1 scan / Q5-shape fact side
     "orders": 16,  # orderkey shifted in lockstep with lineitem
-    "documents": 4,  # 20k docs; texts token-salted per replica so
-    #                  cross-replica copies are NOT near-dups (would
-    #                  quadratically inflate LSH candidate pairs)
-    "embeddings": 16,  # 32k candidates; query side (vec_id < 5) unshifted
 }
 ALL_TABLES = [
     "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+    "orders", "lineitem", "events",
 ]
 
 
@@ -108,36 +104,6 @@ def build_scaled_workload(spark, target: str) -> str:
         for col, stride in shifts.items():
             big = big.withColumn(col, F.col(col) + F.col("__rep").cast("bigint") * stride)
         big = big.drop("__rep")
-        if out_name == "documents":
-            # salt every NORMALIZED token with an alphanumeric replica
-            # suffix: each replica keeps the ORIGINAL corpus's near-dup
-            # structure, but no shingle crosses replicas, so pair counts
-            # scale linearly with k. Salting must happen AFTER the dedup
-            # normalizer's transform ([^a-z0-9 ] -> space): salting raw
-            # whitespace tokens leaves every non-final fragment of a
-            # punctuated token ("a-b-c-dx2" -> tokens a,b,c,dx2) unsalted
-            # and shared across replicas, and a non-alphanumeric salt
-            # ("~r") normalizes away entirely — the round-5 scale probe
-            # measured the resulting cross-replica cliques at 249M
-            # candidate pairs.
-            from epss_spark.operators.text import normalize
-
-            big = df.select("*", rep)
-            big = (
-                big.withColumn("doc_id", F.col("doc_id") + F.col("__rep").cast("bigint") * 10_000_000)
-                .withColumn(
-                    "text",
-                    F.concat_ws(
-                        " ",
-                        F.transform(
-                            F.split(normalize(F.coalesce(F.col("text"), F.lit(""))), " "),
-                            lambda w: F.concat(w, F.lit("x"), F.col("__rep").cast("string")),
-                        ),
-                    ),
-                )
-                .withColumn("n_chars", F.length("text"))
-                .drop("__rep")
-            )
         big.repartition(32).write.mode("overwrite").parquet(os.path.join(root, f"{out_name}.parquet"))
 
     for t in ALL_TABLES:
@@ -152,8 +118,6 @@ def build_scaled_workload(spark, target: str) -> str:
             "events": {"user_id": 1_000_000, "event_id": 100_000_000},
             "lineitem": {"l_orderkey": 10_000_000},
             "orders": {"o_orderkey": 10_000_000},
-            "documents": {},  # handled inside replicate (text salting)
-            "embeddings": {"vec_id": 10_000_000},
         }[t]
         replicate(df, k, shifts, t)
     open(marker, "a").close()
@@ -167,12 +131,12 @@ def main() -> None:
     registry.load_all()
 
     # Warm the JVM/codegen with one tiny-scale pass of representative
-    # kernels (scan+window, shingle pipeline, vector math) so per-query
-    # numbers measure steady-state execution, not first-job JIT/plan setup.
+    # kernels (scan+top-k, scan+window) so per-query numbers measure
+    # steady-state execution, not first-job JIT/plan setup.
     warm_sf = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_sf):
         warm_sf = target
-    for warm_q in ["topk", "window_lag_diff", "dedup_minhash", "ann_cosine_topk"]:
+    for warm_q in ["topk", "window_lag_diff"]:
         force(registry.QUERIES[warm_q](spark, warm_sf))
 
     # The reference's own benchmark workload (BASELINE.md): quantize a dense

@@ -16,7 +16,7 @@ Layout:
     plans       — Query dataclass → Column predicate compiler
     operators   — quantize (lag-diff), as-of join, and the extension
                   families: dedup, similarity, text, clustering,
-                  selection, sketches, retrieval, prep, layout
+                  retrieval, layout
     sources     — format readers and writers (incl. the date-partitioned
                   and cve-bucketed layouts), filename-date recovery,
                   sinks, HTTP ingest

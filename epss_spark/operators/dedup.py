@@ -945,9 +945,9 @@ def decontaminate_near(
     """NEAR-duplicate benchmark decontamination: drop every corpus doc
     whose text is a verified near-duplicate (exact shingle Jaccard >=
     threshold, LSH-blocked) of ANY eval/benchmark doc — completing the
-    contamination family's ladder: `contamination_bloom` catches exact
-    copies, `decontam_spans` catches verbatim substrings, and this
-    catches paraphrased/lightly-edited leakage that defeats both (the
+    contamination family's ladder: `decontaminate_spans` catches
+    verbatim substrings, and this catches paraphrased/lightly-edited
+    leakage that defeats it (the
     contamination mode Lee et al. 2022 / GPT-3's dedup postmortem flag
     as the score-inflating one). Unlike `minhash_lookup` the candidate
     join is ASYMMETRIC — corpus bands against eval bands only — so
@@ -2051,8 +2051,8 @@ def decontaminate_spans(
     a margin; Lee et al. 2022 §5 argue span edits over doc drops):
     every >= k-token span of a training document that also appears
     (normalized) in the benchmark is removed; the document survives
-    minus the leak. `benchmark_contamination` / `bloom_contamination`
-    are the doc-grain DROP-decision diagnostics; this is the EDIT
+    minus the leak. `benchmark_contamination` is the doc-grain
+    DROP-decision diagnostic; this is the EDIT
     action. Within-corpus duplication is deliberately untouched — only
     benchmark-overlapping spans go (run dedup_spans separately for
     that).

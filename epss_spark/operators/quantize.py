@@ -34,7 +34,6 @@ def changed_scores(
     value: str = "epss",
     tiebreak: str | None = None,
     keep_first: bool = True,
-    delta_col: str = "delta",
     prev_col: str | None = None,
 ) -> DataFrame:
     """Keep only rows whose `value` differs from the key's previous row.
@@ -58,9 +57,9 @@ def changed_scores(
         order.append(F.col(tiebreak).asc())
     w = Window.partitionBy(key).orderBy(*order)
     prev = F.lag(F.col(value)).over(w)
-    out = df.withColumn("__prev", prev).withColumn(delta_col, F.col(value) - F.col("__prev"))
+    out = df.withColumn("__prev", prev).withColumn("delta", F.col(value) - F.col("__prev"))
     first_obs: Column = F.col("__prev").isNull()
-    changed = F.col(delta_col) != 0
+    changed = F.col("delta") != 0
     cond = (first_obs | changed) if keep_first else (~first_obs & changed)
     out = out.filter(cond)
     if prev_col:
@@ -77,7 +76,6 @@ def quantize(
     value: str = "epss",
     min_time=None,
     max_time=None,
-    tiebreak: str | None = None,
 ) -> DataFrame:
     """Windowed quantization with correct first-day semantics.
 
@@ -93,7 +91,7 @@ def quantize(
         scoped = scoped.filter(F.col(time) >= F.date_sub(F.lit(min_time).cast("date"), 1))
     if max_time is not None:
         scoped = scoped.filter(F.col(time) <= F.lit(max_time).cast("date"))
-    out = changed_scores(scoped, key=key, time=time, value=value, tiebreak=tiebreak)
+    out = changed_scores(scoped, key=key, time=time, value=value)
     if min_time is not None:
         out = out.filter(F.col(time) >= F.lit(min_time).cast("date"))
     return out
@@ -106,7 +104,6 @@ def incremental_changed_scores(
     key: str = "cve",
     time: str = "date",
     value: str = "epss",
-    tiebreak: str | None = None,
     raw_tail: DataFrame | None = None,
 ) -> DataFrame:
     """Append-only quantization: given the EXISTING quantized store (change
@@ -160,18 +157,14 @@ def incremental_changed_scores(
     # outdated value. A correct raw_tail still wins: change rows are a
     # subset of raw rows, so the raw tail's last row is never older than
     # the store's, and on the time tie prio 0 (raw) beats prio 1 (store).
-    order = [F.col(time).desc()]
-    if tiebreak:
-        order.append(F.col(tiebreak).desc())
-    order.append(F.col("__prio").asc())
-    w = Window.partitionBy(key).orderBy(*order)
+    w = Window.partitionBy(key).orderBy(F.col(time).desc(), F.col("__prio").asc())
     seed = (
         candidates.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__prio")
     )
     unioned = seed.unionByName(fresh, allowMissingColumns=False)
-    out = changed_scores(unioned, key=key, time=time, value=value, tiebreak=tiebreak)
+    out = changed_scores(unioned, key=key, time=time, value=value)
     return out.filter(F.col(time) > F.lit(since).cast("date"))
 
 

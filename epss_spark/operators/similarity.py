@@ -704,13 +704,13 @@ def semantic_decontam_hits(
     impl: str = "auto",
 ) -> DataFrame:
     """SEMANTIC (embedding-space) benchmark-contamination detection —
-    the fourth rung of the decontamination ladder: `contamination_bloom`
-    catches exact copies, `decontaminate_spans` verbatim substrings,
-    `decontaminate_near` lexical paraphrase (shared shingles) — and this
-    catches the leakage all three miss: a full rewording of an eval item
-    that preserves meaning but not n-grams, visible only as embedding
-    cosine. Returns (corpus id, eval id, cos) for every corpus vector
-    whose cosine to ANY eval vector reaches `threshold`.
+    the third rung of the decontamination ladder: `decontaminate_spans`
+    catches verbatim substrings, `decontaminate_near` lexical paraphrase
+    (shared shingles) — and this catches the leakage both miss: a full
+    rewording of an eval item that preserves meaning but not n-grams,
+    visible only as embedding cosine. Returns (corpus id, eval id, cos)
+    for every corpus vector whose cosine to ANY eval vector reaches
+    `threshold`.
 
     Scale shape — the asymmetric SemDeDup containment
     (`semantic_dedup`'s architecture pointed across two frames): BOTH

@@ -3,9 +3,9 @@ compiler and the session factory — must not load the extension operator
 families or queries. Checked in a fresh interpreter so that
 modules imported by other tests do not hide an import.
 
-Every internal import in the program files must also resolve. Most
-internal imports sit inside functions, where importing the module never
-runs them, so that check reads the source instead of importing it."""
+Every internal import in the program and test files must also resolve.
+Most internal imports sit inside functions, where importing the module
+never runs them, so that check reads the source instead of importing it."""
 
 from __future__ import annotations
 
@@ -40,8 +40,7 @@ CLOSURE = {
 EXTENSIONS = [
     f"epss_spark.operators.{m}"
     for m in (
-        "dedup", "similarity", "text", "clustering", "selection",
-        "sketches", "retrieval", "prep", "layout",
+        "dedup", "similarity", "text", "clustering", "retrieval", "layout",
     )
 ]
 
@@ -69,7 +68,9 @@ def test_core_paths_load_no_extension_module():
     assert loaded == CLOSURE
 
 
-SOURCE_DIRS = ["epss_spark", "examples", "tools", "perfbench"]
+SOURCE_DIRS = ["epss_spark", "examples", "tools", "perfbench", "tests"]
+# os.walk yields nothing for a file, so the root-level scripts are listed apart
+ROOT_SCRIPTS = ["bench.py", "__spark_entry__.py"]
 
 
 def _module_path(name: str) -> str | None:
@@ -103,30 +104,33 @@ def _top_level_names(path: str) -> set[str]:
     return names
 
 
-def _internal_imports():
-    """(file, line, module, imported name or None) for every import of an
-    epss_spark module anywhere in the source dirs, nested ones included."""
+def _source_files():
     for d in SOURCE_DIRS:
         for dirpath, _, files in os.walk(os.path.join(ROOT, d)):
-            for f in sorted(files):
-                if not f.endswith(".py"):
-                    continue
-                path = os.path.join(dirpath, f)
-                rel = os.path.relpath(path, ROOT)
-                package = os.path.dirname(rel).replace(os.sep, ".")
-                for node in ast.walk(ast.parse(open(path).read(), path)):
-                    if isinstance(node, ast.Import):
-                        for a in node.names:
-                            if a.name.split(".")[0] == "epss_spark":
-                                yield rel, node.lineno, a.name, None
-                    elif isinstance(node, ast.ImportFrom):
-                        module = node.module or ""
-                        if node.level:
-                            base = package.rsplit(".", node.level - 1)[0]
-                            module = f"{base}.{module}" if module else base
-                        if module.split(".")[0] == "epss_spark":
-                            for a in node.names:
-                                yield rel, node.lineno, module, a.name
+            yield from (os.path.join(dirpath, f) for f in sorted(files) if f.endswith(".py"))
+    for f in ROOT_SCRIPTS:
+        yield os.path.join(ROOT, f)
+
+
+def _internal_imports():
+    """(file, line, module, imported name or None) for every import of an
+    epss_spark module anywhere in the source files, nested ones included."""
+    for path in _source_files():
+        rel = os.path.relpath(path, ROOT)
+        package = os.path.dirname(rel).replace(os.sep, ".")
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.split(".")[0] == "epss_spark":
+                        yield rel, node.lineno, a.name, None
+            elif isinstance(node, ast.ImportFrom):
+                module = node.module or ""
+                if node.level:
+                    base = package.rsplit(".", node.level - 1)[0]
+                    module = f"{base}.{module}" if module else base
+                if module.split(".")[0] == "epss_spark":
+                    for a in node.names:
+                        yield rel, node.lineno, module, a.name
 
 
 def test_every_internal_import_resolves():

@@ -834,100 +834,8 @@ def test_asof_join_latest_row_wins_even_if_null(spark):
 
 
 # ---------------------------------------------------------------------------
-# Training-data prep (operators/prep.py)
+# Partial duplication: winnowing overlap (operators/text.py)
 # ---------------------------------------------------------------------------
-
-
-def test_pii_redact_counts_and_replacements(spark):
-    from epss_spark.operators import prep
-
-    rows = [
-        (0, "mail a@b.co and c.d+x@e.org, ip 192.168.0.1, ssn 123-45-6789"),
-        (1, "call 555-123-4567 or 555.123.4567; nothing else"),
-        (2, "no pii here at all"),
-        (3, "edge: user@10.0.0.1 is email-shaped up to the IP-ish domain"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in prep.pii_redact(df).collect()}
-    r0 = got[0]
-    assert (r0.n_email, r0.n_ipv4, r0.n_ssn, r0.n_phone) == (2, 1, 1, 0)
-    assert r0.text_redacted == "mail <EMAIL> and <EMAIL>, ip <IP>, ssn <SSN>"
-    r1 = got[1]
-    assert r1.n_phone == 2 and r1.n_email == 0
-    assert r1.text_redacted == "call <PHONE> or <PHONE>; nothing else"
-    r2 = got[2]
-    assert r2.text_redacted == rows[2][1]
-    assert (r2.n_email, r2.n_ssn, r2.n_phone, r2.n_ipv4) == (0, 0, 0, 0)
-    # user@10.0.0.1 is NOT an email (the TLD grammar requires letters) but
-    # DOES contain an IPv4 — only the address part is redacted.
-    r3 = got[3]
-    assert r3.n_email == 0 and r3.n_ipv4 == 1
-    assert r3.text_redacted.startswith("edge: user@<IP> ")
-
-
-def test_chunk_tokens_overlap_and_tail(spark):
-    from epss_spark.operators import prep
-
-    words = " ".join(f"w{i}" for i in range(10))
-    rows = [(0, words), (1, "only two"), (2, "")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = prep.chunk_tokens(df, chunk_size=4, stride=3).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    c0 = sorted(by_doc[0], key=lambda r: r.chunk_idx)
-    # starts 1,4,7 -> 3 chunks; consecutive chunks overlap by 1 token.
-    # NO start 10: chunk 3 already reaches the document end, so a "w9"
-    # chunk would be a strict subset (silent training duplication)
-    assert [r.chunk_text for r in c0] == [
-        "w0 w1 w2 w3",
-        "w3 w4 w5 w6",
-        "w6 w7 w8 w9",
-    ]
-    assert [r.n_tokens for r in c0] == [4, 4, 4]
-    assert [r.chunk_idx for r in c0] == [0, 1, 2]
-    # short doc: a single partial chunk; empty doc: no chunks at all
-    assert [r.chunk_text for r in by_doc[1]] == ["only two"]
-    assert 2 not in by_doc
-
-
-def test_pack_sequences_invariants(spark):
-    from epss_spark.operators import prep
-
-    # 60 docs with varied lengths; budget small enough to force multi-bin
-    rows = [(i, " ".join(["tok"] * (1 + (i * 7) % 23))) for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    budget = 40
-    out = prep.pack_sequences(df, budget=budget, n_buckets=4).collect()
-    # every doc assigned exactly once, token counts correct
-    assert sorted(r.doc_id for r in out) == list(range(60))
-    assert all(r.n_tokens == 1 + (r.doc_id * 7) % 23 for r in out)
-    # bin fill respects the budget (every doc here is < budget, so no
-    # single-doc overflow bins exist)
-    fills = {}
-    for r in out:
-        fills[(r.bucket, r.bin)] = fills.get((r.bucket, r.bin), 0) + r.n_tokens
-    assert all(f <= budget for f in fills.values())
-    # bins within a bucket are densely numbered from 0
-    bins_by_bucket = {}
-    for r in out:
-        bins_by_bucket.setdefault(r.bucket, set()).add(r.bin)
-    for bs in bins_by_bucket.values():
-        assert bs == set(range(len(bs)))
-    # deterministic: a second run packs identically
-    again = prep.pack_sequences(df, budget=budget, n_buckets=4).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, again))
-
-
-def test_pack_sequences_overlong_doc_gets_own_bin(spark):
-    from epss_spark.operators import prep
-
-    rows = [(0, " ".join(["t"] * 50)), (1, " ".join(["t"] * 5)), (2, " ".join(["t"] * 5))]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in prep.pack_sequences(df, budget=10, n_buckets=1).collect()}
-    # doc 0 (50 tokens > budget 10) sits alone in bin 0 (sorted first, desc)
-    assert out[0].bin == 0
-    assert out[1].bin == out[2].bin == 1  # 5+5 = 10 <= budget share a bin
 
 
 def test_winnow_overlap_catches_partial_duplication(spark):
@@ -965,28 +873,6 @@ def test_winnow_overlap_max_fp_df_guard(spark):
     assert len(full) == 10  # identical docs: all pairs at overlap 1.0
     capped = text.winnow_overlap_pairs(df, threshold=0.1, max_fp_df=3).collect()
     assert capped == []  # every fp has df=5 > 3 -> no discovery rows
-
-
-def test_prep_null_text_and_string_ids(spark):
-    """Round-6 review regressions: NULL text must count as 0 tokens / 0
-    PII findings (not NULL/crash), and string doc ids must survive packing
-    (no silent long-cast nulling)."""
-    from epss_spark.operators import prep
-
-    df = spark.createDataFrame(
-        [("doc-a", "five tokens of actual text"), ("doc-b", None), ("doc-c", "x y")],
-        "doc_id string, text string",
-    )
-    packed = {r.doc_id: r for r in prep.pack_sequences(df, budget=10, n_buckets=1).collect()}
-    assert set(packed) == {"doc-a", "doc-b", "doc-c"}
-    assert packed["doc-a"].n_tokens == 5
-    assert packed["doc-b"].n_tokens == 0
-    red = {r.doc_id: r for r in prep.pii_redact(df).collect()}
-    assert red["doc-b"].text_redacted is None
-    assert (red["doc-b"].n_email, red["doc-b"].n_ssn) == (0, 0)
-    # NULL-text docs produce no chunks, like empty docs
-    chunks = prep.chunk_tokens(df, chunk_size=2, stride=2).collect()
-    assert all(r.doc_id != "doc-b" for r in chunks)
 
 
 # ---------------------------------------------------------------------------
@@ -1214,22 +1100,6 @@ def test_train_shards_is_a_stable_permutation(spark):
     shard_a = {r.doc_id: r.shard for r in a.collect()}
     shard_m = {r.doc_id: r.shard for r in dedup.train_shards(more, n_shards=4).collect()}
     assert all(shard_m[d] == s for d, s in shard_a.items())
-
-
-def test_materialize_sequences_pack_order(spark):
-    from epss_spark.operators import prep
-
-    rows = [(0, "a b c d e"), (1, "x y z"), (2, "q r s t u v w")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    packed = prep.pack_sequences(docs, budget=10, n_buckets=1)
-    out = prep.materialize_sequences(packed, docs, sep=" | ")
-    got = {(r.bucket, r.bin): r for r in out.collect()}
-    # NFD order: doc2 (7), doc0 (5), doc1 (3); bins: [7+3? no — next-fit:
-    # doc2 (7) then doc0 (5) overflows -> new bin; doc1 (3) fits with doc0
-    texts = sorted(r.text for r in got.values())
-    assert texts == sorted(["q r s t u v w", "a b c d e | x y z"])
-    for r in got.values():
-        assert r.n_tokens <= 10 or r.n_docs == 1
 
 
 def test_sample_token_budget_semantics(spark):
@@ -2080,35 +1950,6 @@ def test_snapshot_diff_statuses(spark):
     assert dedup.snapshot_diff(old.filter("doc_id = 1"), new2).count() == 0
 
 
-def test_quality_funnel_cumulative_one_pass(spark):
-    from epss_spark.operators import prep
-
-    df = spark.createDataFrame(
-        [(i, "x" * i) for i in range(10)], "doc_id long, text string"
-    )
-    gates = [
-        ("len>=2", F.length("text") >= 2),
-        ("len>=5", F.length("text") >= 5),
-        ("even", F.col("doc_id") % 2 == 0),
-    ]
-    rows = prep.quality_funnel(df, gates).collect()
-    got = [(r.stage, r.name, r.n_in, r.n_out, r.n_dropped, r.retention) for r in rows]
-    assert got == [
-        (1, "len>=2", 10, 8, 2, 0.8),
-        (2, "len>=5", 8, 5, 3, 0.625),
-        (3, "even", 5, 2, 3, 0.4),
-    ]
-    # a NULL predicate counts as a failure, not a pass-through
-    df2 = spark.createDataFrame([(1, None), (2, "xxxxx")], "doc_id long, text string")
-    r = prep.quality_funnel(df2, [("nonnull_len", F.length("text") >= 1)]).collect()[0]
-    assert (r.n_in, r.n_out, r.n_dropped) == (2, 1, 1)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        prep.quality_funnel(df, [])
-
-
 def test_truncate_normalize_and_mrl_energy(spark):
     import math
 
@@ -2229,22 +2070,6 @@ def test_dataset_card_approx_mode_close_to_exact(spark):
         2.0, 0.05 * exact.median_tokens
     )
     assert approx.mean_tokens == exact.mean_tokens  # mean is exact in both
-
-
-def test_pack_efficiency_hand_computed(spark):
-    from epss_spark.operators import prep
-
-    # direct assignment table: bucket 0 has a full bin (10) and a half
-    # bin (5); bucket 1 has one overlong single-doc bin (14 > budget 10)
-    a = spark.createDataFrame(
-        [(1, 0, 0, 6), (2, 0, 0, 4), (3, 0, 1, 5), (4, 1, 0, 14)],
-        "doc_id long, bucket long, bin long, n_tokens long",
-    )
-    r = prep.pack_efficiency(a, budget=10).collect()[0]
-    assert (r.n_bins, r.n_docs, r.n_tokens, r.capacity) == (3, 4, 29, 30)
-    # fill counts the overlong bin as min(14, 10): (10 + 5 + 10) / 30
-    assert r.fill_rate == 0.833333
-    assert r.n_overlong_bins == 1
 
 
 def test_strip_html_preserves_line_grain_for_line_operators(spark):

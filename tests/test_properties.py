@@ -98,92 +98,6 @@ def test_repetition_fractions_well_formed(spark, texts):
             assert r.dup_bigram_frac >= r.top_bigram_frac
 
 
-# --- prep operator laws (operators/prep.py) --------------------------------
-
-token_lists = st.lists(
-    st.integers(min_value=0, max_value=40),  # per-doc token counts
-    min_size=1,
-    max_size=25,
-)
-
-
-@given(counts=token_lists, budget=st.sampled_from([8, 16, 40]))
-@_settings
-def test_pack_sequences_laws(spark, counts, budget):
-    """For ANY corpus shape: every doc packed exactly once; no bin exceeds
-    the budget unless it holds a single over-budget doc; bins are densely
-    numbered; re-running packs identically (pure function of input)."""
-    from epss_spark.operators.prep import pack_sequences
-
-    rows = [(i, " ".join(["t"] * n)) for i, n in enumerate(counts)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = pack_sequences(df, budget=budget, n_buckets=3).collect()
-    assert sorted(r.doc_id for r in out) == list(range(len(counts)))
-    fills, members = {}, {}
-    for r in out:
-        assert r.n_tokens == counts[r.doc_id]
-        fills[(r.bucket, r.bin)] = fills.get((r.bucket, r.bin), 0) + r.n_tokens
-        members.setdefault((r.bucket, r.bin), []).append(r.doc_id)
-    for key, f in fills.items():
-        assert f <= budget or len(members[key]) == 1
-    by_bucket = {}
-    for b, bin_ in fills:
-        by_bucket.setdefault(b, set()).add(bin_)
-    for bins in by_bucket.values():
-        assert bins == set(range(len(bins)))
-
-
-@given(
-    texts=st.lists(
-        st.text(
-            alphabet="ab @.-0123456789x",  # dense in PII-grammar chars
-            min_size=0,
-            max_size=40,
-        ),
-        min_size=1,
-        max_size=8,
-    )
-)
-@_settings
-def test_pii_redact_idempotent(spark, texts):
-    """Redaction is a fixpoint: redacting already-redacted text changes
-    nothing and reports zero findings (the <TAG> tokens contain no
-    redactable grammar)."""
-    from epss_spark.operators.prep import pii_redact
-
-    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    once = pii_redact(df).withColumnRenamed("text_redacted", "text")
-    twice = pii_redact(once.select("doc_id", "text"))
-    got = {r.doc_id: r for r in twice.collect()}
-    first = {r.doc_id: r.text for r in once.collect()}
-    for i in got:
-        assert got[i].text_redacted == first[i]
-        assert (got[i].n_email, got[i].n_ssn, got[i].n_phone, got[i].n_ipv4) == (0, 0, 0, 0)
-
-
-@given(
-    n_tokens=st.integers(min_value=0, max_value=30),
-    chunk_size=st.integers(min_value=2, max_value=8),
-)
-@_settings
-def test_chunk_tokens_covers_stream(spark, n_tokens, chunk_size):
-    """Non-overlapping chunking (stride == chunk_size) partitions the token
-    stream exactly: concatenating chunks in order reconstructs the doc."""
-    from epss_spark.operators.prep import chunk_tokens
-
-    words = " ".join(f"w{i}" for i in range(n_tokens))
-    df = spark.createDataFrame([(0, words)], "doc_id long, text string")
-    out = sorted(
-        chunk_tokens(df, chunk_size=chunk_size, stride=chunk_size).collect(),
-        key=lambda r: r.chunk_idx,
-    )
-    rebuilt = " ".join(r.chunk_text for r in out)
-    assert rebuilt == words
-    assert all(r.n_tokens <= chunk_size for r in out)
-    # all but the last chunk are full
-    assert all(r.n_tokens == chunk_size for r in out[:-1])
-
-
 def test_dedup_corpus_lines_idempotent_and_globally_distinct(spark):
     """Line dedup laws: (1) no eligible line survives twice corpus-wide;
     (2) running the ACTION on its own output is a fixpoint."""
@@ -518,43 +432,6 @@ def test_keep_latest_matches_python_reference(spark, rows):
         if k not in want or (v, i) > want[k][:2]:
             want[k] = (v, i, p)
     assert got == want
-
-
-@given(
-    n_tokens=st.integers(min_value=0, max_value=40),
-    chunk_size=st.integers(min_value=2, max_value=8),
-    overlap=st.integers(min_value=1, max_value=6),
-)
-@_settings
-def test_chunk_tokens_overlapping_covers_without_subset_chunks(
-    spark, n_tokens, chunk_size, overlap
-):
-    """Overlapping chunking laws: every token position is covered, and no
-    chunk is a strict subset of an earlier one (subset chunks are silent
-    training-data duplication)."""
-    from epss_spark.operators.prep import chunk_tokens
-
-    stride = max(1, chunk_size - overlap)
-    words = [f"w{i}" for i in range(n_tokens)]
-    df = spark.createDataFrame([(0, " ".join(words))], "doc_id long, text string")
-    out = sorted(
-        chunk_tokens(df, chunk_size=chunk_size, stride=stride).collect(),
-        key=lambda r: r.chunk_idx,
-    )
-    if n_tokens == 0:
-        assert not out
-        return
-    spans = []
-    for r in out:
-        toks = r.chunk_text.split(" ")
-        start = int(toks[0][1:])
-        spans.append((start, start + len(toks) - 1))
-    covered = set()
-    for a, b in spans:
-        covered.update(range(a, b + 1))
-    assert covered == set(range(n_tokens))  # full coverage
-    ends = [b for _, b in spans]
-    assert ends == sorted(ends) and len(set(ends)) == len(ends)  # strictly extending
 
 
 # --- round 11: contamination-audit laws -------------------------------------

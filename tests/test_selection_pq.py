@@ -1,19 +1,16 @@
 """Unit tests for product-quantization ANN (operators/similarity.py::
-pq_encode / pq_topk / train_pq_centroids) and DSIR data selection
-(operators/selection.py) — semantics against pure-Python references, the
-exactness-degradation identity, and determinism. Cross-engine value parity
-is covered by the DuckDB oracles of ann_pq_topk / sample_dsir /
-sample_dsir_topk (driver surface + tests/test_oracle_parity.py)."""
+pq_encode / pq_topk / train_pq_centroids, IVF-PQ, multiprobe LSH) and
+perplexity buckets (operators/text.py::ppl_buckets) — semantics against
+pure-Python references, the exactness-degradation identity, and
+determinism. No registered query reaches these operators, so no DuckDB
+oracle covers them."""
 
 from __future__ import annotations
-
-import hashlib
-import math
 
 import pytest
 from pyspark.sql import functions as F
 
-from epss_spark.operators import selection, similarity
+from epss_spark.operators import similarity
 
 
 def _vectors(spark, n=20, dim=8, seed=7):
@@ -122,133 +119,6 @@ class TestPQTopk:
             approx = {r.cand_id for r in got if r.query_id == q}
             hits += true_nn in approx
         assert hits >= 5, f"recall@5 too low: {hits}/8"
-
-
-def _md5_60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _ref_dsir(raw, tgt, n_buckets):
-    """Pure-Python DSIR reference over (id, text) lists."""
-
-    def feats(text):
-        toks = [t for t in "".join(c if c.isalnum() or c == " " else " " for c in text.lower()).split() if t]
-        return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-
-    def bucket_counts(docs):
-        counts: dict[int, int] = {}
-        per_doc = {}
-        for did, text in docs:
-            bs = [_md5_60(f) % n_buckets for f in feats(text)]
-            per_doc[did] = bs
-            for b in bs:
-                counts[b] = counts.get(b, 0) + 1
-        return counts, per_doc
-
-    rc, raw_bs = bucket_counts(raw)
-    tc, _ = bucket_counts(tgt)
-    rt, tt = sum(rc.values()), sum(tc.values())
-    scores = {}
-    for did, bs in raw_bs.items():
-        if not bs:
-            continue
-        lw = [
-            math.log((tc.get(b, 0) + 1.0) / (tt + n_buckets))
-            - math.log((rc[b] + 1.0) / (rt + n_buckets))
-            for b in bs
-        ]
-        scores[did] = (len(bs), round(sum(lw) / len(lw), 6))
-    return scores
-
-
-RAW = [
-    (0, "the cat sat on the mat and the dog barked"),
-    (1, "le chat est sur le tapis et le chien"),
-    (2, "the quick brown fox jumps over the lazy dog"),
-    (3, "der hund ist unter dem tisch und die katze"),
-    (4, "a dog and a cat played on the mat"),
-    (5, ""),  # zero tokens -> unscored
-]
-TGT = [(100, "the cat and the dog on the mat"), (101, "the fox and the lazy dog")]
-
-
-class TestDSIR:
-    def test_logratio_matches_reference(self, spark):
-        raw = spark.createDataFrame(RAW, "doc_id long, text string")
-        tgt = spark.createDataFrame(TGT, "doc_id long, text string")
-        got = {
-            r.doc_id: (r.n_feats, r.dsir_logratio)
-            for r in selection.dsir_logratio(raw, tgt, n_buckets=32).collect()
-        }
-        assert got == _ref_dsir(RAW, TGT, 32)
-
-    def test_target_like_docs_score_higher(self, spark):
-        # 256 buckets: enough hash space that the en/fr/de vocabularies
-        # don't collide into shared buckets (at B=32 they measurably do)
-        raw = spark.createDataFrame(RAW, "doc_id long, text string")
-        tgt = spark.createDataFrame(TGT, "doc_id long, text string")
-        s = {
-            r.doc_id: r.dsir_logratio
-            for r in selection.dsir_logratio(raw, tgt, n_buckets=256).collect()
-        }
-        # English docs sharing target vocabulary must outscore the French
-        # and German docs that share none of it
-        assert min(s[0], s[2], s[4]) > max(s[1], s[3])
-
-    def test_sample_is_deterministic_topk(self, spark):
-        raw = spark.createDataFrame(RAW, "doc_id long, text string")
-        tgt = spark.createDataFrame(TGT, "doc_id long, text string")
-        a = sorted(r.doc_id for r in selection.dsir_sample(raw, tgt, k=3, n_buckets=32).collect())
-        b = sorted(r.doc_id for r in selection.dsir_sample(raw, tgt, k=3, n_buckets=32).collect())
-        assert a == b and len(a) == 3
-        # and the selected set is exactly the top-3 by the reference keys
-        scores = _ref_dsir(RAW, TGT, 32)
-        keys = {}
-        for did, (_, lw) in scores.items():
-            u = (_md5_60(f"dsir|{did}") + 0.5) / float(1 << 60)
-            keys[did] = (round(lw + -math.log(-math.log(u)), 6), -did)
-        want = sorted(sorted(keys, key=lambda d: keys[d], reverse=True)[:3])
-        assert a == want
-
-    def test_seed_changes_selection_keys(self, spark):
-        raw = spark.createDataFrame(RAW, "doc_id long, text string")
-        tgt = spark.createDataFrame(TGT, "doc_id long, text string")
-        a = {r.doc_id: r.sample_key for r in selection.dsir_sample(raw, tgt, k=5, n_buckets=32, seed="s1").collect()}
-        b = {r.doc_id: r.sample_key for r in selection.dsir_sample(raw, tgt, k=5, n_buckets=32, seed="s2").collect()}
-        shared = set(a) & set(b)
-        assert shared and any(a[d] != b[d] for d in shared)
-
-
-class TestStreamingDSIR:
-    def test_frozen_weights_score_a_stream_like_a_batch(self, spark, tmp_path):
-        """dsir_logratio with a frozen weight model is a stateless
-        projection, so it applies to a STREAMING frame unchanged — the
-        one-pass nightly-append scoring path. availableNow over a parquet
-        source must produce exactly the batch scores."""
-        from epss_spark.operators import selection
-
-        src = str(tmp_path / "batch")
-        spark.createDataFrame(RAW, "doc_id long, text string").write.parquet(src)
-        batch = spark.read.parquet(src)
-        tgt = spark.createDataFrame(TGT, "doc_id long, text string")
-        weights = selection.dsir_bucket_weights(batch, tgt, n_buckets=64)
-
-        want = sorted(
-            map(tuple, selection.dsir_logratio(batch, weights=weights, n_buckets=64).collect())
-        )
-
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        out = selection.dsir_logratio(stream, weights=weights, n_buckets=64)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("dsir_stream")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = sorted(map(tuple, spark.sql("SELECT * FROM dsir_stream").collect()))
-        assert got == want and len(got) == 5
 
 
 class TestPplBuckets:
@@ -512,29 +382,6 @@ class TestMultiprobeLSH:
         assert r7 > r1, (r1, r7)  # flips genuinely recover neighbors
         with pytest.raises(ValueError):
             similarity.lsh_multiprobe_topk(queries, df, n_planes=6, n_probes=8)
-
-
-def test_sample_weighted_is_proportional_and_deterministic(spark):
-    """Gumbel top-k weighted sampling: heavy rows are selected far more
-    often across seeds (statistical law on a deliberately skewed weight
-    split), zero/NULL weights never appear, and a fixed seed is exactly
-    reproducible."""
-    from epss_spark.operators import selection
-
-    rows = [(i, 1000.0 if i < 10 else 1.0) for i in range(200)]
-    rows += [(900, 0.0), (901, None)]
-    df = spark.createDataFrame(rows, "doc_id long, w double")
-    picks = {}
-    for seed in ("s1", "s2", "s3", "s4"):
-        got = [r.doc_id for r in selection.sample_weighted(df, 20, "w", seed=seed).collect()]
-        assert 900 not in got and 901 not in got
-        picks[seed] = got
-        heavy = sum(1 for i in got if i < 10)
-        # 10 heavy rows carry 1000/1190 of the mass; expect most of them
-        # in any 20-draw sample (p(all 10) ~ .45; p(>=8) >> .99)
-        assert heavy >= 8, (seed, heavy)
-    a = [r.doc_id for r in selection.sample_weighted(df, 20, "w", seed="s1").collect()]
-    assert a == picks["s1"]  # exact reproducibility, order included
 
 
 def test_pq_topk_batched_string_ids(spark):
