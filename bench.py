@@ -237,33 +237,6 @@ def main() -> None:
         epss_full_sec = s if epss_full_sec is None else min(epss_full_sec, s)
     epss_rows = n_days * n_cves
 
-    # The engine's recommended REPEATED-quantization layout: cve-bucketed,
-    # (cve, date)-sorted table. Bucketing satisfies the window's clustering
-    # requirement, so the quantize plan has ZERO exchanges — the number
-    # that matters when the same matrix is re-queried daily at 100 TB.
-    # The in-memory catalog doesn't persist across runs, so the table is
-    # rebuilt each bench run (build time excluded from the metric).
-    from epss_spark.sources.readers import write_bucketed
-
-    spark.sql("DROP TABLE IF EXISTS bench_scores_bucketed")
-    write_bucketed(
-        spark.read.parquet(scores_root).repartition(32, "cve"),
-        "bench_scores_bucketed",
-        "cve",
-        num_buckets=32,
-        sort_key=["cve", "date"],
-        path=os.path.join(os.path.dirname(scores_root), "bench_scores_bucketed"),
-    )
-    bclient = EPSSClient(spark, table="bench_scores_bucketed", max_date_resolver=lambda: hi)
-    force(bclient.get_changed_scores("2023-03-08", hi, sort=False))
-    epss_bucketed_sec = None
-    for _ in range(3):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        force(bclient.get_changed_scores("2023-03-08", hi, sort=False))
-        s = time.perf_counter() - t0
-        epss_bucketed_sec = s if epss_bucketed_sec is None else min(epss_bucketed_sec, s)
-
     # Timing discipline (PERF.md bench protocol, round 5): headline queries
     # run against the SCALED workload (seconds of real work each, see
     # WORKLOAD_SCALE) so run-to-run deltas are signal. The first execution
@@ -417,10 +390,6 @@ def main() -> None:
                 "epss_pipeline_full_sec": round(epss_full_sec, 4),
                 "epss_pipeline_full_rows_per_sec": round(epss_rows / epss_full_sec)
                 if epss_full_sec
-                else None,
-                "epss_pipeline_bucketed_sec": round(epss_bucketed_sec, 4),
-                "epss_pipeline_bucketed_rows_per_sec": round(epss_rows / epss_bucketed_sec)
-                if epss_bucketed_sec
                 else None,
             }
         )

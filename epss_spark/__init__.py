@@ -16,9 +16,9 @@ Layout:
     plans       — Query dataclass → Column predicate compiler
     operators   — quantize (lag-diff), as-of join, and the extension
                   families: dedup, similarity, text, clustering,
-                  retrieval, layout
+                  layout
     sources     — format readers and writers (incl. the date-partitioned
-                  and cve-bucketed layouts), filename-date recovery,
+                  layout), filename-date recovery,
                   sinks, HTTP ingest
     functions   — date coercion, filename dates, iterator helpers
     client      — the EPSS-domain composite API (get_scores, ...)

@@ -37,12 +37,7 @@ def build_parser() -> argparse.ArgumentParser:
 
     s = sub.add_parser("scores", help="query scores (reference epss/cli.py:70-114)")
     _add_range_flags(s)
-    s.add_argument("--scores-path", help="date-partitioned parquet root")
-    s.add_argument(
-        "--scores-table",
-        help="cve-bucketed saved table (zero-exchange quantization layout); "
-        "exactly one of --scores-path/--scores-table",
-    )
+    s.add_argument("--scores-path", required=True, help="date-partitioned parquet root")
     s.add_argument("--cve-id", action="append", dest="cve_ids")
     s.add_argument(
         "--cve-id-file",
@@ -101,9 +96,6 @@ def main(argv: list[str] | None = None) -> int:
         if not args.workdir:
             print("--download requires --workdir", file=sys.stderr)
             return 2
-        if not args.scores_path:
-            print("--download requires --scores-path (parquet ingest root)", file=sys.stderr)
-            return 2
         resolver = None
         if args.max_date is None:
             # live max-date discovery, exactly like the reference's HEAD probe
@@ -122,14 +114,9 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     # scores
-    if bool(args.scores_path) == bool(args.scores_table):
-        print("provide exactly one of --scores-path / --scores-table", file=sys.stderr)
-        return 2
     spark = get_spark("epss-spark-cli")
     spark.sparkContext.setLogLevel("ERROR")
-    client = EPSSClient(
-        spark, args.scores_path, version=args.version, table=args.scores_table
-    )
+    client = EPSSClient(spark, args.scores_path, version=args.version)
     ids = list(args.cve_ids or [])
     if args.cve_id_file:
         from epss_spark.functions.iters import iter_nonblank_lines

@@ -1400,7 +1400,7 @@ def minhash_index(
     to dedup daily appends without re-shingling the corpus.
 
     - band_rows: (id, b, band_key), one row per doc per band. Write it
-      bucketed by band_key (readers.write_bucketed) so daily lookups join
+      bucketed by band_key (`DataFrameWriter.bucketBy`) so daily lookups join
       co-located.
     - shingle_arrays: (id, shingles), for exact-Jaccard verification.
 
@@ -1690,7 +1690,7 @@ def line_index(
     which batch lines are new.
 
     Persist-to-parquet is the caller's choice; write it bucketed by
-    line_fp (readers.write_bucketed) so nightly `dedup_batch_lines`
+    line_fp (`DataFrameWriter.bucketBy`) so nightly `dedup_batch_lines`
     anti-joins co-located instead of shuffling the (corpus-scale) index.
     Appending a batch's kept_fps after each run keeps it current."""
     return (
@@ -1969,7 +1969,7 @@ def span_index(
     """Build the persistent k-gram fingerprint index for INCREMENTAL span
     dedup: the distinct md5 of every k-token gram in the corpus, as a
     1-column (gram_fp) frame — the span analog of `line_index` /
-    `minhash_index`. Write it bucketed by gram_fp (readers.write_bucketed)
+    `minhash_index`. Write it bucketed by gram_fp (`DataFrameWriter.bucketBy`)
     so the nightly `dedup_batch_spans` join co-locates; append each
     batch's new_fps after the run. Index over the ACCEPTED (already
     span-deduped) corpus so indexed grams are exactly the grams a reader

@@ -1,9 +1,5 @@
 """Scale helpers shared by the extension operators: a small-file
-parallelism guard and a scoped switch to size-based shuffle coalescing.
-
-The bucketed table writer is `sources.readers.write_bucketed`, next to
-the date-partitioned write, because the EPSS client's table mode uses it.
-"""
+parallelism guard and a scoped switch to size-based shuffle coalescing."""
 
 from __future__ import annotations
 

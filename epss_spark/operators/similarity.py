@@ -792,7 +792,7 @@ def semantic_index(
     materialized once so nightly batches never re-assign the corpus —
     the embedding-space analog of `dedup.minhash_index` (the lexical
     incremental family's missing sibling until round 14). Write it
-    bucketed by `cell` (readers.write_bucketed) so daily lookups join
+    bucketed by `cell` (`DataFrameWriter.bucketBy`) so daily lookups join
     co-located; the centroid model is the index's scheme and must be
     FROZEN for the index's lifetime (a re-trained model re-cells the
     space — rebuild the index with it, exactly like changing LSH

@@ -679,7 +679,7 @@ def bigram_lm_train(
     """Train the interpolated-bigram LM: two count tables over the
     training corpus — `vocab(tok, cnt)` and `bigrams(prev, cur, cnt)`.
     These ARE the frozen model artifact: plain DataFrames, persistable as
-    parquet next to the LSH/BM25/IVF-PQ index artifacts, so the real
+    parquet next to the LSH/IVF-PQ index artifacts, so the real
     CCNet deployment shape — train on a trusted reference corpus once,
     score every crawl batch against it — is `bigram_lm_train(wiki)` +
     `write.parquet` nightly zero times, `bigram_lm_score(batch, ...)`
@@ -1130,10 +1130,10 @@ def bpe_merges(
     corpus — ONE distributed pass builds the word-frequency table
     (explode tokens -> groupBy(word) count, map-side partials absorb
     Zipf skew), which is localCheckpoint'd (bounded: vocabularies are
-    millions of rows against billions of docs — the BM25-stats
-    lifecycle); each merge round is then one pair-count aggregate over
-    that bounded frame (adjacent pairs via the zip_with bigram kernel
-    over the symbol array) plus a 1-row TakeOrdered fetch, and the
+    millions of rows against billions of docs); each merge round is then
+    one pair-count aggregate over that bounded frame (adjacent pairs via
+    the zip_with bigram kernel over the symbol array) plus a 1-row
+    TakeOrdered fetch, and the
     chosen merge applies lazily as a literal string-replace projection.
     Driver state is n_merges (rank, pair) rows — bounded by
     construction. Merges never cross word boundaries (per-word symbol

@@ -40,7 +40,7 @@ CLOSURE = {
 EXTENSIONS = [
     f"epss_spark.operators.{m}"
     for m in (
-        "dedup", "similarity", "text", "clustering", "retrieval", "layout",
+        "dedup", "similarity", "text", "clustering", "layout",
     )
 ]
 

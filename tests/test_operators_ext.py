@@ -876,7 +876,7 @@ def test_winnow_overlap_max_fp_df_guard(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-6: line-level dedup, BM25 retrieval, unigram LM, domain caps
+# Round-6: line-level dedup, unigram LM, domain caps
 # ---------------------------------------------------------------------------
 
 
@@ -930,40 +930,6 @@ def test_unigram_logprob_matches_manual(spark):
     assert got[0].n_tokens == 3 and abs(got[0].avg_logprob - exp0) < 1e-6
     assert got[1].n_tokens == 2 and abs(got[1].avg_logprob - exp1) < 1e-6
     assert 2 not in got  # tokenless docs have no LM score
-
-
-def test_bm25_topk_matches_manual(spark):
-    import math
-
-    from epss_spark.operators import retrieval
-
-    rows = [
-        (0, "spark spark spark engine"),
-        (1, "spark engine engine"),
-        (2, "engine only here"),
-        (3, "nothing relevant"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = retrieval.bm25_topk(df, ["spark"], k=10, k1=1.2, b=0.75).collect()
-    # manual BM25 (lucene idf): N=4, df=2, avgdl=(4+3+3+2)/4=3
-    idf = math.log(1 + (4 - 2 + 0.5) / (2 + 0.5))
-
-    def s(tf, dl):
-        return idf * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / 3))
-
-    assert [r.doc_id for r in out] == [0, 1]  # only matching docs, tf-ordered
-    assert abs(out[0].score - s(3, 4)) < 1e-6
-    assert abs(out[1].score - s(1, 3)) < 1e-6
-
-
-def test_bm25_rejects_bad_queries(spark):
-    from epss_spark.operators import retrieval
-
-    df = spark.createDataFrame([(0, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        retrieval.bm25_topk(df, [])
-    with pytest.raises(ValueError):
-        retrieval.bm25_topk(df, ["a", "a"])
 
 
 def test_dedup_batch_lines_equals_full_recompute_on_batch(spark):
@@ -1042,41 +1008,6 @@ def test_dedup_corpus_lines_preserve_other_columns(spark):
     assert got[0].source == "s0" and got[0].lang == "en"
     assert got[1].source == "s1" and got[1].text == "other"
     assert set(out.columns) == {"doc_id", "text", "n_lines_kept", "source", "lang"}
-
-
-def test_rrf_fuse_manual(spark):
-    from epss_spark.operators import retrieval
-
-    a = spark.createDataFrame([(1, 9.0), (2, 5.0), (3, 1.0)], "doc_id long, s double")
-    b = spark.createDataFrame([(3, 0.9), (4, 0.8)], "doc_id long, cos double")
-    out = {r.doc_id: r.rrf_score for r in retrieval.rrf_fuse([a, b], topk=10).collect()}
-    # doc 3: rank 3 in a, rank 1 in b -> 1/63 + 1/61; others single-list
-    assert abs(out[3] - round(1 / 63 + 1 / 61, 6)) < 1e-9
-    assert abs(out[1] - round(1 / 61, 6)) < 1e-9
-    assert abs(out[4] - round(1 / 62, 6)) < 1e-9
-    # fused order: the doc in both lists wins
-    top = retrieval.rrf_fuse([a, b], topk=1).collect()
-    assert top[0].doc_id == 3
-
-
-def test_rrf_fuse_rejects_bad_shapes(spark):
-    from epss_spark.operators import retrieval
-
-    with pytest.raises(ValueError):
-        retrieval.rrf_fuse([])
-    bad = spark.createDataFrame([(1, 1.0, 2.0)], "doc_id long, a double, b double")
-    with pytest.raises(ValueError):
-        retrieval.rrf_fuse([bad])
-
-
-def test_bm25_rejects_unnormalized_terms(spark):
-    from epss_spark.operators import retrieval
-
-    df = spark.createDataFrame([(0, "spark rules")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="normalized"):
-        retrieval.bm25_topk(df, ["Spark"])
-    with pytest.raises(ValueError, match="normalized"):
-        retrieval.bm25_topk(df, ["don't"])
 
 
 def test_train_shards_is_a_stable_permutation(spark):
@@ -1257,47 +1188,6 @@ def test_dedup_spans_no_nonfirst_duplicate_gram_survives_intact(spark):
         {i: t.split(" ") for i, t in rows}, k
     )
     assert out == {i: t for i, t in ref.items() if t}
-
-
-def test_bm25_lookup_matches_topk(spark, docs):
-    """The inverted-index path must be score-identical to the
-    from-scratch path on the same corpus — same candidates, same 6-dp
-    scores, same order."""
-    from epss_spark.operators import retrieval
-
-    terms = ["the", "quick", "engines"]
-    direct = [tuple(r) for r in retrieval.bm25_topk(docs, terms, k=10).collect()]
-    postings, doc_stats = retrieval.bm25_index(docs)
-    indexed = [
-        tuple(r) for r in retrieval.bm25_lookup(postings, doc_stats, terms, k=10).collect()
-    ]
-    assert direct == indexed and len(direct) > 0
-
-
-def test_bm25_lookup_counts_zero_token_docs_in_stats(spark):
-    # N and avgdl must aggregate the WHOLE corpus (including docs that
-    # normalize to zero tokens), exactly as bm25_topk does — doc_stats
-    # built only from postings would silently drop them
-    from epss_spark.operators import retrieval
-
-    rows = [(0, "alpha beta beta"), (1, "alpha gamma"), (2, "!!!"), (3, None)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    terms = ["alpha", "beta"]
-    direct = [tuple(r) for r in retrieval.bm25_topk(df, terms).collect()]
-    postings, doc_stats = retrieval.bm25_index(df)
-    assert doc_stats.count() == 4  # every doc has a stats row
-    indexed = [tuple(r) for r in retrieval.bm25_lookup(postings, doc_stats, terms).collect()]
-    assert direct == indexed
-
-
-def test_bm25_lookup_empty_index_and_validation(spark):
-    from epss_spark.operators import retrieval
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    postings, doc_stats = retrieval.bm25_index(empty)
-    assert retrieval.bm25_lookup(postings, doc_stats, ["x"]).count() == 0
-    with pytest.raises(ValueError):
-        retrieval.bm25_lookup(postings, doc_stats, ["Not Normalized"])
 
 
 def test_bpe_merges_golden_and_early_stop(spark):
@@ -1908,27 +1798,6 @@ def test_strip_html_plain_text_passthrough(spark):
     # a bare '<' that never closes is not a tag and survives
     got = df.select(text.strip_html("t").alias("s")).collect()[0].s
     assert got == "no markup here, 1 < 2 stays"
-
-
-def test_tfidf_topk_hand_computed(spark):
-    import math
-
-    from epss_spark.operators import retrieval
-
-    df = spark.createDataFrame(
-        [(1, "spark spark window join"), (2, "window join join duck")],
-        "doc_id long, text string",
-    )
-    got = retrieval.tfidf_topk(df, k=2).orderBy("doc_id", "rank").collect()
-    # N=2; df: spark 1, window 2, join 2, duck 1
-    idf_rare = math.log((1 + 2) / (1 + 1)) + 1
-    idf_common = math.log((1 + 2) / (1 + 2)) + 1  # = 1.0
-    by = {(r.doc_id, r.rank): r for r in got}
-    assert by[(1, 1)].term == "spark"
-    assert by[(1, 1)].tfidf == round(2 * idf_rare, 6)
-    # doc 1 rank 2: join/window both tf=1*idf_common -> tie, 'join' < 'window'
-    assert by[(1, 2)].term == "join" and by[(1, 2)].tfidf == round(idf_common, 6)
-    assert by[(2, 1)].term == "join" and by[(2, 1)].tf == 2
 
 
 def test_snapshot_diff_statuses(spark):

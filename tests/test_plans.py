@@ -259,31 +259,6 @@ def test_plan_inventory_matches_checked_in(spark):
     assert not drift, json.dumps(drift, indent=2)
 
 
-def test_bm25_lookup_plan_never_touches_corpus_text(spark, tmp_path):
-    # the indexed retrieval path: against a parquet-backed index, the
-    # lookup plan must (1) contain no tokenize of the corpus (the whole
-    # point of the index artifact), (2) push the query terms' IN-filter
-    # into the postings scan, (3) finish with a top-k operator, and
-    # (4) stay JVM-side.
-    from epss_spark.operators import retrieval
-    from epss_spark.tables import load_table
-
-    docs = load_table(spark, SF, "documents")
-    postings, doc_stats = retrieval.bm25_index(docs)
-    postings.write.parquet(str(tmp_path / "postings"))
-    doc_stats.write.parquet(str(tmp_path / "doc_stats"))
-    out = retrieval.bm25_lookup(
-        spark.read.parquet(str(tmp_path / "postings")),
-        spark.read.parquet(str(tmp_path / "doc_stats")),
-        ["dup", "spark", "window"],
-    )
-    p = out._jdf.queryExecution().executedPlan().toString()
-    assert "regexp_replace" not in p and "split" not in p
-    assert "In(term" in p  # pushed to the postings scan
-    assert "TakeOrderedAndProject" in p
-    assert "BatchEvalPython" not in p
-
-
 def test_token_budget_bucketed_offsets_avoid_corpus_sort(spark):
     # the skew-safe budget: the offsets branch must be a hash-aggregate
     # subtotal (no sort), and the only corpus-scale window must be the

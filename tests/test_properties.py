@@ -121,15 +121,6 @@ def test_dedup_corpus_lines_idempotent_and_globally_distinct(spark):
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
 
 
-def test_bm25_on_empty_and_termless_corpora(spark):
-    from epss_spark.operators import retrieval
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert retrieval.bm25_topk(empty, ["x"]).count() == 0
-    nohit = spark.createDataFrame([(0, "nothing here")], "doc_id long, text string")
-    assert retrieval.bm25_topk(nohit, ["zzz"]).count() == 0
-
-
 # corpora: small alphabet + newlines so duplicate lines actually occur
 _line = st.sampled_from(["", "aa", "bb", "cc", "aa bb", "x"])
 _corpora = st.lists(

@@ -238,6 +238,20 @@ def test_cli_date_range_and_urls(capsys):
     ]
 
 
+def test_cli_scores_requires_scores_path(monkeypatch, capsys):
+    import epss_spark.cli as cli
+
+    def no_session(*a, **k):
+        raise AssertionError("a session started before argument checks")
+
+    monkeypatch.setattr(cli, "get_spark", no_session)
+    for argv in (["scores"], ["scores", "--download", "--workdir", "w"]):
+        with pytest.raises(SystemExit) as exc:
+            cli.main(argv)
+        assert exc.value.code == 2
+        assert "--scores-path" in capsys.readouterr().err
+
+
 @pytest.fixture
 def scores_root(spark, tmp_path):
     rows = [
